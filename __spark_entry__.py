@@ -37,7 +37,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twin for each oracle-checkable query. Entries with no SQL
-    (approximate or non-SQL-expressible ops) are omitted → rows-only check.
-    """
-    return {spec.name: spec.oracle for spec in registry() if spec.oracle is not None}
+    """DuckDB twin for every query (QuerySpec.oracle is required)."""
+    return {spec.name: spec.oracle for spec in registry()}

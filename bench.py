@@ -25,15 +25,8 @@ and scratch accumulation) and inflate the tail by ~10-30% (measured:
 204 s median-of-3 vs 190 s single-shot on the same quiet host), so a
 full REPEAT run is not comparable to the driver's single-shot pass.
 
-SPARK_GRAFT_BENCH_TIER=iter (round 9, VERDICT r8 #8) is the
-development-iteration tier: it runs every query NOT in the
-provably-stable sub-second set (_STABLE_SUBSEC — under 1 s in both the
-r7 and r8 full artifacts) plus a deterministic 1-in-5 md5 slice of
-that set, rotatable via SPARK_GRAFT_BENCH_SLICE=0..4 so five
-iterations cover the whole registry. The default tier stays FULL —
-the driver contract, the per-round artifacts, and every cert-chain
-run are unchanged; `iter` only exists so a mid-round perf loop costs
-~the expensive half of the registry instead of all 146 queries.
+Queries run in registry() order. Paired A/B runs of two commits belong
+to the perfbench/ benchmark (BENCHMARK.json), not to this runner.
 """
 
 from __future__ import annotations
@@ -48,47 +41,6 @@ sys.path.insert(0, REPO)
 
 from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
 from smart_fraud_detection_data_pipeline_spark.queries import registry  # noqa: E402
-
-#: Queries measured under 1 s in BOTH of the two most recent full
-#: sf0.1 artifacts (refreshed each round: r7+r8 seeded the set, r10
-#: promoted the 9 names sub-second in BOTH BENCH_local_r9 and _r9b) —
-#: the provably-stable cheap tail. The `iter` tier samples these
-#: 1-in-5 per run instead of rerunning all of them every iteration;
-#: full runs ignore this set.
-_STABLE_SUBSEC = frozenset({
-    "brand_supplier_counts", "doc_dedup_exact", "doc_mix_token_budget",
-    "error_burst_window_bucketed", "multimodal_image_decode",
-    "session_windows", "synthetic_transactions", "value_quantiles_approx",
-    "vocab_heavy_hitters",
-    "amount_benford", "asof_last_purchase", "asof_next_error",
-    "brand_basket_revenue", "cohort_retention", "customer_activity_set_ops",
-    "customer_order_distribution", "customer_order_seq",
-    "customers_no_big_order", "customers_with_big_order",
-    "data_quality_report", "dedup_keep_last", "doc_chunk_overlap",
-    "doc_mix_temperature", "doc_pack_sequences", "doc_sample_stratified",
-    "doc_split_assign", "embed_cosine_topk", "embed_label_centroid_dist",
-    "error_burst_window", "event_type_trimmed_mean", "events_json_props",
-    "events_jsonl_roundtrip", "events_props_map", "events_variant_props",
-    "forecast_revenue_change", "idle_rich_customers", "important_part_value",
-    "lang_id_confusion", "late_shipment_orders", "min_cost_suppliers",
-    "multi_distinct_stats", "multimodal_byte_features",
-    "multimodal_frame_sample", "multimodal_meta", "multimodal_resize",
-    "nation_top_customers_lateral", "nation_year_profit",
-    "not_in_null_semantics", "observed_quality", "order_priority_late_ship",
-    "orders_cube", "orders_grouping_sets", "orders_rollup",
-    "orders_snapshot_diff", "prolific_red_part_suppliers",
-    "promo_revenue_pct", "regional_revenue", "returned_item_losses",
-    "returnflag_priority_mix", "salted_category_totals", "salted_user_join",
-    "scan_filter_project", "schema_evolution_scan", "shipping_priority",
-    "sliding_window_trends", "small_quantity_revenue", "sql_pricing_summary",
-    "time_layout_scan", "top_customers", "top_supplier_revenue",
-    "user_event_transitions", "user_event_type_pivot",
-    "user_event_type_unpivot", "user_funnel", "user_scd2_intervals",
-    "user_txn_velocity", "user_value_ewma", "user_value_lag_delta",
-    "user_value_ohlc", "user_value_trend", "value_quantiles",
-    "value_winsorized", "vocab_top_ngrams",
-})
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -122,16 +74,6 @@ def main() -> None:
     if skip:
         dropped = {n.strip() for n in skip.split(",") if n.strip()}
         specs = [s for s in specs if s.name not in dropped]
-    if os.environ.get("SPARK_GRAFT_BENCH_TIER") == "iter":
-        import hashlib
-
-        sl = int(os.environ.get("SPARK_GRAFT_BENCH_SLICE", "0")) % 5
-        specs = [
-            s
-            for s in specs
-            if s.name not in _STABLE_SUBSEC
-            or int(hashlib.md5(s.name.encode()).hexdigest(), 16) % 5 == sl
-        ]
 
     times: dict[str, float] = {}
     errors: dict[str, str] = {}

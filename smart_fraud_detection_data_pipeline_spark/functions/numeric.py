@@ -24,11 +24,3 @@ def exact_sum_double(col: Column | str, scale: int = 2, precision: int = 18) -> 
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double")
-
-
-def exact_avg_double(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
-    """Order-independent average: exact decimal sum / count, as double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.sum(c.cast(f"decimal({precision},{scale})")) / F.count(c)
-    ).cast("double")

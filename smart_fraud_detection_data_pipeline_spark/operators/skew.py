@@ -55,22 +55,32 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
-#: (session id, analyzed-plan semanticHash) → planned partition count.
-#: df.rdd.getNumPartitions() compiles a full physical plan — pure
-#: driver-side py4j cost paid on EVERY query build, and shared helpers
-#: (_staged_shingles) probe the same scan several times per query
-#: (ADVICE r13). semanticHash only needs analysis, and the partition
-#: count is a pure function of (plan, session conf) for the scans this
-#: guards. A hash collision could only skip/add the round-robin spread
-#: — a performance wobble, never a correctness issue.
-_PROBE_CACHE: dict[tuple[int, int], int] = {}
+#: (JVM session UUID, analyzed-plan semanticHash, input-file set hash)
+#: → planned partition count. df.rdd.getNumPartitions() compiles a full
+#: physical plan — pure driver-side py4j cost paid on EVERY query build,
+#: and shared helpers (_staged_shingles) probe the same scan several
+#: times per query (ADVICE r13). semanticHash only needs analysis but is
+#: blind to files appended under the same path, so the key also carries
+#: the relation's input files; the session UUID (unlike id() of the
+#: Python wrapper) is never reused by a later session. Bounded: the
+#: oldest entry is evicted past _PROBE_CACHE_MAX. A hash collision could
+#: only skip/add the round-robin spread — a performance wobble, never a
+#: correctness issue.
+_PROBE_CACHE: dict[tuple[str, int, int], int] = {}
+_PROBE_CACHE_MAX = 256
 
 
 def _planned_partitions(df: DataFrame) -> int:
-    key = (id(df.sparkSession), df._jdf.queryExecution().analyzed().semanticHash())
+    key = (
+        df.sparkSession._jsparkSession.sessionUUID(),
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        hash(tuple(sorted(df.inputFiles()))),
+    )
     n = _PROBE_CACHE.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
+        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
+            del _PROBE_CACHE[next(iter(_PROBE_CACHE))]
         _PROBE_CACHE[key] = n
     return n
 

@@ -19,7 +19,8 @@ pipeline runs over billions of documents. Four tiers, cheapest first:
 Cross-engine determinism: all hashing is md5 (available in DuckDB and
 Spark); MinHash "permutations" are min-over-md5(i || shingle), so the
 DuckDB oracle reproduces signatures exactly. SimHash needs hex→int
-(conv), which DuckDB lacks — its queries are rows-only checked.
+(conv), which DuckDB lacks — its oracles rebuild it as an integer fold
+over md5 hex digits.
 """
 
 from __future__ import annotations
@@ -612,7 +613,7 @@ def incremental_minhash_dedup(
     )
 
 
-# --- SimHash (rows-only oracle: needs hex→int conversion) -------------------
+# --- SimHash (oracle rebuilds hex→int as a fold over md5 hex digits) -------
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit long
 

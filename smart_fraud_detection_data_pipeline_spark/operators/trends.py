@@ -11,7 +11,8 @@ Reference parity (spark.py:171-200):
 
 Two count modes: ``exact=True`` uses COUNT(DISTINCT ...) so a SQL oracle
 can hash-match; ``exact=False`` reproduces the reference's HLL++
-behavior (A3) — approximate, oracle gets a rows-only check.
+behavior (A3) — approximate, so user_spend_trends_approx certifies it
+against the exact count with contract columns its oracle asserts TRUE.
 
 Scale design: exactly one shuffle, keyed on (window, key) — partial
 aggregation runs map-side before the exchange, so the shuffle carries

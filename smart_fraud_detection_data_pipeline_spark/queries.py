@@ -24,7 +24,6 @@ engines.
 from __future__ import annotations
 
 from collections.abc import Callable
-import dataclasses
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +44,7 @@ from smart_fraud_detection_data_pipeline_spark.sources.tables import load_table
 class QuerySpec:
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → driver runs rows-only check (documented why)
+    oracle: str  # DuckDB SQL twin; every query has one
     # Optional untimed fixture staging (harness code, not operator work):
     # bench.py calls prepare before starting the clock so streaming
     # numbers measure streaming, not tempdir writes (VERDICT r1 #3/#6).
@@ -57,7 +56,7 @@ class QuerySpec:
 _REGISTRY: list[QuerySpec] = []
 
 
-def _register(name: str, oracle: str | None, prepare=None):
+def _register(name: str, oracle: str, prepare=None):
     def deco(fn):
         _REGISTRY.append(QuerySpec(name, fn, oracle, prepare))
         return fn
@@ -104,116 +103,49 @@ def _scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
-#: Queries with high fixed overhead at sf0.01 (streaming micro-batch +
-#: state-store startup, MLlib fits, staged warehouse writes, iterative
-#: graph rounds). registry() orders these LAST so a truncated driver
-#: correctness run (VERDICT r2: coverage stopped at 49/101) spends its
-#: budget on the cheap majority first; the stable sort keeps insertion
-#: order within each class.
-_SLOW = frozenset({
-    "fraud_enrich_streaming", "dedup_streaming", "user_spend_trends_streaming",
-    "user_running_totals_streaming", "session_windows_streaming",
-    "stream_stream_join", "stream_stream_join_bucketed",
-    "stream_stream_left_join", "stream_stream_left_join_bucketed",
-    "stream_windowed_rollup",
-    "user_spend_trends_incremental", "warehouse_load", "warehouse_load_incremental",
-    "fraud_ml_score", "embed_ivf_kmeans_ann", "embed_ivf_ann",
-    "embed_semantic_dedup_kmeans",
-    "doc_dup_components", "doc_clean_corpus", "merge_upsert",
-    "corpus_training_export", "dedup_streaming_compaction",
-    "embed_ann_streaming",
-})
-
-#: Queries whose Spark implementation or oracle SQL is NEW or CHANGED
-#: this round, ordered FIRST so the driver's budget-capped correctness
-#: run verifies the changed surface before re-verifying stable queries
-#: (ADVICE r3: none of round 3's 16 new queries made it into the
-#: 50-entry driver artifact). Refresh this set each round.
-_FRESH = frozenset({
-    # round 13 (optimization round): spread_input added to the heavy
-    # map stages of these queries' plans (r13 commit 3c6fea0/fe84c9c) —
-    # implementation changed, output contract unchanged; plus the
-    # round-13 in-flight BM25 index/certificate work (abf737b chain).
-    "doc_bm25_index_incremental",  # NEW: persisted champion-list lifecycle
-    "doc_bm25_topk_pruned",        # certificate soundness fix + broadcast guard
-    "doc_bm25_topk",               # scale fence (max_scored_postings)
-    "doc_winnow", "doc_winnow_pairs", "doc_profile", "doc_clean_corpus",
-    "doc_strip_boilerplate", "doc_repeated_passages", "doc_simhash",
-    "doc_simhash_pairs", "doc_ngram_jaccard", "doc_ngram_jaccard_capped",
-    "doc_minhash_lsh", "doc_dedup_incremental", "doc_dedup_index_compaction",
-    "dedup_incremental_streaming", "dedup_streaming_compaction",
-    "doc_decontaminate", "doc_decontaminate_bloom", "corpus_training_export",
-    "doc_dup_components", "vocab_cms_counts", "doc_bpe_tokenize",
-    "events_pii_redact", "multimodal_jpeg_decode", "multimodal_jpeg420_decode",
-    "multimodal_audio_decode", "multimodal_video_frames",
-})
-
-#: Driver-block rotation, round 13 (standing VERDICT r9 #1 policy): an
-#: ORDERED tuple. Tier A: this round's new/changed surface (the
-#: spread_input plan changes + the in-flight BM25 index work), riskiest
-#: first — the CLAUDE.md changed-surface invariant outranks rotation;
-#: 9 of these double as r09-stale re-certs. Tier B: the remaining 22
-#: names whose last driver certification is r09 (computed from the
-#: CORRECTNESS_r01..r12 artifacts), so the 50-query cap leaves nothing
-#: older than r10 once this round's artifact lands (VERDICT r12 #4).
-#: Streaming/staged-write names ride last within tier A so a truncated
-#: run still covers the cheap majority.
+#: The driver's correctness run checks registry()[:50], so this ORDERED
+#: tuple names that window explicitly (tests/test_registry.py keeps it
+#: at >= 50 registered, unique names). Refresh it every round: queries
+#: whose Spark plan or oracle changed come first, then the names whose
+#: last driver certification is oldest (from the CORRECTNESS_rNN.json
+#: artifacts).
 _DRIVER_ROTATION = (
-    # --- tier A: round-13 changed (riskiest first) ---
-    "doc_bm25_index_incremental",
-    "doc_bm25_topk_pruned",
-    "doc_bm25_topk",
-    "doc_winnow",
-    "doc_winnow_pairs",
-    "doc_profile",
-    "doc_simhash",
-    "doc_simhash_pairs",
-    "doc_minhash_lsh",
-    "doc_ngram_jaccard",
-    "doc_ngram_jaccard_capped",
-    "doc_dedup_incremental",
-    "doc_dedup_index_compaction",
-    "doc_repeated_passages",
-    "doc_strip_boilerplate",
-    "doc_clean_corpus",
-    "doc_decontaminate",
-    "doc_decontaminate_bloom",
-    "doc_dup_components",
-    "vocab_cms_counts",
-    "doc_bpe_tokenize",
-    "events_pii_redact",
-    "multimodal_jpeg_decode",
-    "multimodal_jpeg420_decode",
-    "multimodal_audio_decode",
-    "multimodal_video_frames",
-    "corpus_training_export",
-    "dedup_incremental_streaming",
-    "dedup_streaming_compaction",
-    # --- tier B: remaining r09-stale names (cheap first) ---
-    "embed_label_centroid_dist", "event_type_trimmed_mean",
-    "events_jsonl_roundtrip", "events_orc_roundtrip",
-    "forecast_revenue_change", "idle_rich_customers",
-    "important_part_value", "large_volume_customers", "min_cost_suppliers",
-    "multi_distinct_stats", "multimodal_frame_sample", "multimodal_image_decode",
-    "multimodal_meta", "multimodal_resize", "nation_market_share",
-    "nation_top_customers_lateral", "nation_trade_volume",
-    "user_distinct_sketch_rollup", "fraud_ml_score",
-    "stream_stream_join", "stream_stream_join_bucketed",
-    "stream_stream_left_join",
+    # --- changed in round 14, not yet driver-certified; doc_profile now
+    # runs through textstats.text_profile ---
+    "user_robust_zscore", "doc_profile", "embed_cosine_topk",
+    "embed_ivf_ann", "embed_ivf_kmeans_ann", "embed_pq_rerank",
+    "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
+    "warehouse_load",
+    # foreachBatch-sink streaming queries
+    "fraud_enrich_streaming", "dedup_streaming",
+    "dedup_incremental_streaming", "dedup_streaming_compaction",
+    "user_spend_trends_streaming", "user_running_totals_streaming",
+    "session_windows_streaming", "stream_stream_join",
+    "stream_stream_join_bucketed", "stream_stream_left_join",
+    "stream_stream_left_join_bucketed", "stream_windowed_rollup",
+    "embed_ann_streaming",
+    # --- last driver-certified in round 10 ---
+    "category_trends", "user_spend_trends_approx", "dedup_keep_last",
+    "merge_upsert_delete", "top_customers", "embed_srp_ann",
+    "multimodal_byte_features", "asof_last_purchase",
+    "small_quantity_revenue", "not_in_null_semantics",
+    "events_variant_props", "user_funnel", "orders_cube",
+    "shipping_priority", "regional_revenue", "doc_sample_stratified",
+    "zorder_layout_scan", "returnflag_priority_mix",
+    "promo_revenue_pct", "salted_user_join", "kafka_serde_roundtrip",
+    "user_spend_trends_incremental", "user_value_lag_delta",
+    "nation_year_profit", "prolific_red_part_suppliers",
+    "order_priority_late_ship", "returned_item_losses",
+    "embed_quantized_topk",
 )
 
 
 def registry() -> list[QuerySpec]:
-    pos = {n: i for i, n in enumerate(_DRIVER_ROTATION)}
-    return sorted(
-        _REGISTRY,
-        key=lambda s: (
-            s.name not in pos,
-            pos.get(s.name, len(pos)),
-            s.name in _SLOW,
-            s.name not in _FRESH,
-        ),
-    )
+    """_DRIVER_ROTATION in tuple order, then every other query in
+    registration order. A rotation name that is not registered raises."""
+    by_name = {s.name: s for s in _REGISTRY}
+    head = [by_name[n] for n in _DRIVER_ROTATION]
+    return head + [s for s in _REGISTRY if s.name not in _DRIVER_ROTATION]
 
 
 # ---------------------------------------------------------------------------
@@ -310,9 +242,7 @@ p AS (
 # Flagship: fraud enrichment (S6, P1-P6, J1/J2, F3-F5 — spark.py:126-168)
 # ---------------------------------------------------------------------------
 
-@_register(
-    "fraud_enrich",
-    f"""
+_SQL_FRAUD_ENRICH = f"""
 WITH {_SQL_TX}, {_SQL_USERS}, {_SQL_PRODUCTS}
 SELECT t.transaction_id, t.user_id, t.product_id, t.amount, t.payment_method,
        t."timestamp",
@@ -330,8 +260,10 @@ SELECT t.transaction_id, t.user_id, t.product_id, t.amount, t.payment_method,
 FROM tx t
 LEFT JOIN u ON t.user_id = u.user_id
 LEFT JOIN p ON t.product_id = p.product_id
-""",
-)
+"""
+
+
+@_register("fraud_enrich", _SQL_FRAUD_ENRICH)
 def q_fraud_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: two broadcast left joins + rule-score columns, zero shuffles."""
     out = E.enrich_transactions(
@@ -648,9 +580,7 @@ def q_merge_upsert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Relational coverage: scan/filter pushdown, agg, join, top-k
 # ---------------------------------------------------------------------------
 
-@_register(
-    "pricing_summary",
-    """
+_SQL_PRICING_SUMMARY = """
 SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -660,8 +590,10 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2000-09-02'
 GROUP BY l_returnflag, l_linestatus
-""",
-)
+"""
+
+
+@_register("pricing_summary", _SQL_PRICING_SUMMARY)
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped scan+filter+agg: exercises predicate pushdown,
     column pruning, partial aggregation, exact-decimal money math."""
@@ -1324,14 +1256,63 @@ def q_dedup_incremental_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     return SK.read_or_empty(spark, out_path, spark.createDataFrame([], out_schema))
 
 
-@_register("doc_simhash", None)  # FULL oracle attached below (_simhash_sql_cte
-# replaces this spec): conv(hex,16,10) is rebuilt as a pure-SQL integer
-# fold over md5 hex digits, so this is a hash gate, not rows-only.
+def _simhash_sql_cte() -> str:
+    """Per-doc token-hash list + 60-bit SimHash in pure SQL: the hex→int
+    conversion Spark does with conv() becomes an integer fold over md5
+    hex digits (verified bit-identical), and each of the 60 vote/bit
+    terms is generated from the same SIMHASH_BITS constant."""
+    bit_terms = "\n       + ".join(
+        f"(CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN h // {1 << b} % 2 = 1 "
+        f"THEN 1 ELSE -1 END)) > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
+        for b in range(TD.SIMHASH_BITS)
+    )
+    return f"""
+hashes AS (
+  SELECT doc_id,
+         list_transform(string_split_regex(trim(text), '\\s+'),
+           t -> list_reduce(
+                  list_transform(generate_series(1, 15),
+                    i -> CAST(strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1 AS BIGINT)),
+                  (acc, d) -> acc * 16 + d)) AS hs
+  FROM documents
+  WHERE text IS NOT NULL
+),
+sims AS (
+  SELECT doc_id,
+       {bit_terms} AS simhash
+  FROM hashes
+)"""
+
+
+def _simhash_pairs_sql() -> str:
+    """Oracle twin of simhash_pairs: signatures from _simhash_sql_cte,
+    paired through a fixed 4-chunk banding."""
+    chunk_union = "\n  UNION ALL\n".join(
+        f"  SELECT doc_id, simhash, {c} AS chunk, simhash // {1 << (c * 15)} % {1 << 15} AS key FROM sims"
+        for c in range(4)
+    )
+    return f"""
+WITH {_simhash_sql_cte()},
+chunked AS (
+{chunk_union}
+),
+candidates AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+         a.simhash AS sim_a, b.simhash AS sim_b
+  FROM chunked a JOIN chunked b
+    ON a.chunk = b.chunk AND a.key = b.key AND a.doc_id < b.doc_id
+)
+SELECT id_a, id_b, CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
+FROM candidates
+WHERE bit_count(xor(sim_a, sim_b)) <= 3
+"""
+
+
+@_register("doc_simhash", f"WITH {_simhash_sql_cte()}\nSELECT doc_id, simhash FROM sims")
 def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per document (map-only projection). FULL hash
     gate: the oracle recomputes the hex→int conversion as an integer
-    fold over md5 hex digits (see _simhash_sql_cte, which replaces
-    this registration's placeholder-None oracle at import time).
+    fold over md5 hex digits (see _simhash_sql_cte).
     NULL text is excluded on both engines (absent content has no
     signature — adversarial-sweep rule, same as the pair ops)."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
@@ -1341,12 +1322,10 @@ def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("doc_simhash_pairs", None)  # FULL oracle attached below (the
-# _simhash_sql_cte fixed-4-chunk mirror replaces this spec — the output
-# is rung-invariant, so the oracle keeps its own banding).
+@_register("doc_simhash_pairs", _simhash_pairs_sql())
 def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ 3 via pigeonhole chunk
-    join. FULL hash gate: the oracle (attached at import time, below)
+    join. FULL hash gate: the oracle (_simhash_pairs_sql)
     recomputes signatures via the SQL hex fold and pairs them with its
     own fixed 4-chunk banding — legitimate because banding is pure
     candidate generation and the exact hamming filter decides."""
@@ -1429,34 +1408,8 @@ def _profile_sql() -> str:
 def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-analysis profile: token counts, punct/stopword ratios,
     language-ID heuristic, rolling-hash fingerprint — one scan, no shuffle."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    # Staged tokenization: Catalyst inlines shared expressions at every
-    # reference, so project the token arrays and language scores once
-    # and let every signal read attributes (8x measured on repetition).
-    # Spread an under-split scan first: the min-md5 fingerprint fold is
-    # ~2 s serial on one split at sf0.1, 0.25 s spread (measured r13).
-    staged = spread_input(docs.select("doc_id", "text")).select(
-        "doc_id", "text", TS.tokens(t).alias("__toks"),
-        TS.tokens(F.lower(t)).alias("__ltoks"),
-    )
-    scored = staged.select(
-        "doc_id", "text", "__toks",
-        *[
-            c.alias(f"__s_{lang}")
-            for lang, c in TS.lang_scores(t, ltoks=F.col("__ltoks")).items()
-        ],
-    )
-    qc = TS.quality_columns(t, toks=F.col("__toks"))
-    scores = {lang: F.col(f"__s_{lang}") for lang in TS.LANG_STOPWORDS}
-    return scored.select(
-        "doc_id",
-        F.size("__toks").alias("n_tokens"),
-        TS.wordpiece_count(t).alias("n_wordpieces"),
-        qc["punct_ratio"].alias("punct_ratio"),
-        qc["stopword_ratio"].alias("stopword_ratio"),
-        TS.lang_id(t, scores=scores).alias("lang_pred"),
-        TS.fingerprint(t).alias("fingerprint"),
+    return TS.text_profile(load_table(spark, sf_dir, "documents")).drop(
+        "quality_score"
     )
 
 
@@ -2628,7 +2581,60 @@ def q_embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.cosine_topk(emb, queries, k=10)
 
 
-@_register("embed_srp_ann", None)  # LSH planes derived host-side → rows-only
+def _srp_oracle_sql(n_planes: int = 4, k: int = 10, dim: int = 64) -> str:
+    """Oracle twin of srp_ann_topk, generated from the SAME deterministic
+    hyperplanes (embedded as literals) — bucket assignment, hamming-1
+    multiprobe, candidate scoring and ranking all reproduced in SQL."""
+    from smart_fraud_detection_data_pipeline_spark.operators.similarity import srp_planes
+
+    planes = srp_planes(dim, n_planes)
+
+    def lit(plane):
+        return "[" + ",".join(f"{v:.1f}" for v in plane) + "]::DOUBLE[]"
+
+    def bucket_expr(vcol):
+        terms = [
+            f"(CASE WHEN list_sum(list_transform(list_zip({vcol}, {lit(p)}), z -> z[1]*z[2])) >= 0"
+            f" THEN {1 << i} ELSE 0 END)"
+            for i, p in enumerate(planes)
+        ]
+        return " + ".join(terms)
+
+    probes = ", ".join(["bucket"] + [f"xor(bucket, {1 << p})" for p in range(n_planes)])
+    return f"""
+WITH q AS (
+  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings
+  WHERE vec_id < 5 AND embedding IS NOT NULL
+),
+c AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
+      WHERE embedding IS NOT NULL AND vec_id IS NOT NULL),
+cb AS (SELECT vec_id, cv, {bucket_expr('cv')} AS bucket FROM c),
+qb AS (SELECT query_id, qv, {bucket_expr('qv')} AS bucket FROM q),
+probes AS (
+  SELECT query_id, qv, unnest([{probes}]) AS bucket FROM qb
+),
+scored AS (
+  SELECT p.query_id, cb.vec_id,
+         round(CASE WHEN sqrt(list_sum(list_transform(p.qv, x -> x*x))) > 0
+                     AND sqrt(list_sum(list_transform(cb.cv, x -> x*x))) > 0
+               THEN list_sum(list_transform(list_zip(p.qv, cb.cv), z -> z[1]*z[2]))
+                    / (sqrt(list_sum(list_transform(p.qv, x -> x*x)))
+                       * sqrt(list_sum(list_transform(cb.cv, x -> x*x))))
+               END, 6) AS cosine_sim
+  FROM cb JOIN probes p USING (bucket)
+),
+ranked AS (
+  SELECT query_id, vec_id, cosine_sim,
+         CAST(row_number() OVER (
+           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
+         ) AS INTEGER) AS rank
+  FROM scored
+)
+SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+"""
+
+
+@_register("embed_srp_ann", _srp_oracle_sql())
 def q_embed_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-LSH approximate top-10 (bucketed candidates only — the 100 TB
     path; recall vs the exact baseline is asserted in tests)."""
@@ -2663,7 +2669,41 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("multimodal_byte_features", None)  # mapInPandas fake decode → rows-only
+# BYTE-exact oracle for the Arrow-UDF byte features: the utf-8 payload
+# surfaces in SQL as its hex encoding (hex(encode(text))), and each byte
+# is reconstructed by nibble arithmetic — so the oracle holds on ANY
+# corpus, not just ASCII (the old codepoint formulation silently
+# predicated correctness on an ASCII-only corpus; the adversarial
+# fixtures' unicode documents falsified it).
+_HEX_BYTE = (
+    "(strpos('0123456789ABCDEF', substr(hx, 2*j + 1, 1)) - 1) * 16"
+    " + strpos('0123456789ABCDEF', substr(hx, 2*j + 2, 1)) - 1"
+)
+
+
+@_register(
+    "multimodal_byte_features",
+    f"""
+WITH b AS (
+  SELECT doc_id, hex(encode(text)) AS hx,
+         CAST(octet_length(encode(text)) AS INTEGER) AS n
+  FROM documents
+  WHERE text IS NOT NULL
+),
+bs AS (
+  SELECT doc_id, n,
+         list_transform(generate_series(0, n - 1), j -> {_HEX_BYTE}) AS bytes
+  FROM b
+)
+SELECT doc_id,
+       CAST(n AS BIGINT) AS n_bytes,
+       CASE WHEN n > 0
+            THEN CAST(list_sum(bytes) AS DOUBLE) / n ELSE 0.0e0 END AS byte_mean,
+       CAST(len(list_distinct(bytes)) AS DOUBLE) / 256.0e0 AS byte_entropy_proxy,
+       'txt' AS format
+FROM bs
+""",
+)
 def q_multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads (the decode
     itself is a deterministic stub; plumbing is the real product)."""
@@ -2988,11 +3028,8 @@ def q_multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming parity: the Structured Streaming path must equal the batch oracle
 # ---------------------------------------------------------------------------
 
-def _spec(name: str) -> QuerySpec:
-    return next(s for s in _REGISTRY if s.name == name)
-
-
-@_register("fraud_enrich_streaming", None)  # oracle attached below (same as batch)
+# stream output == batch output, so the oracle SQL is shared verbatim
+@_register("fraud_enrich_streaming", _SQL_FRAUD_ENRICH)
 def q_fraud_enrich_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship enrichment executed through Structured Streaming
     (file source → watermark → stream-static broadcast joins →
@@ -3042,11 +3079,6 @@ def q_fraud_enrich_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     SK.await_or_raise(q)
     return SK.read_or_empty(spark, os.path.join(tmp, "out"), result)
 
-
-# stream output == batch output, so the oracle SQL is shared verbatim
-_REGISTRY[-1] = dataclasses.replace(
-    _REGISTRY[-1], oracle=_spec("fraud_enrich").oracle
-)
 
 
 _DUP_SRC: dict[str, str] = {}
@@ -3187,7 +3219,7 @@ def q_synthetic_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Warehouse entry point (EP3): S7 partitioned sink → S11-S13 scan → A6 → A8
 # ---------------------------------------------------------------------------
 
-@_register("warehouse_load", None)  # oracle attached below (fraud_enrich twin)
+@_register("warehouse_load", _SQL_FRAUD_ENRICH)
 def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The loader pipeline end-to-end, Spark-native: the enriched fraud
     table is written twice to a Hive-partitioned prefix (modeling
@@ -3208,7 +3240,8 @@ def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     # Cache the enriched table: both load slices derive from it, and
-    # without materialization the two writes re-run the enrichment.
+    # without materialization the union write re-runs the enrichment
+    # once per slice.
     enriched = q_fraud_enrich(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     # raw-scan probe: enrichment is row-preserving, so emptiness is
     # equivalent and the guard skips the broadcast-build limit-1 job
@@ -3237,8 +3270,8 @@ def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         *FRAUD_PARTITIONS,
         F.pmod(F.xxhash64("transaction_id", "load_seq"), F.lit(8)),
     ).write.mode("append").partitionBy(*FRAUD_PARTITIONS).parquet(tmp)
-    # Both consumers (the two writes) have materialized — release the
-    # cache NOW; the returned frame reads the written parquet, so
+    # The one union write (the cache's only consumer) has materialized —
+    # release the cache NOW; the returned frame reads the written parquet, so
     # nothing downstream needs it (shared-session leak rule, ADVICE r3).
     enriched.unpersist()
     loaded = L.warehouse_load(
@@ -3251,10 +3284,6 @@ def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return loaded
 
-
-_REGISTRY[-1] = dataclasses.replace(
-    _REGISTRY[-1], oracle=_spec("fraud_enrich").oracle
-)
 
 
 @_register(
@@ -3444,10 +3473,7 @@ def q_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "sql_pricing_summary",
-    _spec("pricing_summary").oracle,
-)
+@_register("sql_pricing_summary", _SQL_PRICING_SUMMARY)
 def q_sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL frontend surface: the engine registers the testdata tables
     as views and executes the SAME dialect-portable SQL text the oracle
@@ -3455,7 +3481,7 @@ def q_sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.sources.tables import register_temp_views
 
     register_temp_views(spark, sf_dir, names=("lineitem",))
-    return spark.sql(_spec("pricing_summary").oracle)
+    return spark.sql(_SQL_PRICING_SUMMARY)
 
 
 # ---------------------------------------------------------------------------
@@ -3824,9 +3850,7 @@ def q_asof_last_purchase_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
-    "error_burst_window",
-    """
+_SQL_ERROR_BURST_WINDOW = """
 WITH e AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
 )
@@ -3837,8 +3861,10 @@ FROM (SELECT * FROM e WHERE event_type = 'error') a
 LEFT JOIN e b
   ON b.user_id = a.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
 GROUP BY a.event_id
-""",
-)
+"""
+
+
+@_register("error_burst_window", _SQL_ERROR_BURST_WINDOW)
 def q_error_burst_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval (range) join: per error event, the same user's activity in
     the following 10 minutes — equi-key join bounds the fan-out, the
@@ -3875,7 +3901,7 @@ def q_error_burst_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("error_burst_window_bucketed", None)  # oracle attached below
+@_register("error_burst_window_bucketed", _SQL_ERROR_BURST_WINDOW)
 def q_error_burst_window_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """error_burst_window through the opt-in interval_join
     ``bucket_seconds`` hot-key split (round 7, twin of the as-of
@@ -3915,14 +3941,20 @@ def q_error_burst_window_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# the bucketed plan must equal the default plan, so the oracle SQL is
-# shared verbatim (same contract as the streaming twins below)
-_REGISTRY[-1] = dataclasses.replace(
-    _REGISTRY[-1], oracle=_spec("error_burst_window").oracle
+
+@_register(
+    "user_spend_trends_streaming",
+    """
+SELECT user_id,
+       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
+       COUNT(*) AS n_events,
+       strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+       strftime(date_trunc('minute', ts) + INTERVAL 1 MINUTE, '%Y-%m-%d %H:%M:%S') AS window_end
+FROM events
+WHERE ts IS NOT NULL
+GROUP BY user_id, date_trunc('minute', ts)
+""",
 )
-
-
-@_register("user_spend_trends_streaming", None)  # oracle attached below
 def q_user_spend_trends_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 through Structured Streaming: the tumbling-window aggregation
     runs in faithful mode (complete output re-emitted per trigger,
@@ -3970,20 +4002,6 @@ def q_user_spend_trends_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
         raw_out, ["user_id", "window_start"], ["batch_id"]
     ).drop("batch_id")
 
-
-_REGISTRY[-1] = dataclasses.replace(
-    _REGISTRY[-1],
-    oracle="""
-SELECT user_id,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
-       COUNT(*) AS n_events,
-       strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       strftime(date_trunc('minute', ts) + INTERVAL 1 MINUTE, '%Y-%m-%d %H:%M:%S') AS window_end
-FROM events
-WHERE ts IS NOT NULL
-GROUP BY user_id, date_trunc('minute', ts)
-""",
-)
 
 
 @_register(
@@ -4145,7 +4163,120 @@ def q_value_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("embed_ivf_ann", None)  # centroid routing is data-derived → rows-only
+#: Squared-L2 distance template shared by every sampled-centroid oracle
+#: (expanded ‖x‖²+‖c‖²−2·x·c, mirroring centroid_dist_array).
+_IVF_DIST = (
+    "list_sum(list_transform({v}, x -> x*x))"
+    " + list_sum(list_transform(cents.cv, x -> x*x))"
+    " - 2 * list_sum(list_transform(list_zip({v}, cents.cv), z -> z[1]*z[2]))"
+)
+
+
+def _ivf_assign_cte(n_clusters: int) -> str:
+    """The c/cents/assign CTE block shared by every sampled-centroid
+    oracle (embed_ivf_ann, embed_semantic_dedup): centroid selection
+    (every n/k-th vector by id) and squared-L2 argmin assignment with
+    lowest-index tie-break. ONE builder so the assignment semantics can
+    never drift between oracles (fuzz-sweep shared-branch rule)."""
+    return f"""
+WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+           WHERE embedding IS NOT NULL AND vec_id IS NOT NULL),
+cents AS (
+  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, v AS cv
+  FROM c
+  WHERE vec_id % greatest((SELECT count(*) FROM c) // {n_clusters}, 1) = 0
+  ORDER BY vec_id LIMIT {n_clusters}
+),
+assign AS (
+  SELECT vec_id, v, cidx FROM (
+    SELECT c.vec_id, c.v, cents.cidx,
+           row_number() OVER (
+             PARTITION BY c.vec_id ORDER BY {_IVF_DIST.format(v='c.v')}, cents.cidx
+           ) AS rn
+    FROM c CROSS JOIN cents
+  ) WHERE rn = 1
+)"""
+
+
+def _ivf_oracle_sql(
+    k: int = 10, n_clusters: int = 16, nprobe: int = 4,
+    query_pred: str = "vec_id < 5",
+) -> str:
+    """Oracle twin of the sampled-centroid IVF queries (batch and
+    streaming — the streaming twin widens query_pred): the shared
+    centroid-assignment CTEs plus nprobe cell routing, candidate scoring
+    and ranking — all recomputed from the table in SQL."""
+    dist = _IVF_DIST
+    return f"""{_ivf_assign_cte(n_clusters)},
+q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE {query_pred}),
+qprobe AS (
+  SELECT query_id, qv, cidx FROM (
+    SELECT q.query_id, q.qv, cents.cidx,
+           row_number() OVER (
+             PARTITION BY q.query_id ORDER BY {dist.format(v='q.qv')}, cents.cidx
+           ) AS rn
+    FROM q CROSS JOIN cents
+  ) WHERE rn <= {nprobe}
+),
+scored AS (
+  SELECT p.query_id, a.vec_id,
+         round(CASE WHEN sqrt(list_sum(list_transform(p.qv, x -> x*x))) > 0
+                     AND sqrt(list_sum(list_transform(a.v, x -> x*x))) > 0
+               THEN list_sum(list_transform(list_zip(p.qv, a.v), z -> z[1]*z[2]))
+                    / (sqrt(list_sum(list_transform(p.qv, x -> x*x)))
+                       * sqrt(list_sum(list_transform(a.v, x -> x*x))))
+               END, 6) AS cosine_sim
+  FROM qprobe p JOIN assign a ON a.cidx = p.cidx
+),
+ranked AS (
+  SELECT query_id, vec_id, cosine_sim,
+         CAST(row_number() OVER (
+           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
+         ) AS INTEGER) AS rank
+  FROM scored
+)
+SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+"""
+
+
+def _semantic_dedup_oracle_sql(
+    n_clusters: int = 16,
+    threshold: str = "0.35e0",
+    final_select: str | None = None,
+) -> str:
+    """Oracle twin of embed_semantic_dedup: the SAME c/cents/assign CTEs
+    as the IVF oracle (one builder — shared-branch rule), then the
+    pruning rule itself: smallest lower-id cluster-mate at
+    6-dp-rounded cosine >= threshold, NULL-cosine (zero-norm) pairs
+    never matching. The threshold literal carries e0 so the comparison
+    is DOUBLE on both engines. ``final_select`` swaps the projection
+    (the kmeans contract-report twin reuses the identical decision CTEs
+    — shared-branch rule again — but emits the report columns)."""
+    if final_select is None:
+        final_select = (
+            "SELECT n.vec_id, n.cidx AS cluster, d.dup_of,"
+            " d.dup_of IS NULL AS keep\n"
+            "FROM normed n LEFT JOIN dups d ON d.vec_id = n.vec_id"
+        )
+    return f"""{_ivf_assign_cte(n_clusters)},
+normed AS (
+  SELECT vec_id, v, cidx,
+         sqrt(list_sum(list_transform(v, x -> x*x))) AS nv
+  FROM assign
+),
+dups AS (
+  SELECT a.vec_id AS vec_id, MIN(b.vec_id) AS dup_of
+  FROM normed a JOIN normed b ON a.cidx = b.cidx AND b.vec_id < a.vec_id
+  WHERE round(CASE WHEN a.nv > 0 AND b.nv > 0
+              THEN list_sum(list_transform(list_zip(a.v, b.v), p -> p[1]*p[2]))
+                   / (a.nv * b.nv) END, 6) >= {threshold}
+  GROUP BY a.vec_id
+)
+{final_select}
+"""
+
+
+@_register("embed_ivf_ann", _ivf_oracle_sql())
 def q_embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate top-10: queries routed to nprobe=4 of 16
     coarse cells, only those cells scored (~25% of the corpus). The
@@ -4160,7 +4291,7 @@ def q_embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_ann_topk(emb, queries, k=10, n_clusters=16, nprobe=4)
 
 
-@_register("embed_semantic_dedup", None)  # oracle attached below (shared assign CTE)
+@_register("embed_semantic_dedup", _semantic_dedup_oracle_sql())
 def q_embed_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (public arXiv 2303.09540): sampled-
     centroid clustering, then within-cluster cosine pruning — a vector
@@ -4176,7 +4307,19 @@ def q_embed_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup(emb, n_clusters=16, threshold=0.35)
 
 
-@_register("embed_semantic_dedup_kmeans", None)  # contract oracle attached below
+# Contract-report twin (VERDICT r8 #2): the exact dup_sampled column
+# reuses the IDENTICAL sampled-quantizer decision CTEs; removed_sound is
+# the learned run's join-back soundness check, asserted TRUE.
+@_register(
+    "embed_semantic_dedup_kmeans",
+    _semantic_dedup_oracle_sql(
+        final_select=(
+            "SELECT n.vec_id, d.dup_of IS NOT NULL AS dup_sampled,"
+            " TRUE AS removed_sound\n"
+            "FROM normed n LEFT JOIN dups d ON d.vec_id = n.vec_id"
+        )
+    ),
+)
 def q_embed_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with LEARNED (seeded KMeans) cells instead of sampled
     ones (the optional variant from VERDICT r7 #6) — on real clustered
@@ -4311,7 +4454,7 @@ def q_user_event_type_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MLlib layer (rows-only: learned models are not SQL-expressible)
+# MLlib layer (contract oracles: learned parameters are not SQL-expressible)
 # ---------------------------------------------------------------------------
 
 @_register(
@@ -4933,7 +5076,27 @@ def q_stream_stream_left_join_bucketed(spark: SparkSession, sf_dir: str) -> Data
 
 @_register(
     "session_windows_streaming",
-    None,  # oracle attached below
+    """
+WITH o AS (
+  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
+         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                OR CAST(ts AS TIMESTAMP) - lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id ORDER BY ts) >= INTERVAL 5 MINUTE
+              THEN 1 ELSE 0 END AS new_sess
+  FROM events
+  WHERE ts IS NOT NULL
+),
+s AS (
+  SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sess_id
+  FROM o
+)
+SELECT user_id,
+       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+FROM s
+GROUP BY user_id, sess_id
+""",
     prepare=lambda spark, sf_dir: _staged_session_source(spark, sf_dir),
 )
 def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4989,31 +5152,6 @@ def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     last = emissions.agg(F.max("batch_id")).collect()[0][0]
     return emissions.where(F.col("batch_id") == last).drop("batch_id")
 
-
-_REGISTRY[-1] = dataclasses.replace(
-    _REGISTRY[-1],
-    oracle="""
-WITH o AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                OR CAST(ts AS TIMESTAMP) - lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id ORDER BY ts) >= INTERVAL 5 MINUTE
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WHERE ts IS NOT NULL
-),
-s AS (
-  SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM o
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM s
-GROUP BY user_id, sess_id
-""",
-)
 
 
 @_register(
@@ -5200,212 +5338,6 @@ def q_doc_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("id").alias("doc_id"), "component")
 
 
-def _srp_oracle_sql(n_planes: int = 4, k: int = 10, dim: int = 64) -> str:
-    """Oracle twin of srp_ann_topk, generated from the SAME deterministic
-    hyperplanes (embedded as literals) — bucket assignment, hamming-1
-    multiprobe, candidate scoring and ranking all reproduced in SQL."""
-    from smart_fraud_detection_data_pipeline_spark.operators.similarity import srp_planes
-
-    planes = srp_planes(dim, n_planes)
-
-    def lit(plane):
-        return "[" + ",".join(f"{v:.1f}" for v in plane) + "]::DOUBLE[]"
-
-    def bucket_expr(vcol):
-        terms = [
-            f"(CASE WHEN list_sum(list_transform(list_zip({vcol}, {lit(p)}), z -> z[1]*z[2])) >= 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        ]
-        return " + ".join(terms)
-
-    probes = ", ".join(["bucket"] + [f"xor(bucket, {1 << p})" for p in range(n_planes)])
-    return f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings
-  WHERE vec_id < 5 AND embedding IS NOT NULL
-),
-c AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
-      WHERE embedding IS NOT NULL AND vec_id IS NOT NULL),
-cb AS (SELECT vec_id, cv, {bucket_expr('cv')} AS bucket FROM c),
-qb AS (SELECT query_id, qv, {bucket_expr('qv')} AS bucket FROM q),
-probes AS (
-  SELECT query_id, qv, unnest([{probes}]) AS bucket FROM qb
-),
-scored AS (
-  SELECT p.query_id, cb.vec_id,
-         round(CASE WHEN sqrt(list_sum(list_transform(p.qv, x -> x*x))) > 0
-                     AND sqrt(list_sum(list_transform(cb.cv, x -> x*x))) > 0
-               THEN list_sum(list_transform(list_zip(p.qv, cb.cv), z -> z[1]*z[2]))
-                    / (sqrt(list_sum(list_transform(p.qv, x -> x*x)))
-                       * sqrt(list_sum(list_transform(cb.cv, x -> x*x))))
-               END, 6) AS cosine_sim
-  FROM cb JOIN probes p USING (bucket)
-),
-ranked AS (
-  SELECT query_id, vec_id, cosine_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
-         ) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-# Promote embed_srp_ann from rows-only to oracle-checked: the SQL twin
-# reproduces bucket routing exactly because both derive hyperplanes from
-# the same srp_planes() constants.
-for _i, _s in enumerate(_REGISTRY):
-    if _s.name == "embed_srp_ann":
-        _REGISTRY[_i] = QuerySpec("embed_srp_ann", _s.spark_fn, _srp_oracle_sql())
-        break
-
-
-def _simhash_sql_cte() -> str:
-    """Per-doc token-hash list + 60-bit SimHash in pure SQL: the hex→int
-    conversion Spark does with conv() becomes an integer fold over md5
-    hex digits (verified bit-identical), and each of the 60 vote/bit
-    terms is generated from the same SIMHASH_BITS constant."""
-    bit_terms = "\n       + ".join(
-        f"(CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN h // {1 << b} % 2 = 1 "
-        f"THEN 1 ELSE -1 END)) > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
-        for b in range(TD.SIMHASH_BITS)
-    )
-    return f"""
-hashes AS (
-  SELECT doc_id,
-         list_transform(string_split_regex(trim(text), '\\s+'),
-           t -> list_reduce(
-                  list_transform(generate_series(1, 15),
-                    i -> CAST(strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1 AS BIGINT)),
-                  (acc, d) -> acc * 16 + d)) AS hs
-  FROM documents
-  WHERE text IS NOT NULL
-),
-sims AS (
-  SELECT doc_id,
-       {bit_terms} AS simhash
-  FROM hashes
-)"""
-
-
-# Promote the SimHash queries from rows-only to oracle-checked.
-for _i, _s in enumerate(_REGISTRY):
-    if _s.name == "doc_simhash":
-        _REGISTRY[_i] = QuerySpec(
-            "doc_simhash",
-            _s.spark_fn,
-            f"WITH {_simhash_sql_cte()}\nSELECT doc_id, simhash FROM sims",
-        )
-    elif _s.name == "doc_simhash_pairs":
-        chunk_union = "\n  UNION ALL\n".join(
-            f"  SELECT doc_id, simhash, {c} AS chunk, simhash // {1 << (c * 15)} % {1 << 15} AS key FROM sims"
-            for c in range(4)
-        )
-        _REGISTRY[_i] = QuerySpec(
-            "doc_simhash_pairs",
-            _s.spark_fn,
-            f"""
-WITH {_simhash_sql_cte()},
-chunked AS (
-{chunk_union}
-),
-candidates AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.simhash AS sim_a, b.simhash AS sim_b
-  FROM chunked a JOIN chunked b
-    ON a.chunk = b.chunk AND a.key = b.key AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
-FROM candidates
-WHERE bit_count(xor(sim_a, sim_b)) <= 3
-""",
-        )
-
-
-#: Squared-L2 distance template shared by every sampled-centroid oracle
-#: (expanded ‖x‖²+‖c‖²−2·x·c, mirroring centroid_dist_array).
-_IVF_DIST = (
-    "list_sum(list_transform({v}, x -> x*x))"
-    " + list_sum(list_transform(cents.cv, x -> x*x))"
-    " - 2 * list_sum(list_transform(list_zip({v}, cents.cv), z -> z[1]*z[2]))"
-)
-
-
-def _ivf_assign_cte(n_clusters: int) -> str:
-    """The c/cents/assign CTE block shared by every sampled-centroid
-    oracle (embed_ivf_ann, embed_semantic_dedup): centroid selection
-    (every n/k-th vector by id) and squared-L2 argmin assignment with
-    lowest-index tie-break. ONE builder so the assignment semantics can
-    never drift between oracles (fuzz-sweep shared-branch rule)."""
-    return f"""
-WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-           WHERE embedding IS NOT NULL AND vec_id IS NOT NULL),
-cents AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, v AS cv
-  FROM c
-  WHERE vec_id % greatest((SELECT count(*) FROM c) // {n_clusters}, 1) = 0
-  ORDER BY vec_id LIMIT {n_clusters}
-),
-assign AS (
-  SELECT vec_id, v, cidx FROM (
-    SELECT c.vec_id, c.v, cents.cidx,
-           row_number() OVER (
-             PARTITION BY c.vec_id ORDER BY {_IVF_DIST.format(v='c.v')}, cents.cidx
-           ) AS rn
-    FROM c CROSS JOIN cents
-  ) WHERE rn = 1
-)"""
-
-
-def _ivf_oracle_sql(
-    k: int = 10, n_clusters: int = 16, nprobe: int = 4,
-    query_pred: str = "vec_id < 5",
-) -> str:
-    """Oracle twin of the sampled-centroid IVF queries (batch and
-    streaming — the streaming twin widens query_pred): the shared
-    centroid-assignment CTEs plus nprobe cell routing, candidate scoring
-    and ranking — all recomputed from the table in SQL."""
-    dist = _IVF_DIST
-    return f"""{_ivf_assign_cte(n_clusters)},
-q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE {query_pred}),
-qprobe AS (
-  SELECT query_id, qv, cidx FROM (
-    SELECT q.query_id, q.qv, cents.cidx,
-           row_number() OVER (
-             PARTITION BY q.query_id ORDER BY {dist.format(v='q.qv')}, cents.cidx
-           ) AS rn
-    FROM q CROSS JOIN cents
-  ) WHERE rn <= {nprobe}
-),
-scored AS (
-  SELECT p.query_id, a.vec_id,
-         round(CASE WHEN sqrt(list_sum(list_transform(p.qv, x -> x*x))) > 0
-                     AND sqrt(list_sum(list_transform(a.v, x -> x*x))) > 0
-               THEN list_sum(list_transform(list_zip(p.qv, a.v), z -> z[1]*z[2]))
-                    / (sqrt(list_sum(list_transform(p.qv, x -> x*x)))
-                       * sqrt(list_sum(list_transform(a.v, x -> x*x))))
-               END, 6) AS cosine_sim
-  FROM qprobe p JOIN assign a ON a.cidx = p.cidx
-),
-ranked AS (
-  SELECT query_id, vec_id, cosine_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
-         ) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-for _i, _s in enumerate(_REGISTRY):
-    if _s.name == "embed_ivf_ann":
-        _REGISTRY[_i] = QuerySpec("embed_ivf_ann", _s.spark_fn, _ivf_oracle_sql())
-        break
-
-
 @_register("embed_ann_streaming", _ivf_oracle_sql(query_pred="vec_id < 10"))
 def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming retrieval against a PERSISTED ANN index (round 10) —
@@ -5486,106 +5418,6 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SK.await_or_raise(q)
     return SK.read_or_empty(spark, out_path, spark.createDataFrame([], out_schema))
-
-
-def _semantic_dedup_oracle_sql(
-    n_clusters: int = 16,
-    threshold: str = "0.35e0",
-    final_select: str | None = None,
-) -> str:
-    """Oracle twin of embed_semantic_dedup: the SAME c/cents/assign CTEs
-    as the IVF oracle (one builder — shared-branch rule), then the
-    pruning rule itself: smallest lower-id cluster-mate at
-    6-dp-rounded cosine >= threshold, NULL-cosine (zero-norm) pairs
-    never matching. The threshold literal carries e0 so the comparison
-    is DOUBLE on both engines. ``final_select`` swaps the projection
-    (the kmeans contract-report twin reuses the identical decision CTEs
-    — shared-branch rule again — but emits the report columns)."""
-    if final_select is None:
-        final_select = (
-            "SELECT n.vec_id, n.cidx AS cluster, d.dup_of,"
-            " d.dup_of IS NULL AS keep\n"
-            "FROM normed n LEFT JOIN dups d ON d.vec_id = n.vec_id"
-        )
-    return f"""{_ivf_assign_cte(n_clusters)},
-normed AS (
-  SELECT vec_id, v, cidx,
-         sqrt(list_sum(list_transform(v, x -> x*x))) AS nv
-  FROM assign
-),
-dups AS (
-  SELECT a.vec_id AS vec_id, MIN(b.vec_id) AS dup_of
-  FROM normed a JOIN normed b ON a.cidx = b.cidx AND b.vec_id < a.vec_id
-  WHERE round(CASE WHEN a.nv > 0 AND b.nv > 0
-              THEN list_sum(list_transform(list_zip(a.v, b.v), p -> p[1]*p[2]))
-                   / (a.nv * b.nv) END, 6) >= {threshold}
-  GROUP BY a.vec_id
-)
-{final_select}
-"""
-
-
-for _i, _s in enumerate(_REGISTRY):
-    if _s.name == "embed_semantic_dedup":
-        _REGISTRY[_i] = QuerySpec(
-            "embed_semantic_dedup", _s.spark_fn, _semantic_dedup_oracle_sql()
-        )
-    elif _s.name == "embed_semantic_dedup_kmeans":
-        # Contract-report twin (VERDICT r8 #2): the exact dup_sampled
-        # column reuses the IDENTICAL sampled-quantizer decision CTEs;
-        # removed_sound is the learned run's join-back soundness check,
-        # asserted TRUE.
-        _REGISTRY[_i] = QuerySpec(
-            "embed_semantic_dedup_kmeans",
-            _s.spark_fn,
-            _semantic_dedup_oracle_sql(
-                final_select=(
-                    "SELECT n.vec_id, d.dup_of IS NOT NULL AS dup_sampled,"
-                    " TRUE AS removed_sound\n"
-                    "FROM normed n LEFT JOIN dups d ON d.vec_id = n.vec_id"
-                )
-            ),
-        )
-
-
-# Promote the Arrow-UDF byte-feature query to the hash gate with a
-# BYTE-exact oracle: the utf-8 payload surfaces in SQL as its hex
-# encoding (hex(encode(text))), and each byte is reconstructed by
-# nibble arithmetic — so the oracle holds on ANY corpus, not just
-# ASCII (the old codepoint formulation silently predicated correctness
-# on an ASCII-only corpus; the adversarial fixtures' unicode documents
-# falsified it).
-_HEX_BYTE = (
-    "(strpos('0123456789ABCDEF', substr(hx, 2*j + 1, 1)) - 1) * 16"
-    " + strpos('0123456789ABCDEF', substr(hx, 2*j + 2, 1)) - 1"
-)
-for _i, _s in enumerate(_REGISTRY):
-    if _s.name == "multimodal_byte_features":
-        _REGISTRY[_i] = QuerySpec(
-            "multimodal_byte_features",
-            _s.spark_fn,
-            f"""
-WITH b AS (
-  SELECT doc_id, hex(encode(text)) AS hx,
-         CAST(octet_length(encode(text)) AS INTEGER) AS n
-  FROM documents
-  WHERE text IS NOT NULL
-),
-bs AS (
-  SELECT doc_id, n,
-         list_transform(generate_series(0, n - 1), j -> {_HEX_BYTE}) AS bytes
-  FROM b
-)
-SELECT doc_id,
-       CAST(n AS BIGINT) AS n_bytes,
-       CASE WHEN n > 0
-            THEN CAST(list_sum(bytes) AS DOUBLE) / n ELSE 0.0e0 END AS byte_mean,
-       CAST(len(list_distinct(bytes)) AS DOUBLE) / 256.0e0 AS byte_entropy_proxy,
-       'txt' AS format
-FROM bs
-""",
-        )
-        break
 
 
 _Q4_SQL = """

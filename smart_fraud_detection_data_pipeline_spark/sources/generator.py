@@ -1,4 +1,4 @@
-"""S1: deterministic synthetic transaction generator (batch + streaming).
+"""S1: deterministic synthetic transaction generator (batch).
 
 Reference parity: transaction_producer.py:12-22 emits one random
 transaction per 0.5 s — id "T"+7 digits, user_id 1-2000, product_id
@@ -7,8 +7,7 @@ payment_method ∈ {credit_card,debit_card,cash,paypal}, country ∈
 {USA,UK,Germany,India}, ISO-8601 UTC event time.
 
 Engine version: the same value domains, but generated AS A PLAN —
-`spark.range(n)` + seeded `rand()` column expressions for batch, or the
-rate source for streaming. Fully distributed (no driver-side row loop),
+`spark.range(n)` + seeded `rand()` column expressions. Fully distributed (no driver-side row loop),
 deterministic under a seed, and arbitrarily scalable: generating 10^12
 rows is just `spark.range(10**12)` across executors.
 """
@@ -59,18 +58,3 @@ def synthetic_transactions(spark: SparkSession, n_rows: int) -> DataFrame:
         + (F.col("id") / ROWS_PER_SECOND).cast("long")
     ).cast("timestamp_ntz")
     return _transaction_columns(base, "id", ts)
-
-
-def synthetic_transaction_stream(
-    spark: SparkSession, rows_per_second: int = ROWS_PER_SECOND
-) -> DataFrame:
-    """Streaming generator on the rate source (S1's streaming form).
-
-    Note: rand() re-evaluates per micro-batch so the stream is not
-    replay-deterministic (like the reference's RNG); use the batch
-    generator for reproducible fixtures.
-    """
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    ).load()
-    return _transaction_columns(rate, "value", F.col("timestamp"))

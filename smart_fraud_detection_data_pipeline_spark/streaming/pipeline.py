@@ -18,8 +18,9 @@ contract). This module offers both semantics:
   needed downstream — the semantics the reference *intended*.
 
 Multi-query orchestration (ST7/ST8): `run_pipeline` starts all three
-queries and `await_all` uses spark.streams.awaitAnyTermination — the
-idiomatic form of the reference's 10-second exception-polling loop
+queries; `PipelineQueries.await_all` blocks on each in turn and
+re-raises the first query failure (awaitTermination surfaces it) —
+the idiomatic form of the reference's 10-second exception-polling loop
 (spark.py:289-294).
 """
 
@@ -191,12 +192,3 @@ def read_trends_deduped(spark: SparkSession, path: str, key_cols: list[str]) -> 
     return dedup_keep_last(
         spark.read.parquet(path), key_cols, ["batch_id"]
     ).drop("batch_id")
-
-
-def await_any_termination(spark: SparkSession, timeout_sec: float | None = None):
-    """ST7 idiomatic: block until any query fails/stops (replaces the
-    reference's 10 s exception-polling loop, spark.py:289-294)."""
-    if timeout_sec is None:
-        spark.streams.awaitAnyTermination()
-    else:
-        spark.streams.awaitAnyTermination(int(timeout_sec * 1000))

@@ -202,3 +202,23 @@ def test_robust_zscore_jvm_equals_grouped_map(spark, sf_dir):
     a = {(r.event_id, r.user_id): r.robust_z for r in jvm.collect()}
     b = {(r.event_id, r.user_id): r.robust_z for r in pandas_side.collect()}
     assert a == b  # exact float equality — both sides are quantized
+
+
+def test_partition_probe_sees_appended_files(spark, tmp_path):
+    """spread_input's cached partition probe must not serve a stale count
+    after a file is appended under the same path: the analyzed plan of
+    the re-read is semantically identical, only its input files differ."""
+    from smart_fraud_detection_data_pipeline_spark.operators import skew as S
+
+    path = str(tmp_path / "t")
+    spark.range(10).coalesce(1).write.parquet(path)
+    before = spark.read.parquet(path)
+    assert S._planned_partitions(before) == 1
+    spark.range(10, 20).coalesce(1).write.mode("append").parquet(path)
+    after = spark.read.parquet(path)
+    assert (
+        after._jdf.queryExecution().analyzed().semanticHash()
+        == before._jdf.queryExecution().analyzed().semanticHash()
+    )
+    assert S._planned_partitions(after) == after.rdd.getNumPartitions() == 2
+    assert len(S._PROBE_CACHE) <= S._PROBE_CACHE_MAX

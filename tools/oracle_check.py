@@ -94,13 +94,6 @@ def main() -> int:
             results[name] = {"status": "error", "err": str(exc)[:300]}
             continue
         t1 = time.time()
-        if name not in oracles:
-            print(f"[rows-only] {name}: {len(sdf)} rows ({t1 - t0:.1f}s)")
-            results[name] = {
-                "status": "rows_only", "spark_rows": len(sdf),
-                "sec": round(t1 - t0, 2),
-            }
-            continue
         try:
             odf = con.sql(oracles[name]).df()
             problems = compare(sdf, odf)
