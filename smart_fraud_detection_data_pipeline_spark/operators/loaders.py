@@ -5,10 +5,11 @@ prefix with boto3 (S11), reads every object with pandas (S12), recovers
 partition columns by parsing key=value path segments (S13), concatenates
 (A5), dedups keep-last (A6), pads missing columns (P8), fixes a column
 order (P7), uppercases names (P11), and MERGEs into the warehouse
-(A7/A8/S14). In Spark, S11-S13+A5 are one `read.parquet(prefix)` call —
-listing, `_SUCCESS`/`_temporary` filtering, and typed partition
-discovery are built into the file index — and the rest are the
-column-level utilities below composed by `warehouse_load`.
+(A7/A8/S14). In Spark, S11-S13+A5 are one `read_parquet(prefix)` call:
+listing, `_SUCCESS`/`_temporary` filtering and typed partition
+discovery are built into the file index, and the data schema comes from
+one footer read on the driver, as the reference's pandas read does. The
+rest are the column-level utilities below composed by `warehouse_load`.
 
 Scale: the reference re-reads the FULL prefix every run and relies on
 MERGE idempotency ("incremental" by rescan). `warehouse_load` keeps
@@ -27,13 +28,17 @@ from pyspark.sql.types import StructType
 
 from smart_fraud_detection_data_pipeline_spark.operators.dedup import dedup_keep_last
 from smart_fraud_detection_data_pipeline_spark.operators.merge import merge_upsert
+from smart_fraud_detection_data_pipeline_spark.sources.tables import (
+    dataset_files,
+    read_parquet,
+)
 
 
 def read_partitioned_prefix(spark: SparkSession, path: str) -> DataFrame:
     """S11-S13 + A5: one scan over a Hive-partitioned prefix. Partition
     values come back typed (the reference's path-parsing returns strings
     — load_fraud_records...py:128-141)."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def uppercase_columns(df: DataFrame) -> DataFrame:
@@ -184,34 +189,6 @@ def write_zorder_layout(
     )
 
 
-def dataset_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) of every data file under ``path``, via the Hadoop
-    FileSystem API — works for file://, hdfs:// and s3a:// alike, so
-    callers never shell out or assume a local filesystem. `_SUCCESS`/
-    hidden files are excluded (the same rule Spark's file index uses)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    base = fs.makeQualified(jpath).toUri().getPath()
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        # Hidden-path rule applies to EVERY segment below the listing
-        # root, not just the basename (ADVICE r7): a _temporary/ tree
-        # left by a crashed write must not inflate the byte total —
-        # Spark's InMemoryFileIndex excludes hidden segments at every
-        # level.
-        rel = p.toUri().getPath()
-        if rel.startswith(base):
-            rel = rel[len(base):]
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/") if seg):
-            continue
-        out.append((p.toString(), int(st.getLen())))
-    return out
-
-
 def compact_dataset(
     spark: SparkSession,
     src: str,
@@ -226,11 +203,12 @@ def compact_dataset(
     Companion to ``quality.compact_parquet`` (the IN-PLACE variant with
     the crash-recovering directory swap): that one owns the commit
     discipline for compacting a live local dataset in place, this one
-    owns the portable rewrite — Hadoop-FS listing (file://, hdfs://,
-    s3a://) and a src→dst move the caller commits however their store
-    allows (rename, lakehouse metadata swap). They also differ in
-    rewrite shape by design: in-place uses ``repartition`` (re-balance
-    while paying the rewrite anyway), this uses ``coalesce``.
+    owns the portable rewrite — listing (``sources.tables.dataset_files``)
+    and reading work on file://, hdfs:// and s3a:// paths alike — and a
+    src→dst move the caller commits however their store allows (rename,
+    lakehouse metadata swap). They also differ in rewrite shape by
+    design: in-place uses ``repartition`` (re-balance while paying the
+    rewrite anyway), this uses ``coalesce``.
 
     The ingest side of a 100 TB pipeline accretes small files (one per
     micro-batch per partition); every later scan then pays file-open +
@@ -248,7 +226,7 @@ def compact_dataset(
     Row content is untouched (the registered query hash-checks it
     against the oracle over the original table; the file-count bound
     is the contract column)."""
-    total = sum(sz for _, sz in dataset_files(spark, src))
+    total = sum(sz for _, _, sz in dataset_files(spark, src))
     n = max(1, -(-total // target_bytes))
-    spark.read.parquet(src).coalesce(n).write.mode("overwrite").parquet(dst)
+    read_parquet(spark, src).coalesce(n).write.mode("overwrite").parquet(dst)
     return n

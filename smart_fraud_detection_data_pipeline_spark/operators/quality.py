@@ -20,6 +20,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parquet
+
 
 def constraint_report(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
     """Evaluate named row-level constraints; one row per rule.
@@ -91,7 +93,7 @@ def compact_parquet(
         os.path.getsize(f) for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
     n_files = max(min_files, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     df.repartition(n_files).write.mode("overwrite").parquet(tmp)
     os.rename(path, old)
     os.rename(tmp, path)

@@ -23,6 +23,7 @@ engines.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -37,7 +38,13 @@ from smart_fraud_detection_data_pipeline_spark.operators.merge import (
     merge_upsert,
     merge_upsert_partitioned,
 )
-from smart_fraud_detection_data_pipeline_spark.sources.tables import load_table
+from smart_fraud_detection_data_pipeline_spark.sources.tables import (
+    dataset_files,
+    load_table,
+    parquet_num_rows,
+    parquet_schema,
+    read_parquet,
+)
 
 
 @dataclass(frozen=True)
@@ -110,13 +117,10 @@ def _scratch(prefix: str) -> str:
 #: last driver certification is oldest (from the CORRECTNESS_rNN.json
 #: artifacts).
 _DRIVER_ROTATION = (
-    # --- changed in round 14, not yet driver-certified; doc_profile now
-    # runs through textstats.text_profile ---
-    "user_robust_zscore", "doc_profile", "embed_cosine_topk",
-    "embed_ivf_ann", "embed_ivf_kmeans_ann", "embed_pq_rerank",
-    "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
-    "warehouse_load",
-    # foreachBatch-sink streaming queries
+    # --- read sites moved to footer schemas beyond load_table: the
+    # readStream-schema sites and the readers of loader or sink output ---
+    "warehouse_load", "warehouse_compaction", "time_layout_scan",
+    "zorder_layout_scan",
     "fraud_enrich_streaming", "dedup_streaming",
     "dedup_incremental_streaming", "dedup_streaming_compaction",
     "user_spend_trends_streaming", "user_running_totals_streaming",
@@ -124,6 +128,11 @@ _DRIVER_ROTATION = (
     "stream_stream_join_bucketed", "stream_stream_left_join",
     "stream_stream_left_join_bucketed", "stream_windowed_rollup",
     "embed_ann_streaming",
+    # --- changed in round 14, not yet driver-certified; doc_profile now
+    # runs through textstats.text_profile ---
+    "user_robust_zscore", "doc_profile", "embed_cosine_topk",
+    "embed_ivf_ann", "embed_ivf_kmeans_ann", "embed_pq_rerank",
+    "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
     # --- last driver-certified in round 10 ---
     "category_trends", "user_spend_trends_approx", "dedup_keep_last",
     "merge_upsert_delete", "top_customers", "embed_srp_ann",
@@ -131,7 +140,7 @@ _DRIVER_ROTATION = (
     "small_quantity_revenue", "not_in_null_semantics",
     "events_variant_props", "user_funnel", "orders_cube",
     "shipping_priority", "regional_revenue", "doc_sample_stratified",
-    "zorder_layout_scan", "returnflag_priority_mix",
+    "returnflag_priority_mix",
     "promo_revenue_pct", "salted_user_join", "kafka_serde_roundtrip",
     "user_spend_trends_incremental", "user_value_lag_delta",
     "nation_year_profit", "prolific_red_part_suppliers",
@@ -152,16 +161,10 @@ def registry() -> list[QuerySpec]:
 # Shared testdata→reference-shape adapters
 # ---------------------------------------------------------------------------
 
-_COUNTS: dict[tuple[str, str], int] = {}
-
-
 def _table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Cached dimension row count (used to derive synthetic FKs); avoids
-    re-running a count job on every query construction."""
-    key = (sf_dir, name)
-    if key not in _COUNTS:
-        _COUNTS[key] = load_table(spark, sf_dir, name).count()
-    return _COUNTS[key]
+    """Dimension row count (used to derive synthetic FKs), summed from
+    the parquet footers: no Spark job on any query construction."""
+    return parquet_num_rows(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1129,7 +1132,7 @@ def q_dedup_streaming_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a production index write sizes files via maxRecordsPerFile.
         buckets.write.parquet(bpath)
         sets.write.parquet(spath)
-        return (spark.read.parquet(bpath), spark.read.parquet(spath))
+        return (read_parquet(spark, bpath), read_parquet(spark, spath))
 
     index_full = persist_index(TD.minhash_index(docs.where(~is_delta)), "full")
     # the tombstone batch compacts the READ-BACK snapshot and persists
@@ -1141,7 +1144,7 @@ def q_dedup_streaming_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
     delta.where(half).coalesce(1).write.mode("append").parquet(dsrc)
     delta.where(~half).coalesce(1).write.mode("append").parquet(dsrc)
-    schema = spark.read.parquet(dsrc).schema
+    schema = parquet_schema(dsrc)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1220,14 +1223,14 @@ def q_dedup_incremental_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
         # into one task (see dedup_streaming_compaction.persist_index)
         buckets.write.parquet(bpath)
         sets.write.parquet(spath)
-        index = (spark.read.parquet(bpath), spark.read.parquet(spath))
+        index = (read_parquet(spark, bpath), read_parquet(spark, spath))
     # 2. stage the delta as TWO files so availableNow takes two
     #    micro-batches (multi-batch behavior, not a single-batch alias)
     dsrc = os.path.join(tmp, "delta_src")
     half = F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
     delta.where(half).coalesce(1).write.mode("append").parquet(dsrc)
     delta.where(~half).coalesce(1).write.mode("append").parquet(dsrc)
-    schema = spark.read.parquet(dsrc).schema
+    schema = parquet_schema(dsrc)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2013,7 +2016,7 @@ def q_time_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_time_layout(ev, path, ts_col="ts", n_ranges=16)
     lo = F.lit("2024-01-10").cast("timestamp_ntz")
     hi = F.lit("2024-01-11").cast("timestamp_ntz")
-    return spark.read.parquet(path).where((F.col("ts") >= lo) & (F.col("ts") < hi))
+    return read_parquet(spark, path).where((F.col("ts") >= lo) & (F.col("ts") < hi))
 
 
 @_register(
@@ -3122,7 +3125,7 @@ def q_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
     src = _staged_dup_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
     deduped = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -3402,15 +3405,12 @@ def q_warehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-check pattern). ts is cast to TIMESTAMP on the oracle side
     because the parquet round-trip (write + read-back) re-types the
     NTZ column the same way the streaming sinks do."""
-    from smart_fraud_detection_data_pipeline_spark.operators.loaders import (
-        compact_dataset,
-        dataset_files,
-    )
+    from smart_fraud_detection_data_pipeline_spark.operators.loaders import compact_dataset
 
     src, dst = _staged_small_files(spark, sf_dir)
     n_budget = compact_dataset(spark, src, dst)
     n_after = len(dataset_files(spark, dst))
-    return spark.read.parquet(dst).select(
+    return read_parquet(spark, dst).select(
         "event_id",
         "user_id",
         "ts",
@@ -4710,7 +4710,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
     src = _staged_session_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
 
     def reader():
         return (
@@ -4798,7 +4798,7 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     src = _staged_session_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
 
     def reader():
         return (
@@ -4926,7 +4926,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
     src = _staged_outer_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
 
     def reader():
         return (
@@ -5019,7 +5019,7 @@ def q_stream_stream_left_join_bucketed(spark: SparkSession, sf_dir: str) -> Data
     )
 
     src = _staged_outer_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
 
     def reader():
         return (
@@ -5113,7 +5113,7 @@ def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
     src = _staged_session_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -5389,11 +5389,11 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         indexed.select("vec_id", as_double_array(F.col("embedding")).alias("__cvec")),
         cents,
     ).write.partitionBy("__cluster").parquet(idx_path)
-    index = spark.read.parquet(idx_path)
+    index = read_parquet(spark, idx_path)
     qsrc = os.path.join(tmp, "queries")
     queries.where(F.col("query_id") < 5).coalesce(1).write.mode("append").parquet(qsrc)
     queries.where(F.col("query_id") >= 5).coalesce(1).write.mode("append").parquet(qsrc)
-    schema = spark.read.parquet(qsrc).schema
+    schema = parquet_schema(qsrc)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -6424,7 +6424,7 @@ def q_zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     path = os.path.join(_scratch("zorder_layout_"), "events_zorder")
     write_zorder_layout(ev, path, cols=("user_id", "value"), n_ranges=16)
-    return spark.read.parquet(path).where(
+    return read_parquet(spark, path).where(
         F.col("user_id").between(10, 19) & F.col("value").between(50.0, 80.0)
     )
 
@@ -8014,7 +8014,7 @@ def q_stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
     src = _staged_session_source(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

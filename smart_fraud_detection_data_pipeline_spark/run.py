@@ -55,6 +55,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smart_fraud_detection_data_pipeline_spark.sources.tables import (
+    parquet_num_rows,
+    read_parquet,
+)
+
 
 def _log(msg: str) -> None:
     print(f"[run +{time.strftime('%Y-%m-%d %H:%M:%S')}] {msg}", flush=True)
@@ -110,8 +115,13 @@ def _read_mart(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
     on first run (so the merge is a plain insert)."""
     _recover_swap(path)
     if os.path.exists(path):
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     return spark.createDataFrame([], like.schema)
+
+
+def _log_mart(job: str, path: str) -> None:
+    """The post-swap mart size, summed from the parquet footers."""
+    _log(f"{job}: mart {path} now {parquet_num_rows(path)} rows")
 
 
 def _read_processed(spark: SparkSession, warehouse: str, since: str | None) -> DataFrame:
@@ -120,7 +130,7 @@ def _read_processed(spark: SparkSession, warehouse: str, since: str | None) -> D
         _log(f"ERROR: processed prefix {path} does not exist — run --job ingest "
              "(or point the streaming sink at it) first")
         raise SystemExit(2)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if since:
         df = df.where(_since_predicate(since))
     return df
@@ -180,8 +190,7 @@ def job_warehouse_load(spark: SparkSession, args) -> None:
     target = _read_mart(spark, path, src)
     merged = merge_upsert(target, src.select(*target.columns), ["transaction_id"])
     _snapshot_swap_write(merged, path)
-    n = spark.read.parquet(path).count()
-    _log(f"warehouse_load: mart {path} now {n} rows")
+    _log_mart("warehouse_load", path)
 
 
 def _trend_job(spark: SparkSession, args, *, table: str) -> None:
@@ -200,8 +209,7 @@ def _trend_job(spark: SparkSession, args, *, table: str) -> None:
     target = _read_mart(spark, path, trend)
     merged = merge_upsert(target, trend.select(*target.columns), keys)
     _snapshot_swap_write(merged, path)
-    n = spark.read.parquet(path).count()
-    _log(f"{table}: mart {path} now {n} rows")
+    _log_mart(table, path)
 
 
 def job_user_spend_trends(spark: SparkSession, args) -> None:

@@ -3,8 +3,10 @@
 Reference parity: the reference declares hand-written StructTypes for its
 three inputs (spark.py:66-75 transactions, :77-83 users, :85-95 products)
 and we reproduce those shapes 1:1. The testdata star schema
-(/root/testdata, TESTDATA.md) is read from parquet footers so no schema
-is needed there, but the expected shapes are recorded for validation.
+(TESTDATA.md) needs no hand-written schema: ``sources.tables`` reads each
+table's parquet footer on the driver and hands Spark the schema, so no
+schema-inference job ever runs. The expected shapes are recorded here
+for validation.
 """
 
 from __future__ import annotations

@@ -36,6 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from smart_fraud_detection_data_pipeline_spark.operators.dedup import dedup_keep_last
 from smart_fraud_detection_data_pipeline_spark.operators.enrich import enrich_transactions
 from smart_fraud_detection_data_pipeline_spark.operators.trends import windowed_trends
+from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parquet
 from smart_fraud_detection_data_pipeline_spark.streaming import sinks
 
 WATERMARK_DELAY = "15 minutes"  # spark.py:137
@@ -190,5 +191,5 @@ def read_trends_deduped(spark: SparkSession, path: str, key_cols: list[str]) -> 
     last row per key by batch_id (mirrors drop_duplicates(keep='last'),
     load_fraud_records...py:154-157)."""
     return dedup_keep_last(
-        spark.read.parquet(path), key_cols, ["batch_id"]
+        read_parquet(spark, path), key_cols, ["batch_id"]
     ).drop("batch_id")

@@ -27,6 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parquet
+
 FRAUD_PARTITIONS = ("payment_method", "tx_year", "tx_month", "tx_day")
 
 
@@ -111,7 +113,7 @@ def read_or_empty(
 
             schema = schema.add("batch_id", LongType())
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def start_foreach_batch(

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smart_fraud_detection_data_pipeline_spark.session import get_spark
+from smart_fraud_detection_data_pipeline_spark.sources.tables import parquet_schema
 from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 from smart_fraud_detection_data_pipeline_spark.streaming.joins import (
     interval_join_streaming,
@@ -114,7 +115,7 @@ def run_join(
     spark, src: str, out_root: str, bucket_seconds: int | None,
     how: str = "inner",
 ) -> DataFrame:
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
 
     def reader():
         return (
