@@ -44,7 +44,9 @@ from smart_fraud_detection_data_pipeline_spark.sources.tables import (
     parquet_num_rows,
     parquet_schema,
     read_parquet,
+    scratch_dir,
 )
+from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
 
 @dataclass(frozen=True)
@@ -71,43 +73,76 @@ def _register(name: str, oracle: str, prepare=None):
     return deco
 
 
-class _shuffle_partitions:
-    """Temporarily size spark.sql.shuffle.partitions for a stateful
-    streaming query. Each state-store partition is a store instance
+def _stream_files(spark: SparkSession, src: str) -> DataFrame:
+    """Streaming read of a staged parquet directory, one file per
+    micro-batch: each staged file is its own trigger, so the stateful
+    queries see real multi-batch arrival, not a single-batch alias."""
+    return (
+        spark.readStream.schema(parquet_schema(src))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+_STATE_PARTITIONS = 8
+
+
+def _drain(
+    spark: SparkSession,
+    stream: DataFrame,
+    name: str,
+    *,
+    output_mode: str = "append",
+    stateful: bool = False,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    out_schema: str | None = None,
+) -> DataFrame:
+    """Run the bounded streaming query ``stream`` to completion and read
+    its output back as a batch frame: the one path by which every
+    catalog streaming query meets its batch oracle. It is the reference
+    streaming job's shape (S9/S10): a foreachBatch parquet sink, one
+    checkpoint dir per query, an availableNow trigger, and a wait that
+    fails loudly instead of reading partial output.
+
+    Append mode writes each row once. Complete and update modes re-emit
+    rows, so their sink stamps every row with its batch_id, and the
+    read-back keeps that column for the caller's keep-last or
+    last-batch-only step.
+
+    A ``stateful`` query runs with spark.sql.shuffle.partitions set to
+    _STATE_PARTITIONS. Each state-store partition is a store instance
     loaded+committed EVERY micro-batch, so state partition count is a
     first-class sizing knob: match it to expected state volume per
     core, not the batch default (measured on stream_stream_join at
     sf0.1: 32→8 partitions is 11 s → 3 s; on a real cluster you'd size
-    UP with the keyspace instead). Restores the previous value on exit
-    so batch queries keep the session default."""
+    UP with the keyspace instead). The previous value is restored, so
+    batch queries keep the session default.
 
-    def __init__(self, spark: SparkSession, n: int):
-        self._spark, self._n = spark, n
-
-    def __enter__(self):
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-
-
-_SCRATCH_ROOT: str | None = None
-
-
-def _scratch(prefix: str) -> str:
-    """A fresh scratch dir under one atexit-cleaned root: streaming
-    sinks/checkpoints need real directories, but repeated catalog runs
-    must not leak a tempdir per invocation (ADVICE r1)."""
-    global _SCRATCH_ROOT
-    import atexit
-    import shutil
-    import tempfile
-
-    if _SCRATCH_ROOT is None:
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="sfdp_scratch_")
-        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+    ``transform`` maps each micro-batch before it is written (the probe
+    queries, which look every batch up in a persisted index); its
+    output schema ``out_schema`` types the read-back when no batch
+    wrote anything."""
+    tmp = scratch_dir(f"{name}_")
+    out = os.path.join(tmp, "out")
+    reemit = output_mode != "append"
+    write = (
+        SK.reemit_parquet_sink(out) if reemit else SK.parquet_batch_sink(out, partitions=None)
+    )
+    handler = write if transform is None else lambda batch, i: write(transform(batch), i)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    if stateful:
+        spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+    try:
+        SK.await_or_raise(
+            SK.start_foreach_batch(
+                stream, handler, os.path.join(tmp, "ckpt"),
+                output_mode=output_mode, query_name=name,
+            )
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    like = stream if transform is None else spark.createDataFrame([], out_schema)
+    return SK.read_or_empty(spark, out, like, with_batch_id=reemit)
 
 
 #: The driver's correctness run checks registry()[:50], so this ORDERED
@@ -117,10 +152,8 @@ def _scratch(prefix: str) -> str:
 #: last driver certification is oldest (from the CORRECTNESS_rNN.json
 #: artifacts).
 _DRIVER_ROTATION = (
-    # --- read sites moved to footer schemas beyond load_table: the
-    # readStream-schema sites and the readers of loader or sink output ---
-    "warehouse_load", "warehouse_compaction", "time_layout_scan",
-    "zorder_layout_scan",
+    # --- the 13 streaming queries: now drained through _drain, the
+    # joins built by _stream_join, the minhash streams by _minhash_stream ---
     "fraud_enrich_streaming", "dedup_streaming",
     "dedup_incremental_streaming", "dedup_streaming_compaction",
     "user_spend_trends_streaming", "user_running_totals_streaming",
@@ -128,6 +161,10 @@ _DRIVER_ROTATION = (
     "stream_stream_join_bucketed", "stream_stream_left_join",
     "stream_stream_left_join_bucketed", "stream_windowed_rollup",
     "embed_ann_streaming",
+    # --- read sites moved to footer schemas beyond load_table: the
+    # readers of loader or sink output ---
+    "warehouse_load", "warehouse_compaction", "time_layout_scan",
+    "zorder_layout_scan",
     # --- changed in round 14, not yet driver-certified; doc_profile now
     # runs through textstats.text_profile ---
     "user_robust_zscore", "doc_profile", "embed_cosine_topk",
@@ -1089,6 +1126,71 @@ FROM h2_delta dd LEFT JOIN h2_dups d ON d.id_d = dd.doc_id
 """
 
 
+def _minhash_stream(spark: SparkSession, sf_dir: str, name: str, *, compact: bool) -> DataFrame:
+    """Shared body of the two minhash ingest streams: persist the corpus
+    index once (the production shape), stage the delta documents
+    (doc_id % 5 = 0) as TWO files so availableNow takes two
+    micro-batches, and probe every micro-batch against the re-read index
+    inside foreachBatch, base-only (within_delta=False), so the appended
+    output is independent of where the micro-batch boundary falls.
+    ``compact`` adds the tombstone batch: the base docs with
+    doc_id % 3 = 0 are compacted out of the read-back index, and the
+    second delta half probes that snapshot."""
+    docs = load_table(spark, sf_dir, "documents")
+    is_delta = F.coalesce((F.col("doc_id") % 5) == 0, F.lit(False))
+    delta = docs.where(is_delta)
+    out_schema = "doc_id bigint, dup_of bigint, keep boolean"
+    if delta.isEmpty():
+        # nothing arrives: a zero-row staged write would leave a dir
+        # that fails schema inference (empty-fixture sweep rule)
+        return spark.createDataFrame([], out_schema)
+    tmp = scratch_dir(f"{name}_src_")
+
+    def persist_index(index, tag):
+        buckets, sets = index
+        if sets.isEmpty():
+            # all-delta corner: nothing to persist (a zero-row write
+            # leaves a footer-less dir that fails schema inference) —
+            # probe against the empty in-memory frames instead
+            return index
+        bpath, spath = os.path.join(tmp, f"{tag}_b"), os.path.join(tmp, f"{tag}_s")
+        # natural parallelism: the old coalesce(1) collapsed the minhash
+        # reduce stage into ONE task (r14 measured 2.1s+0.8s single-task
+        # index writes); file count of a scratch index is irrelevant, and
+        # a production index write sizes files via maxRecordsPerFile.
+        buckets.write.parquet(bpath)
+        sets.write.parquet(spath)
+        return (read_parquet(spark, bpath), read_parquet(spark, spath))
+
+    index = persist_index(TD.minhash_index(docs.where(~is_delta)), "full")
+    if compact:
+        # the tombstone batch compacts the READ-BACK snapshot and
+        # persists the result — the index version the post-compaction
+        # batches see
+        is_del = ~is_delta & F.coalesce((F.col("doc_id") % 3) == 0, F.lit(False))
+        compacted = persist_index(TD.minhash_index_compact(index, docs.where(is_del)), "compacted")
+    dsrc = os.path.join(tmp, "delta_src")
+    half = F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
+    delta.where(half).coalesce(1).write.mode("append").parquet(dsrc)
+    delta.where(~half).coalesce(1).write.mode("append").parquet(dsrc)
+
+    def probe(batch):
+        # with compaction, the batch's content (which half it holds)
+        # picks the index version
+        post_compaction = compact and batch.where(half).isEmpty()
+        return TD.incremental_minhash_dedup(
+            None,
+            batch,
+            threshold=0.5,
+            index=compacted if post_compaction else index,
+            within_delta=False,
+        )
+
+    return _drain(
+        spark, _stream_files(spark, dsrc), name, transform=probe, out_schema=out_schema
+    )
+
+
 @_register(
     "dedup_streaming_compaction",
     _minhash_stream_compaction_sql(TD.DEFAULT_PERMS, TD.DEFAULT_BANDS, 0.5),
@@ -1108,76 +1210,7 @@ def q_dedup_streaming_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one %-rule half), so the output is independent of file arrival
     order; within each probe within_delta=False keeps it independent
     of micro-batch boundaries."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.coalesce((F.col("doc_id") % 5) == 0, F.lit(False))
-    is_del = ~is_delta & F.coalesce((F.col("doc_id") % 3) == 0, F.lit(False))
-    delta = docs.where(is_delta)
-    out_schema = "doc_id bigint, dup_of bigint, keep boolean"
-    if delta.isEmpty():
-        return spark.createDataFrame([], out_schema)
-    tmp = _scratch("stream_compaction_")
-
-    def persist_index(index, tag):
-        buckets, sets = index
-        if sets.isEmpty():
-            return index  # zero-row write would break schema inference
-        bpath, spath = os.path.join(tmp, f"{tag}_b"), os.path.join(tmp, f"{tag}_s")
-        # natural parallelism: the old coalesce(1) collapsed the minhash
-        # reduce stage into ONE task (r14 measured 2.1s+0.8s single-task
-        # index writes); file count of a scratch index is irrelevant, and
-        # a production index write sizes files via maxRecordsPerFile.
-        buckets.write.parquet(bpath)
-        sets.write.parquet(spath)
-        return (read_parquet(spark, bpath), read_parquet(spark, spath))
-
-    index_full = persist_index(TD.minhash_index(docs.where(~is_delta)), "full")
-    # the tombstone batch compacts the READ-BACK snapshot and persists
-    # the result — the index version the post-compaction batches see
-    index_compacted = persist_index(
-        TD.minhash_index_compact(index_full, docs.where(is_del)), "compacted"
-    )
-    dsrc = os.path.join(tmp, "delta_src")
-    half = F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
-    delta.where(half).coalesce(1).write.mode("append").parquet(dsrc)
-    delta.where(~half).coalesce(1).write.mode("append").parquet(dsrc)
-    schema = parquet_schema(dsrc)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dsrc)
-    )
-    out_path = os.path.join(tmp, "out")
-    write_batch = SK.parquet_batch_sink(out_path, partitions=None)
-
-    def probe(batch_df, batch_id):
-        pre_compaction = not batch_df.where(
-            F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
-        ).isEmpty()
-        write_batch(
-            TD.incremental_minhash_dedup(
-                None,
-                batch_df,
-                threshold=0.5,
-                index=index_full if pre_compaction else index_compacted,
-                within_delta=False,
-            ),
-            batch_id,
-        )
-
-    q = SK.start_foreach_batch(
-        stream,
-        probe,
-        os.path.join(tmp, "ckpt"),
-        output_mode="append",
-        available_now=True,
-        query_name="dedup_streaming_compaction",
-    )
-    SK.await_or_raise(q)
-    return SK.read_or_empty(spark, out_path, spark.createDataFrame([], out_schema))
+    return _minhash_stream(spark, sf_dir, "dedup_streaming_compaction", compact=True)
 
 
 @_register(
@@ -1194,69 +1227,7 @@ def q_dedup_incremental_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     the micro-batch boundary falls and equals one batch probe of the
     full delta. At 100 TB the index read is a bucketed table and each
     batch costs O(batch); nothing ever re-pairs the corpus."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.coalesce((F.col("doc_id") % 5) == 0, F.lit(False))
-    delta = docs.where(is_delta)
-    out_schema = "doc_id bigint, dup_of bigint, keep boolean"
-    if delta.isEmpty():
-        # nothing arrives: a zero-row staged write would leave a dir
-        # that fails schema inference (empty-fixture sweep rule)
-        return spark.createDataFrame([], out_schema)
-    tmp = _scratch("inc_dedup_stream_")
-    # 1. persist the corpus index once (what production keeps on disk);
-    #    read_or_empty guards the all-delta corner where the base has
-    #    no indexable docs at all
-    buckets, sets = TD.minhash_index(docs.where(~is_delta))
-    if sets.isEmpty():
-        # all-delta corner: nothing to persist (a zero-row write leaves
-        # a footer-less dir that fails schema inference) — probe against
-        # the empty in-memory frames instead
-        index = (buckets, sets)
-    else:
-        bpath = os.path.join(tmp, "idx_buckets")
-        spath = os.path.join(tmp, "idx_sets")
-        # no coalesce(1): it serialized the whole minhash index build
-        # into one task (see dedup_streaming_compaction.persist_index)
-        buckets.write.parquet(bpath)
-        sets.write.parquet(spath)
-        index = (read_parquet(spark, bpath), read_parquet(spark, spath))
-    # 2. stage the delta as TWO files so availableNow takes two
-    #    micro-batches (multi-batch behavior, not a single-batch alias)
-    dsrc = os.path.join(tmp, "delta_src")
-    half = F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
-    delta.where(half).coalesce(1).write.mode("append").parquet(dsrc)
-    delta.where(~half).coalesce(1).write.mode("append").parquet(dsrc)
-    schema = parquet_schema(dsrc)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dsrc)
-    )
-    out_path = os.path.join(tmp, "out")
-    write_batch = SK.parquet_batch_sink(out_path, partitions=None)
-
-    def probe(batch_df, batch_id):
-        write_batch(
-            TD.incremental_minhash_dedup(
-                None, batch_df, threshold=0.5, index=index, within_delta=False
-            ),
-            batch_id,
-        )
-
-    q = SK.start_foreach_batch(
-        stream,
-        probe,
-        os.path.join(tmp, "ckpt"),
-        output_mode="append",
-        available_now=True,
-        query_name="dedup_incremental_streaming",
-    )
-    SK.await_or_raise(q)
-    return SK.read_or_empty(spark, out_path, spark.createDataFrame([], out_schema))
+    return _minhash_stream(spark, sf_dir, "dedup_incremental_streaming", compact=False)
 
 
 def _simhash_sql_cte() -> str:
@@ -2012,7 +1983,7 @@ def q_time_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    path = os.path.join(_scratch("time_layout_"), "events_bytime")
+    path = os.path.join(scratch_dir("time_layout_"), "events_bytime")
     write_time_layout(ev, path, ts_col="ts", n_ranges=16)
     lo = F.lit("2024-01-10").cast("timestamp_ntz")
     hi = F.lit("2024-01-11").cast("timestamp_ntz")
@@ -3040,10 +3011,6 @@ def q_fraud_enrich_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a batch DataFrame. Hash-compared against the SAME oracle SQL
     as the batch query — stream/batch equivalence is part of the
     correctness gate, not just a unit test."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-
     from smart_fraud_detection_data_pipeline_spark.sources.tables import stream_table
 
     raw = stream_table(spark, sf_dir, "events")
@@ -3069,18 +3036,7 @@ def q_fraud_enrich_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         "discount", "product_country", "country_mismatch", "high_value_flag",
         "fraud_score", "discounted_price", "tx_year", "tx_month", "tx_day",
     ]
-    result = enriched.select(*out_cols)
-    tmp = _scratch("fraud_stream_")
-    q = SK.start_foreach_batch(
-        result,
-        SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-        os.path.join(tmp, "ckpt"),
-        output_mode="append",
-        available_now=True,
-        query_name="fraud_enrich_streaming",
-    )
-    SK.await_or_raise(q)
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), result)
+    return _drain(spark, enriched.select(*out_cols), "fraud_enrich_streaming")
 
 
 
@@ -3096,7 +3052,7 @@ def _staged_dup_source(spark: SparkSession, sf_dir: str) -> str:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts", "value"
         )
-        src = _scratch("dedup_stream_src_")
+        src = scratch_dir("dedup_stream_src_")
         ev.coalesce(1).write.mode("append").parquet(src)
         ev.where(F.col("event_id") % 4 == 0).coalesce(1).write.mode(
             "append"
@@ -3120,34 +3076,15 @@ def q_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-free batch table. State is bounded by the watermark
     horizon — unlike dropDuplicates, which would keep every key forever;
     THE streaming-dedup contract for at-least-once sources at scale."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-
-    src = _staged_dup_source(spark, sf_dir)
-    schema = parquet_schema(src)
     deduped = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _stream_files(spark, _staged_dup_source(spark, sf_dir))
         # NTZ→TIMESTAMP only at the watermark boundary (engine contract)
         .withColumn("event_time", F.col("ts").cast("timestamp"))
         .withWatermark("event_time", "15 minutes")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "ts", "value")
     )
-    tmp = _scratch("dedup_stream_out_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            deduped,
-            SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-            os.path.join(tmp, "ckpt"),
-            output_mode="append",
-            available_now=True,
-            query_name="dedup_streaming",
-        )
-        SK.await_or_raise(q)
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), deduped)
+    return _drain(spark, deduped, "dedup_streaming", stateful=True)
 
 
 @_register(
@@ -3255,7 +3192,7 @@ def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shape (empty-fixture sweep rule)
         enriched.unpersist()
         return enriched.select(*cols).limit(0)
-    tmp = _scratch("warehouse_")
+    tmp = scratch_dir("warehouse_")
     first = enriched.withColumn("load_seq", F.lit(1))
     reemit = enriched.where(F.col("transaction_id") % 4 == 0).withColumn(
         "load_seq", F.lit(2)
@@ -3377,7 +3314,7 @@ def _staged_small_files(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     micro-batch ingest leaves behind) plus an empty dst dir. Memoized
     per sf_dir; bench runs it untimed via QuerySpec.prepare."""
     if sf_dir not in _COMPACT_SRC:
-        src, dst = _scratch("compact_src_"), _scratch("compact_dst_")
+        src, dst = scratch_dir("compact_src_"), scratch_dir("compact_dst_")
         load_table(spark, sf_dir, "events").repartition(32).write.mode(
             "overwrite"
         ).parquet(src)
@@ -3433,7 +3370,7 @@ def _staged_evolving_schema(spark: SparkSession, sf_dir: str) -> str:
     if sf_dir not in _EVOLVE_SRC:
         ev = load_table(spark, sf_dir, "events")
         is_v1 = F.coalesce(F.col("event_id") % 2 == 0, F.lit(False))
-        src = _scratch("evolve_src_")
+        src = scratch_dir("evolve_src_")
         ev.where(is_v1).select("event_id", "user_id", "ts", "value").coalesce(
             1
         ).write.mode("append").parquet(src)
@@ -3962,11 +3899,8 @@ def q_user_spend_trends_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     dedup recovers the final table — which must hash-match a plain batch
     GROUP BY oracle. The full ST4+A6 contract inside the correctness
     gate. Uses count(*) (not distinct) — exact and streamable."""
-    import os
-
     from smart_fraud_detection_data_pipeline_spark.operators.dedup import dedup_keep_last
     from smart_fraud_detection_data_pipeline_spark.sources.tables import stream_table
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
     from smart_fraud_detection_data_pipeline_spark.functions.numeric import exact_sum_double
     from smart_fraud_detection_data_pipeline_spark.functions.timeutil import stringify_window
 
@@ -3986,18 +3920,9 @@ def q_user_spend_trends_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     out = stringify_window(agg).select(
         "user_id", "total_spent", "n_events", "window_start", "window_end"
     )
-    tmp = _scratch("trend_stream_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            out,
-            SK.reemit_parquet_sink(os.path.join(tmp, "out")),
-            os.path.join(tmp, "ckpt"),
-            output_mode="complete",
-            available_now=True,
-            query_name="user_spend_trends_streaming",
-        )
-        SK.await_or_raise(q)
-    raw_out = SK.read_or_empty(spark, os.path.join(tmp, "out"), out, with_batch_id=True)
+    raw_out = _drain(
+        spark, out, "user_spend_trends_streaming", output_mode="complete", stateful=True
+    )
     return dedup_keep_last(
         raw_out, ["user_id", "window_start"], ["batch_id"]
     ).drop("batch_id")
@@ -4369,28 +4294,18 @@ def q_user_running_totals_streaming(spark: SparkSession, sf_dir: str) -> DataFra
     running totals accumulated in integer-cents GroupState across
     micro-batches; the final emission per user must equal a plain batch
     GROUP BY — arbitrary-state streaming inside the correctness gate."""
-    import os
-
     from smart_fraud_detection_data_pipeline_spark.operators.dedup import dedup_keep_last
     from smart_fraud_detection_data_pipeline_spark.sources.tables import stream_table
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
     from smart_fraud_detection_data_pipeline_spark.streaming.stateful import user_running_totals
 
     raw = stream_table(spark, sf_dir, "events")
     tx = raw.select("user_id", F.col("value").alias("amount"))
-    tmp = _scratch("running_totals_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            user_running_totals(tx),
-            SK.reemit_parquet_sink(os.path.join(tmp, "out")),
-            os.path.join(tmp, "ckpt"),
-            output_mode="update",
-            available_now=True,
-            query_name="user_running_totals_streaming",
-        )
-        SK.await_or_raise(q)
-    emissions = SK.read_or_empty(
-        spark, os.path.join(tmp, "out"), user_running_totals(tx), with_batch_id=True
+    emissions = _drain(
+        spark,
+        user_running_totals(tx),
+        "user_running_totals_streaming",
+        output_mode="update",
+        stateful=True,
     )
     return dedup_keep_last(emissions, ["user_id"], ["n_events", "batch_id"]).drop(
         "batch_id"
@@ -4657,71 +4572,77 @@ def q_doc_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESSION_SRC: dict[str, str] = {}
+_STAGED_EVENTS: dict[tuple[str, bool], str] = {}
 
 
-def _staged_session_source(spark: SparkSession, sf_dir: str) -> str:
+def _staged_events(spark: SparkSession, sf_dir: str, *, outer: bool = False) -> str:
     """Stage the full events table as two time-ordered parquet file
     groups (so sessions/join windows straddle the micro-batch boundary),
     once per sf_dir. Fixture harness, not operator work — bench.py runs
     this via QuerySpec.prepare before the clock starts; standalone calls
     (the driver) hit the same memo so repeated invocations stage once.
     Shared by every streaming query that needs ordered multi-batch
-    arrival (session windows, stream-stream join)."""
-    if sf_dir not in _SESSION_SRC:
+    arrival (session windows, stream-stream joins, the rollup).
+
+    ``outer`` adds far-future SENTINEL files for the outer stream-stream
+    joins: they emit their NULL rows only when the watermark evicts the
+    unmatched left rows, so the fixture must advance event time past
+    every row's join horizon or the tail of the outer result never
+    appears."""
+    key = (sf_dir, outer)
+    if key not in _STAGED_EVENTS:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts", "value", "event_type"
         )
-        src = _scratch("session_stream_src_")
+        src = scratch_dir("outer_stream_src_" if outer else "session_stream_src_")
         cut = ev.select(
             F.expr(f"percentile_approx(ts, 0.5, {2**16})").alias("cut")
         ).collect()[0][0]
         ev.where(F.col("ts") < F.lit(cut)).coalesce(1).write.mode("append").parquet(src)
         ev.where(F.col("ts") >= F.lit(cut)).coalesce(1).write.mode("append").parquet(src)
-        _SESSION_SRC[sf_dir] = src
-    return _SESSION_SRC[sf_dir]
+        if outer:
+            # TWO sentinel files (the first advances the watermark past every
+            # join horizon; eviction runs in the batch AFTER a watermark
+            # update, which the second file guarantees), each carrying one
+            # row PER JOIN SIDE: Catalyst pushes deterministic filters below
+            # the EventTimeWatermark node, so a sentinel that a side's
+            # filter drops never reaches that side's event-time stats and
+            # the watermark silently stalls (observed: left watermark stuck
+            # at the last error). The 'error'-typed row (user -1) rides the
+            # left filter, the 'view' row (user -2) the right side; neither
+            # can match anything, and the query strips err_id < 0 from the
+            # read-back where no pushdown applies.
+            for days in (1, 2):
+                base = ev.agg((F.max("ts") + F.expr(f"INTERVAL {days} DAY")).alias("ts"))
+                sentinel = base.selectExpr(
+                    "stack(2, -1L, -1L, ts, 0.0D, 'error', -2L, -2L, ts, 0.0D, 'view') "
+                    "AS (event_id, user_id, ts, value, event_type)"
+                )
+                sentinel.coalesce(1).write.mode("append").parquet(src)
+        _STAGED_EVENTS[key] = src
+    return _STAGED_EVENTS[key]
 
 
-@_register(
-    "stream_stream_join",
-    """
-WITH e AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-)
-SELECT a.event_id AS err_id, b.event_id AS follow_id
-FROM (SELECT * FROM e WHERE event_type = 'error') a
-JOIN e b
-  ON b.user_id = a.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-""",
-    prepare=lambda spark, sf_dir: _staged_session_source(spark, sf_dir),
-)
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream INNER interval join: errors on one stream, the same
-    user's follow-up events (next 10 min) on another, both watermarked.
-    Inner join emits each pair the moment both sides have arrived —
-    pairs straddling the micro-batch boundary match against buffered
-    state — so the appended output equals the batch interval join
-    exactly. The watermark + time-range condition is what BOUNDS that
-    state: each side retains only rows newer than (watermark − join
-    window), the contract that keeps a 100 TB/day dual-stream join
-    running instead of accumulating forever."""
-    import os
+def _stage_outer_events(spark: SparkSession, sf_dir: str) -> str:
+    return _staged_events(spark, sf_dir, outer=True)
 
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
-    src = _staged_session_source(spark, sf_dir)
-    schema = parquet_schema(src)
+def _stream_join(
+    spark: SparkSession, sf_dir: str, name: str, *, outer: bool, bucket_seconds: int | None
+) -> DataFrame:
+    """Shared body of the four stream-stream interval joins: errors on
+    one stream, the same user's follow-up events (next 10 min) on
+    another, both watermarked; INNER over the plain staged events or
+    LEFT OUTER over the sentinel-carrying ones, optionally with the
+    hot-key time bucket (streaming/joins.py)."""
+    from smart_fraud_detection_data_pipeline_spark.streaming.joins import (
+        interval_join_streaming,
+    )
 
-    def reader():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
+    src = _staged_events(spark, sf_dir, outer=outer)
     errors = (
-        reader()
-        .where(F.col("event_type") == "error")
+        _stream_files(spark, src)
+        .where(F.col("event_type") == "error")  # keeps an outer error sentinel
         .select(
             F.col("event_id").alias("err_id"),
             "user_id",
@@ -4730,95 +4651,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("err_time", "15 minutes")
     )
     follows = (
-        reader()
-        .select(
-            F.col("event_id").alias("follow_id"),
-            F.col("user_id").alias("f_user"),
-            F.col("ts").cast("timestamp").alias("f_time"),
-        )
-        .withWatermark("f_time", "15 minutes")
-    )
-    from smart_fraud_detection_data_pipeline_spark.streaming.joins import (
-        interval_join_streaming,
-    )
-
-    # SPARK_GRAFT_SS_BUCKET opts into the hot-key state split (joins.py;
-    # bit-identical output, pinned in tests + stream_hotkey_bench)
-    bucket = os.environ.get("SPARK_GRAFT_SS_BUCKET")
-    pairs = interval_join_streaming(
-        errors,
-        follows,
-        left_key="user_id",
-        right_key="f_user",
-        left_time="err_time",
-        right_time="f_time",
-        window_seconds=600,
-        bucket_seconds=int(bucket) if bucket else None,
-    ).select("err_id", "follow_id")
-    tmp = _scratch("ss_join_out_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            pairs,
-            SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-            os.path.join(tmp, "ckpt"),
-            output_mode="append",
-            available_now=True,
-            query_name="stream_stream_join",
-        )
-        SK.await_or_raise(q)
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), pairs)
-
-
-@_register(
-    "stream_stream_join_bucketed",
-    """
-WITH e AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-)
-SELECT a.event_id AS err_id, b.event_id AS follow_id
-FROM (SELECT * FROM e WHERE event_type = 'error') a
-JOIN e b
-  ON b.user_id = a.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-""",
-    prepare=lambda spark, sf_dir: _staged_session_source(spark, sf_dir),
-)
-def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stream-stream hot-key escape hatch UNDER the cross-engine
-    hash gate (round 9): the same error→follow-up interval join as
-    stream_stream_join, executed with bucket_seconds=600 — the time
-    bucket joins the state equality keys, bounding per-probe state
-    scans by bucket occupancy (8.6× at a 60k-row hot key; SCALING.md
-    round-9) — against the IDENTICAL batch oracle SQL. Bit-equality of
-    the hatch is thereby driver-certified, not just pytest-pinned."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-    from smart_fraud_detection_data_pipeline_spark.streaming.joins import (
-        interval_join_streaming,
-    )
-
-    src = _staged_session_source(spark, sf_dir)
-    schema = parquet_schema(src)
-
-    def reader():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-    errors = (
-        reader()
-        .where(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("err_id"),
-            "user_id",
-            F.col("ts").cast("timestamp").alias("err_time"),
-        )
-        .withWatermark("err_time", "15 minutes")
-    )
-    follows = (
-        reader()
+        _stream_files(spark, src)
         .select(
             F.col("event_id").alias("follow_id"),
             F.col("user_id").alias("f_user"),
@@ -4834,67 +4667,30 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         left_time="err_time",
         right_time="f_time",
         window_seconds=600,
-        bucket_seconds=600,
+        how="leftOuter" if outer else "inner",
+        bucket_seconds=bucket_seconds,
     ).select("err_id", "follow_id")
-    tmp = _scratch("ss_join_bucketed_out_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            pairs,
-            SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-            os.path.join(tmp, "ckpt"),
-            output_mode="append",
-            available_now=True,
-            query_name="stream_stream_join_bucketed",
-        )
-        SK.await_or_raise(q)
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), pairs)
+    out = _drain(spark, pairs, name, stateful=True)
+    if not outer:
+        # no sentinels to strip, and err_id >= 0 would also drop the
+        # NULL-err_id pairs the inner oracle keeps
+        return out
+    # strip the left sentinels' own (unmatched) emissions — a batch-side
+    # filter, immune to the streaming pushdown that motivated them
+    return out.where(F.col("err_id") >= 0)
 
 
-_OUTER_SRC: dict[str, str] = {}
+_SQL_STREAM_JOIN = """
+WITH e AS (
+  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
+)
+SELECT a.event_id AS err_id, b.event_id AS follow_id
+FROM (SELECT * FROM e WHERE event_type = 'error') a
+JOIN e b
+  ON b.user_id = a.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
+"""
 
-
-def _staged_outer_source(spark: SparkSession, sf_dir: str) -> str:
-    """The two time-ordered event files plus a far-future SENTINEL file
-    (one unmatchable row a day past the data): outer stream-stream
-    joins emit their NULL rows only when the watermark evicts the
-    unmatched left rows, so the fixture must advance event time past
-    every row's join horizon or the tail of the outer result never
-    appears. Memoized; staged off the bench clock via prepare."""
-    if sf_dir not in _OUTER_SRC:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "ts", "value", "event_type"
-        )
-        src = _scratch("outer_stream_src_")
-        cut = ev.select(
-            F.expr(f"percentile_approx(ts, 0.5, {2**16})").alias("c")
-        ).collect()[0][0]
-        ev.where(F.col("ts") < F.lit(cut)).coalesce(1).write.mode("append").parquet(src)
-        ev.where(F.col("ts") >= F.lit(cut)).coalesce(1).write.mode("append").parquet(src)
-        # TWO sentinel files (the first advances the watermark past every
-        # join horizon; eviction runs in the batch AFTER a watermark
-        # update, which the second file guarantees), each carrying one
-        # row PER JOIN SIDE: Catalyst pushes deterministic filters below
-        # the EventTimeWatermark node, so a sentinel that a side's
-        # filter drops never reaches that side's event-time stats and
-        # the watermark silently stalls (observed: left watermark stuck
-        # at the last error). The 'error'-typed row (user -1) rides the
-        # left filter, the 'view' row (user -2) the right side; neither
-        # can match anything, and the query strips err_id < 0 from the
-        # read-back where no pushdown applies.
-        for days in (1, 2):
-            base = ev.agg((F.max("ts") + F.expr(f"INTERVAL {days} DAY")).alias("ts"))
-            sentinel = base.selectExpr(
-                "stack(2, -1L, -1L, ts, 0.0D, 'error', -2L, -2L, ts, 0.0D, 'view') "
-                "AS (event_id, user_id, ts, value, event_type)"
-            )
-            sentinel.coalesce(1).write.mode("append").parquet(src)
-        _OUTER_SRC[sf_dir] = src
-    return _OUTER_SRC[sf_dir]
-
-
-@_register(
-    "stream_stream_left_join",
-    """
+_SQL_STREAM_LEFT_JOIN = """
 WITH e AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
 )
@@ -4908,9 +4704,38 @@ FROM (SELECT * FROM e WHERE event_type = 'error'
       AND ts IS NOT NULL) a
 LEFT JOIN e b
   ON b.user_id = a.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-""",
-    prepare=lambda spark, sf_dir: _staged_outer_source(spark, sf_dir),
-)
+"""
+
+
+@_register("stream_stream_join", _SQL_STREAM_JOIN, prepare=_staged_events)
+def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream INNER interval join: errors on one stream, the same
+    user's follow-up events (next 10 min) on another, both watermarked.
+    Inner join emits each pair the moment both sides have arrived —
+    pairs straddling the micro-batch boundary match against buffered
+    state — so the appended output equals the batch interval join
+    exactly. The watermark + time-range condition is what BOUNDS that
+    state: each side retains only rows newer than (watermark − join
+    window), the contract that keeps a 100 TB/day dual-stream join
+    running instead of accumulating forever."""
+    return _stream_join(spark, sf_dir, "stream_stream_join", outer=False, bucket_seconds=None)
+
+
+@_register("stream_stream_join_bucketed", _SQL_STREAM_JOIN, prepare=_staged_events)
+def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stream-stream hot-key escape hatch UNDER the cross-engine
+    hash gate (round 9): the same error→follow-up interval join as
+    stream_stream_join, executed with bucket_seconds=600 — the time
+    bucket joins the state equality keys, bounding per-probe state
+    scans by bucket occupancy (8.6× at a 60k-row hot key; SCALING.md
+    round-9) — against the IDENTICAL batch oracle SQL. Bit-equality of
+    the hatch is thereby driver-certified, not just pytest-pinned."""
+    return _stream_join(
+        spark, sf_dir, "stream_stream_join_bucketed", outer=False, bucket_seconds=600
+    )
+
+
+@_register("stream_stream_left_join", _SQL_STREAM_LEFT_JOIN, prepare=_stage_outer_events)
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream join: matched pairs emit on arrival like
     the inner join, but an error with NO follow-up emits its NULL row
@@ -4921,84 +4746,13 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon so the appended output equals the batch LEFT interval join
     exactly. The sentinel matches nothing: its user_id is unmatchable
     and, being no error, it contributes no left row."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-
-    src = _staged_outer_source(spark, sf_dir)
-    schema = parquet_schema(src)
-
-    def reader():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-    errors = (
-        reader()
-        .where(F.col("event_type") == "error")  # keeps the error sentinel
-        .select(
-            F.col("event_id").alias("err_id"),
-            "user_id",
-            F.col("ts").cast("timestamp").alias("err_time"),
-        )
-        .withWatermark("err_time", "15 minutes")
-    )
-    follows = (
-        reader()
-        .select(
-            F.col("event_id").alias("follow_id"),
-            F.col("user_id").alias("f_user"),
-            F.col("ts").cast("timestamp").alias("f_time"),
-        )
-        .withWatermark("f_time", "15 minutes")
-    )
-    from smart_fraud_detection_data_pipeline_spark.streaming.joins import (
-        interval_join_streaming,
-    )
-
-    pairs = interval_join_streaming(
-        errors,
-        follows,
-        left_key="user_id",
-        right_key="f_user",
-        left_time="err_time",
-        right_time="f_time",
-        window_seconds=600,
-        how="leftOuter",
-    ).select("err_id", "follow_id")
-    tmp = _scratch("ss_left_join_out_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            pairs,
-            SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-            os.path.join(tmp, "ckpt"),
-            output_mode="append",
-            available_now=True,
-            query_name="stream_stream_left_join",
-        )
-        SK.await_or_raise(q)
-    # strip the left sentinels' own (unmatched) emissions — a batch-side
-    # filter, immune to the streaming pushdown that motivated them
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), pairs).where(
-        F.col("err_id") >= 0
+    return _stream_join(
+        spark, sf_dir, "stream_stream_left_join", outer=True, bucket_seconds=None
     )
 
 
 @_register(
-    "stream_stream_left_join_bucketed",
-    """
-WITH e AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-)
-SELECT a.event_id AS err_id, b.event_id AS follow_id
-FROM (SELECT * FROM e WHERE event_type = 'error'
-      AND ts IS NOT NULL) a
-LEFT JOIN e b
-  ON b.user_id = a.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-""",
-    prepare=lambda spark, sf_dir: _staged_outer_source(spark, sf_dir),
+    "stream_stream_left_join_bucketed", _SQL_STREAM_LEFT_JOIN, prepare=_stage_outer_events
 )
 def q_stream_stream_left_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LEFT OUTER hot-key hatch UNDER the cross-engine hash gate
@@ -5011,66 +4765,8 @@ def q_stream_stream_left_join_bucketed(spark: SparkSession, sf_dir: str) -> Data
     oracle SQL. Closes the round-9 gap where a hot key had no outer
     escape (the inner hatch rejected outer joins); measured hot-key
     numbers in SCALING.md §stream-stream."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-    from smart_fraud_detection_data_pipeline_spark.streaming.joins import (
-        interval_join_streaming,
-    )
-
-    src = _staged_outer_source(spark, sf_dir)
-    schema = parquet_schema(src)
-
-    def reader():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-    errors = (
-        reader()
-        .where(F.col("event_type") == "error")  # keeps the error sentinel
-        .select(
-            F.col("event_id").alias("err_id"),
-            "user_id",
-            F.col("ts").cast("timestamp").alias("err_time"),
-        )
-        .withWatermark("err_time", "15 minutes")
-    )
-    follows = (
-        reader()
-        .select(
-            F.col("event_id").alias("follow_id"),
-            F.col("user_id").alias("f_user"),
-            F.col("ts").cast("timestamp").alias("f_time"),
-        )
-        .withWatermark("f_time", "15 minutes")
-    )
-    pairs = interval_join_streaming(
-        errors,
-        follows,
-        left_key="user_id",
-        right_key="f_user",
-        left_time="err_time",
-        right_time="f_time",
-        window_seconds=600,
-        how="leftOuter",
-        bucket_seconds=600,
-    ).select("err_id", "follow_id")
-    tmp = _scratch("ss_left_join_bucketed_out_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            pairs,
-            SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-            os.path.join(tmp, "ckpt"),
-            output_mode="append",
-            available_now=True,
-            query_name="stream_stream_left_join_bucketed",
-        )
-        SK.await_or_raise(q)
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), pairs).where(
-        F.col("err_id") >= 0
+    return _stream_join(
+        spark, sf_dir, "stream_stream_left_join_bucketed", outer=True, bucket_seconds=600
     )
 
 
@@ -5097,7 +4793,7 @@ SELECT user_id,
 FROM s
 GROUP BY user_id, sess_id
 """,
-    prepare=lambda spark, sf_dir: _staged_session_source(spark, sf_dir),
+    prepare=_staged_events,
 )
 def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows under Structured Streaming: events arrive in two
@@ -5106,18 +4802,10 @@ def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch gaps-and-islands answer. Demonstrates stateful
     window merging — the hardest streaming-state semantics in the
     catalog."""
-    import os
-
     from smart_fraud_detection_data_pipeline_spark.functions.numeric import exact_sum_double
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
-
-    src = _staged_session_source(spark, sf_dir)
-    schema = parquet_schema(src)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _stream_files(spark, _staged_events(spark, sf_dir))
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "15 minutes")
     )
@@ -5133,19 +4821,8 @@ def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "total_value",
     )
-    tmp = _scratch("session_stream_out_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            out,
-            SK.reemit_parquet_sink(os.path.join(tmp, "out")),
-            os.path.join(tmp, "ckpt"),
-            output_mode="complete",
-            available_now=True,
-            query_name="session_windows_streaming",
-        )
-        SK.await_or_raise(q)
-    emissions = SK.read_or_empty(
-        spark, os.path.join(tmp, "out"), out, with_batch_id=True
+    emissions = _drain(
+        spark, out, "session_windows_streaming", output_mode="complete", stateful=True
     )
     # merging windows: only the LAST complete emission is the truth
     # (keep-last per key would resurrect sessions that later merged away)
@@ -5357,15 +5034,12 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (parquet, __cluster + id + vector), so each batch probes the
     stored copy instead of re-deriving and re-broadcasting the
     centroid-literal assignment expression over the whole corpus."""
-    import os
-
     from smart_fraud_detection_data_pipeline_spark.operators.similarity import (
         as_double_array,
         ivf_assign,
         ivf_probe,
         sample_centroids,
     )
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
     emb = load_table(spark, sf_dir, "embeddings")
     out_schema = "query_id bigint, vec_id bigint, cosine_sim double, rank int"
@@ -5380,7 +5054,7 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not cents or queries.isEmpty():
         return spark.createDataFrame([], out_schema)
-    tmp = _scratch("ann_stream_")
+    tmp = scratch_dir("ann_stream_")
     # Build + persist the index ONCE: cell-assign the corpus and store
     # it cluster-partitioned, exactly what a serving deployment keeps on
     # disk (partition pruning then does the per-batch cell routing).
@@ -5393,31 +5067,13 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsrc = os.path.join(tmp, "queries")
     queries.where(F.col("query_id") < 5).coalesce(1).write.mode("append").parquet(qsrc)
     queries.where(F.col("query_id") >= 5).coalesce(1).write.mode("append").parquet(qsrc)
-    schema = parquet_schema(qsrc)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(qsrc)
+    return _drain(
+        spark,
+        _stream_files(spark, qsrc),
+        "embed_ann_streaming",
+        transform=lambda batch: ivf_probe(index, batch, cents, k=10, nprobe=4),
+        out_schema=out_schema,
     )
-    out_path = os.path.join(tmp, "out")
-    write_batch = SK.parquet_batch_sink(out_path, partitions=None)
-
-    def probe(batch_df, batch_id):
-        write_batch(
-            ivf_probe(index, batch_df, cents, k=10, nprobe=4),
-            batch_id,
-        )
-
-    q = SK.start_foreach_batch(
-        stream,
-        probe,
-        os.path.join(tmp, "ckpt"),
-        output_mode="append",
-        available_now=True,
-        query_name="embed_ann_streaming",
-    )
-    SK.await_or_raise(q)
-    return SK.read_or_empty(spark, out_path, spark.createDataFrame([], out_schema))
 
 
 _Q4_SQL = """
@@ -6422,7 +6078,7 @@ def q_zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    path = os.path.join(_scratch("zorder_layout_"), "events_zorder")
+    path = os.path.join(scratch_dir("zorder_layout_"), "events_zorder")
     write_zorder_layout(ev, path, cols=("user_id", "value"), n_ranges=16)
     return read_parquet(spark, path).where(
         F.col("user_id").between(10, 19) & F.col("value").between(50.0, 80.0)
@@ -7997,7 +7653,7 @@ FROM b, cut
 WHERE w + INTERVAL 5 MINUTE <= wm
 GROUP BY user_id, w
 """,
-    prepare=lambda spark, sf_dir: _staged_session_source(spark, sf_dir),
+    prepare=_staged_events,
 )
 def q_stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful streaming aggregation (two stateful operators in
@@ -8009,16 +7665,8 @@ def q_stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-closed windows; the oracle applies the same cutoff
     (window_end <= max(ts) − 15 min). Beyond-reference surface: the
     reference has no chained streaming state at all."""
-    import os
-
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-
-    src = _staged_session_source(spark, sf_dir)
-    schema = parquet_schema(src)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _stream_files(spark, _staged_events(spark, sf_dir))
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "15 minutes")
     )
@@ -8037,18 +7685,7 @@ def q_stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("w5.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         F.date_format("w5.end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
     )
-    tmp = _scratch("rollup_stream_")
-    with _shuffle_partitions(spark, 8):
-        q = SK.start_foreach_batch(
-            out,
-            SK.parquet_batch_sink(os.path.join(tmp, "out"), partitions=None),
-            os.path.join(tmp, "ckpt"),
-            output_mode="append",
-            available_now=True,
-            query_name="stream_windowed_rollup",
-        )
-        SK.await_or_raise(q)
-    return SK.read_or_empty(spark, os.path.join(tmp, "out"), out)
+    return _drain(spark, out, "stream_windowed_rollup", stateful=True)
 
 
 @_register(
@@ -8148,7 +7785,7 @@ def q_events_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = _scratch("jsonl_rt_")
+    tmp = scratch_dir("jsonl_rt_")
     path = os.path.join(tmp, "events_jsonl")
     ev.write.mode("overwrite").option(
         "timestampNTZFormat", CSV_TS_WRITE_FORMAT
@@ -8177,7 +7814,7 @@ def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = _scratch("orc_rt_")
+    tmp = scratch_dir("orc_rt_")
     path = os.path.join(tmp, "events_orc")
     ev.write.mode("overwrite").orc(path)
     return spark.read.orc(path).select(

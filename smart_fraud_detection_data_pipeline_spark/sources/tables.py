@@ -19,13 +19,16 @@ Catalyst for free as long as callers express filters/selects on the
 DataFrame (never collect-then-filter). At 100 TB the reading knobs that
 matter are ``spark.sql.files.maxPartitionBytes`` (set in session.py) and
 partition-pruning via Hive-style directory layout, which
-``sinks.write_partitioned_parquet`` produces.
+``sinks.parquet_batch_sink`` produces.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import tempfile
 from functools import lru_cache
 from typing import NamedTuple
 from urllib.parse import urlparse
@@ -58,6 +61,20 @@ def _csv_options(header: bool) -> dict[str, str]:
         "timestampFormat": CSV_TS_READ_FORMAT,
         "timestampNTZFormat": CSV_TS_READ_FORMAT,
     }
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh scratch dir under one atexit-cleaned root: streaming
+    sources, sinks and checkpoints need real directories, but repeated
+    catalog runs must not leak a tempdir per invocation (ADVICE r1)."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="sfdp_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def _ensure_ts_confs(spark: SparkSession) -> None:
@@ -402,11 +419,9 @@ def stream_table(
     _ensure_ts_confs(spark)
     schema, nano_cols = parquet_schema(path), _first_footer(path).nano_cols
     # The file stream source only accepts directories; testdata tables are
-    # single files, so stage a symlink inside a temp directory.
+    # single files, so stage a symlink inside a scratch directory.
     if os.path.isfile(path):
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix=f"stream_{name}_")
+        d = scratch_dir(f"stream_{name}_")
         os.symlink(path, os.path.join(d, f"{name}.parquet"))
         path = d
     reader = spark.readStream.schema(schema).format("parquet")

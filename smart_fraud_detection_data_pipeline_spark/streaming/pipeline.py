@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,46 +145,23 @@ def run_pipeline(
     if mode == "faithful":
         # ST4: complete mode + append parquet → write amplification;
         # consumers dedup keep-last on batch_id (read_trends_deduped).
-        user_q = sinks.start_foreach_batch(
-            user_t,
-            sinks.reemit_parquet_sink(os.path.join(out_dir, "user_spend_trends")),
-            ckpt("user_spend_trends"),
-            output_mode="complete",
-            available_now=available_now,
-            query_name="user_spend_trends",
-        )
-        cat_q = sinks.start_foreach_batch(
-            cat_t,
-            sinks.reemit_parquet_sink(os.path.join(out_dir, "category_trends")),
-            ckpt("category_trends"),
-            output_mode="complete",
-            available_now=available_now,
-            query_name="category_trends",
-        )
+        sink, output_mode = sinks.reemit_parquet_sink, "complete"
     else:
         # Append + watermark: each window emitted exactly once after the
         # watermark passes window end; bounded state.
-        user_q = sinks.start_foreach_batch(
-            user_t,
-            sinks.parquet_batch_sink(
-                os.path.join(out_dir, "user_spend_trends"), partitions=None
-            ),
-            ckpt("user_spend_trends"),
-            output_mode="append",
+        sink, output_mode = partial(sinks.parquet_batch_sink, partitions=None), "append"
+    trend_qs = [
+        sinks.start_foreach_batch(
+            trends,
+            sink(os.path.join(out_dir, name)),
+            ckpt(name),
+            output_mode=output_mode,
             available_now=available_now,
-            query_name="user_spend_trends",
+            query_name=name,
         )
-        cat_q = sinks.start_foreach_batch(
-            cat_t,
-            sinks.parquet_batch_sink(
-                os.path.join(out_dir, "category_trends"), partitions=None
-            ),
-            ckpt("category_trends"),
-            output_mode="append",
-            available_now=available_now,
-            query_name="category_trends",
-        )
-    return PipelineQueries(fraud_q, user_q, cat_q)
+        for name, trends in (("user_spend_trends", user_t), ("category_trends", cat_t))
+    ]
+    return PipelineQueries(fraud_q, *trend_qs)
 
 
 def read_trends_deduped(spark: SparkSession, path: str, key_cols: list[str]) -> DataFrame:

@@ -32,11 +32,6 @@ from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parque
 FRAUD_PARTITIONS = ("payment_method", "tx_year", "tx_month", "tx_day")
 
 
-def write_partitioned_parquet(df: DataFrame, path: str, partitions=FRAUD_PARTITIONS) -> None:
-    """S7: append-mode partitioned parquet (batch side of foreachBatch)."""
-    df.write.mode("append").partitionBy(*partitions).parquet(path)
-
-
 def parquet_batch_sink(
     path: str, partitions: tuple[str, ...] | None = FRAUD_PARTITIONS
 ) -> Callable[[DataFrame, int], None]:

@@ -34,3 +34,11 @@ def test_every_spec_has_oracle():
 def test_registry_order():
     rest = [n for n in _NAMES if n not in _DRIVER_ROTATION]
     assert [s.name for s in registry()] == list(_DRIVER_ROTATION) + rest
+
+
+def test_bucketed_stream_joins_share_their_twin_oracle():
+    # the bucketed hot-key hatch is certified by the SAME batch oracle
+    # as its unbucketed twin, so the two strings must not drift apart
+    oracle = {s.name: s.oracle for s in _REGISTRY}
+    for twin in ("stream_stream_join", "stream_stream_left_join"):
+        assert oracle[f"{twin}_bucketed"] == oracle[twin]

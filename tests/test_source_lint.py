@@ -1,6 +1,7 @@
 """Parquet is read through sources.tables.read_parquet only: a parquet
-read that gives Spark no schema runs a schema-inference job. Needs no
-SparkSession."""
+read that gives Spark no schema runs a schema-inference job. Catalog
+streaming queries start, await and read back their sinks only through
+queries._drain. Needs no SparkSession."""
 
 from __future__ import annotations
 
@@ -73,3 +74,20 @@ def test_no_schema_inference_outside_read_parquet():
                 if (rel, func) not in ALLOWED
             ]
     assert hits == []
+
+
+def test_catalog_streams_drain_through_one_helper():
+    drain_steps = {"start_foreach_batch", "await_or_raise", "read_or_empty"}
+    with open(os.path.join(PKG, "queries.py"), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    callers = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in drain_steps:
+                    callers.add(getattr(fn, "name", "<lambda>"))
+    assert callers == {"_drain"}

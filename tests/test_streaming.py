@@ -5,12 +5,14 @@ semantics, ingest sink layout, and the seeded generator (S1)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from smart_fraud_detection_data_pipeline_spark.operators.enrich import enrich_transactions
 from smart_fraud_detection_data_pipeline_spark.operators.trends import windowed_trends
+from smart_fraud_detection_data_pipeline_spark.sources import tables
 from smart_fraud_detection_data_pipeline_spark.sources.generator import (
     COUNTRIES,
     PAYMENT_METHODS,
@@ -190,6 +192,19 @@ def test_csv_ingest_sink_layout(spark, tmp_path):
     # Hive-style processing-date partitions (year=/month=/day=) + all rows
     assert {"year", "month", "day"} <= set(back.columns)
     assert back.count() == 50
+
+
+def test_stream_table_stages_under_scratch_root(spark, sf_dir):
+    """stream_table's symlink dir is staged under the one atexit-cleaned
+    scratch root, not left behind in the system tempdir per call."""
+    root = os.path.dirname(tables.scratch_dir("probe_"))
+    staged = []
+    for _ in range(2):
+        df = tables.stream_table(spark, sf_dir, "events")
+        plan = df._jdf.queryExecution().analyzed().toString()
+        staged += re.findall(r"FileSource\[([^\]]*)\]", plan)
+    assert len(staged) == 2
+    assert [os.path.dirname(d) for d in staged] == [root, root]
 
 
 def test_generator_deterministic_and_in_domain(spark):
@@ -501,7 +516,7 @@ def test_stream_stream_join_bucketed_bit_identical(spark, tmp_path):
           (9, 8, "2024-01-01 10:09:31", "view")]    # other user
     # two sentinel files (one per join side each) advance the watermark
     # past every horizon and trigger the eviction batch — the outer
-    # queries' _staged_outer_source pattern
+    # queries' _staged_events(outer=True) pattern
     s1 = [(-1, -1, "2024-01-02 00:00:00", "error"),
           (-2, -2, "2024-01-02 00:00:00", "view")]
     s2 = [(-3, -1, "2024-01-03 00:00:00", "error"),

@@ -65,8 +65,8 @@ def build_fixture(
     """Two time-ordered data files plus two far-future SENTINEL files
     (one row per join side each, unmatchable negative ids): outer joins
     emit null rows only at watermark eviction, so the fixture must
-    advance event time past every horizon (queries._staged_outer_source
-    pattern). Inner runs are unaffected — sentinels match nothing and
+    advance event time past every horizon (queries._staged_events
+    outer=True pattern). Inner runs are unaffected — sentinels match nothing and
     the read-back strips err_id < 0."""
     rng = np.random.default_rng(seed)
     n = hot_n + tail_n
