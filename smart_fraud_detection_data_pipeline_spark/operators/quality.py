@@ -15,12 +15,17 @@ reference never needed at 2 rows/sec but any real volume does).
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parquet
+from smart_fraud_detection_data_pipeline_spark.sources.tables import (
+    dataset_files,
+    read_parquet,
+)
 
 
 def constraint_report(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
@@ -49,6 +54,44 @@ def constraint_report(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
     )
 
 
+def recover_swap(path: str) -> None:
+    """Converge a directory after a crash inside `swap_write`: a
+    leftover ``<path>__old`` is renamed back if ``path`` is missing
+    (crashed mid-swap) and dropped otherwise (swap completed, cleanup
+    died)."""
+    old = path + "__old"
+    if os.path.exists(old):
+        if not os.path.exists(path):
+            os.rename(old, path)  # crashed mid-swap: restore
+        else:
+            shutil.rmtree(old)  # swap completed, cleanup died
+
+
+def swap_write(df: DataFrame, path: str) -> None:
+    """Materialize ``df`` — which may lazily read ``path`` — as parquet
+    into the temp sibling ``<path>__staged`` (discarding a partial one
+    a crashed rewrite left), then swap it in with two renames via
+    ``<path>__old``; a first write is one rename. Data is never
+    half-written, but POSIX cannot atomically swap directories, so
+    between the two renames ``path`` does not exist and a crash there
+    strands the data in ``<path>__old``: callers run `recover_swap`
+    before reading ``path``, so a re-run after any crash converges.
+    Concurrent readers during the window still fail — on a lakehouse
+    table format the commit would be a metadata swap instead."""
+    tmp = path + "__staged"
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)  # crashed mid-rewrite: discard partial output
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.exists(path):
+        old = path + "__old"
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old)
+    else:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        os.rename(tmp, path)
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -57,47 +100,20 @@ def compact_parquet(
     min_files: int = 1,
 ) -> int:
     """Rewrite a parquet directory into size-targeted files; returns the
-    new file count. Sizing: total bytes / target (floor min_files) —
-    at scale run per partition directory so rewrites stay bounded and
-    parallel. Companion to ``loaders.compact_dataset`` (the src→dst
-    narrow-coalesce variant with Hadoop-FS listing, hash-gated by the
-    ``warehouse_compaction`` query); THIS variant owns in-place local
-    compaction and its crash-recovering swap discipline.
-
-    Swap discipline: data is never half-compacted (the rewrite goes to a
-    temp sibling), but POSIX cannot atomically swap directories, so
-    between the two renames there is a window where ``path`` does not
-    exist; a crash there strands the data in ``<path>__old``. Entry
-    therefore RECOVERS from a leftover ``__old`` first (rename it back
-    if ``path`` is missing, drop it if a prior swap completed), so a
-    re-run after any crash converges. Concurrent readers during the
-    window still fail — on a lakehouse table format the commit would be
-    a metadata swap instead.
+    new file count. Sizing: total bytes of the data files Spark reads
+    (`dataset_files`, so `_temporary/` and other hidden leftovers do not
+    count) / target (floor min_files) — at scale run per partition
+    directory so rewrites stay bounded and parallel. Companion to
+    ``loaders.compact_dataset`` (the src→dst narrow-coalesce variant
+    with Hadoop-FS listing, hash-gated by the ``warehouse_compaction``
+    query); THIS variant owns in-place local compaction, committed with
+    the crash-recovering `recover_swap` / `swap_write` pair.
     """
-    import glob
-    import os
-    import shutil
-
     path = path.rstrip("/")
-    old = path + "__old"
-    tmp = path + "__compacting"
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            os.rename(old, path)  # crashed mid-swap: restore
-        else:
-            shutil.rmtree(old)  # swap completed, cleanup died
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # crashed mid-rewrite: discard partial output
-
-    total_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
+    recover_swap(path)
+    total_bytes = sum(size for _, _, size in dataset_files(spark, path))
     n_files = max(min_files, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = read_parquet(spark, path)
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_write(read_parquet(spark, path).repartition(n_files), path)
     return n_files
 
 

@@ -23,9 +23,10 @@ same planes every run.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from smart_fraud_detection_data_pipeline_spark.operators.skew import spread_input
@@ -588,14 +589,63 @@ def quantized_cosine_topk(
     )
 
 
-def _pq_pair_dist(m: int) -> Column:
-    """Σ_j adc_j[code_j] — the ADC lookup distance (m element_at
-    lookups, exact integer-valued doubles so the add order is free)."""
+def _pq_entry(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, query_id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The PQ family's ONE entry filter: NULL vectors AND NULL ids are
+    excluded from index and queries (ADVICE r9) — the oracle's dists
+    GROUP BY vec_id would collapse NULL-id candidates into one row
+    while Spark emits them per-row, and the top-k tie-break's null
+    ordering differs between engines. Twin filter: the `nz` CTE of
+    queries._PQ_ENTRY_CTES."""
+    return (
+        corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()),
+        queries.where(F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()),
+    )
+
+
+def _pq_stacker(dim: int):
+    """Build the uniform-dim `stack(series) -> float64 matrix` closure
+    the PQ encode/ADC Arrow functions share. Mixed embedding dims in
+    one Arrow batch make np.asarray raise a shapeless ragged-array
+    error (ADVICE r9); the probe fails loudly with the contract instead
+    — PQ (and its oracle's slice arithmetic) is uniform-dim per corpus.
+    A factory, not a module-level function: the returned closure is
+    pickled by value (CLAUDE.md UDF rule)."""
+    import numpy as np
+
+    def stack(series):
+        rows = series.tolist()
+        bad = sorted({len(r) for r in rows if len(r) != dim})
+        if bad:
+            raise ValueError(
+                f"PQ family requires uniform embedding dim {dim}; "
+                f"batch contains dims {bad}"
+            )
+        return np.asarray(rows, dtype=np.float64)
+
+    return stack
+
+
+def _adc_topk(
+    pairs: DataFrame, m: int, k: int, id_col: str, query_id_col: str
+) -> DataFrame:
+    """Per-query top-k by ADC distance over (query, candidate) rows
+    carrying `__code_j` and `__adc_j` — the ranking both PQ tiers end
+    in (oracle twin: queries._adc_rank_sql). pq_dist = Σ_j
+    adc_j[code_j], m element_at lookups of exact integer-valued doubles
+    (so the add order is free), ranked ASC with the id tie-break."""
     dist = None
     for j in range(m):
         term = F.element_at(F.col(f"__adc_{j}"), F.col(f"__code_{j}") + 1)
         dist = term if dist is None else dist + term
-    return dist
+    scored = pairs.select(query_id_col, id_col, dist.alias("pq_dist"))
+    w = Window.partitionBy(query_id_col).orderBy(F.col("pq_dist").asc(), F.col(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_id_col, id_col, "pq_dist", "rank")
+    )
 
 
 def pq_codebooks(
@@ -673,15 +723,7 @@ def pq_ann_topk(
     out_schema = (
         f"{query_id_col} long, {id_col} long, pq_dist double, rank int"
     )
-    # NULL ids are excluded alongside NULL vectors (ADVICE r9): the
-    # oracle's dists GROUP BY vec_id would collapse NULL-id candidates
-    # into one row while Spark emits them per-row, and the top-k
-    # tie-break's null ordering differs between engines. Twin filter:
-    # the `nz` CTE in queries._pq_core_ctes / _ivfpq_oracle_sql.
-    corpus = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
+    corpus, queries = _pq_entry(corpus, queries, id_col, vec_col, query_id_col)
     qz = quantize_int8(F.col(vec_col))
     c = corpus.select(F.col(id_col), qz.alias("__cvec"))
     books, sub = pq_codebooks(c, m, n_codes, id_col=id_col, vec_col="__cvec")
@@ -698,22 +740,7 @@ def pq_ann_topk(
 
     books_np = [np.asarray(b) for b in books]
     mm, ssub = m, sub
-    dim = sum(len(b[0]) for b in books)
-
-    # Mixed embedding dims in one Arrow batch make np.asarray raise a
-    # shapeless ragged-array error (ADVICE r9); probe and fail loudly
-    # instead — the PQ contract (and its oracle's slice arithmetic) is
-    # uniform-dim per corpus. Local def: the closures must stay
-    # cloudpickle-by-value (CLAUDE.md UDF rule).
-    def stack(series):
-        rows = series.tolist()
-        bad = sorted({len(r) for r in rows if len(r) != dim})
-        if bad:
-            raise ValueError(
-                f"PQ family requires uniform embedding dim {dim}; "
-                f"batch contains dims {bad}"
-            )
-        return np.asarray(rows, dtype=np.float64)
+    stack = _pq_stacker(sum(len(b[0]) for b in books))
 
     def encode_batches(it):
         import pandas as pd
@@ -749,15 +776,7 @@ def pq_ann_topk(
     q = queries.select(F.col(query_id_col), qz.alias("__qvec")).mapInPandas(
         adc_batches, schema=f"{query_id_col} long, {adc_cols}"
     )
-    scored = enc.join(F.broadcast(q)).select(
-        query_id_col, id_col, _pq_pair_dist(m).alias("pq_dist")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("pq_dist").asc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "pq_dist", "rank")
-    )
+    return _adc_topk(enc.join(F.broadcast(q)), m, k, id_col, query_id_col)
 
 
 def pq_rerank_topk(
@@ -788,23 +807,12 @@ def pq_rerank_topk(
     stage 1 is the PQ scan (codes only, no vector math per pair);
     stage 2 joins the shortlist ids back to the corpus — at most
     queries x shortlist rows of real vectors ever leave the scan."""
-    # NULL-id exclusion mirrors pq_ann_topk's entry filter (ADVICE r9).
-    corpus = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
-    short = pq_ann_topk(
-        corpus,
-        queries,
-        k=shortlist,
-        m=m,
-        n_codes=n_codes,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-    ).select(query_id_col, id_col)
     return _exact_rerank_stage(
-        corpus, queries, short,
+        corpus, queries,
+        lambda c, q: pq_ann_topk(
+            c, q, k=shortlist, m=m, n_codes=n_codes,
+            id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+        ),
         k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
@@ -812,18 +820,22 @@ def pq_rerank_topk(
 def _exact_rerank_stage(
     corpus: DataFrame,
     queries: DataFrame,
-    short: DataFrame,
+    ann: Callable[[DataFrame, DataFrame], DataFrame],
     *,
     k: int,
     id_col: str,
     vec_col: str,
     query_id_col: str,
 ) -> DataFrame:
-    """Stage 2 of every PQ rerank composition (ONE implementation so
-    pq_rerank_topk and ivfpq_rerank_topk cannot drift): join the
-    shortlist ids back to the corpus, score with the certified
-    int8-quantized cosine (6-dp rounded, zero-norm -> null), keep the
-    true top-k with (sim DESC NULLS LAST, id) ties."""
+    """Every PQ rerank composition (ONE implementation so
+    pq_rerank_topk and ivfpq_rerank_topk cannot drift): apply the
+    `_pq_entry` filter, shortlist with ``ann`` (the stage-1 ADC top-k
+    over the filtered frames), join the shortlist ids back to the
+    corpus, score with the certified int8-quantized cosine (6-dp
+    rounded, zero-norm -> null), keep the true top-k with (sim DESC
+    NULLS LAST, id) ties."""
+    corpus, queries = _pq_entry(corpus, queries, id_col, vec_col, query_id_col)
+    short = ann(corpus, queries).select(query_id_col, id_col)
     qz = quantize_int8(F.col(vec_col))
     cq = corpus.select(F.col(id_col), qz.alias("__cvec")).withColumn(
         "__cn", _norm(F.col("__cvec"))
@@ -877,24 +889,13 @@ def ivfpq_rerank_topk(
     bigger codebook, is the recommended default at scale. Shares
     _exact_rerank_stage with pq_rerank_topk and stays a FULL hash
     gate (both stages deterministic with id tie-breaks)."""
-    corpus = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
-    short = ivfpq_ann_topk(
-        corpus,
-        queries,
-        k=shortlist,
-        n_clusters=n_clusters,
-        nprobe=nprobe,
-        m=m,
-        n_codes=n_codes,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-    ).select(query_id_col, id_col)
     return _exact_rerank_stage(
-        corpus, queries, short,
+        corpus, queries,
+        lambda c, q: ivfpq_ann_topk(
+            c, q, k=shortlist, n_clusters=n_clusters, nprobe=nprobe, m=m,
+            n_codes=n_codes, id_col=id_col, vec_col=vec_col,
+            query_id_col=query_id_col,
+        ),
         k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
@@ -984,11 +985,7 @@ def ivfpq_ann_topk(
     rerank stage, exactly FAISS practice."""
     spark = corpus.sparkSession
     out_schema = f"{query_id_col} long, {id_col} long, pq_dist double, rank int"
-    # NULL-id exclusion mirrors pq_ann_topk's entry filter (ADVICE r9).
-    corpus = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
+    corpus, queries = _pq_entry(corpus, queries, id_col, vec_col, query_id_col)
     qz = quantize_int8(F.col(vec_col))
     c = corpus.select(F.col(id_col), qz.alias("__cvec"))
     # both deterministic samples (centroids at residue 0, codebook
@@ -1030,19 +1027,7 @@ def ivfpq_ann_topk(
     books_np = [np.asarray(b) for b in books]
     mm, ssub = m, sub
     code_cols = ", ".join(f"__code_{j} int" for j in range(m))
-
-    # Uniform-dim probe mirroring pq_ann_topk's guard (ADVICE r9):
-    # ragged batches must fail with the contract, not a numpy shape
-    # error. Local def keeps the closures cloudpickle-by-value.
-    def stack(series):
-        rows = series.tolist()
-        bad = sorted({len(r) for r in rows if len(r) != d})
-        if bad:
-            raise ValueError(
-                f"PQ family requires uniform embedding dim {d}; "
-                f"batch contains dims {bad}"
-            )
-        return np.asarray(rows, dtype=np.float64)
+    stack = _pq_stacker(d)
 
     def encode_batches(it):
         import pandas as pd
@@ -1098,14 +1083,8 @@ def ivfpq_ann_topk(
     qadc = q.mapInPandas(
         probe_batches, schema=f"{query_id_col} long, __cluster int, {adc_cols}"
     )
-    scored = enc.join(F.broadcast(qadc), "__cluster").select(
-        query_id_col, id_col, _pq_pair_dist(m).alias("pq_dist")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("pq_dist").asc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "pq_dist", "rank")
+    return _adc_topk(
+        enc.join(F.broadcast(qadc), "__cluster"), m, k, id_col, query_id_col
     )
 
 
@@ -1274,31 +1253,202 @@ def semantic_dedup(
     )
 
 
-def _bm25_score_micro(
-    f: Column, dl: Column, dft: Column, nd: Column, nt: Column,
-    k1: float, b: float,
+def _bm25_s_micro(
+    df: str, k1: float, b: float, *, f: str = "__f", dl: str = "__dl"
 ) -> Column:
-    """Floor-quantized int64 micro-unit BM25 term score — ONE builder
-    for the exact, pruned, and indexed tiers (the shared-branch rule,
-    mirrored by the `_BM25_S_MICRO` oracle fragment): idf is
-    micro-quantized on output (transcendental rule), every other
-    factor is an IEEE-deterministic expression of exact integers and
-    pinned literals with the same parse tree on both engines."""
+    """Floor-quantized int64 micro-unit BM25 term score of the named
+    (tf, doclen, document-frequency) columns under the `__nd`/`__nt`
+    corpus stats — ONE builder for the exact, pruned, and indexed tiers
+    (the shared-branch rule, mirrored by the `_BM25_S_MICRO` oracle
+    fragment): idf is micro-quantized on output (transcendental rule),
+    every other factor is an IEEE-deterministic expression of exact
+    integers and pinned literals with the same parse tree on both
+    engines."""
+    fc, dlc, dfc = F.col(f), F.col(dl), F.col(df)
+    nd, nt = F.col("__nd"), F.col("__nt")
     idf = (
         F.floor(
-            F.log(((nd - dft + F.lit(0.5)) / (dft + F.lit(0.5))) + F.lit(1.0))
+            F.log(((nd - dfc + F.lit(0.5)) / (dfc + F.lit(0.5))) + F.lit(1.0))
             * F.lit(1e6)
             + F.lit(0.5)
         )
         / F.lit(1e6)
     )
     avgdl = nt.cast("double") / nd.cast("double")
-    tf_part = (f.cast("double") * (F.lit(k1) + F.lit(1.0))) / (
-        f.cast("double")
+    tf_part = (fc.cast("double") * (F.lit(k1) + F.lit(1.0))) / (
+        fc.cast("double")
         + F.lit(k1)
-        * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (dl.cast("double") / avgdl))
+        * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (dlc.cast("double") / avgdl))
     )
     return F.floor(idf * tf_part * F.lit(1e6) + F.lit(0.5)).cast("bigint")
+
+
+def _bm25_tokens(
+    corpus: DataFrame, id_col: str, text_col: str, *, require_id: bool = False
+) -> DataFrame:
+    """(id, __tok) token stream — the ONE BM25 tokenizer every tier
+    scores: whitespace split of the trimmed text, xxhash64 per token
+    (exchanges key on hashes, never strings). NULL-text documents are
+    excluded on entry (text-op rule); ``require_id`` also drops NULL-id
+    documents (the index entry rule)."""
+    entry = F.col(text_col).isNotNull()
+    if require_id:
+        entry = entry & F.col(id_col).isNotNull()
+    return corpus.where(entry).select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                F.split(F.trim(F.col(text_col)), r"\s+"),
+                lambda t: F.xxhash64(t),
+            )
+        ).alias("__tok"),
+    )
+
+
+def _bm25_query_terms(
+    queries: DataFrame, query_id_col: str, query_terms_col: str,
+    broadcast_limit: int | None = None,
+) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
+    """(qterms, hint): the (query id, __tok) table of each query's
+    distinct terms, and the broadcast hint every query-bounded frame
+    takes. With ``broadcast_limit`` None (the exact tier) qterms stays
+    lazy and the hint always broadcasts. Otherwise qterms is
+    localCheckpoint-ed and counted ONCE, and above the limit the hint
+    is dropped so AQE picks the strategy from actual sizes
+    (broadcast-size-guard rule): every frame the hint is applied to —
+    the query vocabulary and its dft/ub derivatives, the per-query
+    qstats/ubq — has at most |qterms| rows."""
+    qterms = queries.select(
+        F.col(query_id_col),
+        F.explode(F.array_distinct(F.col(query_terms_col))).alias("__term"),
+    ).select(F.col(query_id_col), F.xxhash64("__term").alias("__tok"))
+    if broadcast_limit is None:
+        return qterms, F.broadcast
+    qterms = qterms.localCheckpoint(eager=False)
+    small_q = qterms.count() <= broadcast_limit
+
+    def hint(frame: DataFrame) -> DataFrame:
+        return F.broadcast(frame) if small_q else frame
+
+    return qterms, hint
+
+
+def _bm25_scan(
+    corpus: DataFrame, qterms: DataFrame, hint: Callable[[DataFrame], DataFrame],
+    id_col: str, text_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(tfq, dl, stats, dft) of a raw corpus for the per-call tiers:
+    tf restricted to the query vocabulary FIRST (hinted semi-join), so
+    the dft aggregation — and everything downstream — is bounded by
+    documents sharing a query term, and dft is bounded by the query
+    vocabulary (a full-vocab dft stops broadcasting at corpus scale).
+    dl feeds both the stats aggregate and the candidate join, and tfq
+    feeds both dft and the candidate join, so each is
+    localCheckpoint-ed once (CSE invariant, the tfidf_cosine_pairs
+    discipline — frees with the DF, nothing stays registered). avgdl
+    rides the lazy 1-row stats frame: no driver-side counts."""
+    toks = _bm25_tokens(corpus, id_col, text_col)
+    tf = toks.groupBy(id_col, "__tok").agg(F.count(F.lit(1)).alias("__f"))
+    dl = toks.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("__dl")
+    ).localCheckpoint(eager=False)
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("__nd"), F.sum("__dl").alias("__nt")
+    )
+    tfq = tf.join(
+        hint(qterms.select("__tok").distinct()), "__tok"
+    ).localCheckpoint(eager=False)
+    dft = tfq.groupBy("__tok").agg(F.count(F.lit(1)).alias("__dft"))
+    return tfq, dl, stats, dft
+
+
+def _bm25_term_ranked(scored: DataFrame, id_col: str) -> DataFrame:
+    """``scored`` plus each posting's per-term champion rank ``__rn``
+    (impact DESC, id ASC NULLS FIRST), materialized: the cut and the
+    dropped bound both read it."""
+    w = Window.partitionBy("__tok").orderBy(F.desc("__s"), F.asc_nulls_first(id_col))
+    return scored.withColumn("__rn", F.row_number().over(w)).localCheckpoint(eager=False)
+
+
+def _bm25_query_order(query_id_col: str, id_col: str) -> WindowSpec:
+    """The per-query ranking every BM25 tier pins: integer score DESC,
+    doc id ASC NULLS FIRST."""
+    return Window.partitionBy(query_id_col).orderBy(
+        F.desc("__sm"), F.asc_nulls_first(id_col)
+    )
+
+
+def _bm25_certified_topk(
+    impacts: DataFrame, champions: DataFrame, ub: DataFrame,
+    qterms: DataFrame, hint: Callable[[DataFrame], DataFrame],
+    *, id_col: str, query_id_col: str, k: int, broadcast_limit: int,
+) -> DataFrame:
+    """The certified top-k of the champion-list tiers, which differ only
+    in where ``champions`` (candidate postings, (__tok, id)) and ``ub``
+    (per-term bound on every dropped posting, (__tok, __ub)) come from;
+    ``impacts`` holds the exact (__tok, id, __s) contributions.
+
+    Candidates (the docs in any of the query's champion lists) are
+    rescored EXACTLY: the (query, doc, term) triples, bounded by
+    |queries|·|terms|·m, broadcast below ``broadcast_limit`` (counted
+    once) into a map-side restriction of the impact stream. The
+    lossless certificate is (n_ub == 0) OR (n_cand ≥ k AND kth > Σ
+    ub_t); its first branch counts rank-(m+1) ROWS, never tests the
+    bound SUM (ADVICE r12) — a dropped posting can floor-quantize to
+    impact 0 and still win the doc-id tie-break. Oracle twin:
+    `queries._bm25_certified_sql`."""
+    cand = (
+        champions.join(hint(qterms), "__tok")
+        .select(query_id_col, id_col)
+        .distinct()
+    )
+    triples = (
+        cand.join(qterms, query_id_col)
+        .select(query_id_col, id_col, "__tok")
+        .localCheckpoint(eager=False)
+    )
+    triples_b = (
+        F.broadcast(triples)
+        if triples.count() <= broadcast_limit
+        else triples
+    )
+    resc = (
+        impacts.join(triples_b, ["__tok", id_col])
+        .groupBy(query_id_col, id_col)
+        .agg(F.sum("__s").alias("__sm"))
+    )
+    ubq = (
+        qterms.join(hint(ub), "__tok", "left")
+        .groupBy(query_id_col)
+        .agg(
+            F.coalesce(F.sum("__ub"), F.lit(0)).cast("bigint").alias("__ubt"),
+            F.count("__ub").cast("bigint").alias("__nub"),
+        )
+    )
+    ranked_q = resc.withColumn(
+        "rank", F.row_number().over(_bm25_query_order(query_id_col, id_col))
+    ).localCheckpoint(eager=False)
+    qstats = ranked_q.groupBy(query_id_col).agg(
+        F.count(F.lit(1)).alias("__ncand"),
+        F.max(F.when(F.col("rank") == k, F.col("__sm"))).alias("__kth"),
+    )
+    lossless = F.coalesce(
+        (F.col("__nub") == 0)
+        | ((F.col("__ncand") >= k) & (F.col("__kth") > F.col("__ubt"))),
+        F.lit(False),
+    )
+    return (
+        ranked_q.where(F.col("rank") <= k)
+        .join(hint(qstats), query_id_col)
+        .join(hint(ubq), query_id_col)
+        .select(
+            query_id_col,
+            id_col,
+            (F.col("__sm").cast("double") / F.lit(1e6)).alias("bm25"),
+            F.col("rank").cast("bigint").alias("rank"),
+            lossless.alias("lossless_set_ok"),
+        )
+    )
 
 
 def bm25_topk(
@@ -1379,42 +1529,8 @@ def bm25_topk(
     ``None`` disables the fence (the diagnostic/benchmark override —
     how the x30 measurement itself is reproduced).
     """
-    toks = (
-        corpus.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: F.xxhash64(t),
-                )
-            ).alias("__tok"),
-        )
-    )
-    tf = toks.groupBy(id_col, "__tok").agg(F.count(F.lit(1)).alias("__f"))
-    dl = toks.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__dl")
-    ).localCheckpoint(eager=False)
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("__nd"), F.sum("__dl").alias("__nt")
-    )
-
-    qterms = queries.select(
-        F.col(query_id_col),
-        F.explode(F.array_distinct(F.col(query_terms_col))).alias("__term"),
-    ).select(F.col(query_id_col), F.xxhash64("__term").alias("__tok"))
-    # tf restricted to the query vocabulary FIRST (broadcast semi-join):
-    # document frequency is only needed for query terms, so the dft
-    # aggregation — and everything downstream — is bounded by documents
-    # sharing a query term, and the dft broadcast is bounded by the
-    # query vocabulary (a full-vocab dft stops broadcasting at corpus
-    # scale). tfq feeds both dft and the candidate join; localCheckpoint
-    # materializes it once (CSE invariant, the tfidf_cosine_pairs
-    # discipline — frees with the DF, nothing stays registered).
-    tfq = tf.join(
-        F.broadcast(qterms.select("__tok").distinct()), "__tok"
-    ).localCheckpoint(eager=False)
-    dft = tfq.groupBy("__tok").agg(F.count(F.lit(1)).alias("__dft"))
+    qterms, hint = _bm25_query_terms(queries, query_id_col, query_terms_col)
+    tfq, dl, stats, dft = _bm25_scan(corpus, qterms, hint, id_col, text_col)
 
     # Scale fence (see docstring): the candidate join emits EXACTLY
     # Σ_(q,t) dft_t rows — computable up front from the tiny per-term
@@ -1435,30 +1551,22 @@ def bm25_topk(
                 "max_scored_postings=None to override."
             )
 
-    # idf micro-quantized on output (transcendental rule); integer
-    # arithmetic stays integer until the explicit +0.5 promotion so the
-    # parse tree matches the oracle exactly.
-    s_micro = _bm25_score_micro(
-        F.col("__f"), F.col("__dl"), F.col("__dft"),
-        F.col("__nd"), F.col("__nt"), k1, b,
-    )
-
     cand = (
-        tfq.join(F.broadcast(qterms), "__tok")
+        tfq.join(hint(qterms), "__tok")
         .join(dl, id_col)
-        .join(F.broadcast(dft), "__tok")
+        .join(hint(dft), "__tok")
         .crossJoin(F.broadcast(stats))
     )
     scores = (
-        cand.select(query_id_col, id_col, s_micro.alias("__s"))
+        cand.select(query_id_col, id_col, _bm25_s_micro("__dft", k1, b).alias("__s"))
         .groupBy(query_id_col, id_col)
         .agg(F.sum("__s").alias("__sm"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__sm"), F.asc_nulls_first(id_col)
-    )
     return (
-        scores.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        scores.withColumn(
+            "rank",
+            F.row_number().over(_bm25_query_order(query_id_col, id_col)).cast("bigint"),
+        )
         .where(F.col("rank") <= k)
         .select(
             query_id_col,
@@ -1547,6 +1655,11 @@ def bm25_topk_pruned(
     REFUSE (all-false, never wrong) below that; the hash gate passes
     either way because the oracle mirrors the refusal.
 
+    Tokenizer, query-term table and corpus scan are the helpers
+    `bm25_topk` uses; steps 2–4 are `_bm25_certified_topk`, shared
+    with `bm25_topk_indexed` — this tier contributes only the impact
+    index, the champion cut and the rank-(m+1) ``ub``.
+
     Broadcast guards (ADVICE r12, the cms_token_estimates pattern):
     the query-side frames grow with the query load — qterms (and its
     dft/ub/qstats/ubq derivatives, all ≤ |qterms| resp. |queries|
@@ -1561,128 +1674,29 @@ def bm25_topk_pruned(
     the reference citations) with the pruning production engines
     (Lucene WAND/block-max) apply at corpus scale.
     """
-    toks = (
-        corpus.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: F.xxhash64(t),
-                )
-            ).alias("__tok"),
-        )
+    qterms, hint = _bm25_query_terms(
+        queries, query_id_col, query_terms_col, broadcast_limit
     )
-    tf = toks.groupBy(id_col, "__tok").agg(F.count(F.lit(1)).alias("__f"))
-    dl = toks.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__dl")
-    ).localCheckpoint(eager=False)
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("__nd"), F.sum("__dl").alias("__nt")
-    )
-
-    qterms = (
-        queries.select(
-            F.col(query_id_col),
-            F.explode(F.array_distinct(F.col(query_terms_col))).alias("__term"),
-        )
-        .select(F.col(query_id_col), F.xxhash64("__term").alias("__tok"))
-        .localCheckpoint(eager=False)
-    )
-    # One count guards every query-bounded hint: dft/ub are ≤ the query
-    # vocabulary, qstats/ubq are ≤ |queries| — all ≤ |qterms| rows.
-    small_q = qterms.count() <= broadcast_limit
-
-    def _q(frame: DataFrame) -> DataFrame:
-        return F.broadcast(frame) if small_q else frame
-
-    tfq = tf.join(
-        _q(qterms.select("__tok").distinct()), "__tok"
-    ).localCheckpoint(eager=False)
-    dft = tfq.groupBy("__tok").agg(F.count(F.lit(1)).alias("__dft"))
-
-    s_micro = _bm25_score_micro(
-        F.col("__f"), F.col("__dl"), F.col("__dft"),
-        F.col("__nd"), F.col("__nt"), k1, b,
-    )
+    tfq, dl, stats, dft = _bm25_scan(corpus, qterms, hint, id_col, text_col)
 
     # query-independent impact index: per (term, doc) the exact score
     # contribution, then the per-term top-m cut and the rank-(m+1)
     # upper bound on everything dropped
     impacts = (
         tfq.join(dl, id_col)
-        .join(_q(dft), "__tok")
+        .join(hint(dft), "__tok")
         .crossJoin(F.broadcast(stats))
-        .select("__tok", id_col, s_micro.alias("__s"))
+        .select("__tok", id_col, _bm25_s_micro("__dft", k1, b).alias("__s"))
     )
-    w_t = Window.partitionBy("__tok").orderBy(
-        F.desc("__s"), F.asc_nulls_first(id_col)
-    )
-    ranked_t = impacts.withColumn("__rn", F.row_number().over(w_t)).localCheckpoint(eager=False)
+    ranked_t = _bm25_term_ranked(impacts, id_col)
     kept = ranked_t.where(F.col("__rn") <= m).drop("__rn")
     ub = ranked_t.where(F.col("__rn") == m + 1).select(
         "__tok", F.col("__s").alias("__ub")
     )
-
-    # candidate docs per query: union of the query terms' champion
-    # lists, then EXACT rescore — the (query, doc, term) triples are
-    # bounded by |queries|·|terms|·m and broadcast into a map-side
-    # restriction of the impact stream, so the rescore aggregation's
-    # exchange carries candidate postings only (never queries×corpus)
-    cand = (
-        kept.join(_q(qterms), "__tok")
-        .select(query_id_col, id_col)
-        .distinct()
-    )
-    triples = (
-        cand.join(qterms, query_id_col)
-        .select(query_id_col, id_col, "__tok")
-        .localCheckpoint(eager=False)
-    )
-    triples_b = (
-        F.broadcast(triples)
-        if triples.count() <= broadcast_limit
-        else triples
-    )
-    resc = (
-        impacts.join(triples_b, ["__tok", id_col])
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("__s").alias("__sm"))
-    )
-    ubq = (
-        qterms.join(_q(ub), "__tok", "left")
-        .groupBy(query_id_col)
-        .agg(
-            F.coalesce(F.sum("__ub"), F.lit(0)).cast("bigint").alias("__ubt"),
-            # rank-(m+1) rows seen across the query's terms: 0 ⇒ no
-            # posting was dropped anywhere ⇒ candidates are exact
-            F.count("__ub").cast("bigint").alias("__nub"),
-        )
-    )
-    w_q = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__sm"), F.asc_nulls_first(id_col)
-    )
-    ranked_q = resc.withColumn("rank", F.row_number().over(w_q)).localCheckpoint(eager=False)
-    qstats = ranked_q.groupBy(query_id_col).agg(
-        F.count(F.lit(1)).alias("__ncand"),
-        F.max(F.when(F.col("rank") == k, F.col("__sm"))).alias("__kth"),
-    )
-    lossless = F.coalesce(
-        (F.col("__nub") == 0)
-        | ((F.col("__ncand") >= k) & (F.col("__kth") > F.col("__ubt"))),
-        F.lit(False),
-    )
-    return (
-        ranked_q.where(F.col("rank") <= k)
-        .join(_q(qstats), query_id_col)
-        .join(_q(ubq), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            (F.col("__sm").cast("double") / F.lit(1e6)).alias("bm25"),
-            F.col("rank").cast("bigint").alias("rank"),
-            lossless.alias("lossless_set_ok"),
-        )
+    return _bm25_certified_topk(
+        impacts, kept, ub, qterms, hint,
+        id_col=id_col, query_id_col=query_id_col, k=k,
+        broadcast_limit=broadcast_limit,
     )
 
 
@@ -1762,18 +1776,7 @@ def _bm25_corpus_frames(
     the same cached rows. The old shape re-ran the corpus tokenization
     (split + explode + xxhash64 over every document) once per
     checkpointed output frame — three full passes where one suffices."""
-    toks = (
-        corpus.where(F.col(text_col).isNotNull() & F.col(id_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: F.xxhash64(t),
-                )
-            ).alias("__tok"),
-        )
-    )
+    toks = _bm25_tokens(corpus, id_col, text_col, require_id=True)
     tf = (
         toks.groupBy(id_col, "__tok")
         .agg(F.count(F.lit(1)).alias("__f"))
@@ -1812,16 +1815,10 @@ def _bm25_rank_pool(
             id_col,
             "__f",
             "__dl",
-            _bm25_score_micro(
-                F.col("__f"), F.col("__dl"), F.col("__df"),
-                F.col("__nd"), F.col("__nt"), k1, b,
-            ).alias("__s"),
+            _bm25_s_micro("__df", k1, b).alias("__s"),
         )
     )
-    w = Window.partitionBy("__tok").orderBy(
-        F.desc("__s"), F.asc_nulls_first(id_col)
-    )
-    ranked = scored.withColumn("__rn", F.row_number().over(w)).localCheckpoint(eager=False)
+    ranked = _bm25_term_ranked(scored, id_col)
     champions = ranked.where(F.col("__rn") <= m).select(
         "__tok", id_col, "__f", "__dl"
     )
@@ -1990,113 +1987,46 @@ def bm25_topk_indexed(
     `bm25_topk(corpus.where(id IS NOT NULL), ...)` row for row
     (pinned in tests, fixed + zero-impact + incremental fixtures).
 
-    Same output schema and certificate rule as `bm25_topk_pruned`
-    (n_ub == 0 ⇔ no query term has ever dropped a posting, else
-    n_cand ≥ k AND kth > Σ ub_t); the only difference is the ub
-    bound's provenance — stored monotone (f, dl) extremes instead of
-    the per-call rank-(m+1) impact — which is conservative, so
-    certificates refuse more often but are never wrong.
+    Rescore, ranking and certificate are `_bm25_certified_topk`, the
+    helper `bm25_topk_pruned` also ends in (n_ub == 0 ⇔ no query term
+    has ever dropped a posting, else n_cand ≥ k AND kth > Σ ub_t); the
+    only difference is the ub bound's provenance — stored monotone
+    (f, dl) extremes instead of the per-call rank-(m+1) impact — which
+    is conservative, so certificates refuse more often but are never
+    wrong.
 
-    Broadcast guards as in `bm25_topk_pruned`: one count of qterms
-    guards every query-bounded hint; the candidate triples count
-    separately."""
+    Broadcast guards come from `_bm25_query_terms`: one count of
+    qterms guards every query-bounded hint; the candidate triples
+    count separately."""
     k1, b = index.k1, index.b
-    qterms = (
-        queries.select(
-            F.col(query_id_col),
-            F.explode(F.array_distinct(F.col(query_terms_col))).alias("__term"),
-        )
-        .select(F.col(query_id_col), F.xxhash64("__term").alias("__tok"))
-        .localCheckpoint(eager=False)
+    qterms, hint = _bm25_query_terms(
+        queries, query_id_col, query_terms_col, broadcast_limit
     )
-    small_q = qterms.count() <= broadcast_limit
-
-    def _q(frame: DataFrame) -> DataFrame:
-        return F.broadcast(frame) if small_q else frame
-
     qtoks = qterms.select("__tok").distinct()
-    ts_q = index.termstats.join(_q(qtoks), "__tok")
+    ts_q = index.termstats.join(hint(qtoks), "__tok")
     stats_b = F.broadcast(index.stats)
 
     # exact impacts of every stored posting for a query term, under
     # the CURRENT stats — the rescore source
     imp = (
-        index.postings.join(_q(qtoks), "__tok")
-        .join(_q(ts_q), "__tok")
+        index.postings.join(hint(qtoks), "__tok")
+        .join(hint(ts_q), "__tok")
         .crossJoin(stats_b)
-        .select(
-            "__tok",
-            id_col,
-            _bm25_score_micro(
-                F.col("__f"), F.col("__dl"), F.col("__df"),
-                F.col("__nd"), F.col("__nt"), k1, b,
-            ).alias("__s"),
-        )
-    )
-    cand = (
-        index.champions.join(_q(qterms), "__tok")
-        .select(query_id_col, id_col)
-        .distinct()
-    )
-    triples = (
-        cand.join(qterms, query_id_col)
-        .select(query_id_col, id_col, "__tok")
-        .localCheckpoint(eager=False)
-    )
-    triples_b = (
-        F.broadcast(triples)
-        if triples.count() <= broadcast_limit
-        else triples
-    )
-    resc = (
-        imp.join(triples_b, ["__tok", id_col])
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("__s").alias("__sm"))
+        .select("__tok", id_col, _bm25_s_micro("__df", k1, b).alias("__s"))
     )
     ub = (
-        index.dropped.join(_q(qtoks), "__tok")
-        .join(_q(ts_q), "__tok")
+        index.dropped.join(hint(qtoks), "__tok")
+        .join(hint(ts_q), "__tok")
         .crossJoin(stats_b)
         .select(
             "__tok",
-            _bm25_score_micro(
-                F.col("__fmax"), F.col("__dlmin"), F.col("__df"),
-                F.col("__nd"), F.col("__nt"), k1, b,
-            ).alias("__ub"),
+            _bm25_s_micro("__df", k1, b, f="__fmax", dl="__dlmin").alias("__ub"),
         )
     )
-    ubq = (
-        qterms.join(_q(ub), "__tok", "left")
-        .groupBy(query_id_col)
-        .agg(
-            F.coalesce(F.sum("__ub"), F.lit(0)).cast("bigint").alias("__ubt"),
-            F.count("__ub").cast("bigint").alias("__nub"),
-        )
-    )
-    w_q = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__sm"), F.asc_nulls_first(id_col)
-    )
-    ranked_q = resc.withColumn("rank", F.row_number().over(w_q)).localCheckpoint(eager=False)
-    qstats = ranked_q.groupBy(query_id_col).agg(
-        F.count(F.lit(1)).alias("__ncand"),
-        F.max(F.when(F.col("rank") == k, F.col("__sm"))).alias("__kth"),
-    )
-    lossless = F.coalesce(
-        (F.col("__nub") == 0)
-        | ((F.col("__ncand") >= k) & (F.col("__kth") > F.col("__ubt"))),
-        F.lit(False),
-    )
-    return (
-        ranked_q.where(F.col("rank") <= k)
-        .join(_q(qstats), query_id_col)
-        .join(_q(ubq), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            (F.col("__sm").cast("double") / F.lit(1e6)).alias("bm25"),
-            F.col("rank").cast("bigint").alias("rank"),
-            lossless.alias("lossless_set_ok"),
-        )
+    return _bm25_certified_topk(
+        imp, index.champions, ub, qterms, hint,
+        id_col=id_col, query_id_col=query_id_col, k=k,
+        broadcast_limit=broadcast_limit,
     )
 
 

@@ -152,8 +152,16 @@ def _drain(
 #: last driver certification is oldest (from the CORRECTNESS_rNN.json
 #: artifacts).
 _DRIVER_ROTATION = (
-    # --- the 13 streaming queries: now drained through _drain, the
-    # joins built by _stream_join, the minhash streams by _minhash_stream ---
+    # --- BM25 tiers on the shared tokenizer/query-term/certificate
+    # helpers, PQ tiers on the shared ADC ranking, and the batch twins
+    # built by one body each ---
+    "doc_bm25_topk", "doc_bm25_topk_pruned", "doc_bm25_index_incremental",
+    "embed_pq_ann", "embed_pq_rerank", "embed_ivfpq_ann",
+    "embed_ivfpq_rerank", "asof_last_purchase", "asof_last_purchase_bucketed",
+    "error_burst_window", "error_burst_window_bucketed", "session_windows",
+    # --- not yet driver-certified: the 13 streaming queries drained
+    # through _drain, and the footer-schema readers of loader or sink
+    # output ---
     "fraud_enrich_streaming", "dedup_streaming",
     "dedup_incremental_streaming", "dedup_streaming_compaction",
     "user_spend_trends_streaming", "user_running_totals_streaming",
@@ -161,28 +169,17 @@ _DRIVER_ROTATION = (
     "stream_stream_join_bucketed", "stream_stream_left_join",
     "stream_stream_left_join_bucketed", "stream_windowed_rollup",
     "embed_ann_streaming",
-    # --- read sites moved to footer schemas beyond load_table: the
-    # readers of loader or sink output ---
     "warehouse_load", "warehouse_compaction", "time_layout_scan",
     "zorder_layout_scan",
-    # --- changed in round 14, not yet driver-certified; doc_profile now
-    # runs through textstats.text_profile ---
-    "user_robust_zscore", "doc_profile", "embed_cosine_topk",
-    "embed_ivf_ann", "embed_ivf_kmeans_ann", "embed_pq_rerank",
-    "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
     # --- last driver-certified in round 10 ---
     "category_trends", "user_spend_trends_approx", "dedup_keep_last",
-    "merge_upsert_delete", "top_customers", "embed_srp_ann",
-    "multimodal_byte_features", "asof_last_purchase",
-    "small_quantity_revenue", "not_in_null_semantics",
-    "events_variant_props", "user_funnel", "orders_cube",
-    "shipping_priority", "regional_revenue", "doc_sample_stratified",
-    "returnflag_priority_mix",
-    "promo_revenue_pct", "salted_user_join", "kafka_serde_roundtrip",
-    "user_spend_trends_incremental", "user_value_lag_delta",
-    "nation_year_profit", "prolific_red_part_suppliers",
-    "order_priority_late_ship", "returned_item_losses",
-    "embed_quantized_topk",
+    "merge_upsert_delete", "top_customers", "embed_cosine_topk",
+    "embed_srp_ann", "multimodal_byte_features", "small_quantity_revenue",
+    "not_in_null_semantics", "events_variant_props", "user_funnel",
+    "orders_cube", "shipping_priority", "regional_revenue",
+    "doc_sample_stratified", "returnflag_priority_mix", "promo_revenue_pct",
+    "salted_user_join", "kafka_serde_roundtrip",
+    "user_spend_trends_incremental",
 )
 
 
@@ -1511,23 +1508,26 @@ def q_doc_mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Shared BM25 oracle fragments (ONE builder for exact + pruned, the
-#: fuzz-sweep shared-branch rule): the CTE prefix (tokenize, tf/dl,
-#: corpus stats, the %97-sampled query set, document frequencies) and
-#: the floor-quantized int64 micro-unit score expression with the
-#: tf/dl operand slots as placeholders.
-_BM25_CTE_PREFIX = """docs AS (
+#: Shared BM25 oracle fragments (the fuzz-sweep shared-branch rule):
+#: the tokenize/tf/dl CTEs plus the %97-sampled query set `q` under an
+#: entry filter (the twin of similarity._bm25_tokens and
+#: _bm25_query_set), the exact/pruned prefix that adds corpus stats and
+#: document frequencies, and the floor-quantized int64 micro-unit
+#: score expression with the tf/dl operand slots as placeholders.
+_BM25_DOCS_CTES = """docs AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents WHERE text IS NOT NULL
+  FROM documents WHERE {entry}
 ),
 toks AS (SELECT doc_id, unnest(t) AS tok FROM docs),
 tf AS (SELECT doc_id, tok, COUNT(*) AS f FROM toks GROUP BY doc_id, tok),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS n_toks FROM dl),
 q AS (
   SELECT doc_id AS query_id, unnest(list_distinct(t[1:5])) AS tok
   FROM docs WHERE doc_id % 97 = 0
-),
+)"""
+
+_BM25_CTE_PREFIX = _BM25_DOCS_CTES.format(entry="text IS NOT NULL") + """,
+stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS n_toks FROM dl),
 dft AS (SELECT tok, COUNT(*) AS dft FROM tf GROUP BY tok)"""
 
 _BM25_S_MICRO = """CAST(floor(
@@ -1570,54 +1570,32 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-def _bm25_pruned_oracle_sql(k: int = 10, m: int = 24) -> str:
-    """Mirror of operators/similarity.bm25_topk_pruned: the impact
-    index is query-independent (tf restricted to the query vocabulary,
-    same values), the per-term top-m champion cut and the per-query
-    ranking pin (value DESC, doc_id NULLS FIRST), candidates are
-    rescored exactly from the full impact stream, and the lossless
-    certificate is pure integer comparisons — the oracle recomputes
-    the PRUNED algorithm itself (the vocab_cms_counts pattern).
-    Certificate first branch counts rank-(m+1) ROWS (n_ub = 0 ⇔ no
-    posting dropped for any query term), never ub_total == 0 — a
-    dropped posting can floor-quantize to impact 0 and still belong
-    to the exact top-k via tie-breaks (ADVICE r12 soundness fix,
-    mirrored from the operator)."""
-    return f"""
-WITH {_BM25_CTE_PREFIX},
-impacts AS (
-  SELECT tf.tok, tf.doc_id,
-         {_BM25_S_MICRO.format(f="tf.f", dl="dl.dl")} AS s_micro
-  FROM tf
-  JOIN (SELECT DISTINCT tok FROM q) qv ON tf.tok = qv.tok
-  JOIN dl ON tf.doc_id = dl.doc_id
-  JOIN dft ON tf.tok = dft.tok
-  CROSS JOIN stats s
-),
-ranked_t AS (
-  SELECT tok, doc_id, s_micro,
-         row_number() OVER (PARTITION BY tok
-                            ORDER BY s_micro DESC, doc_id NULLS FIRST) AS rn
-  FROM impacts
-),
-kept AS (SELECT tok, doc_id FROM ranked_t WHERE rn <= {m}),
-ub AS (SELECT tok, s_micro AS ub FROM ranked_t WHERE rn = {m} + 1),
-ubq AS (
-  SELECT q.query_id, CAST(COALESCE(SUM(ub.ub), 0) AS BIGINT) AS ub_total,
-         CAST(COUNT(ub.ub) AS BIGINT) AS n_ub
-  FROM q LEFT JOIN ub ON q.tok = ub.tok
-  GROUP BY q.query_id
-),
-cand AS (
-  SELECT DISTINCT q.query_id, kept.doc_id
-  FROM q JOIN kept ON q.tok = kept.tok
-),
+def _bm25_certified_sql(k: int, *, champions: str, impacts: str, ub: str) -> str:
+    """The certified top-k tail of both champion-list oracles — the
+    twin of similarity._bm25_certified_topk: candidates from the
+    ``champions`` (tok, doc_id) lists of the query's terms, rescored
+    exactly from the ``impacts`` (tok, doc_id, s) stream, ranked
+    (sm DESC, doc_id NULLS FIRST), and the lossless certificate as pure
+    integer comparisons against the ``ub`` (tok, ub) bounds. Its first
+    branch counts rank-(m+1) ROWS (n_ub = 0 ⇔ no posting dropped for
+    any query term), never ub_total == 0 — a dropped posting can
+    floor-quantize to impact 0 and still belong to the exact top-k via
+    tie-breaks (ADVICE r12 soundness fix)."""
+    return f""",
+cand AS (SELECT DISTINCT q.query_id, c.doc_id
+         FROM q JOIN {champions} c ON q.tok = c.tok),
 resc AS (
-  SELECT c.query_id, c.doc_id, CAST(SUM(i.s_micro) AS BIGINT) AS sm
+  SELECT c.query_id, c.doc_id, CAST(SUM(i.s) AS BIGINT) AS sm
   FROM cand c
   JOIN q ON q.query_id = c.query_id
-  JOIN impacts i ON i.tok = q.tok AND i.doc_id = c.doc_id
+  JOIN {impacts} i ON i.tok = q.tok AND i.doc_id = c.doc_id
   GROUP BY c.query_id, c.doc_id
+),
+ubq AS (
+  SELECT q.query_id, CAST(COALESCE(SUM(u.ub), 0) AS BIGINT) AS ub_total,
+         CAST(COUNT(u.ub) AS BIGINT) AS n_ub
+  FROM q LEFT JOIN {ub} u ON q.tok = u.tok
+  GROUP BY q.query_id
 ),
 rq AS (
   SELECT query_id, doc_id, sm,
@@ -1640,6 +1618,50 @@ JOIN qstats s USING (query_id)
 JOIN ubq u USING (query_id)
 WHERE rq.rank <= {k}
 """
+
+
+def _bm25_pruned_oracle_sql(k: int = 10, m: int = 24) -> str:
+    """Oracle twin of operators/similarity.bm25_topk_pruned: the impact
+    index is query-independent (tf restricted to the query vocabulary,
+    same values), the per-term top-m champion cut pins (value DESC,
+    doc_id NULLS FIRST) and its rank-(m+1) row is the dropped-posting
+    bound; the rest is `_bm25_certified_sql` — the oracle recomputes
+    the PRUNED algorithm itself (the vocab_cms_counts pattern)."""
+    return f"""
+WITH {_BM25_CTE_PREFIX},
+impacts AS (
+  SELECT tf.tok, tf.doc_id,
+         {_BM25_S_MICRO.format(f="tf.f", dl="dl.dl")} AS s
+  FROM tf
+  JOIN (SELECT DISTINCT tok FROM q) qv ON tf.tok = qv.tok
+  JOIN dl ON tf.doc_id = dl.doc_id
+  JOIN dft ON tf.tok = dft.tok
+  CROSS JOIN stats s
+),
+ranked_t AS (
+  SELECT tok, doc_id, s,
+         row_number() OVER (PARTITION BY tok
+                            ORDER BY s DESC, doc_id NULLS FIRST) AS rn
+  FROM impacts
+),
+kept AS (SELECT tok, doc_id FROM ranked_t WHERE rn <= {m}),
+ub AS (SELECT tok, s AS ub FROM ranked_t WHERE rn = {m} + 1)""" + _bm25_certified_sql(
+        k, champions="kept", impacts="impacts", ub="ub"
+    )
+
+
+def _bm25_query_set(docs: DataFrame) -> DataFrame:
+    """The BM25 gate's query set — every 97th non-NULL-text document's
+    first five distinct tokens as (query_id, terms); pure arithmetic on
+    the table, so the oracle's `q` CTE (_BM25_DOCS_CTES) derives the
+    identical queries."""
+    base = docs.where(F.col("text").isNotNull())
+    return base.where(F.col("doc_id") % 97 == 0).select(
+        F.col("doc_id").alias("query_id"),
+        F.array_distinct(
+            F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 5)
+        ).alias("terms"),
+    )
 
 
 @_register("doc_bm25_topk", _bm25_oracle_sql())
@@ -1659,14 +1681,7 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.operators.similarity import bm25_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.where(F.col("text").isNotNull())
-    qset = base.where(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_distinct(
-            F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 5)
-        ).alias("terms"),
-    )
-    return bm25_topk(docs, qset, k=10)
+    return bm25_topk(docs, _bm25_query_set(docs), k=10)
 
 
 _BM25_PRUNE_M = 192
@@ -1675,7 +1690,7 @@ _BM25_PRUNE_M = 192
 @_register("doc_bm25_topk_pruned", _bm25_pruned_oracle_sql(m=_BM25_PRUNE_M))
 def q_doc_bm25_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Champion-list pruned BM25 with exact candidate rescoring
-    (round 12, VERDICT r11 #2): same %97 query sampling and k as exact
+    (round 12, VERDICT r11 #2): same `_bm25_query_set` and k as exact
     doc_bm25_topk, but candidates come from each term's top-192
     impact-ordered champion list, are rescored exactly, and every
     query carries a provable lossless certificate computed from the
@@ -1694,46 +1709,49 @@ def q_doc_bm25_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.operators.similarity import bm25_topk_pruned
 
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.where(F.col("text").isNotNull())
-    qset = base.where(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_distinct(
-            F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 5)
-        ).alias("terms"),
-    )
-    return bm25_topk_pruned(docs, qset, k=10, m=_BM25_PRUNE_M)
+    return bm25_topk_pruned(docs, _bm25_query_set(docs), k=10, m=_BM25_PRUNE_M)
 
 
 _BM25_INDEX_M = 400
 
 
+def _bm25_rank_pool_sql(name: str, pool: str, dft: str, stats: str) -> str:
+    """CTE ``name`` (tok, doc_id, f, dl, rn): the ``pool`` postings
+    scored under the ``dft``/``stats`` CTEs and ranked per term
+    (impact DESC, doc_id NULLS FIRST) — the twin of
+    similarity._bm25_rank_pool, used for the base cut and the delta
+    re-cut."""
+    return f"""{name}_imp AS (
+  SELECT p.tok, p.doc_id, p.f, p.dl,
+         {_BM25_S_MICRO.format(f="p.f", dl="p.dl")} AS s
+  FROM {pool} p JOIN {dft} dft ON p.tok = dft.tok CROSS JOIN {stats} s
+),
+{name} AS (
+  SELECT tok, doc_id, f, dl,
+         row_number() OVER (PARTITION BY tok
+                            ORDER BY s DESC, doc_id NULLS FIRST) AS rn
+  FROM {name}_imp
+)"""
+
+
 def _bm25_indexed_oracle_sql(k: int = 10, m: int = _BM25_INDEX_M) -> str:
-    """Mirror of the persisted champion-list index lifecycle
+    """Oracle twin of the persisted champion-list index lifecycle
     (operators/similarity.bm25_index_build → bm25_index_update →
     bm25_topk_indexed), restricted to the query vocabulary — valid
     because per-term champion cuts are independent and the output only
     consults the query's terms. The oracle recomputes the WHOLE
     algorithm: base champion lists under BASE stats, the affected-term
     re-cut under FULL stats, the monotone (fmax, dlmin) dropped-bound
-    merge, the exact rescore from full postings, and the certificate
-    (n_ub = 0 first branch — the ADVICE r12 sound form). Entry rule:
+    merge, and the exact rescore + certificate of
+    `_bm25_certified_sql` over the stored-bound ``ubr``. Entry rule:
     NULL text/id excluded (index contract, unlike the exact tier's
     merged NULL-id pseudo-doc); base/delta routing is dividend-signed
     `%` wrapped in COALESCE (modular-routing rule) and the shared-term
     membership tests are EXISTS, never IN (oracle routing rule)."""
     s = _BM25_S_MICRO
+    docs = _BM25_DOCS_CTES.format(entry="text IS NOT NULL AND doc_id IS NOT NULL")
     return f"""
-WITH docs AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-),
-toks AS (SELECT doc_id, unnest(t) AS tok FROM docs),
-tf AS (SELECT doc_id, tok, COUNT(*) AS f FROM toks GROUP BY doc_id, tok),
-dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-q AS (
-  SELECT doc_id AS query_id, unnest(list_distinct(t[1:5])) AS tok
-  FROM docs WHERE doc_id % 97 = 0
-),
+WITH {docs},
 qv AS (SELECT DISTINCT tok FROM q),
 tfq AS (SELECT tf.* FROM tf
         WHERE EXISTS (SELECT 1 FROM qv WHERE qv.tok = tf.tok)),
@@ -1748,17 +1766,7 @@ stats_f AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS n_toks
 dft_b AS (SELECT tok, COUNT(*) AS dft FROM tfq
           WHERE COALESCE(doc_id % 5 <> 0, FALSE) GROUP BY tok),
 dft_f AS (SELECT tok, COUNT(*) AS dft FROM tfq GROUP BY tok),
-imp_b AS (
-  SELECT p.tok, p.doc_id, p.f, p.dl,
-         {s.format(f="p.f", dl="p.dl")} AS s
-  FROM post_b p JOIN dft_b dft ON p.tok = dft.tok CROSS JOIN stats_b s
-),
-rb AS (
-  SELECT tok, doc_id, f, dl,
-         row_number() OVER (PARTITION BY tok
-                            ORDER BY s DESC, doc_id NULLS FIRST) AS rn
-  FROM imp_b
-),
+{_bm25_rank_pool_sql("rb", "post_b", "dft_b", "stats_b")},
 champ_b AS (SELECT tok, doc_id, f, dl FROM rb WHERE rn <= {m}),
 drop_b AS (SELECT tok, MAX(f) AS fmax, MIN(dl) AS dlmin
            FROM rb WHERE rn > {m} GROUP BY tok),
@@ -1769,17 +1777,7 @@ pool AS (
   UNION ALL
   SELECT tok, doc_id, f, dl FROM post_d
 ),
-imp_m AS (
-  SELECT p.tok, p.doc_id, p.f, p.dl,
-         {s.format(f="p.f", dl="p.dl")} AS s
-  FROM pool p JOIN dft_f dft ON p.tok = dft.tok CROSS JOIN stats_f s
-),
-rm AS (
-  SELECT tok, doc_id, f, dl,
-         row_number() OVER (PARTITION BY tok
-                            ORDER BY s DESC, doc_id NULLS FIRST) AS rn
-  FROM imp_m
-),
+{_bm25_rank_pool_sql("rm", "pool", "dft_f", "stats_f")},
 champ2 AS (
   SELECT c.tok, c.doc_id FROM champ_b c
   WHERE NOT EXISTS (SELECT 1 FROM dvoc WHERE dvoc.tok = c.tok)
@@ -1798,46 +1796,10 @@ imp_full AS (
          {s.format(f="p.f", dl="p.dl")} AS s
   FROM post p JOIN dft_f dft ON p.tok = dft.tok CROSS JOIN stats_f s
 ),
-cand AS (SELECT DISTINCT q.query_id, c.doc_id
-         FROM q JOIN champ2 c ON q.tok = c.tok),
-resc AS (
-  SELECT c.query_id, c.doc_id, CAST(SUM(i.s) AS BIGINT) AS sm
-  FROM cand c
-  JOIN q ON q.query_id = c.query_id
-  JOIN imp_full i ON i.tok = q.tok AND i.doc_id = c.doc_id
-  GROUP BY c.query_id, c.doc_id
-),
 ubr AS (
   SELECT d.tok, {s.format(f="d.fmax", dl="d.dlmin")} AS ub
   FROM drop2 d JOIN dft_f dft ON d.tok = dft.tok CROSS JOIN stats_f s
-),
-ubq AS (
-  SELECT q.query_id, CAST(COALESCE(SUM(u.ub), 0) AS BIGINT) AS ub_total,
-         CAST(COUNT(u.ub) AS BIGINT) AS n_ub
-  FROM q LEFT JOIN ubr u ON q.tok = u.tok
-  GROUP BY q.query_id
-),
-rq AS (
-  SELECT query_id, doc_id, sm,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY sm DESC, doc_id NULLS FIRST) AS rank
-  FROM resc
-),
-qstats AS (
-  SELECT query_id, COUNT(*) AS n_cand,
-         MAX(CASE WHEN rank = {k} THEN sm END) AS kth
-  FROM rq GROUP BY query_id
-)
-SELECT rq.query_id, rq.doc_id, CAST(rq.sm AS DOUBLE) / 1e6 AS bm25,
-       CAST(rq.rank AS BIGINT) AS rank,
-       COALESCE(u.n_ub = 0
-                OR (s.n_cand >= {k} AND s.kth > u.ub_total),
-                FALSE) AS lossless_set_ok
-FROM rq
-JOIN qstats s USING (query_id)
-JOIN ubq u USING (query_id)
-WHERE rq.rank <= {k}
-"""
+)""" + _bm25_certified_sql(k, champions="champ2", impacts="imp_full", ub="ubr")
 
 
 @_register("doc_bm25_index_incremental", _bm25_indexed_oracle_sql())
@@ -1847,7 +1809,7 @@ def q_doc_bm25_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice (doc_id % 5 != 0, null-safe routing), fold in the delta
     slice with the O(delta) incremental update (affected-term re-cut
     under updated stats, monotone dropped-bound merge, postings
-    append), then answer the standard %97-sampled query set from the
+    append), then answer the standard `_bm25_query_set` from the
     stored artifact — candidates from champions, EXACT rescore from
     stored postings, certificate from the stored (fmax, dlmin)
     bounds. m=400 sits between the fixture's per-term base lists
@@ -1870,17 +1832,7 @@ def q_doc_bm25_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = docs.where(F.coalesce(F.col("doc_id") % 5 == 0, F.lit(False)))
     index = bm25_index_build(base, m=_BM25_INDEX_M)
     index = bm25_index_update(index, delta)
-    qset = (
-        docs.where(F.col("text").isNotNull())
-        .where(F.col("doc_id") % 97 == 0)
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.array_distinct(
-                F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 5)
-            ).alias("terms"),
-        )
-    )
-    return bm25_topk_indexed(index, qset, k=10)
+    return bm25_topk_indexed(index, _bm25_query_set(docs), k=10)
 
 
 _PACK_BUDGET = 512
@@ -3561,9 +3513,28 @@ def q_sliding_window_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "session_windows",
-    """
+def _session_rollup(events: DataFrame) -> DataFrame:
+    """Per-user 5-minute-gap sessions as (user_id, session_start,
+    n_events, total_value) — the body shared by session_windows and the
+    stream session_windows_streaming drains."""
+    agg = events.groupBy(F.session_window("ts", "5 minutes"), "user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        exact_sum_double("value").alias("total_value"),
+    )
+    return agg.select(
+        "user_id",
+        F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
+            "session_start"
+        ),
+        "n_events",
+        "total_value",
+    )
+
+
+#: Gaps-and-islands session oracle shared by session_windows and
+#: session_windows_streaming (the streaming drain must equal the batch
+#: answer).
+_SQL_SESSION_WINDOWS = """
 WITH o AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -3583,25 +3554,15 @@ SELECT user_id,
        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
 FROM s
 GROUP BY user_id, sess_id
-""",
-)
+"""
+
+
+@_register("session_windows", _SQL_SESSION_WINDOWS)
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (5-minute inactivity gap) — the stateful windowing
     the reference lacks entirely. Spark: F.session_window (merging state
     windows); oracle: gaps-and-islands via lag + running sum."""
-    ev = load_table(spark, sf_dir, "events")
-    agg = ev.groupBy(F.session_window("ts", "5 minutes"), "user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        exact_sum_double("value").alias("total_value"),
-    )
-    return agg.select(
-        "user_id",
-        F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
-            "session_start"
-        ),
-        "n_events",
-        "total_value",
-    )
+    return _session_rollup(load_table(spark, sf_dir, "events"))
 
 
 @_register(
@@ -3664,9 +3625,7 @@ def q_embed_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Temporal joins (as-of / interval) and streaming windowed-agg parity
 # ---------------------------------------------------------------------------
 
-@_register(
-    "asof_last_purchase",
-    """
+_SQL_ASOF_LAST_PURCHASE = """
 WITH e AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
 ),
@@ -3687,104 +3646,65 @@ j AS (
 SELECT event_id, user_id, ts, purchase_id AS last_purchase_id,
        purchase_ts AS last_purchase_ts, purchase_value AS last_purchase_value
 FROM j WHERE rn = 1
-""",
-)
+"""
+
+
+def _asof_last_purchase(
+    spark: SparkSession, sf_dir: str, bucket_seconds: int | None
+) -> DataFrame:
+    """Every event paired with the same user's most recent purchase
+    at-or-before it — the body of asof_last_purchase and its bucketed
+    twin, which differ only in ``bucket_seconds``."""
+    from smart_fraud_detection_data_pipeline_spark.operators.asof import asof_join
+
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
+    purchases = load_table(spark, sf_dir, "events").where(
+        F.col("event_type") == "purchase"
+    ).select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
+    )
+    out = asof_join(
+        ev,
+        purchases,
+        on=["user_id"],
+        left_key="event_id",
+        left_ts="ts",
+        right_ts="purchase_ts",
+        tie_break="purchase_id",
+        bucket_seconds=bucket_seconds,
+    )
+    return out.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.col("purchase_id").alias("last_purchase_id"),
+        F.col("purchase_ts").alias("last_purchase_ts"),
+        F.col("purchase_value").alias("last_purchase_value"),
+    )
+
+
+@_register("asof_last_purchase", _SQL_ASOF_LAST_PURCHASE)
 def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of (backward) join: every event paired with the same user's most
     recent purchase at-or-before it — the canonical 'state as of event
     time' feature join the reference cannot express."""
-    from smart_fraud_detection_data_pipeline_spark.operators.asof import asof_join
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    purchases = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    ).select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = asof_join(
-        ev,
-        purchases,
-        on=["user_id"],
-        left_key="event_id",
-        left_ts="ts",
-        right_ts="purchase_ts",
-        tie_break="purchase_id",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("purchase_id").alias("last_purchase_id"),
-        F.col("purchase_ts").alias("last_purchase_ts"),
-        F.col("purchase_value").alias("last_purchase_value"),
-    )
+    return _asof_last_purchase(spark, sf_dir, bucket_seconds=None)
 
 
-@_register(
-    "asof_last_purchase_bucketed",
-    """
-WITH e AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
-),
-p AS (
-  SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS purchase_ts,
-         value AS purchase_value
-  FROM events WHERE event_type = 'purchase'
-),
-j AS (
-  SELECT e.event_id, e.user_id, e.ts, p.purchase_id, p.purchase_ts, p.purchase_value,
-         row_number() OVER (
-           PARTITION BY e.event_id
-           ORDER BY p.purchase_ts DESC NULLS LAST, p.purchase_id DESC NULLS LAST
-         ) AS rn
-  FROM e LEFT JOIN p
-    ON p.user_id = e.user_id AND p.purchase_ts <= e.ts
-)
-SELECT event_id, user_id, ts, purchase_id AS last_purchase_id,
-       purchase_ts AS last_purchase_ts, purchase_value AS last_purchase_value
-FROM j WHERE rn = 1
-""",
-)
+@_register("asof_last_purchase_bucketed", _SQL_ASOF_LAST_PURCHASE)
 def q_asof_last_purchase_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """asof_last_purchase through the opt-in ``bucket_seconds`` hot-key
     time-split (VERDICT r6 #1: the bucketed code path must face the hash
-    gate, not only unit tests). Same oracle SQL as the unbucketed twin —
-    the split is REQUIRED to be bit-identical. 6-hour buckets over the
+    gate, not only unit tests). Same body (`_asof_last_purchase`) and
+    oracle constant as the unbucketed twin — the split is REQUIRED to be
+    bit-identical. 6-hour buckets over the
     ~30-day events span ≈ 120 buckets: most buckets hold no purchase for
     a given user, so the cross-bucket carry pass does real work at
     sf0.01 and on every fuzz seed (incl. `--hotkey` fixtures)."""
-    from smart_fraud_detection_data_pipeline_spark.operators.asof import asof_join
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    purchases = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    ).select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = asof_join(
-        ev,
-        purchases,
-        on=["user_id"],
-        left_key="event_id",
-        left_ts="ts",
-        right_ts="purchase_ts",
-        tie_break="purchase_id",
-        bucket_seconds=6 * 3600,
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("purchase_id").alias("last_purchase_id"),
-        F.col("purchase_ts").alias("last_purchase_ts"),
-        F.col("purchase_value").alias("last_purchase_value"),
-    )
+    return _asof_last_purchase(spark, sf_dir, bucket_seconds=6 * 3600)
 
 
 _SQL_ERROR_BURST_WINDOW = """
@@ -3801,11 +3721,12 @@ GROUP BY a.event_id
 """
 
 
-@_register("error_burst_window", _SQL_ERROR_BURST_WINDOW)
-def q_error_burst_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval (range) join: per error event, the same user's activity in
-    the following 10 minutes — equi-key join bounds the fan-out, the
-    range predicate trims inside each key group."""
+def _error_burst_window(
+    spark: SparkSession, sf_dir: str, bucket_seconds: int | None
+) -> DataFrame:
+    """Per error event, the same user's follow-up counts in the next 10
+    minutes — the body of error_burst_window and its bucketed twin,
+    which differ only in ``bucket_seconds``."""
     from smart_fraud_detection_data_pipeline_spark.operators.asof import interval_join
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -3822,7 +3743,7 @@ def q_error_burst_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = interval_join(
         errors, follows, on=["user_id"], left_ts="ts", right_ts="f_ts",
-        lower="0 seconds", upper="10 minutes",
+        lower="0 seconds", upper="10 minutes", bucket_seconds=bucket_seconds,
     )
     counts = pairs.groupBy("event_id").agg(
         F.count("f_id").alias("n_follow"),
@@ -3838,6 +3759,14 @@ def q_error_burst_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_register("error_burst_window", _SQL_ERROR_BURST_WINDOW)
+def q_error_burst_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval (range) join: per error event, the same user's activity in
+    the following 10 minutes — equi-key join bounds the fan-out, the
+    range predicate trims inside each key group."""
+    return _error_burst_window(spark, sf_dir, bucket_seconds=None)
+
+
 @_register("error_burst_window_bucketed", _SQL_ERROR_BURST_WINDOW)
 def q_error_burst_window_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """error_burst_window through the opt-in interval_join
@@ -3845,37 +3774,10 @@ def q_error_burst_window_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     bucketed gate): joins on (user, 10-minute time bucket) — each error
     probes the 2 buckets its window can touch, each follower lands in
     exactly one — so per-task fan-out is bounded by per-(key, bucket)
-    products instead of |L_k|×|R_k| per key. Same oracle SQL as the
-    default plan; output is required to be bit-identical."""
-    from smart_fraud_detection_data_pipeline_spark.operators.asof import interval_join
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type"
-    )
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id"), F.col("user_id"), F.col("ts")
-    )
-    follows = ev.select(
-        F.col("user_id"),
-        F.col("event_id").alias("f_id"),
-        F.col("ts").alias("f_ts"),
-        F.col("event_type").alias("f_type"),
-    )
-    pairs = interval_join(
-        errors, follows, on=["user_id"], left_ts="ts", right_ts="f_ts",
-        lower="0 seconds", upper="10 minutes", bucket_seconds=600,
-    )
-    counts = pairs.groupBy("event_id").agg(
-        F.count("f_id").alias("n_follow"),
-        F.sum(F.when(F.col("f_type") == "error", 1).otherwise(0))
-        .cast("long")
-        .alias("n_follow_errors"),
-    )
-    return (
-        errors.select("event_id")
-        .join(counts, "event_id", "left")
-        .fillna(0, ["n_follow", "n_follow_errors"])
-    )
+    products instead of |L_k|×|R_k| per key. Same body
+    (`_error_burst_window`) and oracle constant as the default plan;
+    output is required to be bit-identical."""
+    return _error_burst_window(spark, sf_dir, bucket_seconds=600)
 
 
 
@@ -4770,31 +4672,7 @@ def q_stream_stream_left_join_bucketed(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-@_register(
-    "session_windows_streaming",
-    """
-WITH o AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                OR CAST(ts AS TIMESTAMP) - lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id ORDER BY ts) >= INTERVAL 5 MINUTE
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WHERE ts IS NOT NULL
-),
-s AS (
-  SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM o
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM s
-GROUP BY user_id, sess_id
-""",
-    prepare=_staged_events,
-)
+@_register("session_windows_streaming", _SQL_SESSION_WINDOWS, prepare=_staged_events)
 def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows under Structured Streaming: events arrive in two
     time-ordered micro-batches, so sessions spanning the file boundary
@@ -4802,25 +4680,12 @@ def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch gaps-and-islands answer. Demonstrates stateful
     window merging — the hardest streaming-state semantics in the
     catalog."""
-    from smart_fraud_detection_data_pipeline_spark.functions.numeric import exact_sum_double
-
     stream = (
         _stream_files(spark, _staged_events(spark, sf_dir))
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "15 minutes")
     )
-    agg = stream.groupBy(F.session_window("ts", "5 minutes"), "user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        exact_sum_double("value").alias("total_value"),
-    )
-    out = agg.select(
-        "user_id",
-        F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
-            "session_start"
-        ),
-        "n_events",
-        "total_value",
-    )
+    out = _session_rollup(stream)
     emissions = _drain(
         spark, out, "session_windows_streaming", output_mode="complete", stateful=True
     )
@@ -7282,6 +7147,22 @@ def q_embed_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantized_cosine_topk(emb, queries, k=10)
 
 
+#: The PQ oracles' entry: int8-quantized vectors with NULL vectors AND
+#: NULL ids excluded (`nz`, the twin of similarity._pq_entry) and the
+#: vec_id < 5 query set (`qs`, the twin of _pq_query_set).
+_PQ_ENTRY_CTES = f"""{_INT8_QZ_CTES},
+nz AS (SELECT vec_id, q FROM qz WHERE q IS NOT NULL AND vec_id IS NOT NULL),
+qs AS (SELECT vec_id AS query_id, q FROM nz WHERE vec_id < 5)"""
+
+
+def _pq_query_set(emb: DataFrame) -> DataFrame:
+    """The PQ gates' query set: the vec_id < 5 embeddings as
+    (query_id, embedding) — the `qs` CTE of _PQ_ENTRY_CTES."""
+    return emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
 def _pq_l2_sql(a: str, b: str) -> str:
     """Exact squared L2 between two integer-valued double lists (the
     PQ subspace distance). COALESCE covers the empty-slice case (both
@@ -7310,10 +7191,9 @@ def _pq_core_ctes(m: int = 4, n_codes: int = 16) -> str:
     per-subspace argmin encoding with lowest-index tie-break, and the
     ADC table join."""
     enc_l2 = _pq_l2_sql(_pq_slice("x.q", m=m), _pq_slice("cents.cq", m=m))
-    adc_l2 = _pq_l2_sql(_pq_slice("qs.qv", m=m), _pq_slice("cents.cq", m=m))
+    adc_l2 = _pq_l2_sql(_pq_slice("qs.q", m=m), _pq_slice("cents.cq", m=m))
     return f"""
-WITH {_INT8_QZ_CTES},
-nz AS (SELECT vec_id, q FROM qz WHERE q IS NOT NULL AND vec_id IS NOT NULL),
+WITH {_PQ_ENTRY_CTES},
 cents AS (
   SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, q AS cq
   FROM nz
@@ -7331,7 +7211,6 @@ codes AS (
     FROM nz x CROSS JOIN js CROSS JOIN cents
   ) WHERE rn = 1
 ),
-qs AS (SELECT vec_id AS query_id, q AS qv FROM nz WHERE vec_id < 5),
 adc AS (
   SELECT qs.query_id, js.j, cents.cidx, {adc_l2} AS d
   FROM qs CROSS JOIN js CROSS JOIN cents
@@ -7343,12 +7222,11 @@ dists AS (
 )"""
 
 
-def _pq_oracle_sql(k: int = 10, m: int = 4, n_codes: int = 16) -> str:
-    """Oracle twin of embed_pq_ann: the shared core plus the
-    exact-integer distance ranking."""
-    return (
-        _pq_core_ctes(m, n_codes)
-        + f""",
+def _adc_rank_sql(k: int) -> str:
+    """The exact-integer ADC ranking over `dists` that both PQ ANN
+    oracles end in — the twin of similarity._adc_topk: pq_dist ASC,
+    vec_id tie-break, top k per query."""
+    return f""",
 ranked AS (
   SELECT query_id, vec_id, pq_dist,
          CAST(row_number() OVER (
@@ -7358,7 +7236,12 @@ ranked AS (
 )
 SELECT query_id, vec_id, pq_dist, rank FROM ranked WHERE rank <= {k}
 """
-    )
+
+
+def _pq_oracle_sql(k: int = 10, m: int = 4, n_codes: int = 16) -> str:
+    """Oracle twin of embed_pq_ann: the shared core plus the ADC
+    ranking (_adc_rank_sql)."""
+    return _pq_core_ctes(m, n_codes) + _adc_rank_sql(k)
 
 
 def _rerank_tail_sql(k: int, shortlist: int) -> str:
@@ -7425,10 +7308,9 @@ def q_embed_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    return pq_rerank_topk(
+        emb, _pq_query_set(emb), k=10, shortlist=50, m=4, n_codes=16
     )
-    return pq_rerank_topk(emb, queries, k=10, shortlist=50, m=4, n_codes=16)
 
 
 def _ivfpq_core_sql(
@@ -7447,8 +7329,7 @@ def _ivfpq_core_sql(
     step = f"greatest((SELECT count(*) FROM nz) // {n_clusters}, 1)"
     step2 = f"greatest((SELECT count(*) FROM nz) // {n_codes}, 1)"
     return f"""
-WITH {_INT8_QZ_CTES},
-nz AS (SELECT vec_id, q FROM qz WHERE q IS NOT NULL AND vec_id IS NOT NULL),
+WITH {_PQ_ENTRY_CTES},
 cents AS (
   SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, q AS cq
   FROM nz WHERE vec_id % {step} = 0
@@ -7497,7 +7378,6 @@ codes AS (
     FROM cres x CROSS JOIN js CROSS JOIN rbooks rb
   ) WHERE rn = 1
 ),
-qs AS (SELECT vec_id AS query_id, q FROM nz WHERE vec_id < 5),
 qprobe AS (
   SELECT query_id, q, cidx FROM (
     SELECT qs.query_id, qs.q, cents.cidx,
@@ -7528,21 +7408,9 @@ def _ivfpq_oracle_sql(
     k: int = 10, n_clusters: int = 16, nprobe: int = 4, m: int = 4,
     n_codes: int = 16,
 ) -> str:
-    """Oracle twin of embed_ivfpq_ann: the shared core plus the
-    exact-integer ADC ranking."""
-    return (
-        _ivfpq_core_sql(n_clusters, nprobe, m, n_codes)
-        + f""",
-ranked AS (
-  SELECT query_id, vec_id, pq_dist,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY pq_dist ASC, vec_id
-         ) AS INTEGER) AS rank
-  FROM dists
-)
-SELECT query_id, vec_id, pq_dist, rank FROM ranked WHERE rank <= {k}
-"""
-    )
+    """Oracle twin of embed_ivfpq_ann: the shared core plus the ADC
+    ranking (_adc_rank_sql)."""
+    return _ivfpq_core_sql(n_clusters, nprobe, m, n_codes) + _adc_rank_sql(k)
 
 
 def _ivfpq_rerank_oracle_sql(
@@ -7574,10 +7442,9 @@ def q_embed_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    return ivfpq_ann_topk(
+        emb, _pq_query_set(emb), k=10, n_clusters=16, nprobe=4, m=4
     )
-    return ivfpq_ann_topk(emb, queries, k=10, n_clusters=16, nprobe=4, m=4)
 
 
 @_register("embed_ivfpq_rerank", _ivfpq_rerank_oracle_sql())
@@ -7597,11 +7464,8 @@ def q_embed_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
     return ivfpq_rerank_topk(
-        emb, queries, k=10, shortlist=50, n_clusters=16, nprobe=4, m=4,
+        emb, _pq_query_set(emb), k=10, shortlist=50, n_clusters=16, nprobe=4, m=4,
         n_codes=16,
     )
 
@@ -7626,10 +7490,7 @@ def q_embed_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return pq_ann_topk(emb, queries, k=10, m=4, n_codes=16)
+    return pq_ann_topk(emb, _pq_query_set(emb), k=10, m=4, n_codes=16)
 
 
 @_register(

@@ -38,23 +38,27 @@ full-prefix rescan (idempotent via MERGE, just wasteful — SURVEY §3
 EP3). Exit codes: 0 success, 1 job failure, 2 usage/missing input.
 
 Mart writes are snapshot-swap: merge output lands in a temp sibling,
-then two renames swap it in (same crash-recovery discipline as
-operators.quality.compact_parquet — a leftover ``__old`` is recovered
-on the next run). On a lakehouse table format the swap would be the
-format's atomic metadata commit instead (operators/merge.py:147).
+then two renames swap it in (operators.quality.swap_write, the helper
+compact_parquet also commits through — a leftover ``__old`` is
+recovered by quality.recover_swap on the next run). On a lakehouse
+table format the swap would be the format's atomic metadata commit
+instead (operators/merge.py:147).
 """
 
 from __future__ import annotations
 
 import argparse
 import os
-import shutil
 import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smart_fraud_detection_data_pipeline_spark.operators.quality import (
+    recover_swap,
+    swap_write,
+)
 from smart_fraud_detection_data_pipeline_spark.sources.tables import (
     parquet_num_rows,
     read_parquet,
@@ -84,36 +88,10 @@ def _since_predicate(since: str):
     )
 
 
-def _recover_swap(path: str) -> None:
-    old = path + "__old"
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            os.rename(old, path)  # crashed mid-swap: restore
-        else:
-            shutil.rmtree(old)  # swap completed, cleanup died
-
-
-def _snapshot_swap_write(df: DataFrame, path: str) -> None:
-    """Materialize ``df`` (which may lazily read ``path``) into a temp
-    sibling, then swap. Never leaves a half-written mart."""
-    tmp = path + "__staged"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        old = path + "__old"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        os.rename(tmp, path)
-
-
 def _read_mart(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
     """Current mart snapshot, or an empty frame with the source's schema
     on first run (so the merge is a plain insert)."""
-    _recover_swap(path)
+    recover_swap(path)
     if os.path.exists(path):
         return read_parquet(spark, path)
     return spark.createDataFrame([], like.schema)
@@ -189,7 +167,7 @@ def job_warehouse_load(spark: SparkSession, args) -> None:
     path = _mart_path(args.warehouse, "fraud_records")
     target = _read_mart(spark, path, src)
     merged = merge_upsert(target, src.select(*target.columns), ["transaction_id"])
-    _snapshot_swap_write(merged, path)
+    swap_write(merged, path)
     _log_mart("warehouse_load", path)
 
 
@@ -208,7 +186,7 @@ def _trend_job(spark: SparkSession, args, *, table: str) -> None:
     path = _mart_path(args.warehouse, table)
     target = _read_mart(spark, path, trend)
     merged = merge_upsert(target, trend.select(*target.columns), keys)
-    _snapshot_swap_write(merged, path)
+    swap_write(merged, path)
     _log_mart(table, path)
 
 

@@ -49,7 +49,20 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     assert n == 1 and after_files == 1
     assert after.count() == 200
     assert after.agg(F.sum("id")).collect()[0][0] == before_sum
-    assert not os.path.exists(p + "__old") and not os.path.exists(p + "__compacting")
+    assert not os.path.exists(p + "__old") and not os.path.exists(p + "__staged")
+
+
+def test_compact_parquet_sizes_from_data_files_only(spark, tmp_path):
+    """The rewrite budget counts only files Spark reads: a stale 3 MB
+    `_temporary/` part left by a crashed writer must not raise a 1 MB
+    target above one file."""
+    p = str(tmp_path / "stale")
+    spark.range(100).coalesce(1).write.parquet(p)
+    os.makedirs(os.path.join(p, "_temporary", "0"))
+    with open(os.path.join(p, "_temporary", "0", "part-0.parquet"), "wb") as fh:
+        fh.write(b"\0" * (3 * 1024 * 1024))
+    assert compact_parquet(spark, p, target_file_mb=1) == 1
+    assert spark.read.parquet(p).count() == 100
 
 
 def test_schema_evolution_merge(spark, tmp_path):

@@ -36,9 +36,14 @@ def test_registry_order():
     assert [s.name for s in registry()] == list(_DRIVER_ROTATION) + rest
 
 
-def test_bucketed_stream_joins_share_their_twin_oracle():
-    # the bucketed hot-key hatch is certified by the SAME batch oracle
-    # as its unbucketed twin, so the two strings must not drift apart
+def test_twins_share_their_oracle():
+    # every bucketed hot-key hatch is certified by the SAME oracle as
+    # its unbucketed twin, and the streaming session windows by the
+    # batch one, so the twin strings must not drift apart
     oracle = {s.name: s.oracle for s in _REGISTRY}
-    for twin in ("stream_stream_join", "stream_stream_left_join"):
-        assert oracle[f"{twin}_bucketed"] == oracle[twin]
+    bucketed = [n for n in _NAMES if n.endswith("_bucketed")]
+    assert len(bucketed) >= 4
+    pairs = [(n, n[: -len("_bucketed")]) for n in bucketed]
+    pairs.append(("session_windows_streaming", "session_windows"))
+    for twin, base in pairs:
+        assert oracle[twin] == oracle[base], twin

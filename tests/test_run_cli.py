@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import subprocess
 import sys
 
@@ -51,6 +52,34 @@ def test_warehouse_load_merges_and_is_idempotent(spark, sf_dir, warehouse):
     # must not grow the mart.
     R.job_warehouse_load(spark, _args(sf_dir, warehouse))
     assert spark.read.parquet(mart).count() == n1
+
+
+def test_warehouse_load_recovers_mid_swap_crash(spark, sf_dir, warehouse, tmp_path):
+    """A crash between the swap's two renames leaves the mart only at
+    `<mart>__old`; the next load restores that snapshot and merges
+    into it (a probe row only the stranded snapshot holds survives)."""
+    from pyspark.sql.types import StringType
+
+    w = tmp_path / "w"
+    os.makedirs(w / "processed")
+    os.symlink(R._processed_path(str(warehouse)), R._processed_path(str(w)))
+    R.job_warehouse_load(spark, _args(sf_dir, w))
+    mart = R._mart_path(str(w), "fraud_records")
+    snap = spark.read.parquet(mart)
+    n1 = snap.count()
+    tid = F.col("transaction_id")
+    if isinstance(snap.schema["transaction_id"].dataType, StringType):
+        probe_id = F.concat(tid, F.lit("-probe"))
+    else:
+        probe_id = tid + 1
+    probe = snap.orderBy(tid.desc()).limit(1).withColumn("transaction_id", probe_id)
+    snap.unionByName(probe).write.parquet(mart + "__old")
+    shutil.rmtree(mart)  # the crash: old snapshot renamed away, new not yet in
+    R.job_warehouse_load(spark, _args(sf_dir, w))
+    assert not os.path.exists(mart + "__old")
+    after = spark.read.parquet(mart)
+    assert after.count() == n1 + 1
+    assert after.select("transaction_id").distinct().count() == n1 + 1
 
 
 def test_trend_jobs_write_keyed_marts(spark, sf_dir, warehouse):
