@@ -290,130 +290,116 @@ def make_image_codecs() -> dict[str, object]:
             ]
         return w, h, pixels
 
-    def encode_png(w: int, h: int, pixels) -> bytes:
-        """Minimal RGB (color type 2) PNG writer. The scanline filter
-        is row % 5 — deliberately cycling through ALL five filter
-        types so the hash-gated decode query exercises every unfilter
-        path, not just the trivial one (any spec-conforming reader
-        must handle any per-row filter choice)."""
+    def _png_filtered(lines, bpp: int) -> bytes:
+        """The IDAT payload of the scanlines ``lines`` (``bpp`` bytes
+        per pixel): row r carries filter r % 5 — deliberately cycling
+        through ALL five filter types (None, Sub, Up, Average, Paeth)
+        so the hash-gated decode query exercises every unfilter path,
+        not just the trivial one (any spec-conforming reader must
+        handle any per-row filter choice)."""
         raw = bytearray()
-        prior = bytes(3 * w)
-        for row in range(h):
-            line = bytearray()
-            for x in range(w):
-                line += bytes(pixels[row * w + x])
+        prior = bytes(len(lines[0])) if lines else b""
+        for row, line in enumerate(lines):
             f = row % 5
             filt = bytearray(line)
-            if f == 1:  # Sub
-                for i in range(3 * w - 1, 2, -1):
-                    filt[i] = (line[i] - line[i - 3]) & 0xFF
-            elif f == 2:  # Up
-                for i in range(3 * w):
-                    filt[i] = (line[i] - prior[i]) & 0xFF
-            elif f == 3:  # Average
-                for i in range(3 * w):
-                    a = line[i - 3] if i >= 3 else 0
-                    filt[i] = (line[i] - ((a + prior[i]) >> 1)) & 0xFF
-            elif f == 4:  # Paeth
-                for i in range(3 * w):
-                    a = line[i - 3] if i >= 3 else 0
-                    b = prior[i]
-                    c = prior[i - 3] if i >= 3 else 0
+            for i in range(len(line) if f else 0):
+                a = line[i - bpp] if i >= bpp else 0
+                b = prior[i]
+                if f == 1:  # Sub
+                    pred = a
+                elif f == 2:  # Up
+                    pred = b
+                elif f == 3:  # Average
+                    pred = (a + b) >> 1
+                else:  # Paeth
+                    c = prior[i - bpp] if i >= bpp else 0
                     p = a + b - c
                     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = (
-                        a
-                        if pa <= pb and pa <= pc
-                        else (b if pb <= pc else c)
-                    )
-                    filt[i] = (line[i] - pred) & 0xFF
+                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                filt[i] = (line[i] - pred) & 0xFF
             raw.append(f)
             raw += filt
             prior = line
+        return bytes(raw)
 
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + ctype
-                + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    def _png_chunk(ctype: bytes, data: bytes) -> bytes:
         return (
-            _PNG_SIG
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    def encode_png_palette(w: int, h: int, pixels) -> bytes:
-        """Minimal palette (color type 3) PNG writer — round 9. The
-        palette is the ordered first-occurrence set of distinct colors
-        (must be <=256 — the synthetic fixtures cap at w*h <= 91);
-        scanlines carry 1-byte indices, and the row % 5 filter cycle
-        from encode_png applies to the INDEX bytes with bpp=1 (legal
-        per spec and exactly what exercises the palette decode's
-        unfilter-then-lookup order)."""
+    def _png_file(
+        w: int, h: int, color_type: int, lines, bpp: int, plte: bytes | None = None
+    ) -> bytes:
+        """Signature + IHDR (8-bit, no interlace) + optional PLTE +
+        one zlib IDAT of the filtered scanlines + IEND."""
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
+        return (
+            _PNG_SIG
+            + _png_chunk(b"IHDR", ihdr)
+            + (b"" if plte is None else _png_chunk(b"PLTE", plte))
+            + _png_chunk(b"IDAT", zlib.compress(_png_filtered(lines, bpp)))
+            + _png_chunk(b"IEND", b"")
+        )
+
+    def _palette(pixels, too_many: str) -> dict[tuple, int]:
+        """Ordered first-occurrence index of the distinct colors (the
+        PNG PLTE / GIF color table order); more than 256 raises
+        ValueError(too_many)."""
         palette: dict[tuple, int] = {}
         for px in pixels:
             t = tuple(px)
             if t not in palette:
                 palette[t] = len(palette)
         if len(palette) > 256:
-            raise ValueError("palette PNG needs <= 256 distinct colors")
-        raw = bytearray()
-        prior = bytes(w)
-        for row in range(h):
-            line = bytearray(
-                palette[tuple(pixels[row * w + x])] for x in range(w)
-            )
-            f = row % 5
-            filt = bytearray(line)
-            if f == 1:  # Sub (bpp=1)
-                for i in range(w - 1, 0, -1):
-                    filt[i] = (line[i] - line[i - 1]) & 0xFF
-            elif f == 2:  # Up
-                for i in range(w):
-                    filt[i] = (line[i] - prior[i]) & 0xFF
-            elif f == 3:  # Average
-                for i in range(w):
-                    a = line[i - 1] if i >= 1 else 0
-                    filt[i] = (line[i] - ((a + prior[i]) >> 1)) & 0xFF
-            elif f == 4:  # Paeth
-                for i in range(w):
-                    a = line[i - 1] if i >= 1 else 0
-                    b = prior[i]
-                    c = prior[i - 1] if i >= 1 else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = (
-                        a
-                        if pa <= pb and pa <= pc
-                        else (b if pb <= pc else c)
-                    )
-                    filt[i] = (line[i] - pred) & 0xFF
-            raw.append(f)
-            raw += filt
-            prior = line
+            raise ValueError(too_many)
+        return palette
 
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + ctype
-                + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
+    def _gif_color_table(palette) -> tuple[int, bytes]:
+        """(bits, color table zero-padded to 2**bits entries)."""
+        bits = max(1, (len(palette) - 1).bit_length())
+        ct = bytes(c for color in palette for c in color)
+        return bits, ct + b"\x00" * (3 * (1 << bits) - len(ct))
 
+    def _gif_image_data(palette, pixels, bits: int) -> bytes:
+        """LZW minimum code size, the LZW stream of the pixels' palette
+        indices in 255-byte sub-blocks, and the 0 terminator."""
+        mcs = max(2, bits)
+        lzw = _gif_lzw_encode((palette[tuple(px)] for px in pixels), mcs)
+        out = bytearray((mcs,))
+        for i in range(0, len(lzw), 255):
+            block = lzw[i : i + 255]
+            out.append(len(block))
+            out += block
+        out.append(0)
+        return bytes(out)
+
+    def encode_png(w: int, h: int, pixels) -> bytes:
+        """Minimal RGB (color type 2) PNG writer; scanlines carry the
+        _png_filtered row % 5 filter cycle with bpp=3."""
+        lines = [
+            b"".join(bytes(pixels[row * w + x]) for x in range(w))
+            for row in range(h)
+        ]
+        return _png_file(w, h, 2, lines, 3)
+
+    def encode_png_palette(w: int, h: int, pixels) -> bytes:
+        """Minimal palette (color type 3) PNG writer — round 9. The
+        palette is the ordered first-occurrence set of distinct colors
+        (must be <=256 — the synthetic fixtures cap at w*h <= 91);
+        scanlines carry 1-byte indices, and the _png_filtered cycle
+        applies to the INDEX bytes with bpp=1 (legal per spec and
+        exactly what exercises the palette decode's
+        unfilter-then-lookup order)."""
+        palette = _palette(pixels, "palette PNG needs <= 256 distinct colors")
+        lines = [
+            bytes(palette[tuple(pixels[row * w + x])] for x in range(w))
+            for row in range(h)
+        ]
         plte = bytes(c for color in palette for c in color)
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-        return (
-            _PNG_SIG
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"PLTE", plte)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
+        return _png_file(w, h, 3, lines, 1, plte)
 
     def decode_image(payload: bytes):
         """Dispatch on magic bytes. BMP (24-bit uncompressed), PPM (P6),
@@ -768,37 +754,17 @@ def make_image_codecs() -> dict[str, object]:
             b"GIF89a" + struct.pack("<HH", w, h) + bytes((0, 0, 0))
         )
         for frame in frames:
-            palette: dict[tuple, int] = {}
-            for px in frame:
-                t = tuple(px)
-                if t not in palette:
-                    palette[t] = len(palette)
-            if len(palette) > 256:
-                raise ValueError("GIF frame needs <= 256 distinct colors")
-            bits = max(1, (len(palette) - 1).bit_length())
-            n = 1 << bits
-            ct = bytearray()
-            for color in palette:
-                ct += bytes(color)
-            ct += b"\x00" * (3 * n - len(ct))
+            palette = _palette(frame, "GIF frame needs <= 256 distinct colors")
+            bits, ct = _gif_color_table(palette)
             # graphic control extension: 4-byte block, 10 ms delay
             out += b"\x21\xf9\x04\x00\x01\x00\x00\x00"
             out += (
                 b"\x2c"
                 + struct.pack("<HHHH", 0, 0, w, h)
                 + bytes((0x80 | (bits - 1),))
-                + bytes(ct)
+                + ct
             )
-            mcs = max(2, bits)
-            lzw = _gif_lzw_encode(
-                (palette[tuple(px)] for px in frame), mcs
-            )
-            out.append(mcs)
-            for i in range(0, len(lzw), 255):
-                chunk = lzw[i : i + 255]
-                out.append(len(chunk))
-                out += chunk
-            out.append(0)
+            out += _gif_image_data(palette, frame, bits)
         out += b"\x3b"
         return bytes(out)
 
@@ -806,37 +772,16 @@ def make_image_codecs() -> dict[str, object]:
         """Minimal single-frame GIF89a writer with a global color table
         built from the ordered first-occurrence distinct colors (<= 256
         — the synthetic fixtures cap at w*h <= 91)."""
-        palette: dict[tuple, int] = {}
-        for px in pixels:
-            t = tuple(px)
-            if t not in palette:
-                palette[t] = len(palette)
-        if len(palette) > 256:
-            raise ValueError("GIF needs <= 256 distinct colors")
-        bits = max(1, (len(palette) - 1).bit_length())
-        n = 1 << bits
-        ct = bytearray()
-        for color in palette:
-            ct += bytes(color)
-        ct += b"\x00" * (3 * n - len(ct))
+        palette = _palette(pixels, "GIF needs <= 256 distinct colors")
+        bits, ct = _gif_color_table(palette)
         header = (
             b"GIF89a"
             + struct.pack("<HH", w, h)
             + bytes((0x80 | (bits - 1), 0, 0))
-            + bytes(ct)
+            + ct
         )
         desc = b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        mcs = max(2, bits)
-        lzw = _gif_lzw_encode(
-            (palette[tuple(px)] for px in pixels), mcs
-        )
-        blocks = bytearray((mcs,))
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            blocks.append(len(chunk))
-            blocks += chunk
-        blocks.append(0)
-        return header + desc + bytes(blocks) + b"\x3b"
+        return header + desc + _gif_image_data(palette, pixels, bits) + b"\x3b"
 
     # --- JPEG (baseline sequential DCT, ITU T.81) — round 9b ----------
     #

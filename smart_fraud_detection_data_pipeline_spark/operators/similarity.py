@@ -18,6 +18,11 @@ Determinism: cosine is computed in double with a left-to-right fold
 before ranking so rank ties cannot flip on last-bit float drift; ties
 break on vec_id. SRP hyperplanes are derived from md5 — no RNG state,
 same planes every run.
+
+Every vector-search tier shares one per-query top-k cut
+(`_ranked_topk`), one ANN entry filter (`_ann_entry`), one int8 cosine
+scorer (`_int8_cosine`) and one modular sample (`_modular_sample`);
+their oracle twins are single builders in queries.py.
 """
 
 from __future__ import annotations
@@ -48,19 +53,82 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """THE cosine expression of every float and int8 scorer: ``_dot``
+    over the norm product ``na``·``nb``, NULL on a zero norm, rounded
+    to 6 dp. Oracle twins: queries._cos_sql, queries._int8_cos_sql."""
+    return F.round(F.when((na > 0) & (nb > 0), _dot(a, b) / (na * nb)), ROUND_DP)
+
+
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<double> columns (null-safe on zero
     norms), rounded to 6 dp."""
-    d = _dot(a, b)
-    na, nb = _norm(a), _norm(b)
-    return F.round(
-        F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(None)), ROUND_DP
-    )
+    return _cosine(a, b, _norm(a), _norm(b))
 
 
 def as_double_array(col: Column) -> Column:
     """array<float> → array<double> (widening is exact)."""
     return col.cast("array<double>")
+
+
+def _ranked_topk(
+    scored: DataFrame, score: str, k: int, id_col: str, query_id_col: str,
+    *, ascending: bool = False,
+) -> DataFrame:
+    """The per-query top-k cut every vector-search tier ends in: rank
+    the (query, id, ``score``) rows by ``score`` — DESC NULLS LAST for a
+    similarity, ASC for a distance — with the id tie-break and keep
+    rank <= k. Oracle twin: queries._rank_cut_sql."""
+    order = F.col(score).asc() if ascending else F.col(score).desc_nulls_last()
+    w = Window.partitionBy(query_id_col).orderBy(order, F.col(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_id_col, id_col, score, "rank")
+    )
+
+
+def _ann_entry(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The ANN tiers' ONE entry filter, applied to the index and to the
+    queries (each with its own id column): NULL vectors AND NULL ids
+    out. An ANN index has no cell for an absent vector (adversarial-
+    sweep rule); an id-less vector can't be reported, and the oracle's
+    GROUP BY vec_id would collapse NULL-id candidates that Spark emits
+    per row (ADVICE r9). The exact tiers fence NULL ids only and rank
+    NULL vectors last. Twin filters: the `c` CTE of
+    queries._ivf_assign_cte and the `nz` CTE of queries._PQ_ENTRY_CTES."""
+    return df.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
+
+
+def _empty_topk(
+    corpus: DataFrame, queries: DataFrame, id_col: str, query_id_col: str
+) -> DataFrame:
+    """An empty cosine top-k with the output schema — the answer of an
+    ANN tier whose corpus has nothing to index (empty-partition day)."""
+    id_t = dict(corpus.dtypes)[id_col]
+    qid_t = dict(queries.dtypes)[query_id_col]
+    return corpus.sparkSession.createDataFrame(
+        [], f"{query_id_col} {qid_t}, {id_col} {id_t}, cosine_sim double, rank int"
+    )
+
+
+def _modular_sample(
+    frame: DataFrame, n: int, k: int, *, id_col: str, vec_col: str,
+    middle: bool = False,
+) -> list[list[float]]:
+    """The ONE deterministic sample of every learned-free quantizer:
+    among the ids at residue 0 — or ``middle``, step // 2 — of step =
+    n // k (``n`` is the caller's count of ``frame``), the first k by
+    id, as double lists. Oracle twin: queries._modular_sample_sql."""
+    step = max(n // k, 1)
+    rows = (
+        frame.where(F.col(id_col) % step == (step // 2 if middle else 0))
+        .orderBy(id_col)
+        .limit(k)
+        .select(as_double_array(F.col(vec_col)).alias("v"))
+        .collect()
+    )
+    return [list(r.v) for r in rows]
 
 
 def cosine_topk(
@@ -100,14 +168,7 @@ def cosine_topk(
         id_col,
         cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc_nulls_last(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, "cosine_sim", k, id_col, query_id_col)
 
 
 def cosine_dup_pairs(
@@ -136,13 +197,7 @@ def cosine_dup_pairs(
     )
     a = base.toDF("id_a", "__blk", "vec_a", "n_a")
     b = base.toDF("id_b", "__blk", "vec_b", "n_b")
-    sim = F.round(
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            _dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b")),
-        ),
-        ROUND_DP,
-    )
+    sim = _cosine(F.col("vec_a"), F.col("vec_b"), F.col("n_a"), F.col("n_b"))
     return (
         a.join(b, "__blk")
         .where(F.col("id_a") < F.col("id_b"))
@@ -218,7 +273,8 @@ def sample_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
-    """Deterministic coarse centroids: every (n/k)-th vector by id.
+    """Deterministic coarse centroids: every (n/k)-th vector by id
+    (`_modular_sample` at residue 0).
 
     A stand-in for k-means that needs no RNG state and no iterations —
     good enough as an IVF coarse quantizer on roughly isotropic data.
@@ -231,16 +287,7 @@ def sample_centroids(
     adversarial-sweep rule).
     """
     corpus = corpus.where(F.col(vec_col).isNotNull())
-    n = corpus.count()
-    step = max(n // k, 1)
-    rows = (
-        corpus.where(F.col(id_col) % step == 0)
-        .orderBy(id_col)
-        .limit(k)
-        .select(as_double_array(F.col(vec_col)).alias("v"))
-        .collect()
-    )
-    return [list(r.v) for r in rows]
+    return _modular_sample(corpus, corpus.count(), k, id_col=id_col, vec_col=vec_col)
 
 
 def probed_cells_expr(
@@ -297,10 +344,8 @@ def ivf_ann_topk(
     sample_centroids' count, so the oracle's modular sample must run
     over the same id-fenced corpus).
     """
-    corpus = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
+    corpus = _ann_entry(corpus, id_col, vec_col)
+    queries = _ann_entry(queries, query_id_col, vec_col)
     cents = (
         centroids
         if centroids is not None
@@ -308,16 +353,9 @@ def ivf_ann_topk(
     )
     if not cents:
         # empty corpus → no cells → empty result with the output schema
-        # (the empty-partition-day case; F.array() of zero centroids is
-        # untyped and breaks the assignment expression)
-        spark = corpus.sparkSession
-        id_t = dict(corpus.dtypes)[id_col]
-        qid_t = dict(queries.dtypes)[query_id_col]
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {qid_t}, {id_col} {id_t}, "
-            "cosine_sim double, rank int",
-        )
+        # (F.array() of zero centroids is untyped and breaks the
+        # assignment expression)
+        return _empty_topk(corpus, queries, id_col, query_id_col)
     # k distance folds per row is the compute-heavy map stage; spread an
     # under-split scan before it (no-op at production split counts).
     # This is AFTER any centroid fit — the fit consumes the raw corpus,
@@ -360,9 +398,7 @@ def ivf_probe(
 
     NULL queries/ids are fenced here (not only in ivf_ann_topk) so a
     persisted-index caller gets the same adversarial-sweep semantics."""
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
+    queries = _ann_entry(queries, query_id_col, vec_col)
     q = queries.select(
         F.col(query_id_col), as_double_array(F.col(vec_col)).alias("__qvec")
     )
@@ -374,14 +410,7 @@ def ivf_probe(
         id_col,
         cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc_nulls_last(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, "cosine_sim", k, id_col, query_id_col)
 
 
 # --- SRP-LSH (ANN scale path) ----------------------------------------------
@@ -416,11 +445,7 @@ def srp_bucket(vec_sql: str, planes: list[list[float]]) -> Column:
     bit-identical."""
     terms = []
     for p, plane in enumerate(planes):
-        arr = ",".join(f"{v:.1f}D" for v in plane)
-        dot = (
-            f"aggregate(zip_with({vec_sql}, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
+        dot = _sql_dot(vec_sql, "array(" + ",".join(f"{v:.1f}D" for v in plane) + ")")
         terms.append(f"(CASE WHEN {dot} >= 0.0D THEN {1 << p}L ELSE 0L END)")
     return F.expr(" + ".join(terms)).cast("long")
 
@@ -471,20 +496,11 @@ def srp_ann_topk(
     # NULL vectors and NULL ids excluded (the family-wide ANN rules);
     # an EMPTY corpus yields an empty result instead of dying on the
     # dim probe — the empty-partition-day case from the empty sweep.
-    corpus = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = queries.where(
-        F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()
-    )
+    corpus = _ann_entry(corpus, id_col, vec_col)
+    queries = _ann_entry(queries, query_id_col, vec_col)
     probe_row = corpus.select(vec_col).first()
     if probe_row is None:
-        spark = corpus.sparkSession
-        id_t = dict(corpus.dtypes)[id_col]
-        qid_t = dict(queries.dtypes)[query_id_col]
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {qid_t}, {id_col} {id_t}, "
-            "cosine_sim double, rank int",
-        )
+        return _empty_topk(corpus, queries, id_col, query_id_col)
     dim = len(probe_row[0])
     planes = srp_planes(dim, n_planes)
     c = corpus.select(
@@ -515,14 +531,7 @@ def srp_ann_topk(
         id_col,
         cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc_nulls_last(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, "cosine_sim", k, id_col, query_id_col)
 
 
 # --- int8 quantization (memory-scale path for exact search) -----------------
@@ -540,6 +549,27 @@ def quantize_int8(vec: Column) -> Column:
         maxabs > 0,
         F.transform(v, lambda x: F.round(x * F.lit(127.0) / maxabs)),
     ).otherwise(F.transform(v, lambda x: F.lit(0.0)))
+
+
+def _int8_cosine(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
+    query_id_col: str,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The int8-quantized cosine of every exact int8 scorer: the corpus
+    side (id, __cvec, __cn), the query side (query_id, __qvec, __qn) and
+    the 6-dp ``q_cosine_sim`` column over a join of the two. Norms are
+    materialized per side BEFORE the join — Catalyst does not CSE, so an
+    inline norm would re-fold per (query, corpus) pair. Oracle twin:
+    queries._int8_cos_sql."""
+    qz = quantize_int8(F.col(vec_col))
+    c = corpus.select(F.col(id_col), qz.alias("__cvec")).withColumn(
+        "__cn", _norm(F.col("__cvec"))
+    )
+    q = queries.select(F.col(query_id_col), qz.alias("__qvec")).withColumn(
+        "__qn", _norm(F.col("__qvec"))
+    )
+    sim = _cosine(F.col("__qvec"), F.col("__cvec"), F.col("__qn"), F.col("__cn"))
+    return c, q, sim.alias("q_cosine_sim")
 
 
 def quantized_cosine_topk(
@@ -560,48 +590,9 @@ def quantized_cosine_topk(
     approximation-by-sampling."""
     corpus = corpus.where(F.col(id_col).isNotNull())
     queries = queries.where(F.col(query_id_col).isNotNull())
-    # Norms materialized per side BEFORE the join — Catalyst does not CSE,
-    # so an inline norm would re-fold per (query, corpus) pair.
-    qvec = quantize_int8(F.col(vec_col))
-    q = queries.select(F.col(query_id_col), qvec.alias("__qvec")).withColumn(
-        "__qn", _norm(F.col("__qvec"))
-    )
-    c = corpus.select(F.col(id_col), qvec.alias("__cvec")).withColumn(
-        "__cn", _norm(F.col("__cvec"))
-    )
-    sim = F.round(
-        F.when(
-            (F.col("__qn") > 0) & (F.col("__cn") > 0),
-            _dot(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn")),
-        ),
-        ROUND_DP,
-    )
-    scored = c.join(F.broadcast(q)).select(
-        query_id_col, id_col, sim.alias("q_cosine_sim")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("q_cosine_sim").desc_nulls_last(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "q_cosine_sim", "rank")
-    )
-
-
-def _pq_entry(
-    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, query_id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """The PQ family's ONE entry filter: NULL vectors AND NULL ids are
-    excluded from index and queries (ADVICE r9) — the oracle's dists
-    GROUP BY vec_id would collapse NULL-id candidates into one row
-    while Spark emits them per-row, and the top-k tie-break's null
-    ordering differs between engines. Twin filter: the `nz` CTE of
-    queries._PQ_ENTRY_CTES."""
-    return (
-        corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()),
-        queries.where(F.col(vec_col).isNotNull() & F.col(query_id_col).isNotNull()),
-    )
+    c, q, sim = _int8_cosine(corpus, queries, id_col, vec_col, query_id_col)
+    scored = c.join(F.broadcast(q)).select(query_id_col, id_col, sim)
+    return _ranked_topk(scored, "q_cosine_sim", k, id_col, query_id_col)
 
 
 def _pq_stacker(dim: int):
@@ -640,12 +631,7 @@ def _adc_topk(
         term = F.element_at(F.col(f"__adc_{j}"), F.col(f"__code_{j}") + 1)
         dist = term if dist is None else dist + term
     scored = pairs.select(query_id_col, id_col, dist.alias("pq_dist"))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("pq_dist").asc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "pq_dist", "rank")
-    )
+    return _ranked_topk(scored, "pq_dist", k, id_col, query_id_col, ascending=True)
 
 
 def pq_codebooks(
@@ -723,7 +709,8 @@ def pq_ann_topk(
     out_schema = (
         f"{query_id_col} long, {id_col} long, pq_dist double, rank int"
     )
-    corpus, queries = _pq_entry(corpus, queries, id_col, vec_col, query_id_col)
+    corpus = _ann_entry(corpus, id_col, vec_col)
+    queries = _ann_entry(queries, query_id_col, vec_col)
     qz = quantize_int8(F.col(vec_col))
     c = corpus.select(F.col(id_col), qz.alias("__cvec"))
     books, sub = pq_codebooks(c, m, n_codes, id_col=id_col, vec_col="__cvec")
@@ -802,7 +789,7 @@ def pq_rerank_topk(
 
     Stays a FULL hash gate: both stages are deterministic
     integer-exact rankings with id tie-breaks (the rerank cosine is
-    the certified quantized_cosine_topk formula, 6-dp rounded), and
+    `_int8_cosine`, quantized_cosine_topk's scorer), and
     the oracle recomputes shortlist and rerank in SQL. Scale shape:
     stage 1 is the PQ scan (codes only, no vector math per pair);
     stage 2 joins the shortlist ids back to the corpus — at most
@@ -829,40 +816,20 @@ def _exact_rerank_stage(
 ) -> DataFrame:
     """Every PQ rerank composition (ONE implementation so
     pq_rerank_topk and ivfpq_rerank_topk cannot drift): apply the
-    `_pq_entry` filter, shortlist with ``ann`` (the stage-1 ADC top-k
+    `_ann_entry` filter, shortlist with ``ann`` (the stage-1 ADC top-k
     over the filtered frames), join the shortlist ids back to the
-    corpus, score with the certified int8-quantized cosine (6-dp
-    rounded, zero-norm -> null), keep the true top-k with (sim DESC
-    NULLS LAST, id) ties."""
-    corpus, queries = _pq_entry(corpus, queries, id_col, vec_col, query_id_col)
+    corpus, score with `_int8_cosine` (6-dp rounded, zero-norm ->
+    null), keep the true top-k through `_ranked_topk`."""
+    corpus = _ann_entry(corpus, id_col, vec_col)
+    queries = _ann_entry(queries, query_id_col, vec_col)
     short = ann(corpus, queries).select(query_id_col, id_col)
-    qz = quantize_int8(F.col(vec_col))
-    cq = corpus.select(F.col(id_col), qz.alias("__cvec")).withColumn(
-        "__cn", _norm(F.col("__cvec"))
-    )
-    qq = queries.select(F.col(query_id_col), qz.alias("__qvec")).withColumn(
-        "__qn", _norm(F.col("__qvec"))
-    )
-    sim = F.round(
-        F.when(
-            (F.col("__qn") > 0) & (F.col("__cn") > 0),
-            _dot(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn")),
-        ),
-        ROUND_DP,
-    )
+    cq, qq, sim = _int8_cosine(corpus, queries, id_col, vec_col, query_id_col)
     scored = (
         short.join(cq, id_col)
         .join(F.broadcast(qq), query_id_col)
-        .select(query_id_col, id_col, sim.alias("q_cosine_sim"))
+        .select(query_id_col, id_col, sim)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("q_cosine_sim").desc_nulls_last(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "q_cosine_sim", "rank")
-    )
+    return _ranked_topk(scored, "q_cosine_sim", k, id_col, query_id_col)
 
 
 def ivfpq_rerank_topk(
@@ -907,23 +874,16 @@ def sample_vectors_offset(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
-    """sample_centroids' modular rule shifted to the MIDDLE residue
-    (id % step == step // 2): a second deterministic sample that is
-    disjoint from the centroid sample whenever step > 1. ivfpq needs
+    """`_modular_sample` at the MIDDLE residue (id % step == step // 2):
+    a second deterministic sample that is disjoint from the centroid
+    sample whenever step > 1. ivfpq needs
     this — codebooks trained on the residuals of the CENTROID sample
     would be identically zero (each sampled vector's nearest centroid
     is itself)."""
     corpus = corpus.where(F.col(vec_col).isNotNull())
-    n = corpus.count()
-    step = max(n // k, 1)
-    rows = (
-        corpus.where(F.col(id_col) % step == step // 2)
-        .orderBy(id_col)
-        .limit(k)
-        .select(as_double_array(F.col(vec_col)).alias("v"))
-        .collect()
+    return _modular_sample(
+        corpus, corpus.count(), k, id_col=id_col, vec_col=vec_col, middle=True
     )
-    return [list(r.v) for r in rows]
 
 
 def ivfpq_ann_topk(
@@ -985,22 +945,18 @@ def ivfpq_ann_topk(
     rerank stage, exactly FAISS practice."""
     spark = corpus.sparkSession
     out_schema = f"{query_id_col} long, {id_col} long, pq_dist double, rank int"
-    corpus, queries = _pq_entry(corpus, queries, id_col, vec_col, query_id_col)
+    corpus = _ann_entry(corpus, id_col, vec_col)
+    queries = _ann_entry(queries, query_id_col, vec_col)
     qz = quantize_int8(F.col(vec_col))
     c = corpus.select(F.col(id_col), qz.alias("__cvec"))
-    # both deterministic samples (centroids at residue 0, codebook
-    # vectors at the middle residue — sample_vectors_offset's rule)
-    # share ONE count; each stays a bounded limit-k collect
+    # both `_modular_sample`s (centroids at residue 0, codebook vectors
+    # at the middle residue) share ONE count; each stays a bounded
+    # limit-k collect
     n = c.count()
-    step = max(n // n_clusters, 1)
-    step2 = max(n // n_codes, 1)
-
-    def take(pred, k_):
-        rows = c.where(pred).orderBy(id_col).limit(k_).select("__cvec").collect()
-        return [list(r["__cvec"]) for r in rows]  # Row blocks dunder getattr
-
-    cents = take((F.col(id_col) % step) == 0, n_clusters)
-    samples = take((F.col(id_col) % step2) == step2 // 2, n_codes)
+    cents = _modular_sample(c, n, n_clusters, id_col=id_col, vec_col="__cvec")
+    samples = _modular_sample(
+        c, n, n_codes, id_col=id_col, vec_col="__cvec", middle=True
+    )
     if not cents or not samples:
         return spark.createDataFrame([], out_schema)
     resids = []
@@ -1175,7 +1131,7 @@ def semantic_dedup(
     keyless vector can't be kept/removed deterministically, and
     `< id` comparisons against NULL silently immunize it).
     """
-    base = corpus.where(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
+    base = _ann_entry(corpus, id_col, vec_col)
     if centroids is None:
         if n_clusters is None:
             import math
@@ -1230,13 +1186,7 @@ def semantic_dedup(
         F.col(id_col).alias("__id_b"), "__cluster",
         F.col("__cvec").alias("__vb"), F.col("__n").alias("__nb"),
     )
-    sim = F.round(
-        F.when(
-            (F.col("__na") > 0) & (F.col("__nb") > 0),
-            _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-        ),
-        ROUND_DP,
-    )
+    sim = _cosine(F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb"))
     dups = (
         left.join(right, "__cluster")
         .where(F.col("__id_b") < F.col("__id_a"))

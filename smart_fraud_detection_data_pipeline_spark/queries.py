@@ -152,31 +152,33 @@ def _drain(
 #: last driver certification is oldest (from the CORRECTNESS_rNN.json
 #: artifacts).
 _DRIVER_ROTATION = (
-    # --- BM25 tiers on the shared tokenizer/query-term/certificate
-    # helpers, PQ tiers on the shared ADC ranking, and the batch twins
-    # built by one body each ---
+    # --- vector-search tiers on the shared top-k cut, cosine scorers,
+    # modular sample, entry filter and query set, and the image/video
+    # decodes over the shared PNG/GIF encoders ---
+    "embed_cosine_topk", "embed_srp_ann", "embed_cosine_dups", "embed_ivf_ann",
+    "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
+    "embed_ivf_kmeans_ann", "embed_ann_streaming", "embed_quantized_topk",
+    "embed_pq_ann", "embed_pq_rerank", "embed_ivfpq_ann", "embed_ivfpq_rerank",
+    "multimodal_image_decode", "multimodal_video_frames",
+    # --- not yet certified: the BM25 tiers and batch twins on
+    # one body each, the 13 streaming queries drained through _drain,
+    # and the footer-schema readers of loader or sink output ---
     "doc_bm25_topk", "doc_bm25_topk_pruned", "doc_bm25_index_incremental",
-    "embed_pq_ann", "embed_pq_rerank", "embed_ivfpq_ann",
-    "embed_ivfpq_rerank", "asof_last_purchase", "asof_last_purchase_bucketed",
+    "asof_last_purchase", "asof_last_purchase_bucketed",
     "error_burst_window", "error_burst_window_bucketed", "session_windows",
-    # --- not yet driver-certified: the 13 streaming queries drained
-    # through _drain, and the footer-schema readers of loader or sink
-    # output ---
     "fraud_enrich_streaming", "dedup_streaming",
     "dedup_incremental_streaming", "dedup_streaming_compaction",
     "user_spend_trends_streaming", "user_running_totals_streaming",
     "session_windows_streaming", "stream_stream_join",
     "stream_stream_join_bucketed", "stream_stream_left_join",
     "stream_stream_left_join_bucketed", "stream_windowed_rollup",
-    "embed_ann_streaming",
     "warehouse_load", "warehouse_compaction", "time_layout_scan",
     "zorder_layout_scan",
     # --- last driver-certified in round 10 ---
     "category_trends", "user_spend_trends_approx", "dedup_keep_last",
-    "merge_upsert_delete", "top_customers", "embed_cosine_topk",
-    "embed_srp_ann", "multimodal_byte_features", "small_quantity_revenue",
-    "not_in_null_semantics", "events_variant_props", "user_funnel",
-    "orders_cube", "shipping_priority", "regional_revenue",
+    "merge_upsert_delete", "top_customers", "multimodal_byte_features",
+    "small_quantity_revenue", "not_in_null_semantics", "events_variant_props",
+    "user_funnel", "orders_cube", "shipping_priority", "regional_revenue",
     "doc_sample_stratified", "returnflag_priority_mix", "promo_revenue_pct",
     "salted_user_join", "kafka_serde_roundtrip",
     "user_spend_trends_incremental",
@@ -2470,30 +2472,56 @@ def q_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Extension: embedding similarity search
 # ---------------------------------------------------------------------------
 
-_SQL_COSINE_TOPK = """
+def _cos_sql(a: str, b: str) -> str:
+    """The float cosine of two DOUBLE[] expressions, 6-dp rounded, NULL
+    on a zero norm — the ONE oracle twin of similarity.cosine (same
+    left-to-right list_sum folds)."""
+    return f"""round(CASE WHEN sqrt(list_sum(list_transform({a}, x -> x*x))) > 0
+                     AND sqrt(list_sum(list_transform({b}, x -> x*x))) > 0
+               THEN list_sum(list_transform(list_zip({a}, {b}), z -> z[1]*z[2]))
+                    / (sqrt(list_sum(list_transform({a}, x -> x*x)))
+                       * sqrt(list_sum(list_transform({b}, x -> x*x))))
+               END, 6)"""
+
+
+def _rank_cut_sql(
+    name: str, src: str, score: str, k: int, order: str = "DESC NULLS LAST"
+) -> str:
+    """The `name` CTE: the per-query top-k cut of (query_id, vec_id,
+    ``score``) rows of `src` — ``score`` in ``order`` with the vec_id
+    tie-break, INTEGER rank <= k. The ONE oracle twin of
+    similarity._ranked_topk."""
+    return f"""{name} AS (
+  SELECT * FROM (
+    SELECT query_id, vec_id, {score},
+           CAST(row_number() OVER (
+             PARTITION BY query_id ORDER BY {score} {order}, vec_id
+           ) AS INTEGER) AS rank
+    FROM {src}
+  ) WHERE rank <= {k}
+)"""
+
+
+def _ann_query_set(emb: DataFrame, bound: int = 5) -> DataFrame:
+    """The vector gates' query set: the vec_id < ``bound`` embeddings
+    as (query_id, embedding) — the query CTE of every embed_* oracle."""
+    return emb.where(F.col("vec_id") < bound).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+_SQL_COSINE_TOPK = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5
 ),
 c AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
       WHERE vec_id IS NOT NULL),
 scored AS (
-  SELECT query_id, vec_id,
-         round(CASE WHEN sqrt(list_sum(list_transform(qv, x -> x*x))) > 0
-                     AND sqrt(list_sum(list_transform(cv, x -> x*x))) > 0
-               THEN list_sum(list_transform(list_zip(qv, cv), p -> p[1]*p[2]))
-                    / (sqrt(list_sum(list_transform(qv, x -> x*x)))
-                       * sqrt(list_sum(list_transform(cv, x -> x*x))))
-               END, 6) AS cosine_sim
+  SELECT query_id, vec_id, {_cos_sql("qv", "cv")} AS cosine_sim
   FROM c CROSS JOIN q
 ),
-ranked AS (
-  SELECT query_id, vec_id, cosine_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
-         ) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= 10
+{_rank_cut_sql("ranked", "scored", "cosine_sim", 10)}
+SELECT * FROM ranked
 """
 
 
@@ -2501,10 +2529,7 @@ SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= 10
 def q_embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for 5 query vectors (exact ANN baseline)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.cosine_topk(emb, queries, k=10)
+    return SIM.cosine_topk(emb, _ann_query_set(emb), k=10)
 
 
 def _srp_oracle_sql(n_planes: int = 4, k: int = 10, dim: int = 64) -> str:
@@ -2540,23 +2565,11 @@ probes AS (
   SELECT query_id, qv, unnest([{probes}]) AS bucket FROM qb
 ),
 scored AS (
-  SELECT p.query_id, cb.vec_id,
-         round(CASE WHEN sqrt(list_sum(list_transform(p.qv, x -> x*x))) > 0
-                     AND sqrt(list_sum(list_transform(cb.cv, x -> x*x))) > 0
-               THEN list_sum(list_transform(list_zip(p.qv, cb.cv), z -> z[1]*z[2]))
-                    / (sqrt(list_sum(list_transform(p.qv, x -> x*x)))
-                       * sqrt(list_sum(list_transform(cb.cv, x -> x*x))))
-               END, 6) AS cosine_sim
+  SELECT p.query_id, cb.vec_id, {_cos_sql("p.qv", "cb.cv")} AS cosine_sim
   FROM cb JOIN probes p USING (bucket)
 ),
-ranked AS (
-  SELECT query_id, vec_id, cosine_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
-         ) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+{_rank_cut_sql("ranked", "scored", "cosine_sim", k)}
+SELECT * FROM ranked
 """
 
 
@@ -2565,10 +2578,7 @@ def q_embed_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-LSH approximate top-10 (bucketed candidates only — the 100 TB
     path; recall vs the exact baseline is asserted in tests)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.srp_ann_topk(emb, queries, k=10, n_planes=4)
+    return SIM.srp_ann_topk(emb, _ann_query_set(emb), k=10, n_planes=4)
 
 
 # ---------------------------------------------------------------------------
@@ -3594,18 +3604,12 @@ def q_salted_category_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "embed_cosine_dups",
-    """
+    f"""
 WITH base AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ),
 pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(CASE WHEN sqrt(list_sum(list_transform(a.v, x -> x*x))) > 0
-                     AND sqrt(list_sum(list_transform(b.v, x -> x*x))) > 0
-               THEN list_sum(list_transform(list_zip(a.v, b.v), p -> p[1]*p[2]))
-                    / (sqrt(list_sum(list_transform(a.v, x -> x*x)))
-                       * sqrt(list_sum(list_transform(b.v, x -> x*x))))
-               END, 6) AS cosine_sim
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos_sql("a.v", "b.v")} AS cosine_sim
   FROM base a JOIN base b ON a.label = b.label AND a.vec_id < b.vec_id
 )
 SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= 0.4
@@ -3999,30 +4003,51 @@ _IVF_DIST = (
 )
 
 
+def _modular_sample_sql(
+    name: str, idx: str, cols: str, src: str, k: int, middle: bool = False
+) -> str:
+    """The `name` CTE: the modular sample of `src` (step = count // k,
+    floored at 1; ids at residue 0, or step // 2 when ``middle``; the
+    first k by vec_id) projecting ``cols`` with its 0-based INTEGER
+    position ``idx`` — the ONE oracle twin of similarity._modular_sample."""
+    step = f"greatest((SELECT count(*) FROM {src}) // {k}, 1)"
+    residue = f"{step} // 2" if middle else "0"
+    return f"""{name} AS (
+  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS {idx}, {cols}
+  FROM {src} WHERE vec_id % {step} = {residue}
+  ORDER BY vec_id LIMIT {k}
+)"""
+
+
+def _nearest_sql(
+    name: str, cols: str, key: str, dist: str, idx: str, src: str, n: int = 1
+) -> str:
+    """The `name` CTE: per ``key``, the ``n`` rows of `src` nearest by
+    ``dist`` with the lowest ``idx`` first on ties, projecting the
+    unqualified ``cols`` — the ONE oracle twin of every lowest-index
+    argmin / stable argsort (ivf_assign, probed_cells_expr, np.argmin)."""
+    out = ", ".join(c.split(".")[-1] for c in cols.split(", "))
+    return f"""{name} AS (
+  SELECT {out} FROM (
+    SELECT {cols},
+           row_number() OVER (PARTITION BY {key} ORDER BY {dist}, {idx}) AS rn
+    FROM {src}
+  ) WHERE rn <= {n}
+)"""
+
+
 def _ivf_assign_cte(n_clusters: int) -> str:
     """The c/cents/assign CTE block shared by every sampled-centroid
     oracle (embed_ivf_ann, embed_semantic_dedup): centroid selection
-    (every n/k-th vector by id) and squared-L2 argmin assignment with
+    (_modular_sample_sql) and squared-L2 argmin assignment with
     lowest-index tie-break. ONE builder so the assignment semantics can
     never drift between oracles (fuzz-sweep shared-branch rule)."""
     return f"""
 WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
            WHERE embedding IS NOT NULL AND vec_id IS NOT NULL),
-cents AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, v AS cv
-  FROM c
-  WHERE vec_id % greatest((SELECT count(*) FROM c) // {n_clusters}, 1) = 0
-  ORDER BY vec_id LIMIT {n_clusters}
-),
-assign AS (
-  SELECT vec_id, v, cidx FROM (
-    SELECT c.vec_id, c.v, cents.cidx,
-           row_number() OVER (
-             PARTITION BY c.vec_id ORDER BY {_IVF_DIST.format(v='c.v')}, cents.cidx
-           ) AS rn
-    FROM c CROSS JOIN cents
-  ) WHERE rn = 1
-)"""
+{_modular_sample_sql("cents", "cidx", "v AS cv", "c", n_clusters)},
+{_nearest_sql("assign", "c.vec_id, c.v, cents.cidx", "c.vec_id",
+              _IVF_DIST.format(v="c.v"), "cents.cidx", "c CROSS JOIN cents")}"""
 
 
 def _ivf_oracle_sql(
@@ -4033,36 +4058,16 @@ def _ivf_oracle_sql(
     streaming — the streaming twin widens query_pred): the shared
     centroid-assignment CTEs plus nprobe cell routing, candidate scoring
     and ranking — all recomputed from the table in SQL."""
-    dist = _IVF_DIST
     return f"""{_ivf_assign_cte(n_clusters)},
 q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE {query_pred}),
-qprobe AS (
-  SELECT query_id, qv, cidx FROM (
-    SELECT q.query_id, q.qv, cents.cidx,
-           row_number() OVER (
-             PARTITION BY q.query_id ORDER BY {dist.format(v='q.qv')}, cents.cidx
-           ) AS rn
-    FROM q CROSS JOIN cents
-  ) WHERE rn <= {nprobe}
-),
+{_nearest_sql("qprobe", "q.query_id, q.qv, cents.cidx", "q.query_id",
+              _IVF_DIST.format(v="q.qv"), "cents.cidx", "q CROSS JOIN cents", nprobe)},
 scored AS (
-  SELECT p.query_id, a.vec_id,
-         round(CASE WHEN sqrt(list_sum(list_transform(p.qv, x -> x*x))) > 0
-                     AND sqrt(list_sum(list_transform(a.v, x -> x*x))) > 0
-               THEN list_sum(list_transform(list_zip(p.qv, a.v), z -> z[1]*z[2]))
-                    / (sqrt(list_sum(list_transform(p.qv, x -> x*x)))
-                       * sqrt(list_sum(list_transform(a.v, x -> x*x))))
-               END, 6) AS cosine_sim
+  SELECT p.query_id, a.vec_id, {_cos_sql("p.qv", "a.v")} AS cosine_sim
   FROM qprobe p JOIN assign a ON a.cidx = p.cidx
 ),
-ranked AS (
-  SELECT query_id, vec_id, cosine_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY cosine_sim DESC NULLS LAST, vec_id
-         ) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+{_rank_cut_sql("ranked", "scored", "cosine_sim", k)}
+SELECT * FROM ranked
 """
 
 
@@ -4112,10 +4117,7 @@ def q_embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_fraud_detection_data_pipeline_spark.operators.similarity import ivf_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_ann_topk(emb, queries, k=10, n_clusters=16, nprobe=4)
+    return ivf_ann_topk(emb, _ann_query_set(emb), k=10, n_clusters=16, nprobe=4)
 
 
 @_register("embed_semantic_dedup", _semantic_dedup_oracle_sql())
@@ -4372,11 +4374,8 @@ def q_embed_ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = ML.kmeans_centroids(emb, k=16)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
     return ivf_ann_contract_report(
-        emb, queries, k=10, nprobe=10, centroids=cents
+        emb, _ann_query_set(emb), k=10, nprobe=10, centroids=cents
     )
 
 
@@ -4908,15 +4907,11 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     out_schema = "query_id bigint, vec_id bigint, cosine_sim double, rank int"
-    indexed = emb.where(
-        F.col("embedding").isNotNull() & F.col("vec_id").isNotNull()
-    )
+    indexed = SIM._ann_entry(emb, "vec_id", "embedding")
     # sampled once over the id-fenced corpus — the same modular rule
     # (and therefore the same centroids) the oracle's cents CTE derives
     cents = sample_centroids(indexed, 16)
-    queries = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _ann_query_set(emb, bound=10)
     if not cents or queries.isEmpty():
         return spark.createDataFrame([], out_schema)
     tmp = scratch_dir("ann_stream_")
@@ -7108,26 +7103,28 @@ _INT8_QZ_CTES = """base AS (
 )"""
 
 
+def _int8_cos_sql(a: str, b: str) -> str:
+    """The 6-dp cosine of two int8-quantized lists (exact integer dots,
+    NULL on a zero norm) — the ONE oracle twin of
+    similarity._int8_cosine."""
+    return f"""CASE WHEN list_dot_product({a}, {a}) > 0
+               AND list_dot_product({b}, {b}) > 0
+              THEN round(list_dot_product({a}, {b})
+                         / (sqrt(list_dot_product({a}, {a}))
+                            * sqrt(list_dot_product({b}, {b}))),
+                         6) END"""
+
+
 @_register(
     "embed_quantized_topk",
     f"""
 WITH {_INT8_QZ_CTES}, scored AS (
   SELECT a.vec_id AS query_id, b.vec_id AS vec_id,
-         CASE WHEN list_dot_product(a.q, a.q) > 0
-               AND list_dot_product(b.q, b.q) > 0
-              THEN round(list_dot_product(a.q, b.q)
-                         / (sqrt(list_dot_product(a.q, a.q))
-                            * sqrt(list_dot_product(b.q, b.q))),
-                         6) END AS q_cosine_sim
+         {_int8_cos_sql("a.q", "b.q")} AS q_cosine_sim
   FROM qz a, qz b
   WHERE a.vec_id < 5 AND b.vec_id IS NOT NULL
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY q_cosine_sim DESC NULLS LAST, vec_id) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, q_cosine_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= 10
+), {_rank_cut_sql("ranked", "scored", "q_cosine_sim", 10)}
+SELECT * FROM ranked
 """,
 )
 def q_embed_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7141,26 +7138,15 @@ def q_embed_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return quantized_cosine_topk(emb, queries, k=10)
+    return quantized_cosine_topk(emb, _ann_query_set(emb), k=10)
 
 
 #: The PQ oracles' entry: int8-quantized vectors with NULL vectors AND
-#: NULL ids excluded (`nz`, the twin of similarity._pq_entry) and the
-#: vec_id < 5 query set (`qs`, the twin of _pq_query_set).
+#: NULL ids excluded (`nz`, the twin of similarity._ann_entry) and the
+#: vec_id < 5 query set (`qs`, the twin of _ann_query_set).
 _PQ_ENTRY_CTES = f"""{_INT8_QZ_CTES},
 nz AS (SELECT vec_id, q FROM qz WHERE q IS NOT NULL AND vec_id IS NOT NULL),
 qs AS (SELECT vec_id AS query_id, q FROM nz WHERE vec_id < 5)"""
-
-
-def _pq_query_set(emb: DataFrame) -> DataFrame:
-    """The PQ gates' query set: the vec_id < 5 embeddings as
-    (query_id, embedding) — the `qs` CTE of _PQ_ENTRY_CTES."""
-    return emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
 
 
 def _pq_l2_sql(a: str, b: str) -> str:
@@ -7187,30 +7173,17 @@ def _pq_core_ctes(m: int = 4, n_codes: int = 16) -> str:
     """The PQ pipeline up to per-(query, candidate) ADC distances —
     ONE builder shared by the embed_pq_ann and embed_pq_rerank oracles
     (shared-branch rule): int8 quantization (shared CTE builder), the
-    sample_centroids modular codebook rule split into subspaces,
+    _modular_sample_sql codebook split into subspaces,
     per-subspace argmin encoding with lowest-index tie-break, and the
     ADC table join."""
     enc_l2 = _pq_l2_sql(_pq_slice("x.q", m=m), _pq_slice("cents.cq", m=m))
     adc_l2 = _pq_l2_sql(_pq_slice("qs.q", m=m), _pq_slice("cents.cq", m=m))
     return f"""
 WITH {_PQ_ENTRY_CTES},
-cents AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, q AS cq
-  FROM nz
-  WHERE vec_id % greatest((SELECT count(*) FROM nz) // {n_codes}, 1) = 0
-  ORDER BY vec_id LIMIT {n_codes}
-),
+{_modular_sample_sql("cents", "cidx", "q AS cq", "nz", n_codes)},
 js AS (SELECT unnest(generate_series(0, {m - 1})) AS j),
-codes AS (
-  SELECT vec_id, j, cidx FROM (
-    SELECT x.vec_id, js.j, cents.cidx,
-           row_number() OVER (
-             PARTITION BY x.vec_id, js.j
-             ORDER BY {enc_l2}, cents.cidx
-           ) AS rn
-    FROM nz x CROSS JOIN js CROSS JOIN cents
-  ) WHERE rn = 1
-),
+{_nearest_sql("codes", "x.vec_id, js.j, cents.cidx", "x.vec_id, js.j", enc_l2,
+              "cents.cidx", "nz x CROSS JOIN js CROSS JOIN cents")},
 adc AS (
   SELECT qs.query_id, js.j, cents.cidx, {adc_l2} AS d
   FROM qs CROSS JOIN js CROSS JOIN cents
@@ -7225,16 +7198,10 @@ dists AS (
 def _adc_rank_sql(k: int) -> str:
     """The exact-integer ADC ranking over `dists` that both PQ ANN
     oracles end in — the twin of similarity._adc_topk: pq_dist ASC,
-    vec_id tie-break, top k per query."""
+    vec_id tie-break, top k per query (_rank_cut_sql)."""
     return f""",
-ranked AS (
-  SELECT query_id, vec_id, pq_dist,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY pq_dist ASC, vec_id
-         ) AS INTEGER) AS rank
-  FROM dists
-)
-SELECT query_id, vec_id, pq_dist, rank FROM ranked WHERE rank <= {k}
+{_rank_cut_sql("ranked", "dists", "pq_dist", k, "ASC")}
+SELECT * FROM ranked
 """
 
 
@@ -7249,37 +7216,18 @@ def _rerank_tail_sql(k: int, shortlist: int) -> str:
     embed_ivfpq_rerank oracles (ONE builder — shared-branch rule; the
     Spark twin is similarity._exact_rerank_stage): shortlist by ADC
     pq_dist from `dists`, re-score against the int8-quantized vectors
-    in `nz` with the certified 6-dp cosine, keep the true top-k."""
+    in `nz` with _int8_cos_sql, keep the true top-k (both cuts are
+    _rank_cut_sql)."""
     return f""",
-short AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (
-             PARTITION BY query_id ORDER BY pq_dist ASC, vec_id) AS rn
-    FROM dists
-  ) WHERE rn <= {shortlist}
-),
+{_rank_cut_sql("short", "dists", "pq_dist", shortlist, "ASC")},
 rer AS (
-  SELECT s.query_id, s.vec_id,
-         CASE WHEN list_dot_product(qv.q, qv.q) > 0
-               AND list_dot_product(cv.q, cv.q) > 0
-              THEN round(list_dot_product(qv.q, cv.q)
-                         / (sqrt(list_dot_product(qv.q, qv.q))
-                            * sqrt(list_dot_product(cv.q, cv.q))),
-                         6) END AS q_cosine_sim
+  SELECT s.query_id, s.vec_id, {_int8_cos_sql("qv.q", "cv.q")} AS q_cosine_sim
   FROM short s
   JOIN nz cv ON cv.vec_id = s.vec_id
   JOIN nz qv ON qv.vec_id = s.query_id
 ),
-ranked AS (
-  SELECT query_id, vec_id, q_cosine_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id
-           ORDER BY q_cosine_sim DESC NULLS LAST, vec_id
-         ) AS INTEGER) AS rank
-  FROM rer
-)
-SELECT query_id, vec_id, q_cosine_sim, rank FROM ranked WHERE rank <= {k}
+{_rank_cut_sql("ranked", "rer", "q_cosine_sim", k)}
+SELECT * FROM ranked
 """
 
 
@@ -7288,7 +7236,7 @@ def _pq_rerank_oracle_sql(
 ) -> str:
     """Oracle twin of embed_pq_rerank: the shared PQ core shortlists
     `shortlist` candidates by ADC, then the certified int8-quantized
-    cosine (embed_quantized_topk's exact formula, 6-dp rounded)
+    cosine (_int8_cos_sql, embed_quantized_topk's scorer)
     re-ranks only those and keeps the true top-k."""
     return _pq_core_ctes(m, n_codes) + _rerank_tail_sql(k, shortlist)
 
@@ -7309,7 +7257,7 @@ def q_embed_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_rerank_topk(
-        emb, _pq_query_set(emb), k=10, shortlist=50, m=4, n_codes=16
+        emb, _ann_query_set(emb), k=10, shortlist=50, m=4, n_codes=16
     )
 
 
@@ -7318,46 +7266,23 @@ def _ivfpq_core_sql(
 ) -> str:
     """The IVF-PQ pipeline through per-candidate `dists` — ONE builder
     shared by the embed_ivfpq_ann and embed_ivfpq_rerank oracles
-    (shared-branch rule): int8 quantization (shared CTE), modular
-    coarse centroids + exact-int L2 argmin assignment, residual
-    codebooks from the OFFSET modular sample, per-subspace residual
+    (shared-branch rule): int8 quantization (shared CTE),
+    _modular_sample_sql coarse centroids + exact-int L2 argmin
+    assignment, residual codebooks from its middle-residue sample,
+    per-subspace residual
     encoding, nprobe cell probing, and per-(query, cell) residual ADC
     tables — everything recomputed from the table in SQL."""
     full_l2 = _pq_l2_sql
     enc_l2 = _pq_l2_sql(_pq_slice("x.rv", m=m), _pq_slice("rb.rv", m=m))
     adc_l2 = _pq_l2_sql(_pq_slice("qr.rv", m=m), _pq_slice("rb.rv", m=m))
-    step = f"greatest((SELECT count(*) FROM nz) // {n_clusters}, 1)"
-    step2 = f"greatest((SELECT count(*) FROM nz) // {n_codes}, 1)"
     return f"""
 WITH {_PQ_ENTRY_CTES},
-cents AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cidx, q AS cq
-  FROM nz WHERE vec_id % {step} = 0
-  ORDER BY vec_id LIMIT {n_clusters}
-),
-cassign AS (
-  SELECT vec_id, q, cidx FROM (
-    SELECT x.vec_id, x.q, cents.cidx,
-           row_number() OVER (
-             PARTITION BY x.vec_id
-             ORDER BY {full_l2('x.q', 'cents.cq')}, cents.cidx) AS rn
-    FROM nz x CROSS JOIN cents
-  ) WHERE rn = 1
-),
-samp AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS sidx, q
-  FROM nz WHERE vec_id % {step2} = {step2} // 2
-  ORDER BY vec_id LIMIT {n_codes}
-),
-sassign AS (
-  SELECT sidx, q, cidx FROM (
-    SELECT sm.sidx, sm.q, cents.cidx,
-           row_number() OVER (
-             PARTITION BY sm.sidx
-             ORDER BY {full_l2('sm.q', 'cents.cq')}, cents.cidx) AS rn
-    FROM samp sm CROSS JOIN cents
-  ) WHERE rn = 1
-),
+{_modular_sample_sql("cents", "cidx", "q AS cq", "nz", n_clusters)},
+{_nearest_sql("cassign", "x.vec_id, x.q, cents.cidx", "x.vec_id",
+              full_l2("x.q", "cents.cq"), "cents.cidx", "nz x CROSS JOIN cents")},
+{_modular_sample_sql("samp", "sidx", "q", "nz", n_codes, middle=True)},
+{_nearest_sql("sassign", "sm.sidx, sm.q, cents.cidx", "sm.sidx",
+              full_l2("sm.q", "cents.cq"), "cents.cidx", "samp sm CROSS JOIN cents")},
 rbooks AS (
   SELECT sa.sidx,
          list_transform(list_zip(sa.q, c2.cq), z -> z[1] - z[2]) AS rv
@@ -7369,24 +7294,10 @@ cres AS (
   FROM cassign ca JOIN cents c2 ON c2.cidx = ca.cidx
 ),
 js AS (SELECT unnest(generate_series(0, {m - 1})) AS j),
-codes AS (
-  SELECT vec_id, cidx, j, sidx FROM (
-    SELECT x.vec_id, x.cidx, js.j, rb.sidx,
-           row_number() OVER (
-             PARTITION BY x.vec_id, js.j
-             ORDER BY {enc_l2}, rb.sidx) AS rn
-    FROM cres x CROSS JOIN js CROSS JOIN rbooks rb
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT query_id, q, cidx FROM (
-    SELECT qs.query_id, qs.q, cents.cidx,
-           row_number() OVER (
-             PARTITION BY qs.query_id
-             ORDER BY {full_l2('qs.q', 'cents.cq')}, cents.cidx) AS rn
-    FROM qs CROSS JOIN cents
-  ) WHERE rn <= {nprobe}
-),
+{_nearest_sql("codes", "x.vec_id, x.cidx, js.j, rb.sidx", "x.vec_id, js.j", enc_l2,
+              "rb.sidx", "cres x CROSS JOIN js CROSS JOIN rbooks rb")},
+{_nearest_sql("qprobe", "qs.query_id, qs.q, cents.cidx", "qs.query_id",
+              full_l2("qs.q", "cents.cq"), "cents.cidx", "qs CROSS JOIN cents", nprobe)},
 qres AS (
   SELECT p.query_id, p.cidx,
          list_transform(list_zip(p.q, c2.cq), z -> z[1] - z[2]) AS rv
@@ -7443,7 +7354,7 @@ def q_embed_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_ann_topk(
-        emb, _pq_query_set(emb), k=10, n_clusters=16, nprobe=4, m=4
+        emb, _ann_query_set(emb), k=10, n_clusters=16, nprobe=4, m=4
     )
 
 
@@ -7465,7 +7376,7 @@ def q_embed_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_rerank_topk(
-        emb, _pq_query_set(emb), k=10, shortlist=50, n_clusters=16, nprobe=4, m=4,
+        emb, _ann_query_set(emb), k=10, shortlist=50, n_clusters=16, nprobe=4, m=4,
         n_codes=16,
     )
 
@@ -7490,7 +7401,7 @@ def q_embed_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ann_topk(emb, _pq_query_set(emb), k=10, m=4, n_codes=16)
+    return pq_ann_topk(emb, _ann_query_set(emb), k=10, m=4, n_codes=16)
 
 
 @_register(

@@ -354,14 +354,8 @@ def load_csv_table(spark: SparkSession, path: str, schema, *, header: bool = Tru
     and parquet-backed pipelines produce identical types end-to-end.
     """
     _ensure_ts_confs(spark)
-    reader = spark.read.format("csv").schema(schema)
-    for k, v in _csv_options(header).items():
-        reader = reader.option(k, v)
-    df = reader.load(path)
-    for f in df.schema.fields:
-        if f.dataType.typeName() == "timestamp":
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp_ntz"))
-    return df
+    reader = spark.read.format("csv").schema(schema).options(**_csv_options(header))
+    return _ntz_timestamps(reader.load(path), ())
 
 
 def stream_csv_table(
@@ -381,16 +375,10 @@ def stream_csv_table(
     schemas parse identically under a vanilla (non-UTC) driver session.
     """
     _ensure_ts_confs(spark)
-    reader = spark.readStream.format("csv").schema(schema)
-    for k, v in _csv_options(header).items():
-        reader = reader.option(k, v)
+    reader = spark.readStream.format("csv").schema(schema).options(**_csv_options(header))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(path)
-    for f in df.schema.fields:
-        if f.dataType.typeName() == "timestamp":
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp_ntz"))
-    return df
+    return _ntz_timestamps(reader.load(path), ())
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:

@@ -3,12 +3,16 @@ read that gives Spark no schema runs a schema-inference job. Catalog
 streaming queries start, await and read back their sinks only through
 queries._drain. The BM25 tokenizer and lossless certificate live in
 one function each (similarity.py) and the certificate's oracle in one
-builder (queries.py). Needs no SparkSession."""
+builder (queries.py). The vector-search tiers rank through one per-query
+window (similarity.py), score float cosine in SQL through one builder
+and build their Spark query set in one function (queries.py). Needs no
+SparkSession."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -167,3 +171,95 @@ def test_bm25_certificate_and_tokenizer_exist_once():
     assert _enclosing(sim, _is_certificate_alias) == ["_bm25_certified_topk"]
     assert _enclosing(sim, _is_bm25_tokenizer) == ["_bm25_tokens"]
     assert _enclosing(queries, _is_certificate_sql) == ["_bm25_certified_sql"]
+
+
+def _holders(tree, match):
+    """Name of every top-level function or assigned constant whose
+    subtree (decorators included) has a node ``match`` accepts."""
+    names = []
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            name = stmt.name
+        elif isinstance(stmt, ast.Assign) and isinstance(stmt.targets[0], ast.Name):
+            name = stmt.targets[0].id
+        else:
+            continue
+        if any(match(n) for n in ast.walk(stmt)):
+            names.append(name)
+    return names
+
+
+def _is_query_window(node):
+    # Window.partitionBy(query_id_col)
+    return (
+        _call(node, "partitionBy")
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "Window"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Name)
+        and node.args[0].id == "query_id_col"
+    )
+
+
+def _is_float_cosine_sql(node):
+    # the float cosine's division by the norm product, in a string or
+    # in any literal part of an f-string
+    return isinstance(node, ast.Constant) and bool(
+        re.search(r"/\s*\(sqrt\(list_sum\(list_transform\(", str(node.value))
+    )
+
+
+def _is_vec_id_query_set(node):
+    # F.col("vec_id") < <bound>
+    return (
+        isinstance(node, ast.Compare)
+        and len(node.ops) == 1
+        and isinstance(node.ops[0], ast.Lt)
+        and _call(node.left, "col")
+        and len(node.left.args) == 1
+        and isinstance(node.left.args[0], ast.Constant)
+        and node.left.args[0].value == "vec_id"
+    )
+
+
+_VECTOR_COPIES = '''
+def a(q):
+    return Window.partitionBy(q), Window.partitionBy(query_id_col)
+def b(query_id_col):
+    return Window.partitionBy(query_id_col).orderBy("s")
+_SQL = """THEN d
+  / (sqrt(list_sum(list_transform(qv, x -> x*x))) * n)"""
+@_register("x", f"""THEN d
+   /  (sqrt(list_sum(list_transform({v}, x -> x*x))) * n)""")
+def q_x(emb):
+    return emb.where(F.col("vec_id") < 5), emb.where(F.col("id") < 5)
+def r(emb, n):
+    return emb.where(F.col("vec_id") < n), "/ (a.nv * b.nv)"
+'''
+
+
+def test_vector_search_lint_sees_each_copy():
+    tree = ast.parse(_VECTOR_COPIES)
+    assert _enclosing(tree, _is_query_window) == ["a", "b"]
+    assert _holders(tree, _is_float_cosine_sql) == ["_SQL", "q_x"]
+    assert _enclosing(tree, _is_vec_id_query_set) == ["q_x", "r"]
+
+
+def test_vector_tiers_rank_through_one_window():
+    sim = _parse("operators/similarity.py")
+    assert _enclosing(sim, _is_query_window) == ["_ranked_topk", "_bm25_query_order"]
+
+
+def test_float_cosine_sql_has_one_builder():
+    assert _holders(_parse("queries.py"), _is_float_cosine_sql) == ["_cos_sql"]
+
+
+def test_vector_query_set_is_built_once():
+    sets = []
+    for root, dirs, files in os.walk(PKG):
+        dirs[:] = [d for d in dirs if d != "_vendor"]
+        for f in sorted(files):
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
+                sets += [(rel, fn) for fn in _enclosing(_parse(rel), _is_vec_id_query_set)]
+    assert sets == [("queries.py", "_ann_query_set")]
