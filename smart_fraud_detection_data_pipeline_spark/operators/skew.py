@@ -55,10 +55,23 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
+def guarded_broadcast(df: DataFrame, limit: int) -> tuple[DataFrame, DataFrame]:
+    """(materialized, join side) of a frame whose size is only known at
+    run time: ``df`` is localCheckpoint-ed (eager; the block frees with
+    the frame and nothing stays registered on the session), counted once
+    over the checkpoint, and hinted for broadcast only at or below
+    ``limit`` rows. Above it the join falls back to a shuffle join
+    instead of a driver-side OOM; the output is the same either way.
+    Join the second frame; derive anything else from the first, which
+    carries no hint."""
+    df = df.localCheckpoint()
+    return df, (F.broadcast(df) if df.count() <= limit else df)
+
+
 #: (JVM session UUID, analyzed-plan semanticHash, input-file set hash)
 #: → planned partition count. df.rdd.getNumPartitions() compiles a full
 #: physical plan — pure driver-side py4j cost paid on EVERY query build,
-#: and shared helpers (_staged_shingles) probe the same scan several
+#: and shared helpers (textdedup._text_entry) probe the same scan several
 #: times per query (ADVICE r13). semanticHash only needs analysis but is
 #: blind to files appended under the same path, so the key also carries
 #: the relation's input files; the session UUID (unlike id() of the

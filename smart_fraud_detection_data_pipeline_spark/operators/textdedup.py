@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from smart_fraud_detection_data_pipeline_spark.operators.skew import spread_input
+from smart_fraud_detection_data_pipeline_spark.operators.skew import guarded_broadcast, spread_input
 
 DEFAULT_SHINGLE = 3  # tokens per shingle
 DEFAULT_PERMS = 8
@@ -79,36 +79,116 @@ def shingles(
     shingle_index / minhash_signatures).
     """
     toks = F.split(F.trim(text), "\\s+") if toks is None else toks
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(grams)
+    return F.array_distinct(_gram_list(toks, n))
+
+
+def _gram_list(toks: Column, n: int, emit=None) -> Column:
+    """Every word n-gram of a token array, in order and with repeats: one
+    per start position 1..max(size - (n-1), 1), so a doc shorter than n
+    yields its whole token sequence as one gram. ``emit(i, words)`` maps
+    each start position and its word slice (default: the words joined
+    by concat_ws, which turns the slice of a NULL array into '').
+
+    ``toks`` must be a projected attribute, not an inline split — the
+    lambda slices it per element (see `shingles`)."""
+    starts = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
+
+    def gram(i):
+        words = F.slice(toks, i, n)
+        return F.concat_ws(" ", words) if emit is None else emit(i, words)
+
+    return F.transform(starts, gram)
+
+
+def _text_entry(
+    df: DataFrame, text_col: str, *cols: str, tokenize: bool = True
+) -> DataFrame:
+    """The one entry of every text op: NULL text out, the scan spread,
+    then (``tokenize``) the whitespace split staged as ``__toks`` next
+    to ``cols`` so gram lambdas slice an attribute, not a re-split.
+    Without tokenizing it returns (cols, text).
+
+    NULL text is EXCLUDED here — absent content has no gram set and
+    must not pair with anything. Without the filter, split(NULL) →
+    NULL tokens → concat_ws skips the NULL slice → a NULL-text doc
+    manufactures the same '' shingle as an empty-string doc and the
+    two spuriously pair at Jaccard 1.0 (adversarial-sweep finding).
+    Per-doc gram, hash and fold work is the compute-heavy stage of every
+    consumer, so an under-split scan is spread first (no-op at
+    production split counts — see spread_input)."""
+    df = spread_input(df.where(F.col(text_col).isNotNull()).select(*cols, F.col(text_col)))
+    if not tokenize:
+        return df
+    return df.select(*cols, F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"))
 
 
 def _staged_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int, *extra_cols: str
 ) -> DataFrame:
-    """(id, __sh) with the tokenization staged through a projection so
-    the shingle lambda slices an attribute, not a re-split.
-
-    NULL text is EXCLUDED here — absent content has no shingle set and
-    must not pair with anything. Without the filter, split(NULL) →
-    NULL tokens → concat_ws skips the NULL slice → a NULL-text doc
-    manufactures the same '' shingle as an empty-string doc and the
-    two spuriously pair at Jaccard 1.0 (adversarial-sweep finding)."""
-    df = df.where(F.col(text_col).isNotNull())
-    # Per-doc shingling is the compute-heavy stage of every consumer
-    # (md5 per gram downstream); spread an under-split scan first so it
-    # parallelizes (no-op at production split counts — see spread_input).
-    df = spread_input(df.select(F.col(id_col), *extra_cols, F.col(text_col)))
-    return df.select(
-        F.col(id_col), *extra_cols, F.split(F.trim(F.col(text_col)), "\\s+").alias("__toks")
-    ).select(
+    """(id, *extra_cols, __sh): distinct shingles of each non-NULL doc,
+    tokenized through `_text_entry`."""
+    return _text_entry(df, text_col, id_col, *extra_cols).select(
         F.col(id_col),
         *extra_cols,
         shingles(None, n, toks=F.col("__toks")).alias("__sh"),
+    )
+
+
+def _df_cut(frame: DataFrame, key: str, max_df: int | None) -> DataFrame:
+    """Drop the rows whose ``key`` occurs in more than ``max_df`` rows
+    (the document-frequency cut; ``None`` keeps everything). Frequent
+    keys are the quadratic fan-out of any all-pairs join."""
+    if max_df is None:
+        return frame
+    return (
+        frame.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy(key)))
+        .where(F.col("__df") <= max_df)
+        .drop("__df")
+    )
+
+
+def _in_row_pairs(arr: str, emit) -> Column:
+    """explode of ``emit(x, y)`` for every pair of elements of the array
+    column ``arr`` with x before y — each unordered pair once, built
+    in-row (a self-join would materialize both orders). ``arr`` is
+    sorted by the caller, so pairs come out ordered."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                arr,
+                lambda x, i: F.transform(
+                    F.slice(F.col(arr), i + F.lit(2), F.size(arr)),
+                    lambda y: emit(x, y),
+                ),
+            )
+        )
+    )
+
+
+def _verified_jaccard(
+    candidates: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """The candidate pairs whose exact Jaccard reaches ``threshold``,
+    with a ``jaccard`` column: each pair joins the (id, sh) shingle set
+    of both sides and intersects in-row. The one verifier of every
+    candidate generator (prefix, PPJoin, MinHash-LSH, incremental
+    probe); the set columns are named sh_<suffix of the id column>, and
+    the caller selects what it keeps."""
+    sh_a, sh_b = "sh" + a[2:], "sh" + b[2:]
+    return (
+        candidates.join(sets_a.toDF(a, sh_a), a)
+        .join(sets_b.toDF(b, sh_b), b)
+        .withColumn("__inter", F.size(F.array_intersect(sh_a, sh_b)))
+        .withColumn(
+            "jaccard",
+            F.col("__inter") / (F.size(sh_a) + F.size(sh_b) - F.col("__inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -125,12 +205,7 @@ def shingle_index(
     idx = _staged_shingles(df, text_col, id_col, n).select(
         F.col(id_col), F.explode("__sh").alias("shingle")
     )
-    if max_df is not None:
-        w = Window.partitionBy("shingle")
-        idx = idx.withColumn("__df", F.count(F.lit(1)).over(w)).where(
-            F.col("__df") <= max_df
-        ).drop("__df")
-    return idx
+    return _df_cut(idx, "shingle", max_df)
 
 
 def ngram_jaccard_pairs(
@@ -176,6 +251,13 @@ def ngram_jaccard_pairs(
     sets = _staged_shingles(df, text_col, id_col, n).select(
         F.col(id_col).alias("id"), F.col("__sh").alias("sh")
     )
+    # AllPairs prefix: a pair with Jaccard >= t shares one of each set's
+    # first |A| - ceil(t*|A|) + 1 shingles under a global order
+    prefix = F.slice(
+        F.array_sort(F.col("sh")),
+        1,
+        F.size("sh") - F.ceil(F.size("sh") * F.lit(threshold)) + F.lit(1),
+    )
     if method == "ppjoin":
         # AllPairs prefix filtering + the PPJoin positional filter
         # (Xiao et al., WWW'08): candidates still come from prefix
@@ -188,22 +270,15 @@ def ngram_jaccard_pairs(
         # Jaccard >= t needs |A ∩ B| >= t/(1+t) * (|A|+|B|); pairs whose
         # bound can't reach that never fetch their shingle arrays. The
         # size (length) filter prunes grossly mismatched pairs first.
-        sorted_sh = F.array_sort(F.col("sh"))
-        plen = F.size("sh") - F.ceil(F.size("sh") * F.lit(threshold)) + F.lit(1)
-        probe = sets.select(
-            "id",
-            F.size("sh").alias("sz"),
-            F.posexplode(F.slice(sorted_sh, 1, plen)).alias("pos", "shingle"),
+        probe = _df_cut(
+            sets.select(
+                "id",
+                F.size("sh").alias("sz"),
+                F.posexplode(prefix).alias("pos", "shingle"),
+            ),
+            "shingle",
+            max_df,
         )
-        if max_df is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("shingle")
-            probe = (
-                probe.withColumn("__df", F.count(F.lit(1)).over(w))
-                .where(F.col("__df") <= max_df)
-                .drop("__df")
-            )
         a = probe.select(
             F.col("id").alias("id_a"), F.col("sz").alias("sz_a"),
             F.col("pos").alias("pos_a"), "shingle",
@@ -232,35 +307,10 @@ def ngram_jaccard_pairs(
             F.col("sz_a") - 1 - F.col("__ma"), F.col("sz_b") - 1 - F.col("__mb")
         )
         candidates = pairs.where(ubound >= required).select("id_a", "id_b")
-        sa = sets.toDF("id_a", "sh_a")
-        sb = sets.toDF("id_b", "sh_b")
-        return (
-            candidates.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.col("__inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+    elif method == "prefix":
+        probe = _df_cut(
+            sets.select("id", F.explode(prefix).alias("shingle")), "shingle", max_df
         )
-    if method == "prefix":
-        sorted_sh = F.array_sort(F.col("sh"))
-        plen = F.size("sh") - F.ceil(F.size("sh") * F.lit(threshold)) + F.lit(1)
-        probe = sets.select(
-            "id", F.explode(F.slice(sorted_sh, 1, plen)).alias("shingle")
-        )
-        if max_df is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("shingle")
-            probe = (
-                probe.withColumn("__df", F.count(F.lit(1)).over(w))
-                .where(F.col("__df") <= max_df)
-                .drop("__df")
-            )
         a = probe.toDF("id_a", "shingle")
         b = probe.toDF("id_b", "shingle")
         candidates = (
@@ -269,33 +319,17 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b")
             .distinct()
         )
-        sa = sets.toDF("id_a", "sh_a")
-        sb = sets.toDF("id_b", "sh_b")
-        return (
-            candidates.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.col("__inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+    if method in ("ppjoin", "prefix"):
+        verified = _verified_jaccard(candidates, sets, sets, "id_a", "id_b", threshold)
+        return verified.select("id_a", "id_b", "jaccard")
 
-    idx = sets.select(
-        "id", F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("hsh")
+    idx = _df_cut(
+        sets.select(
+            "id", F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("hsh")
+        ),
+        "hsh",
+        max_df,
     )
-    if max_df is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("hsh")
-        idx = (
-            idx.withColumn("__df", F.count(F.lit(1)).over(w))
-            .where(F.col("__df") <= max_df)
-            .drop("__df")
-        )
     sizes = sets.select("id", F.size("sh").alias("n"))
     groups = (
         idx.groupBy("hsh")
@@ -303,17 +337,7 @@ def ngram_jaccard_pairs(
         .where(F.size("ids") > 1)
     )
     pairs = groups.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ids",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + F.lit(2), F.size("ids")),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
+        _in_row_pairs("ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))).alias("p")
     ).select("p.id_a", "p.id_b")
     inter = pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter"))
     sa = sizes.toDF("id_a", "n_a")
@@ -348,16 +372,22 @@ def minhash_signatures(
     num_perm times (Catalyst doesn't CSE across generated columns here;
     measured 8× slower).
     """
+    base = _staged_shingles(df, text_col, id_col, n)
+    return base.select(F.col(id_col), *_minhash_sig_cols("__sh", num_perm))
+
+
+def _minhash_sig_cols(sh: str, num_perm: int) -> list[Column]:
+    """sig_0..sig_{num_perm-1}: min over the shingle array ``sh`` of
+    md5('p<i>|' || shingle) — the one signature builder of
+    `minhash_signatures` and every LSH bucket table."""
 
     def perm_hash(i: int):
         return lambda s: F.md5(F.concat(F.lit(f"p{i}|"), s).cast("binary"))
 
-    base = _staged_shingles(df, text_col, id_col, n)
-    sig_cols = [
-        F.array_min(F.transform(F.col("__sh"), perm_hash(i))).alias(f"sig_{i}")
+    return [
+        F.array_min(F.transform(F.col(sh), perm_hash(i))).alias(f"sig_{i}")
         for i in range(num_perm)
     ]
-    return base.select(F.col(id_col), *sig_cols)
 
 
 def _salted_band_buckets(
@@ -372,17 +402,7 @@ def _salted_band_buckets(
     plus a bands-wide explode, no shuffle.
     """
     rows = num_perm // bands
-
-    def perm_hash(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"p{i}|"), s).cast("binary"))
-
-    sigs = sets.select(
-        F.col(id_col),
-        *[
-            F.array_min(F.transform(F.col("sh"), perm_hash(i))).alias(f"sig_{i}")
-            for i in range(num_perm)
-        ],
-    )
+    sigs = sets.select(F.col(id_col), *_minhash_sig_cols("sh", num_perm))
     band_cols = [
         F.md5(
             F.concat_ws("|", *[F.col(f"sig_{b * rows + r}") for r in range(rows)]).cast("binary")
@@ -443,19 +463,8 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    sa = sets.toDF("id_a", "sh_a")
-    sb = sets.toDF("id_b", "sh_b")
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = _verified_jaccard(candidates, sets, sets, "id_a", "id_b", threshold)
+    return verified.select("id_a", "id_b", "jaccard")
 
 
 def minhash_index(
@@ -588,21 +597,11 @@ def incremental_minhash_dedup(
         .select("id_d", "id_o")
         .distinct()
     )
-    sd = delta_sets.toDF("id_d", "sh_d")
-    so = base_sets.select(F.col(id_col), F.col("sh"))
+    others_sets = base_sets.select(F.col(id_col), F.col("sh"))
     if within_delta:
-        so = so.unionByName(delta_sets)
-    so = so.toDF("id_o", "sh_o")
-    inter = F.size(F.array_intersect("sh_d", "sh_o"))
+        others_sets = others_sets.unionByName(delta_sets)
     dups = (
-        candidates.join(sd, "id_d")
-        .join(so, "id_o")
-        .withColumn("__inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.size("sh_d") + F.size("sh_o") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
+        _verified_jaccard(candidates, delta_sets, others_sets, "id_d", "id_o", threshold)
         .groupBy("id_d")
         .agg(F.min("id_o").alias("dup_of"))
     )
@@ -742,17 +741,10 @@ def simhash_pairs(
     """
     from itertools import combinations
 
-    h = simhash(F.col(text_col))
-    # NULL text has no signature — excluded, same rule as _staged_shingles.
-    # The per-doc token-hash fold is the compute-heavy stage; spread an
-    # under-split scan so it parallelizes (no-op at production splits).
+    # NULL text has no signature — excluded by _text_entry
     base = (
-        spread_input(
-            df.where(F.col(text_col).isNotNull()).select(
-                F.col(id_col), F.col(text_col)
-            )
-        )
-        .select(F.col(id_col), h.alias("simhash"))
+        _text_entry(df, text_col, id_col, tokenize=False)
+        .select(F.col(id_col), simhash(F.col(text_col)).alias("simhash"))
         .localCheckpoint()
     )
     if chunks is None:
@@ -835,16 +827,13 @@ def cross_corpus_containment(
     )
     ev_gram_set = ev_grams.select("shingle").distinct()
     hit_grams = (
-        # NULL text contributes no grams — same exclusion _staged_shingles
-        # applies on the eval side. Without it, split(NULL) → slice →
-        # concat_ws manufactures the '' gram, so a NULL-text train doc
-        # spuriously "contains" every empty-string eval doc (fuzz seed
-        # 6007 caught the mirror-image hole in doc_decontaminate_bloom,
-        # whose exact side feeds the eval corpus through this argument).
-        spread_input(
-            train.where(F.col(text_col).isNotNull()).select(F.col(text_col))
-        )
-        .select(F.split(F.trim(F.col(text_col)), "\\s+").alias("__toks"))
+        # NULL text contributes no grams on either side (_text_entry).
+        # Without it, split(NULL) → slice → concat_ws manufactures the ''
+        # gram, so a NULL-text train doc spuriously "contains" every
+        # empty-string eval doc (fuzz seed 6007 caught the mirror-image
+        # hole in doc_decontaminate_bloom, whose exact side feeds the
+        # eval corpus through this argument).
+        _text_entry(train, text_col)
         .select(
             F.explode(
                 F.transform(
@@ -912,7 +901,7 @@ def bloom_contamination_flags(
     projected attribute inside the lambda — per the staged-HOF rule,
     an attribute slice is O(1) per element, no re-evaluation.
 
-    NULL text is excluded on BOTH sides by `_staged_shingles` (absent
+    NULL text is excluded on BOTH sides by `_text_entry` (absent
     content has no gram set); an empty eval corpus yields an all-zero
     bitmap and flags nothing. Hash basis is xxhash64 (Spark-side only;
     the oracle never recomputes positions — the registered query
@@ -988,14 +977,14 @@ def winnow_pairs(
     shingle set — the index this builds is an order of magnitude
     smaller than `ngram_jaccard_pairs`' for the same corpus.
 
-    Scale shape mirrors the exact-Jaccard count path: selection is
-    map-only (in-row HOF fold, textstats.winnow — no per-gram rows
-    ever exist), then an inverted index on the fingerprint groups doc
-    ids per fingerprint and emits each co-occurring pair once via
-    in-row combinations — a self-join would materialize both orders.
-    One shuffle on the fingerprint, one on the (doc_a, doc_b) pair.
-    `max_df` bounds the C(df,2) blowup of a fingerprint shared by many
-    documents (boilerplate headers), same lever as the Jaccard path.
+    Scale shape: selection is map-only (in-row HOF fold,
+    textstats.winnow — no per-gram rows ever exist), then an inverted
+    index on the fingerprint groups doc ids per fingerprint and
+    `_in_row_pairs` emits each co-occurring pair once — a self-join
+    would materialize both orders. One shuffle on the fingerprint, one
+    on the (doc_a, doc_b) pair. `max_df` bounds the C(df,2) blowup of a
+    fingerprint shared by many documents (boilerplate headers), applied
+    to the id list size rather than through `_df_cut`.
 
     The SELECTION runs over md5 strings (lexicographic window-min —
     the engine-portable scheme doc_winnow's oracle reproduces), but the
@@ -1009,13 +998,12 @@ def winnow_pairs(
     """
     from smart_fraud_detection_data_pipeline_spark.operators.textstats import kgram_hashes, winnow
 
-    # NULL text has no fingerprints — excluded, same rule as _staged_shingles.
-    # Fingerprinting (md5 per k-gram + window-min fold) is the heavy
-    # stage; spread an under-split scan first (no-op at production
-    # splits — VERDICT r12 Next #5's x10 3-task wall was exactly this).
-    hashed = spread_input(
-        df.where(F.col(text_col).isNotNull()).select(F.col(id_col), F.col(text_col))
-    ).select(F.col(id_col).alias("id"), kgram_hashes(F.col(text_col), k).alias("__h"))
+    # NULL text has no fingerprints — excluded by _text_entry, whose
+    # spread parallelizes the md5-per-k-gram + window-min fold (VERDICT
+    # r12 Next #5's x10 3-task wall was exactly this stage).
+    hashed = _text_entry(df, text_col, id_col, tokenize=False).select(
+        F.col(id_col).alias("id"), kgram_hashes(F.col(text_col), k).alias("__h")
+    )
     fps = hashed.select(
         "id",
         F.explode(
@@ -1030,17 +1018,7 @@ def winnow_pairs(
     if max_df is not None:
         groups = groups.where(F.size("ids") <= max_df)
     pairs = groups.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ids",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + F.lit(2), F.size("ids")),
-                        lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                    ),
-                )
-            )
-        ).alias("p")
+        _in_row_pairs("ids", lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))).alias("p")
     ).select("p.doc_a", "p.doc_b")
     return (
         pairs.groupBy("doc_a", "doc_b")
@@ -1072,11 +1050,11 @@ def tfidf_cosine_pairs(
 
     Scale levers: ``max_df`` drops tokens shared by more than that many
     docs — they cost quadratic pairs and carry the least IDF signal
-    (prefix-filtering's big brother; same lever as ngram_jaccard_pairs
-    / winnow_pairs). Cosine is computed over the max_df-FILTERED vector
-    space on both the dot and the norms, so it is a well-defined
-    similarity there, rounded to 6 dp through DECIMAL sums so both
-    engines agree bit-for-bit (hash gate, not recall gate).
+    (prefix-filtering's big brother; the `_df_cut` lever, applied here
+    to the distinct-doc count). Cosine is computed over the
+    max_df-FILTERED vector space on both the dot and the norms, so it
+    is a well-defined similarity there, rounded to 6 dp through DECIMAL
+    sums so both engines agree bit-for-bit (hash gate, not recall gate).
 
     Every exchange keys on the 8-byte xxhash64 of the token, never the
     token string (the ngram_jaccard "count"-path discipline, VERDICT r7
@@ -1129,20 +1107,13 @@ def tfidf_cosine_pairs(
         F.sort_array(F.collect_list(F.struct("id", "wt"))).alias("ps")
     ).where(F.size("ps") > 1)
     pairs = posting.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ps",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ps"), i + F.lit(2), F.size("ps")),
-                        lambda y: F.struct(
-                            x["id"].alias("doc_a"),
-                            y["id"].alias("doc_b"),
-                            (x["wt"] * y["wt"]).alias("p"),
-                        ),
-                    ),
-                )
-            )
+        _in_row_pairs(
+            "ps",
+            lambda x, y: F.struct(
+                x["id"].alias("doc_a"),
+                y["id"].alias("doc_b"),
+                (x["wt"] * y["wt"]).alias("p"),
+            ),
         ).alias("pr")
     ).select("pr.doc_a", "pr.doc_b", "pr.p")
     dots = pairs.groupBy("doc_a", "doc_b").agg(
@@ -1190,45 +1161,33 @@ def repeated_passages(
     are the QUALIFYING passages themselves — and map-side partial agg
     collapses those to one row per (partition, passage) first.
 
-    The broadcast is GUARDED (VERDICT r7 #7): a pathological corpus
-    (min_df=2 over near-unique long documents) can qualify a stats
-    frame far beyond any broadcast budget, so stats is localCheckpoint-ed
-    (eager materialize, block frees with the frame — ADVICE r8), counted
-    (one bounded scalar over the checkpointed agg the join then reuses,
-    no duplicated work), and above
-    ``broadcast_limit`` rows the recovery join falls back to a shuffle
-    hash join on the 8-byte key instead of a driver-side OOM. Same
-    output either way.
+    The broadcast is GUARDED (VERDICT r7 #7, `skew.guarded_broadcast`):
+    a pathological corpus (min_df=2 over near-unique long documents) can
+    qualify a stats frame far beyond any broadcast budget, so stats is
+    localCheckpoint-ed (eager materialize, block frees with the frame —
+    ADVICE r8), counted once over the checkpoint the join then reuses,
+    and above ``broadcast_limit`` rows the recovery join falls back to a
+    shuffle hash join on the 8-byte key instead of a driver-side OOM.
+    Same output either way.
 
     Docs shorter than ``length`` contribute their whole token sequence
     as one passage (the `shingles` convention); NULL text is excluded
     on entry like every text op."""
-    # gram construction + hashing is the heavy per-doc stage; spread an
-    # under-split scan first (no-op at production split counts)
-    toks = spread_input(
-        df.where(F.col(text_col).isNotNull()).select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
+    grams = _gram_list(F.col("__toks"), length)
+    stream = (
+        _text_entry(df, text_col, id_col)
+        .select(F.col(id_col), F.explode(grams).alias("__g"))
+        .select(F.col(id_col), F.col("__g"), F.xxhash64("__g").alias("__h"))
     )
-    t = F.col("__toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(t) - F.lit(length - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(t, i, length)),
-    )
-    stream = toks.select(F.col(id_col), F.explode(grams).alias("__g")).select(
-        F.col(id_col), F.col("__g"), F.xxhash64("__g").alias("__h")
-    )
-    stats = (
+    _, right = guarded_broadcast(
         stream.groupBy("__h")
         .agg(
             F.count_distinct(F.col(id_col)).alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
-        .where(F.col("n_docs") >= min_df)
-        .localCheckpoint()
+        .where(F.col("n_docs") >= min_df),
+        broadcast_limit,
     )
-    right = F.broadcast(stats) if stats.count() <= broadcast_limit else stats
     return (
         stream.select("__g", "__h")
         .join(right, "__h")
@@ -1284,24 +1243,11 @@ def strip_boilerplate(
     ``array_contains`` probe that was O(ntok·|rm|) on a long
     fully-boilerplate doc.
     """
-    # same spread rationale as repeated_passages: per-doc gram + hash
-    # work dominates; no-op at production split counts
-    toks = spread_input(
-        df.where(F.col(text_col).isNotNull()).select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
-    )
-    t = F.col("__toks")
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.size(t) - F.lit(length - 1), F.lit(1))
-    )
-    pos_grams = F.transform(
-        starts,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.concat_ws(" ", F.slice(t, i, length)).alias("g"),
-        ),
+    toks = _text_entry(df, text_col, id_col)
+    pos_grams = _gram_list(
+        F.col("__toks"),
+        length,
+        lambda i, w: F.struct(i.alias("pos"), F.concat_ws(" ", w).alias("g")),
     )
     # gram built ONCE per position, both hashes taken from the
     # projected value after the explode (HOF staging discipline)
@@ -1313,14 +1259,13 @@ def strip_boilerplate(
         F.xxhash64(F.col("__pg.g")).alias("__h"),
         F.xxhash64(F.lit("b2"), F.col("__pg.g")).alias("__h2"),
     )
-    qual = (
+    _, right = guarded_broadcast(
         stream.groupBy("__h", "__h2")
         .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
         .where(F.col("__nd") >= min_df)
-        .select("__h", "__h2")
-        .localCheckpoint()
+        .select("__h", "__h2"),
+        broadcast_limit,
     )
-    right = F.broadcast(qual) if qual.count() <= broadcast_limit else qual
     doc_starts = (
         stream.join(right, ["__h", "__h2"])
         .groupBy(id_col)

@@ -38,7 +38,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smart_fraud_detection_data_pipeline_spark.operators.skew import spread_input
+from smart_fraud_detection_data_pipeline_spark.operators.skew import guarded_broadcast, spread_input
 
 
 def heavy_hitter_tokens(
@@ -176,13 +176,13 @@ def cms_token_estimates(
     associatively across partitions/days, and answers point queries
     without ever shuffling on the unbounded vocabulary.
 
-    The probe broadcast is GUARDED (VERDICT r11 #4, the
-    `repeated_passages` pattern at textdedup.py): the probe vocabulary
-    grows with the corpus (Heaps-law sublinear but unbounded), so it is
+    The probe broadcast is GUARDED (VERDICT r11 #4,
+    `skew.guarded_broadcast`): the probe vocabulary grows with the
+    corpus (Heaps-law sublinear but unbounded), so it is
     localCheckpoint-ed (eager materialize — three consumers anyway),
-    counted once, and above ``broadcast_limit`` rows the semi-join and
-    the estimate probe fall back to shuffle joins on the token key
-    instead of a driver-side OOM. Same output either way."""
+    counted once, and above ``broadcast_limit`` rows the semi-join
+    falls back to a shuffle join on the token key instead of a
+    driver-side OOM. Same output either way."""
     # spread an under-split scan first: three consumers (sketch, probe,
     # exact recount) each re-derive the token stream from the scan, so a
     # single-split file serializes 3× the tokenize+md5 work (no-op at
@@ -202,13 +202,10 @@ def cms_token_estimates(
         .groupBy("r", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    probe = (
-        toks.where(F.col(id_col) % probe_mod == 0)
-        .select("token")
-        .distinct()
-        .localCheckpoint()
+    probe, probe_b = guarded_broadcast(
+        toks.where(F.col(id_col) % probe_mod == 0).select("token").distinct(),
+        broadcast_limit,
     )
-    probe_b = F.broadcast(probe) if probe.count() <= broadcast_limit else probe
     exact = (
         toks.join(probe_b, "token", "left_semi")
         .groupBy("token")

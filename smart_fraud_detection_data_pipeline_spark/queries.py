@@ -152,36 +152,37 @@ def _drain(
 #: last driver certification is oldest (from the CORRECTNESS_rNN.json
 #: artifacts).
 _DRIVER_ROTATION = (
-    # --- vector-search tiers on the shared top-k cut, cosine scorers,
-    # modular sample, entry filter and query set, and the image/video
-    # decodes over the shared PNG/GIF encoders ---
+    # --- text-dedup tiers on the shared entry, gram list, df cut,
+    # verifier, pair expansion and signatures, their oracles on the
+    # shared toks/gram/Jaccard/probe builders, and the guarded
+    # broadcast's three users ---
+    "doc_ngram_jaccard", "doc_ngram_jaccard_capped", "doc_minhash_lsh",
+    "doc_dedup_incremental", "doc_dedup_index_compaction",
+    "dedup_incremental_streaming", "dedup_streaming_compaction",
+    "doc_simhash", "doc_simhash_pairs", "doc_decontaminate",
+    "doc_decontaminate_bloom", "doc_repeated_passages",
+    "doc_strip_boilerplate", "doc_winnow_pairs", "doc_tfidf_cosine_pairs",
+    "doc_repetition", "vocab_top_ngrams", "doc_dup_components",
+    "doc_clean_corpus", "vocab_cms_counts", "corpus_training_export",
+    # --- not yet certified: the vector-search tiers and image/video
+    # decodes, the BM25 tiers and batch twins on one body each, the
+    # streaming queries drained through _drain, and the footer-schema
+    # readers of loader or sink output ---
     "embed_cosine_topk", "embed_srp_ann", "embed_cosine_dups", "embed_ivf_ann",
     "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
     "embed_ivf_kmeans_ann", "embed_ann_streaming", "embed_quantized_topk",
     "embed_pq_ann", "embed_pq_rerank", "embed_ivfpq_ann", "embed_ivfpq_rerank",
     "multimodal_image_decode", "multimodal_video_frames",
-    # --- not yet certified: the BM25 tiers and batch twins on
-    # one body each, the 13 streaming queries drained through _drain,
-    # and the footer-schema readers of loader or sink output ---
     "doc_bm25_topk", "doc_bm25_topk_pruned", "doc_bm25_index_incremental",
     "asof_last_purchase", "asof_last_purchase_bucketed",
     "error_burst_window", "error_burst_window_bucketed", "session_windows",
     "fraud_enrich_streaming", "dedup_streaming",
-    "dedup_incremental_streaming", "dedup_streaming_compaction",
     "user_spend_trends_streaming", "user_running_totals_streaming",
     "session_windows_streaming", "stream_stream_join",
     "stream_stream_join_bucketed", "stream_stream_left_join",
     "stream_stream_left_join_bucketed", "stream_windowed_rollup",
     "warehouse_load", "warehouse_compaction", "time_layout_scan",
     "zorder_layout_scan",
-    # --- last driver-certified in round 10 ---
-    "category_trends", "user_spend_trends_approx", "dedup_keep_last",
-    "merge_upsert_delete", "top_customers", "multimodal_byte_features",
-    "small_quantity_revenue", "not_in_null_semantics", "events_variant_props",
-    "user_funnel", "orders_cube", "shipping_priority", "regional_revenue",
-    "doc_sample_stratified", "returnflag_priority_mix", "promo_revenue_pct",
-    "salted_user_join", "kafka_serde_roundtrip",
-    "user_spend_trends_incremental",
 )
 
 
@@ -790,38 +791,58 @@ def q_doc_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TD.exact_dup_groups(_docs_with_dups(spark, sf_dir))
 
 
-# Shared SQL for word-3-gram shingling + exact Jaccard pairs.
-# The NULL-text fence mirrors the Spark text-op entry rule
-# (_staged_shingles) EXPLICITLY: without it, NULL docs only dropped
-# because DuckDB 1.0.0's list_distinct strips the NULL gram that
-# array_to_string(NULL-slice) produces — emergent behavior that flips
-# in DuckDB >= 1.1 (NULLs kept), where the surviving NULL shingle
-# would, among other things, poison the capped variant's
-# `shingle NOT IN (SELECT ... FROM hot)` into an all-NULL filter
-# (round-9 forward-compat audit; provably inert at 1.0.0).
-_SQL_SHINGLE_CTES = """
+# The text oracles' entry: one NULL-fenced `toks` CTE, the twin of the
+# Spark side's textdedup._text_entry. The fence is EXPLICIT: without
+# it, NULL docs only dropped because DuckDB 1.0.0's list_distinct
+# strips the NULL gram that array_to_string(NULL-slice) produces —
+# emergent behavior that flips in DuckDB >= 1.1 (NULLs kept), where
+# the surviving NULL shingle would, among other things, poison the
+# capped variant's `shingle NOT IN (SELECT ... FROM hot)` into an
+# all-NULL filter (round-9 forward-compat audit; provably inert at
+# 1.0.0).
+_SQL_TOKS = """
 toks AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
   WHERE text IS NOT NULL
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, greatest(len(t) - 2, 1)),
-           i -> array_to_string(t[i:i+2], ' ')))) AS shingle
-  FROM toks
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
+)"""
+
+
+def _grams_sql(n: int, *, starts: bool = False) -> str:
+    """Every word n-gram of the token list `t` (twin of
+    textdedup._gram_list): one per start position
+    1..max(len(t) - (n-1), 1), so a doc shorter than n yields its whole
+    token list as one gram. ``starts`` returns the start positions."""
+    seq = f"generate_series(1, greatest(len(t) - {n - 1}, 1))"
+    if starts:
+        return seq
+    return f"list_transform({seq}, i -> array_to_string(t[i:i + {n - 1}], ' '))"
+
+
+def _jaccard_ctes_sql(sh: str, tag: str = "") -> str:
+    """inter<tag>/jacc<tag>: exact Jaccard of every doc pair sharing a
+    shingle of the (doc_id, shingle) CTE ``sh``, id_a < id_b, over the
+    full set sizes of `sizes`."""
+    return f"""inter{tag} AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM {sh} a JOIN {sh} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ),
-jacc AS (
+jacc{tag} AS (
   SELECT id_a, id_b, n_inter / (sa.n + sb.n - n_inter) AS jaccard
-  FROM inter
+  FROM inter{tag}
   JOIN sizes sa ON id_a = sa.doc_id
   JOIN sizes sb ON id_b = sb.doc_id
 )"""
+
+
+# Shared SQL for word-3-gram shingling + exact Jaccard pairs.
+_SQL_SHINGLE_CTES = f"""{_SQL_TOKS},
+sh AS (
+  SELECT doc_id, unnest(list_distinct({_grams_sql(3)})) AS shingle
+  FROM toks
+),
+sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+{_jaccard_ctes_sql("sh")}"""
 
 
 @_register(
@@ -852,16 +873,8 @@ shc AS (
   SELECT doc_id, shingle FROM sh
   WHERE shingle NOT IN (SELECT shingle FROM hot)
 ),
-interc AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, n_inter / (sa.n + sb.n - n_inter) AS jaccard
-FROM interc
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.5
+{_jaccard_ctes_sql("shc", "_c")}
+SELECT id_a, id_b, jaccard FROM jacc_c WHERE jaccard >= 0.5
 """,
 )
 def q_doc_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -943,45 +956,65 @@ def q_doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_incremental_sql(
-    num_perm: int, bands: int, threshold: float, within_delta: bool = True
+def _minhash_probe_sql(
+    num_perm: int, bands: int, threshold: float, *probes: tuple[str, str, str]
 ) -> str:
-    """Oracle twin of doc_dedup_incremental (+ its streaming variant):
-    the SAME shingle and sigs/banded/buckets CTEs as the one-shot oracle
-    (one builder each), then the incremental contract — a delta doc
-    (doc_id % 5 = 0, null-safely FALSE for NULL ids) is rejected iff an
-    LSH candidate that is a base doc or (within_delta) a lower-id delta
-    doc verifies at exact Jaccard >= threshold. `jacc` holds every
+    """The one builder of the incremental MinHash oracles: the SAME
+    shingle and sigs/banded/buckets CTEs as the one-shot oracle, then
+    per probe ``(tag, delta_pred, other_pred)`` a `<tag>_delta` batch
+    (non-NULL text) and its `<tag>_dups` — a delta doc is rejected iff
+    an LSH candidate ``o`` passing ``other_pred`` verifies at exact
+    Jaccard >= threshold, dup_of the smallest such id — and one output
+    row per delta doc, the probes UNION ALL'd. `jacc` holds every
     ordered pair once (id_a < id_b), so candidate pairs look up via
     least/greatest."""
-    other_pred = "NOT COALESCE(o.doc_id % 5 = 0, FALSE)"
-    if within_delta:
-        other_pred += " OR o.doc_id < d.doc_id"
-    return f"""
-WITH {_SQL_SHINGLE_CTES},
-{_minhash_bucket_ctes(num_perm, bands)},
-delta AS (
+    ctes = ",\n".join(
+        f"""{tag}_delta AS (
   SELECT doc_id FROM documents
-  WHERE COALESCE(doc_id % 5 = 0, FALSE) AND text IS NOT NULL
+  WHERE {delta_pred} AND text IS NOT NULL
 ),
-candidates AS (
-  SELECT DISTINCT d.doc_id AS id_d, o.doc_id AS id_o
-  FROM buckets d
-  JOIN delta dd ON d.doc_id = dd.doc_id
-  JOIN buckets o ON o.band = d.band AND o.key = d.key AND o.doc_id <> d.doc_id
-  WHERE {other_pred}
-),
-dups AS (
+{tag}_dups AS (
   SELECT c.id_d, MIN(c.id_o) AS dup_of
-  FROM candidates c
+  FROM (
+    SELECT DISTINCT d.doc_id AS id_d, o.doc_id AS id_o
+    FROM buckets d
+    JOIN {tag}_delta dd ON d.doc_id = dd.doc_id
+    JOIN buckets o ON o.band = d.band AND o.key = d.key AND o.doc_id <> d.doc_id
+    WHERE {other_pred}
+  ) c
   JOIN jacc j ON j.id_a = least(c.id_d, c.id_o)
              AND j.id_b = greatest(c.id_d, c.id_o)
   WHERE j.jaccard >= {threshold}
   GROUP BY c.id_d
-)
-SELECT dd.doc_id, dups.dup_of, dups.dup_of IS NULL AS keep
-FROM delta dd LEFT JOIN dups ON dups.id_d = dd.doc_id
+)"""
+        for tag, delta_pred, other_pred in probes
+    )
+    selects = "\nUNION ALL\n".join(
+        f"""SELECT dd.doc_id, d.dup_of, d.dup_of IS NULL AS keep
+FROM {tag}_delta dd LEFT JOIN {tag}_dups d ON d.id_d = dd.doc_id"""
+        for tag, _, _ in probes
+    )
+    return f"""
+WITH {_SQL_SHINGLE_CTES},
+{_minhash_bucket_ctes(num_perm, bands)},
+{ctes}
+{selects}
 """
+
+
+def _minhash_incremental_sql(
+    num_perm: int, bands: int, threshold: float, within_delta: bool = True
+) -> str:
+    """Oracle twin of doc_dedup_incremental (+ its streaming variant):
+    the delta (doc_id % 5 = 0, null-safely FALSE for NULL ids) probes
+    the base docs and (within_delta) the lower-id delta docs."""
+    other_pred = "NOT COALESCE(o.doc_id % 5 = 0, FALSE)"
+    if within_delta:
+        other_pred += " OR o.doc_id < d.doc_id"
+    return _minhash_probe_sql(
+        num_perm, bands, threshold,
+        ("delta", "COALESCE(doc_id % 5 = 0, FALSE)", other_pred),
+    )
 
 
 @_register(
@@ -1004,16 +1037,14 @@ def q_doc_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_compaction_sql(num_perm: int, bands: int, threshold: float) -> str:
-    """Oracle twin of doc_dedup_index_compaction: the SAME shingle and
-    bucket CTEs as the one-shot/incremental oracles (one builder each),
-    with the index side restricted to NON-RETRACTED base docs. The probe
-    batch is the delta (doc_id % 5 = 0) plus the retracted docs
-    themselves (base docs with doc_id % 3 = 0) re-submitted; a probe doc
-    is rejected iff an LSH candidate that is a SURVIVING base doc or a
-    lower-id probe doc verifies at exact Jaccard >= threshold — i.e.
-    the tombstoned entries must be invisible. All split predicates are
-    %-based and COALESCE-fenced (NULL-safe-routing rule, both
-    engines)."""
+    """Oracle twin of doc_dedup_index_compaction, with the index side
+    restricted to NON-RETRACTED base docs. The probe batch is the delta
+    (doc_id % 5 = 0) plus the retracted docs themselves (base docs with
+    doc_id % 3 = 0) re-submitted; a probe doc is rejected iff an LSH
+    candidate that is a SURVIVING base doc or a lower-id probe doc
+    verifies — i.e. the tombstoned entries must be invisible. All split
+    predicates are %-based and COALESCE-fenced (NULL-safe-routing rule,
+    both engines)."""
     is_delta = "COALESCE({t}.doc_id % 5 = 0, FALSE)"
     is_del = "(NOT COALESCE({t}.doc_id % 5 = 0, FALSE) AND COALESCE({t}.doc_id % 3 = 0, FALSE))"
     probe_pred = f"({is_delta} OR {is_del})"
@@ -1021,32 +1052,15 @@ def _minhash_compaction_sql(num_perm: int, bands: int, threshold: float) -> str:
         "(NOT COALESCE({t}.doc_id % 5 = 0, FALSE)"
         " AND NOT COALESCE({t}.doc_id % 3 = 0, FALSE))"
     )
-    return f"""
-WITH {_SQL_SHINGLE_CTES},
-{_minhash_bucket_ctes(num_perm, bands)},
-probe AS (
-  SELECT doc_id FROM documents
-  WHERE {probe_pred.format(t='documents')} AND text IS NOT NULL
-),
-candidates AS (
-  SELECT DISTINCT d.doc_id AS id_d, o.doc_id AS id_o
-  FROM buckets d
-  JOIN probe dd ON d.doc_id = dd.doc_id
-  JOIN buckets o ON o.band = d.band AND o.key = d.key AND o.doc_id <> d.doc_id
-  WHERE {survivor_pred.format(t='o')}
-     OR ({probe_pred.format(t='o')} AND o.doc_id < d.doc_id)
-),
-dups AS (
-  SELECT c.id_d, MIN(c.id_o) AS dup_of
-  FROM candidates c
-  JOIN jacc j ON j.id_a = least(c.id_d, c.id_o)
-             AND j.id_b = greatest(c.id_d, c.id_o)
-  WHERE j.jaccard >= {threshold}
-  GROUP BY c.id_d
-)
-SELECT dd.doc_id, dups.dup_of, dups.dup_of IS NULL AS keep
-FROM probe dd LEFT JOIN dups ON dups.id_d = dd.doc_id
-"""
+    return _minhash_probe_sql(
+        num_perm, bands, threshold,
+        (
+            "probe",
+            probe_pred.format(t="documents"),
+            f"{survivor_pred.format(t='o')}\n"
+            f"       OR ({probe_pred.format(t='o')} AND o.doc_id < d.doc_id)",
+        ),
+    )
 
 
 @_register(
@@ -1079,50 +1093,22 @@ def q_doc_dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_stream_compaction_sql(
     num_perm: int, bands: int, threshold: float
 ) -> str:
-    """Oracle twin of dedup_streaming_compaction: the shared shingle +
-    bucket CTEs, then TWO probe blocks generated by ONE builder
-    (shared-branch rule) — the first delta half (doc_id % 10 = 0)
-    probed against the FULL base index, the second half against the
-    COMPACTED index (base minus the doc_id % 3 = 0 tombstones), both
-    base-only (within_delta=False), UNION ALL'd. All split predicates
-    %-based and COALESCE-fenced (NULL-safe-routing rule)."""
-
-    def probe_block(tag: str, delta_pred: str, other_pred: str) -> str:
-        return f"""{tag}_delta AS (
-  SELECT doc_id FROM documents
-  WHERE {delta_pred} AND text IS NOT NULL
-),
-{tag}_dups AS (
-  SELECT c.id_d, MIN(c.id_o) AS dup_of
-  FROM (
-    SELECT DISTINCT d.doc_id AS id_d, o.doc_id AS id_o
-    FROM buckets d
-    JOIN {tag}_delta dd ON d.doc_id = dd.doc_id
-    JOIN buckets o ON o.band = d.band AND o.key = d.key AND o.doc_id <> d.doc_id
-    WHERE {other_pred}
-  ) c
-  JOIN jacc j ON j.id_a = least(c.id_d, c.id_o)
-             AND j.id_b = greatest(c.id_d, c.id_o)
-  WHERE j.jaccard >= {threshold}
-  GROUP BY c.id_d
-)"""
-
+    """Oracle twin of dedup_streaming_compaction: TWO probes — the first
+    delta half (doc_id % 10 = 0) against the FULL base index, the second
+    half against the COMPACTED index (base minus the doc_id % 3 = 0
+    tombstones), both base-only (within_delta=False). All split
+    predicates %-based and COALESCE-fenced (NULL-safe-routing rule)."""
     is_delta = "COALESCE(doc_id % 5 = 0, FALSE)"
-    half1 = f"{is_delta} AND COALESCE(doc_id % 10 = 0, FALSE)"
-    half2 = f"{is_delta} AND NOT COALESCE(doc_id % 10 = 0, FALSE)"
     base = "NOT COALESCE(o.doc_id % 5 = 0, FALSE)"
-    survivor = f"{base} AND NOT COALESCE(o.doc_id % 3 = 0, FALSE)"
-    return f"""
-WITH {_SQL_SHINGLE_CTES},
-{_minhash_bucket_ctes(num_perm, bands)},
-{probe_block('h1', half1, base)},
-{probe_block('h2', half2, survivor)}
-SELECT dd.doc_id, d.dup_of, d.dup_of IS NULL AS keep
-FROM h1_delta dd LEFT JOIN h1_dups d ON d.id_d = dd.doc_id
-UNION ALL
-SELECT dd.doc_id, d.dup_of, d.dup_of IS NULL AS keep
-FROM h2_delta dd LEFT JOIN h2_dups d ON d.id_d = dd.doc_id
-"""
+    return _minhash_probe_sql(
+        num_perm, bands, threshold,
+        ("h1", f"{is_delta} AND COALESCE(doc_id % 10 = 0, FALSE)", base),
+        (
+            "h2",
+            f"{is_delta} AND NOT COALESCE(doc_id % 10 = 0, FALSE)",
+            f"{base} AND NOT COALESCE(o.doc_id % 3 = 0, FALSE)",
+        ),
+    )
 
 
 def _minhash_stream(spark: SparkSession, sf_dir: str, name: str, *, compact: bool) -> DataFrame:
@@ -1288,9 +1274,8 @@ def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold over md5 hex digits (see _simhash_sql_cte).
     NULL text is excluded on both engines (absent content has no
     signature — adversarial-sweep rule, same as the pair ops)."""
-    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # the 60-bit token-hash fold is the cost; spread an under-split scan
-    return spread_input(docs.select("doc_id", "text")).select(
+    docs = load_table(spark, sf_dir, "documents")
+    return TD._text_entry(docs, "text", "doc_id", tokenize=False).select(
         "doc_id", TD.simhash(F.col("text")).alias("simhash")
     )
 
@@ -2089,9 +2074,7 @@ WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents
 ),
 grams AS (
-  SELECT unnest(list_transform(
-           generate_series(1, greatest(len(t) - 1, 1)),
-           i -> array_to_string(t[i:i+1], ' '))) AS ngram
+  SELECT unnest({_grams_sql(2)}) AS ngram
   FROM toks
 ),
 counted AS (
@@ -2115,11 +2098,9 @@ def q_vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("__toks")
     )
-    toks = F.col("__toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, 2), " "),
-    )
+    # array_join keeps the gram of a NULL-text doc NULL, as the
+    # unfenced oracle does (the default concat_ws would make it '')
+    grams = TD._gram_list(F.col("__toks"), 2, lambda i, w: F.array_join(w, " "))
     return (
         staged.select(F.explode(grams).alias("ngram"))
         .groupBy("ngram")
@@ -5657,26 +5638,18 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DECON_N = 8  # shingle width: long enough to be discriminative
 _DECON_THRESHOLD = 0.5
+# per-doc distinct 8-gram lists of both decontamination oracles
+_SQL_DECON_GRAMS = f"""{_SQL_TOKS},
+grams AS (
+  SELECT doc_id, list_distinct({_grams_sql(_DECON_N)}) AS gs
+  FROM toks
+)"""
 
 
 @_register(
     "doc_decontaminate",
     f"""
-WITH toks AS (
-  -- explicit NULL-text exclusion (ADVICE r7): without it NULL docs only
-  -- drop because DuckDB 1.0.0 list_distinct strips the NULL gram that
-  -- array_to_string(NULL-slice) produces — emergent, not stated, and
-  -- the function family's NULL semantics changed in DuckDB >= 1.1.
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-  WHERE text IS NOT NULL
-),
-grams AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(t) - {_DECON_N - 1}, 1)),
-           i -> array_to_string(t[i:i + {_DECON_N - 1}], ' '))) AS gs
-  FROM toks
-),
+WITH {_SQL_DECON_GRAMS},
 ev AS (SELECT doc_id, unnest(gs) AS shingle FROM grams WHERE doc_id % 10 = 0),
 tr AS (SELECT DISTINCT unnest(gs) AS shingle FROM grams WHERE doc_id % 10 <> 0)
 SELECT ev.doc_id, COUNT(*) AS n_grams,
@@ -5714,19 +5687,7 @@ def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "doc_decontaminate_bloom",
     f"""
-WITH toks AS (
-  -- explicit NULL-text exclusion (ADVICE r7; same note as
-  -- doc_decontaminate's toks CTE).
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-  WHERE text IS NOT NULL
-),
-grams AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(t) - {_DECON_N - 1}, 1)),
-           i -> array_to_string(t[i:i + {_DECON_N - 1}], ' '))) AS gs
-  FROM toks
-),
+WITH {_SQL_DECON_GRAMS},
 ev AS (SELECT DISTINCT unnest(gs) AS shingle FROM grams WHERE doc_id % 10 = 0),
 tg AS (SELECT doc_id, unnest(gs) AS shingle FROM grams WHERE doc_id % 10 <> 0)
 SELECT tg.doc_id, COUNT(*) AS n_grams,
@@ -5787,14 +5748,9 @@ _PASSAGE_LEN = 8  # tokens per repeated-passage window
 @_register(
     "doc_repeated_passages",
     f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents WHERE text IS NOT NULL
-),
+WITH {_SQL_TOKS},
 grams AS (
-  SELECT doc_id, unnest(list_transform(
-    generate_series(1, greatest(len(t) - {_PASSAGE_LEN - 1}, 1)),
-    i -> array_to_string(t[i:i + {_PASSAGE_LEN - 1}], ' '))) AS passage
+  SELECT doc_id, unnest({_grams_sql(_PASSAGE_LEN)}) AS passage
   FROM toks
 )
 SELECT passage, COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_occurrences
@@ -5824,16 +5780,11 @@ def q_doc_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "doc_strip_boilerplate",
     f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents WHERE text IS NOT NULL
-),
+WITH {_SQL_TOKS},
 grams AS (
   SELECT doc_id,
-         unnest(generate_series(1, greatest(len(t) - {_PASSAGE_LEN - 1}, 1))) AS pos,
-         unnest(list_transform(
-           generate_series(1, greatest(len(t) - {_PASSAGE_LEN - 1}, 1)),
-           i -> array_to_string(t[i:i + {_PASSAGE_LEN - 1}], ' '))) AS g
+         unnest({_grams_sql(_PASSAGE_LEN, starts=True)}) AS pos,
+         unnest({_grams_sql(_PASSAGE_LEN)}) AS g
   FROM toks
 ),
 qual AS (
@@ -6216,17 +6167,10 @@ def q_user_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "doc_repetition",
-    """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents WHERE text IS NOT NULL
-),
+    f"""
+WITH {_SQL_TOKS},
 grams AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(len(t) - 1, 1)),
-                        i -> array_to_string(t[i:i + 1], ' ')) AS g2,
-         list_transform(generate_series(1, greatest(len(t) - 2, 1)),
-                        i -> array_to_string(t[i:i + 2], ' ')) AS g3
+  SELECT doc_id, {_grams_sql(2)} AS g2, {_grams_sql(3)} AS g3
   FROM toks
 )
 SELECT doc_id,
@@ -6245,22 +6189,14 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, no explode, no shuffle at any scale); the rounded
     fractions hold to the oracle's identical list formulation."""
     # NULL text excluded on both engines (adversarial-sweep rule).
-    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # Staged split: both gram fractions reference the token array ~4x
     # each, and Catalyst inlines (re-splits) at every reference — the
     # projection is an 8x measured speedup at sf0.1.
-    staged = spread_input(docs.select("doc_id", "text")).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("__toks")
-    )
+    staged = TD._text_entry(load_table(spark, sf_dir, "documents"), "text", "doc_id")
 
     def dup_frac(n):
         # shingles() dedups; repetition needs the raw gram multiset
-        toks = F.col("__toks")
-        count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-        grams = F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
+        grams = TD._gram_list(F.col("__toks"), n)
         return F.round(
             F.lit(1.0)
             - F.size(F.array_distinct(grams)).cast("double") / F.size(grams),

@@ -5,7 +5,10 @@ queries._drain. The BM25 tokenizer and lossless certificate live in
 one function each (similarity.py) and the certificate's oracle in one
 builder (queries.py). The vector-search tiers rank through one per-query
 window (similarity.py), score float cosine in SQL through one builder
-and build their Spark query set in one function (queries.py). Needs no
+and build their Spark query set in one function (queries.py). The
+text-dedup tiers verify exact Jaccard and expand in-row pairs through
+one helper each (textdedup.py); their oracles build word-gram lists and
+MinHash probes through one builder each (queries.py). Needs no
 SparkSession."""
 
 from __future__ import annotations
@@ -263,3 +266,74 @@ def test_vector_query_set_is_built_once():
                 rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
                 sets += [(rel, fn) for fn in _enclosing(_parse(rel), _is_vec_id_query_set)]
     assert sets == [("queries.py", "_ann_query_set")]
+
+
+def _is_array_intersect(node):
+    return _call(node, "array_intersect")
+
+
+def _is_pair_emission(node):
+    # F.slice(<arr>, i + <2>, F.size(<arr>)): the tail after element i
+    if not (_call(node, "slice") and len(node.args) == 3):
+        return False
+    _, start, stop = node.args
+    if not (isinstance(start, ast.BinOp) and isinstance(start.op, ast.Add)):
+        return False
+    two = start.right.args[0] if _call(start.right, "lit") else start.right
+    return isinstance(two, ast.Constant) and two.value == 2 and _call(stop, "size")
+
+
+def _sql_holder(fragment):
+    # ``fragment`` in a string or in any literal part of an f-string
+    return lambda node: isinstance(node, ast.Constant) and fragment in str(node.value)
+
+
+_GRAM_SQL = "generate_series(1, greatest(len(t) -"
+_PROBE_SQL = "JOIN buckets o ON o.band = d.band"
+
+_TEXT_DEDUP_COPIES = '''
+def a(x, y):
+    return F.size(F.array_intersect(x, y)), F.slice(F.col("ids"), i + F.lit(2), F.size("ids"))
+def b(arr):
+    return F.transform(arr, lambda x, i: F.slice(arr, i + 2, F.size(arr)))
+def c(arr):
+    return F.slice(arr, 1, F.size(arr)), F.array_intersect(arr, arr)
+_SQL = """list_transform(generate_series(1, greatest(len(t) - 2, 1)), i -> t[i])
+  JOIN buckets o ON o.band = d.band AND o.key = d.key"""
+@_register("x", f"""generate_series(1, greatest(len(t) - {n}, 1))""")
+def q_x(n):
+    return f"""JOIN buckets o ON o.band = d.band WHERE {n}"""
+'''
+
+
+def test_text_dedup_lint_sees_each_copy():
+    tree = ast.parse(_TEXT_DEDUP_COPIES)
+    assert _enclosing(tree, _is_array_intersect) == ["a", "c"]
+    assert _enclosing(tree, _is_pair_emission) == ["a", "b"]
+    assert _holders(tree, _sql_holder(_GRAM_SQL)) == ["_SQL", "q_x"]
+    assert _holders(tree, _sql_holder(_PROBE_SQL)) == ["_SQL", "q_x"]
+
+
+def test_text_dedup_tiers_verify_through_one_helper():
+    td = _parse("operators/textdedup.py")
+    assert _enclosing(td, _is_array_intersect) == ["_verified_jaccard"]
+
+
+def test_in_row_pairs_are_emitted_by_one_helper():
+    pairs = []
+    for root, dirs, files in os.walk(PKG):
+        dirs[:] = [d for d in dirs if d != "_vendor"]
+        for f in sorted(files):
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
+                pairs += [(rel, fn) for fn in _enclosing(_parse(rel), _is_pair_emission)]
+    assert pairs == [("operators/textdedup.py", "_in_row_pairs")]
+
+
+def test_gram_list_sql_has_one_builder():
+    assert _holders(_parse("queries.py"), _sql_holder(_GRAM_SQL)) == ["_grams_sql"]
+
+
+def test_minhash_probe_sql_has_one_builder():
+    probes = _holders(_parse("queries.py"), _sql_holder(_PROBE_SQL))
+    assert probes == ["_minhash_probe_sql"]

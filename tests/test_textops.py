@@ -147,12 +147,24 @@ def test_shingle_index_counts(spark):
 def test_ppjoin_matches_count_and_prefix_methods(spark, sf_dir):
     """The PPJoin positional filter is a pure candidate PRUNE: results
     must equal the exact count-based and prefix-filter methods
-    pair-for-pair on the real corpus."""
+    pair-for-pair on the real corpus and on the adversarial documents
+    (empty string, whitespace-only, NULL text, exact dup, one repeated
+    token), which no registered query runs through either plan."""
+    import importlib.util
+    import os
+
     from smart_fraud_detection_data_pipeline_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
+    tool = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "make_adversarial_fixtures.py",
+    )
+    spec = importlib.util.spec_from_file_location("make_adversarial_fixtures", tool)
+    fixtures = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(fixtures)
+    adversarial = fixtures.build_tables()["documents"].select(["doc_id", "text"])
 
-    def pairs(method):
+    def pairs(docs, method):
         return {
             (r.id_a, r.id_b, round(r.jaccard, 9))
             for r in TD.ngram_jaccard_pairs(
@@ -160,10 +172,19 @@ def test_ppjoin_matches_count_and_prefix_methods(spark, sf_dir):
             ).collect()
         }
 
-    count_pairs = pairs("count")
-    assert count_pairs  # corpus has planted near-dups
-    assert pairs("ppjoin") == count_pairs
-    assert pairs("prefix") == count_pairs
+    for docs, planted in (
+        (load_table(spark, sf_dir, "documents"), None),
+        (
+            spark.createDataFrame(adversarial.to_pylist(), "doc_id bigint, text string"),
+            {(5, 6, 1.0), (5, 7, round(11 / 13, 9)), (6, 7, round(11 / 13, 9))},
+        ),
+    ):
+        count_pairs = pairs(docs, "count")
+        assert count_pairs  # both inputs have planted near-dups
+        if planted is not None:
+            assert count_pairs == planted
+        assert pairs(docs, "ppjoin") == count_pairs
+        assert pairs(docs, "prefix") == count_pairs
 
 
 def test_ppjoin_positional_bound_is_safe_on_edge_pairs(spark):
