@@ -84,9 +84,6 @@ def _stream_files(spark: SparkSession, src: str) -> DataFrame:
     )
 
 
-_STATE_PARTITIONS = 8
-
-
 def _drain(
     spark: SparkSession,
     stream: DataFrame,
@@ -94,7 +91,7 @@ def _drain(
     *,
     output_mode: str = "append",
     stateful: bool = False,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
+    transform: Callable[[DataFrame, int], DataFrame] | None = None,
     out_schema: str | None = None,
 ) -> DataFrame:
     """Run the bounded streaming query ``stream`` to completion and read
@@ -109,38 +106,28 @@ def _drain(
     read-back keeps that column for the caller's keep-last or
     last-batch-only step.
 
-    A ``stateful`` query runs with spark.sql.shuffle.partitions set to
-    _STATE_PARTITIONS. Each state-store partition is a store instance
-    loaded+committed EVERY micro-batch, so state partition count is a
-    first-class sizing knob: match it to expected state volume per
-    core, not the batch default (measured on stream_stream_join at
-    sf0.1: 32→8 partitions is 11 s → 3 s; on a real cluster you'd size
-    UP with the keyspace instead). The previous value is restored, so
-    batch queries keep the session default.
+    A ``stateful`` query keeps its state in sinks.STATE_PARTITIONS
+    store partitions (``start_foreach_batch(stateful=True)``, the one
+    place the count is set); batch queries keep the session default.
 
-    ``transform`` maps each micro-batch before it is written (the probe
-    queries, which look every batch up in a persisted index); its
-    output schema ``out_schema`` types the read-back when no batch
-    wrote anything."""
+    ``transform`` maps each micro-batch, with its batch id, before it is
+    written (the probe queries, which look every batch up in a persisted
+    index); its output schema ``out_schema`` types the read-back when no
+    batch wrote anything. It must not run an action on the batch: every
+    action executes the micro-batch again."""
     tmp = scratch_dir(f"{name}_")
     out = os.path.join(tmp, "out")
     reemit = output_mode != "append"
     write = (
         SK.reemit_parquet_sink(out) if reemit else SK.parquet_batch_sink(out, partitions=None)
     )
-    handler = write if transform is None else lambda batch, i: write(transform(batch), i)
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    if stateful:
-        spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
-    try:
-        SK.await_or_raise(
-            SK.start_foreach_batch(
-                stream, handler, os.path.join(tmp, "ckpt"),
-                output_mode=output_mode, query_name=name,
-            )
+    handler = write if transform is None else lambda batch, i: write(transform(batch, i), i)
+    SK.await_or_raise(
+        SK.start_foreach_batch(
+            stream, handler, os.path.join(tmp, "ckpt"),
+            output_mode=output_mode, query_name=name, stateful=stateful,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    )
     like = stream if transform is None else spark.createDataFrame([], out_schema)
     return SK.read_or_empty(spark, out, like, with_batch_id=reemit)
 
@@ -152,15 +139,21 @@ def _drain(
 #: last driver certification is oldest (from the CORRECTNESS_rNN.json
 #: artifacts).
 _DRIVER_ROTATION = (
+    # --- the stateful streams on one state partition, and the
+    # compaction stream routed on its batch id ---
+    "dedup_streaming", "user_spend_trends_streaming",
+    "user_running_totals_streaming", "session_windows_streaming",
+    "stream_stream_join", "stream_stream_join_bucketed",
+    "stream_stream_left_join", "stream_stream_left_join_bucketed",
+    "stream_windowed_rollup", "dedup_streaming_compaction",
     # --- text-dedup tiers on the shared entry, gram list, df cut,
     # verifier, pair expansion and signatures, their oracles on the
     # shared toks/gram/Jaccard/probe builders, and the guarded
     # broadcast's three users ---
     "doc_ngram_jaccard", "doc_ngram_jaccard_capped", "doc_minhash_lsh",
     "doc_dedup_incremental", "doc_dedup_index_compaction",
-    "dedup_incremental_streaming", "dedup_streaming_compaction",
-    "doc_simhash", "doc_simhash_pairs", "doc_decontaminate",
-    "doc_decontaminate_bloom", "doc_repeated_passages",
+    "dedup_incremental_streaming", "doc_simhash", "doc_simhash_pairs",
+    "doc_decontaminate", "doc_decontaminate_bloom", "doc_repeated_passages",
     "doc_strip_boilerplate", "doc_winnow_pairs", "doc_tfidf_cosine_pairs",
     "doc_repetition", "vocab_top_ngrams", "doc_dup_components",
     "doc_clean_corpus", "vocab_cms_counts", "corpus_training_export",
@@ -176,13 +169,8 @@ _DRIVER_ROTATION = (
     "doc_bm25_topk", "doc_bm25_topk_pruned", "doc_bm25_index_incremental",
     "asof_last_purchase", "asof_last_purchase_bucketed",
     "error_burst_window", "error_burst_window_bucketed", "session_windows",
-    "fraud_enrich_streaming", "dedup_streaming",
-    "user_spend_trends_streaming", "user_running_totals_streaming",
-    "session_windows_streaming", "stream_stream_join",
-    "stream_stream_join_bucketed", "stream_stream_left_join",
-    "stream_stream_left_join_bucketed", "stream_windowed_rollup",
-    "warehouse_load", "warehouse_compaction", "time_layout_scan",
-    "zorder_layout_scan",
+    "fraud_enrich_streaming", "warehouse_load", "warehouse_compaction",
+    "time_layout_scan", "zorder_layout_scan",
 )
 
 
@@ -1157,17 +1145,21 @@ def _minhash_stream(spark: SparkSession, sf_dir: str, name: str, *, compact: boo
     dsrc = os.path.join(tmp, "delta_src")
     half = F.coalesce((F.col("doc_id") % 10) == 0, F.lit(False))
     delta.where(half).coalesce(1).write.mode("append").parquet(dsrc)
+    # the stream takes staged files oldest first: date the first half a
+    # second back so it is batch 0 however close the two writes land
+    for f, mtime_ns, _ in dataset_files(spark, dsrc):
+        os.utime(f, ns=(mtime_ns - 10**9,) * 2)
     delta.where(~half).coalesce(1).write.mode("append").parquet(dsrc)
 
-    def probe(batch):
-        # with compaction, the batch's content (which half it holds)
-        # picks the index version
-        post_compaction = compact and batch.where(half).isEmpty()
+    def probe(batch, batch_id):
+        # with compaction, batch 1 (the second half) probes the
+        # compacted snapshot; routing on the id, not on the batch's
+        # content, keeps each micro-batch to one execution
         return TD.incremental_minhash_dedup(
             None,
             batch,
             threshold=0.5,
-            index=compacted if post_compaction else index,
+            index=compacted if compact and batch_id > 0 else index,
             within_delta=False,
         )
 
@@ -1191,10 +1183,11 @@ def q_dedup_streaming_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a second-half doc whose only near-dup was retracted flips from
     rejected to admitted mid-stream — the flip the hash gate certifies
     (plus a constructed-fixture flip test in tests/test_textops.py).
-    Batch→index routing is decided by batch CONTENT (each staged file
-    is one %-rule half), so the output is independent of file arrival
-    order; within each probe within_delta=False keeps it independent
-    of micro-batch boundaries."""
+    Batch→index routing is decided by batch id (each staged file is
+    one %-rule half, and the first half is dated older so it is always
+    batch 0), which leaves each micro-batch one execution; within each
+    probe within_delta=False keeps the output independent of
+    micro-batch boundaries."""
     return _minhash_stream(spark, sf_dir, "dedup_streaming_compaction", compact=True)
 
 
@@ -4912,7 +4905,7 @@ def q_embed_ann_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _stream_files(spark, qsrc),
         "embed_ann_streaming",
-        transform=lambda batch: ivf_probe(index, batch, cents, k=10, nprobe=4),
+        transform=lambda batch, _: ivf_probe(index, batch, cents, k=10, nprobe=4),
         out_schema=out_schema,
     )
 

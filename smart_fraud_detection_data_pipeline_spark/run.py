@@ -60,6 +60,7 @@ from smart_fraud_detection_data_pipeline_spark.operators.quality import (
     swap_write,
 )
 from smart_fraud_detection_data_pipeline_spark.sources.tables import (
+    dataset_files,
     parquet_num_rows,
     read_parquet,
 )
@@ -104,8 +105,10 @@ def _log_mart(job: str, path: str) -> None:
 
 def _read_processed(spark: SparkSession, warehouse: str, since: str | None) -> DataFrame:
     path = _processed_path(warehouse)
-    if not os.path.exists(path):
-        _log(f"ERROR: processed prefix {path} does not exist — run --job ingest "
+    # a sink whose partitioned appends all had zero rows leaves only
+    # _SUCCESS behind: no data file, so the same as no prefix
+    if not dataset_files(spark, path):
+        _log(f"ERROR: processed prefix {path} holds no data — run --job ingest "
              "(or point the streaming sink at it) first")
         raise SystemExit(2)
     df = read_parquet(spark, path)

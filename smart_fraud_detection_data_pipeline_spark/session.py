@@ -8,6 +8,11 @@ UTC ISO strings — transaction_producer.py:21), Arrow for any Pandas UDF
 exchange, and an explicit shuffle-partition count sized to the local test
 harness (on a real cluster this is overridden per-job or left to AQE's
 ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
+
+One partition per core is the BATCH default only. AQE does not run in
+stateful streams, whose shuffle-partition count is the state-store
+partition count, fixed by the checkpoint: streams take it from
+``streaming.sinks.STATE_PARTITIONS`` (``start_foreach_batch``).
 """
 
 from __future__ import annotations

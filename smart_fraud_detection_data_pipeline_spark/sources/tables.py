@@ -160,15 +160,17 @@ def _local_files(path: str) -> list[tuple[str, int, int]]:
 def dataset_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
     """(file, mtime_ns, size) of every data file Spark reads under
     ``path``, in sorted order, skipping `_SUCCESS`, `_temporary/` and
-    other hidden names at every level as Spark's file index does. Local
-    paths (no scheme, or ``file:``) are listed directly; any other
-    scheme (hdfs://, s3a://) through the Hadoop FileSystem of
-    ``spark``'s session."""
+    other hidden names at every level as Spark's file index does; a
+    missing path has none. Local paths (no scheme, or ``file:``) are
+    listed directly; any other scheme (hdfs://, s3a://) through the
+    Hadoop FileSystem of ``spark``'s session."""
     local = _local(path)
     if local is not None:
         return _local_files(local)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return []
     base = fs.makeQualified(jpath).toUri().getPath()
     out = []
     it = fs.listFiles(jpath, True)

@@ -112,7 +112,9 @@ def run_pipeline(
     ``transactions`` must be a STREAMING DataFrame in the reference
     transaction shape. Outputs land under out_dir/{fraud_records,
     user_spend_trends,category_trends}; checkpoints under
-    out_dir/checkpoints/<name> (S10).
+    out_dir/checkpoints/<name> (S10). The two trend aggregations keep
+    their state in sinks.STATE_PARTITIONS store partitions, in both
+    modes.
     """
     if mode not in ("idiomatic", "faithful"):
         raise ValueError(f"unknown mode: {mode}")
@@ -158,6 +160,7 @@ def run_pipeline(
             output_mode=output_mode,
             available_now=available_now,
             query_name=name,
+            stateful=True,
         )
         for name, trends in (("user_spend_trends", user_t), ("category_trends", cat_t))
     ]

@@ -4,9 +4,10 @@ Reference parity:
 - S7  partitioned parquet sink: append, partitionBy(payment_method,
       tx_year, tx_month, tx_day) (spark.py:229-232)
 - S8  unpartitioned parquet sinks for the trend tables (spark.py:242-252)
-- S9/ST6 foreachBatch handlers with an empty-batch guard (spark.py:209-254;
-      the reference uses count()>0 — we use isEmpty(), which stops at the
-      first row instead of scanning the batch twice)
+- S9/ST6 foreachBatch handlers (spark.py:209-254). The reference guards
+      each write with count()>0, which executes the batch twice; here every
+      batch is written unconditionally, once, and the empty-output guard
+      sits on the read side (`read_or_empty`)
 - S10 one checkpoint dir per query (spark.py:273-285)
 - S4  the Kafka-consumer micro-batch CSV sink: Hive-style
       year=/month=/day= layout keyed on PROCESSING date (consumer.py:
@@ -27,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parquet
+from smart_fraud_detection_data_pipeline_spark.sources.tables import dataset_files, read_parquet
 
 FRAUD_PARTITIONS = ("payment_method", "tx_year", "tx_month", "tx_day")
 
@@ -37,30 +38,21 @@ def parquet_batch_sink(
 ) -> Callable[[DataFrame, int], None]:
     """S9 handler: append parquet per micro-batch (spark.py:209-232).
 
-    The empty-batch guard exists because a zero-row PARTITIONED write
-    leaves a directory with no readable footers (schema inference then
-    fails — adversarial-sweep rule), so the partitioned path keeps an
-    isEmpty() probe (limit-1, replacing the reference's count()>0 which
-    executed the batch plan twice in full).
-
-    The UNPARTITIONED path writes unconditionally: a zero-row append
-    writes a schema-bearing metadata-only parquet file that reads back
-    fine, and in foreachBatch EVERY action re-executes the incremental
-    batch plan — for a stateful query (stream-stream join state scans,
-    window-agg state commits) the probe alone cost as much as the write
-    (r14 measured: the probe job on a 4-batch outer interval join ran
-    the full 19-task plan per batch, ~45% of the query's executor
-    time). One execution per batch is the §4/§5 fix that transfers to
-    production foreachBatch pipelines unchanged.
+    Every batch is written unconditionally, so each micro-batch executes
+    once. In foreachBatch EVERY action re-executes the incremental batch
+    plan: an emptiness probe before the write re-planned the batch,
+    rebuilt the fraud stream's dimension broadcasts and decoded up to
+    4,096 rows of it again (a 12,000-row trigger reported 16,096 input
+    rows), and on a stateful query it re-ran the state scans. A zero-row
+    UNPARTITIONED append writes a schema-bearing footer-only file; a
+    zero-row PARTITIONED append writes no data file at all, only
+    ``_SUCCESS``, which a plain read cannot infer a schema from. Readers
+    of this sink therefore go through `read_or_empty` (or treat a prefix
+    with no data files as missing, as ``run._read_processed`` does).
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if partitions:
-            if batch_df.isEmpty():
-                return
-            batch_df.write.mode("append").partitionBy(*partitions).parquet(path)
-        else:
-            batch_df.write.mode("append").parquet(path)
+        batch_df.write.mode("append").partitionBy(*(partitions or ())).parquet(path)
 
     return handle
 
@@ -92,16 +84,16 @@ def read_or_empty(
     spark, path: str, like: DataFrame, *, with_batch_id: bool = False
 ) -> DataFrame:
     """Read a foreachBatch parquet output dir, or return an empty frame
-    with `like`'s schema when NO batch ever wrote (the empty-batch guard
-    means a query whose every micro-batch was empty leaves no directory
-    behind — a plain read then dies with PATH_NOT_FOUND, found by the
-    adversarial sweep). `like` is the streaming frame the sink consumed,
-    so schemas match the non-empty case exactly. `with_batch_id` adds
-    the long column `reemit_parquet_sink` stamps, so readers of that
-    sink get an identical schema in the empty case too."""
-    import os
-
-    if not os.path.exists(path):
+    with `like`'s schema when it holds no data file: a query that never
+    ran a batch leaves no directory (a plain read dies with
+    PATH_NOT_FOUND, found by the adversarial sweep), and one whose
+    partitioned appends all had zero rows leaves only ``_SUCCESS`` (a
+    plain read dies with UNABLE_TO_INFER_SCHEMA). `like` is the
+    streaming frame the sink consumed, so schemas match the non-empty
+    case exactly. `with_batch_id` adds the long column
+    `reemit_parquet_sink` stamps, so readers of that sink get an
+    identical schema in the empty case too."""
+    if not dataset_files(spark, path):
         schema = like.schema
         if with_batch_id:
             from pyspark.sql.types import LongType
@@ -109,6 +101,41 @@ def read_or_empty(
             schema = schema.add("batch_id", LongType())
         return spark.createDataFrame([], schema)
     return read_parquet(spark, path)
+
+
+#: State-store partitions of every stateful stream (aggregation,
+#: dropDuplicates, stream-stream join, session window, grouped-map
+#: state). Each partition is one store instance that every trigger
+#: loads and commits, with its checksum files, in its own task, which
+#: also deserializes the Hadoop conf and generates its projections. At
+#: the data sizes this engine is tested and benchmarked on that fixed
+#: cost per partition outweighs the rows, so the count is sized to
+#: state, not to cores. A/B on a 4-core host:
+#:
+#: - the perfbench ``stream`` workload (run_pipeline, 4 x 12,000 rows),
+#:   CPU seconds of one drain: 8 partitions 42.2 s (n=1), 4 (the old
+#:   per-core default) median 41.5 s (n=9), 2 34.4 s (n=4), 1 31.1 s
+#:   (n=5). The RocksDB provider with changelog checkpointing bought
+#:   nothing: 42.0 s (n=1) at 4 partitions, and over 3 alternating
+#:   pairs at 4 partitions a median 3.12 s CPU per trigger, the same
+#:   as the default HDFS-backed store.
+#: - the 9 stateful catalog queries, 2 warm rounds each after a cold
+#:   one; row counts identical at every count:
+#:
+#:   ==== ======== ========= ========= =========== ===========
+#:   sf   metric   1         2         4           8 (old)
+#:   ==== ======== ========= ========= =========== ===========
+#:   0.01 CPU (s)  50.4-58.4 56.8-66.7 79.1-90.0   122.5-123.7
+#:   0.01 wall (s) 30.5-39.4 28.9-32.3 34.6-41.5   46.2-52.0
+#:   0.1  CPU (s)  74.0-80.6 81.1-87.8 108.9-114.1 150.9-160.6
+#:   0.1  wall (s) 41.5-44.9 37.2-38.6 41.1-41.8   55.8-60.1
+#:   ==== ======== ========= ========= =========== ===========
+#:
+#: A stream clones its session when it starts and records the count in
+#: its checkpoint's offsets log; a restart reuses the recorded count
+#: whatever the session says. A deployment whose keyspace outgrows one
+#: partition raises this constant and starts on a fresh checkpoint.
+STATE_PARTITIONS = 1
 
 
 def start_foreach_batch(
@@ -119,11 +146,17 @@ def start_foreach_batch(
     output_mode: str = "append",
     available_now: bool = True,
     query_name: str | None = None,
+    stateful: bool = False,
 ) -> StreamingQuery:
     """S9/S10: foreachBatch writeStream with a checkpoint dir.
 
     available_now=True processes all pending input then stops — bounded
     runs for tests/backfills; pass False for a continuous query.
+
+    A ``stateful`` query starts with spark.sql.shuffle.partitions set to
+    STATE_PARTITIONS. The stream takes its own copy of the session conf
+    when it starts, so the session's value is restored right after
+    ``start()`` and batch queries keep the session default.
     """
     writer: DataStreamWriter = (
         df.writeStream.outputMode(output_mode)
@@ -134,7 +167,15 @@ def start_foreach_batch(
         writer = writer.queryName(query_name)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    if not stateful:
+        return writer.start()
+    conf = df.sparkSession.conf
+    saved = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        return writer.start()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def await_or_raise(q: StreamingQuery, timeout_sec: float | None = None) -> None:

@@ -3,7 +3,9 @@ read that gives Spark no schema runs a schema-inference job. Catalog
 streaming queries start, await and read back their sinks only through
 queries._drain. The BM25 tokenizer and lossless certificate live in
 one function each (similarity.py) and the certificate's oracle in one
-builder (queries.py). The vector-search tiers rank through one per-query
+builder (queries.py). Only the session builder (the batch default) and
+start_foreach_batch (the state-partition count) set
+spark.sql.shuffle.partitions. The vector-search tiers rank through one per-query
 window (similarity.py), score float cosine in SQL through one builder
 and build their Spark query set in one function (queries.py). The
 text-dedup tiers verify exact Jaccard and expand in-row pairs through
@@ -100,6 +102,54 @@ def test_catalog_streams_drain_through_one_helper():
                 if name in drain_steps:
                     callers.add(getattr(fn, "name", "<lambda>"))
     assert callers == {"_drain"}
+
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _sets_shuffle_partitions(node):
+    # <x>.set("spark.sql.shuffle.partitions", ...),
+    # <x>.config("spark.sql.shuffle.partitions", ...) or
+    # <x>["spark.sql.shuffle.partitions"] = ...
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        key = node.args[0] if node.args else None
+        return node.func.attr in ("set", "config") and (
+            isinstance(key, ast.Constant) and key.value == _SHUFFLE_PARTITIONS
+        )
+    return (
+        isinstance(node, ast.Subscript)
+        and isinstance(node.ctx, ast.Store)
+        and isinstance(node.slice, ast.Constant)
+        and node.slice.value == _SHUFFLE_PARTITIONS
+    )
+
+
+def test_shuffle_partition_lint_sees_each_setter():
+    src = (
+        "def _drain(spark, n):\n"
+        "    saved = spark.conf.get('spark.sql.shuffle.partitions')\n"
+        "    spark.conf.set('spark.sql.shuffle.partitions', str(n))\n"
+        "def b(builder):\n"
+        "    return builder.config('spark.sql.shuffle.partitions', '4')\n"
+        "def c(conf):\n"
+        "    conf['spark.sql.shuffle.partitions'] = '4'\n"
+        "    return conf['spark.sql.shuffle.partitions'], conf.set('other', '1')\n"
+    )
+    assert _enclosing(ast.parse(src), _sets_shuffle_partitions) == ["_drain", "b", "c"]
+
+
+def test_state_partitions_are_set_in_one_place():
+    """Streams set spark.sql.shuffle.partitions only in
+    start_foreach_batch (to STATE_PARTITIONS, for a stateful stream);
+    the session builder sets the batch default."""
+    sites = set()
+    for root, dirs, files in os.walk(PKG):
+        dirs[:] = [d for d in dirs if d != "_vendor"]
+        for f in files:
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
+                sites |= {(rel, fn) for fn in _enclosing(_parse(rel), _sets_shuffle_partitions)}
+    assert sites == {("session.py", "get_spark"), ("streaming/sinks.py", "start_foreach_batch")}
 
 
 def _parse(module):

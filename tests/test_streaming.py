@@ -749,3 +749,135 @@ def test_rocksdb_state_store_provider_runs_stateful_agg(spark, tmp_path):
         ).collect()
     }
     assert got == batch and len(got) == 2
+
+
+def _shuffle_partitions_in_offsets(checkpoint):
+    """The shuffle-partition count a stream recorded in its first
+    offsets-log entry: the count its state is partitioned by for the
+    life of the checkpoint."""
+    import json
+
+    with open(os.path.join(checkpoint, "offsets", "0"), encoding="utf-8") as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]["spark.sql.shuffle.partitions"]
+
+
+def _input_rows(q):
+    return [p.numInputRows for p in q.recentProgress]
+
+
+def _staged_file_rows(spark, src):
+    """Rows of each staged file, oldest first: the order a file stream
+    with maxFilesPerTrigger=1 takes them in."""
+    files = sorted(tables.dataset_files(spark, src), key=lambda f: (f[1], f[0]))
+    return [tables.parquet_num_rows(f) for f, _, _ in files]
+
+
+@pytest.mark.parametrize("mode", ["idiomatic", "faithful"])
+def test_pipeline_trends_pin_state_partitions_and_run_each_batch_once(
+    spark, staged_stream_dir, tmp_path, mode
+):
+    """Both trend aggregations record STATE_PARTITIONS in their
+    checkpoint while the session keeps its own count, and the fraud
+    sink executes each micro-batch once: every trigger reads exactly
+    the rows of its staged file."""
+    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
+
+    users, products = _dims(spark)
+    out = str(tmp_path / "out")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != str(SK.STATE_PARTITIONS)
+    qs = P.run_pipeline(
+        spark, _stream(spark, staged_stream_dir), users, products, out, mode=mode
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    for q in qs.all():
+        SK.await_or_raise(q, 120)
+    for name in ("user_spend_trends", "category_trends"):
+        ckpt = os.path.join(out, "checkpoints", name)
+        assert _shuffle_partitions_in_offsets(ckpt) == str(SK.STATE_PARTITIONS)
+    rows = _staged_file_rows(spark, staged_stream_dir)
+    assert len(rows) == 2 and sum(rows) == 6000
+    assert _input_rows(qs.fraud) == rows
+
+
+def test_stateful_drain_pins_state_partitions(spark, tmp_path, monkeypatch):
+    """A stateful catalog drain records STATE_PARTITIONS in its
+    checkpoint and leaves the session's count as it was."""
+    from smart_fraud_detection_data_pipeline_spark import queries as Q
+    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
+
+    d = str(tmp_path / "in")
+    for lo in (0, 30):
+        spark.range(lo, lo + 30, 1, 1).select(
+            (F.col("id") % 7).alias("k"), F.col("id").alias("v")
+        ).write.mode("append").parquet(d)
+    started, real_start = [], SK.start_foreach_batch
+
+    def start(*args, **kw):
+        started.append((args[2], kw.get("stateful")))
+        return real_start(*args, **kw)
+
+    monkeypatch.setattr(Q.SK, "start_foreach_batch", start)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    got = Q._drain(
+        spark, Q._stream_files(spark, d).dropDuplicates(["k"]), "drain_state_test", stateful=True
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert sorted(r.k for r in got.collect()) == list(range(7))
+    [(ckpt, stateful)] = started
+    assert stateful and _shuffle_partitions_in_offsets(ckpt) == str(SK.STATE_PARTITIONS)
+
+
+def test_dedup_streaming_compaction_reads_each_batch_once(spark, sf_dir, monkeypatch):
+    """The compaction stream routes its probe on the batch id, so each
+    trigger reads exactly the rows of its staged file, once."""
+    from smart_fraud_detection_data_pipeline_spark import queries as Q
+    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
+
+    started, real_start = [], SK.start_foreach_batch
+
+    def start(*args, **kw):
+        started.append(real_start(*args, **kw))
+        return started[-1]
+
+    monkeypatch.setattr(Q.SK, "start_foreach_batch", start)
+    Q.q_dedup_streaming_compaction(spark, sf_dir).collect()
+    [q] = started
+    src = q.recentProgress[0].sources[0].description
+    src = re.search(r"FileStreamSource\[(.*)\]", src).group(1)
+    rows = _staged_file_rows(spark, src)
+    assert len(rows) == 2 and sum(rows) > 0
+    assert _input_rows(q) == rows
+
+
+def test_fraud_sink_reads_back_after_zero_row_first_file(spark, tmp_path):
+    """A zero-row partitioned append leaves only _SUCCESS behind. The
+    fraud output then reads back through read_or_empty as an empty frame
+    with the streaming frame's schema, and, once a later file brings
+    rows, as exactly those rows."""
+    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
+
+    users, products = _dims(spark)
+    d, out = str(tmp_path / "in"), str(tmp_path / "out")
+    tx = synthetic_transactions(spark, 600)
+    tx.limit(0).coalesce(1).write.mode("append").parquet(d)
+    fraud = os.path.join(out, "fraud_records")
+
+    def drain():
+        stream = _stream(spark, d)
+        qs = P.run_pipeline(spark, stream, users, products, out)
+        for q in qs.all():
+            SK.await_or_raise(q, 120)
+        like = P.enriched_stream(stream, users, products)
+        return qs.fraud, like, SK.read_or_empty(spark, fraud, like)
+
+    q, like, got = drain()
+    assert _input_rows(q) == [0]
+    assert os.path.isdir(fraud) and tables.dataset_files(spark, fraud) == []
+    assert got.count() == 0 and got.schema == like.schema
+
+    tx.coalesce(1).write.mode("append").parquet(d)
+    q, like, got = drain()
+    assert _input_rows(q) == [600]
+    assert got.count() == 600
+    assert sorted(got.columns) == sorted(like.columns)
