@@ -1,9 +1,9 @@
 """Arrow GROUPED_AGG pandas UDFs — custom aggregates beyond builtins.
 
 Completes the engine's Arrow UDF surface (mapInPandas for batch
-transforms, applyInPandasWithState / transformWithState for streaming
-state, UDTF for table functions, and here SCALAR-to-GROUPED_AGG for
-custom reductions). Builtins first, always — a pandas aggregate ships
+transforms, applyInPandasWithState for streaming state, UDTF for
+table functions, and here SCALAR-to-GROUPED_AGG for custom
+reductions). Builtins first, always — a pandas aggregate ships
 each group's values through Arrow — but a robust statistic with no
 Catalyst equivalent (trimmed mean, winsorized variance, custom M-
 estimators) is the legitimate use.

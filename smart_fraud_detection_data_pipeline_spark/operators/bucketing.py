@@ -17,7 +17,7 @@ Rules that make it work (all encoded in `write_bucketed`):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -39,9 +39,3 @@ def write_bucketed(
         writer = writer.sortBy(bucket_col)
     writer.saveAsTable(table)
 
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key (shuffle-free)."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)

@@ -62,10 +62,3 @@ def dedup_keep_last(
         .drop("__rn")
     )
 
-
-def dedup_exact(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (hash-groupBy). With ``keys=None`` the whole
-    row is the key. Survivor is arbitrary — use only when rows with equal
-    keys are interchangeable; otherwise use `dedup_keep_last`.
-    """
-    return df.dropDuplicates(list(keys) if keys else None)

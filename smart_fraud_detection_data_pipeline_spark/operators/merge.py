@@ -131,85 +131,6 @@ def merge_upsert_partitioned(
     return untouched.unionByName(merged)
 
 
-def merge_into_sql(
-    target_table: str,
-    source_view: str,
-    keys: Sequence[str],
-    columns: Sequence[str],
-    *,
-    delete_predicate: str | None = None,
-) -> str:
-    """The lakehouse form of this module's upsert: an ANSI ``MERGE
-    INTO`` statement with the loaders' exact WHEN structure (matched →
-    update all non-key columns, not matched → insert all; ref
-    load_fraud_records...py:264-280). Spark parses and executes this
-    against any TableCatalog whose tables support row-level operations
-    (Delta, Iceberg, Unity) — there the engine gets file-skipping and
-    copy-on-write for free, which is why this is the production door
-    and `merge_upsert` the run-anywhere emulation of the same
-    semantics. Key equality is null-safe (<=>), matching the
-    emulation's eqNullSafe.
-
-    ``delete_predicate`` (a SQL boolean over the ``s`` alias, e.g.
-    ``s.is_del``) emits the three-clause tombstone form — ``WHEN
-    MATCHED AND <pred> THEN DELETE`` before the update clause, and the
-    insert clause guarded with ``AND NOT <pred>`` so an unmatched
-    tombstone inserts nothing — mirroring merge_upsert's
-    ``delete_col`` emulation exactly."""
-    non_keys = [c for c in columns if c not in keys]
-    if not non_keys:
-        raise ValueError("MERGE needs at least one non-key column to update")
-    on = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-    sets = ", ".join(f"t.{c} = s.{c}" for c in non_keys)
-    cols = ", ".join(columns)
-    vals = ", ".join(f"s.{c}" for c in columns)
-    # COALESCE fences on both clauses: a NULL tombstone flag must mean
-    # "not a tombstone" (update / insert as usual), exactly like the
-    # emulation's coalesce — a bare NULL predicate would silently
-    # swallow the insert under three-valued logic.
-    delete = (
-        f"WHEN MATCHED AND COALESCE({delete_predicate}, FALSE) THEN DELETE "
-        if delete_predicate
-        else ""
-    )
-    not_matched = (
-        f"WHEN NOT MATCHED AND NOT COALESCE({delete_predicate}, FALSE) THEN"
-        if delete_predicate
-        else "WHEN NOT MATCHED THEN"
-    )
-    return (
-        f"MERGE INTO {target_table} t USING {source_view} s ON {on} "
-        f"{delete}"
-        f"WHEN MATCHED THEN UPDATE SET {sets} "
-        f"{not_matched} INSERT ({cols}) VALUES ({vals})"
-    )
-
-
-def merge_upsert_v2(
-    spark,
-    target_table: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    *,
-    order_by: Sequence[str] | None = None,
-) -> None:
-    """Execute the MERGE against a v2 catalog table (flag-gated like the
-    Kafka connector: the test env ships no Delta/Iceberg catalog, so
-    only statement construction and the clean failure mode are testable
-    here). The source is deduped keep-last first — multi-match MERGE is
-    an error, and the reference loaders dedup for the same reason."""
-    if order_by:
-        source = dedup_keep_last(source, keys, order_by)
-    view = "__merge_source"
-    source.createOrReplaceTempView(view)
-    try:
-        spark.sql(
-            merge_into_sql(target_table, view, keys, source.columns)
-        )
-    finally:
-        spark.catalog.dropTempView(view)
-
-
 def merge_additive(
     target: DataFrame,
     delta: DataFrame,

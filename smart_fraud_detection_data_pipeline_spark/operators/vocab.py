@@ -38,7 +38,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smart_fraud_detection_data_pipeline_spark.operators.skew import guarded_broadcast, spread_input
+from smart_fraud_detection_data_pipeline_spark.operators.skew import guarded_broadcast
+from smart_fraud_detection_data_pipeline_spark.operators.textdedup import _text_entry
 
 
 def heavy_hitter_tokens(
@@ -183,13 +184,11 @@ def cms_token_estimates(
     counted once, and above ``broadcast_limit`` rows the semi-join
     falls back to a shuffle join on the token key instead of a
     driver-side OOM. Same output either way."""
-    # spread an under-split scan first: three consumers (sketch, probe,
+    # the entry spreads an under-split scan: three consumers (sketch, probe,
     # exact recount) each re-derive the token stream from the scan, so a
     # single-split file serializes 3× the tokenize+md5 work (no-op at
     # production split counts)
-    toks = spread_input(
-        df.where(F.col(text_col).isNotNull()).select(F.col(id_col), F.col(text_col))
-    ).select(
+    toks = _text_entry(df, text_col, id_col, tokenize=False).select(
         F.col(id_col),
         F.explode(
             F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
@@ -588,13 +587,9 @@ def bpe_apply(
     collect+sort rule)."""
     sep = BPE_SEP
     # the chained per-word replaces below run map-side straight off the
-    # scan; spread an under-split input first (no-op at production)
+    # scan; the entry spreads an under-split input (no-op at production)
     words = (
-        spread_input(
-            df.where(F.col(text_col).isNotNull()).select(
-                F.col(id_col), F.col(text_col)
-            )
-        )
+        _text_entry(df, text_col, id_col, tokenize=False)
         .select(
             F.col(id_col),
             F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(

@@ -6348,11 +6348,10 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted concat) because Spark's array_distinct and DuckDB's
     list_distinct order survivors differently. NULL text is excluded
     on both engines (adversarial-sweep rule)."""
-    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # spread an under-split scan before the per-doc md5 folds (no-op at
-    # production split counts; measured 3.6 s → 0.6 s at sf0.1)
-    docs = spread_input(docs.select("doc_id", "text"))
-    hashed = docs.select("doc_id", TS.kgram_hashes(F.col("text"), 24).alias("__h"))
+    docs = load_table(spark, sf_dir, "documents")
+    hashed = TD._text_entry(docs, "text", "doc_id", tokenize=False).select(
+        "doc_id", TS.kgram_hashes(F.col("text"), 24).alias("__h")
+    )
     sel = hashed.select("doc_id", TS.winnow(F.col("__h"), 12).alias("fps"))
     return sel.select(
         "doc_id",

@@ -8,11 +8,12 @@ evolve per event. Structured Streaming's escape hatch for that is
 a persistent GroupState, checkpointed with the query.
 
 `user_running_totals` maintains per-user lifetime spend/count and emits
-the updated totals each micro-batch. Money accumulates in integer
-CENTS inside the state — float accumulation order across micro-batches
-would otherwise make stream totals drift from a batch recompute (the
-same reasoning as functions.numeric's decimal sums; the equivalence
-test asserts exact equality).
+the updated totals each micro-batch; it is the engine's one custom
+keyed-state path, certified as `user_running_totals_streaming`. Money
+accumulates in integer CENTS inside the state — float accumulation
+order across micro-batches would otherwise make stream totals drift
+from a batch recompute (the same reasoning as functions.numeric's
+decimal sums; the equivalence test asserts exact equality).
 
 Scale notes: state lives in the executor state store partitioned by the
 group key — the same shuffle the aggregation would pay. State size is
@@ -24,7 +25,6 @@ idle keys when the key space is unbounded.
 from __future__ import annotations
 
 from collections.abc import Iterator
-import os
 
 import pandas as pd
 
@@ -84,79 +84,3 @@ def user_running_totals(transactions: DataFrame) -> DataFrame:
         )
     )
 
-
-def have_tws_runtime() -> bool:
-    """transformWithState's Python worker speaks protobuf to the JVM
-    state server; without a protobuf runtime the query plan BUILDS fine
-    but execution crashes every worker. A vendored pure-Python runtime
-    (`smart_fraud_detection_data_pipeline_spark._vendor`) backstops the
-    missing wheel — but workers only see it if `ensure_protobuf()` ran
-    BEFORE the SparkSession was built (PYTHONPATH is captured into the
-    JVM env at launch), so this gate reports True only when both the
-    import works AND the path is exported for workers."""
-    from smart_fraud_detection_data_pipeline_spark._vendor import (
-        _VENDOR_DIR,
-        ensure_protobuf,
-    )
-
-    if not ensure_protobuf():
-        return False
-    import google.protobuf as pb
-
-    vendored = pb.__file__.startswith(_VENDOR_DIR)
-    return not vendored or _VENDOR_DIR in os.environ.get("PYTHONPATH", "")
-
-
-def user_running_totals_tws(transactions: DataFrame) -> DataFrame:
-    """The same running totals through ``transformWithStateInPandas`` —
-    Spark 4's successor to applyInPandasWithState (SPARK-49564): typed
-    state handles (value/list/map states, timers, TTL) on a
-    StatefulProcessor object instead of one opaque state tuple. Both
-    implementations are kept: applyInPandasWithState is the 3.x-era API
-    users migrate FROM, this is the one they migrate TO, and the parity
-    test pins that the semantics transfer exactly (skipped — with the
-    plan shape still asserted — where the protobuf runtime is absent;
-    see `have_tws_runtime`).
-
-    Everything (class included) is defined inside the function so
-    cloudpickle serializes it by value — same closure contract as
-    `user_running_totals`.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            total_cents, n = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                # integer-cents per row, same exactness contract as the
-                # applyInPandasWithState twin above
-                total_cents += int(
-                    pdf["amount"].mul(100).round().astype("int64").sum()
-                )
-                n += len(pdf)
-            self._totals.update((total_cents, n))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "total_cents": [total_cents], "n_events": [n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        transactions.select("user_id", "amount")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
-    )

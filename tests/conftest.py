@@ -10,13 +10,6 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
-from smart_fraud_detection_data_pipeline_spark._vendor import ensure_protobuf  # noqa: E402
-
-# Before ANY SparkSession exists: Spark python workers inherit
-# PYTHONPATH from the JVM environment captured at session launch, so
-# the vendored protobuf (transformWithStateInPandas wire protocol)
-# must be exported now, not at first use inside a test.
-ensure_protobuf()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from smart_fraud_detection_data_pipeline_spark.operators.bucketing import bucketed_join, write_bucketed
+from smart_fraud_detection_data_pipeline_spark.operators.bucketing import write_bucketed
 from smart_fraud_detection_data_pipeline_spark.plans import explain as X
 
 
@@ -30,7 +30,7 @@ def test_bucketed_join_is_shuffle_free(spark, bucket_db):
     # removes the exchanges
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, "bdb.facts", "bdb.dims", "k")
+        joined = spark.table("bdb.facts").join(spark.table("bdb.dims"), "k")
         c = X.plan_counts(joined)
         assert c["exchange"] == 0  # both sides read pre-bucketed
         assert joined.count() == 10000

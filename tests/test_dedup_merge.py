@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import Row
 
 from smart_fraud_detection_data_pipeline_spark.operators.dedup import (
-    dedup_exact,
     dedup_keep_last,
     union_slices,
 )
@@ -34,12 +33,6 @@ def test_union_slices_by_name(spark):
     b = spark.createDataFrame([Row(y="b", x=2)])  # reordered columns
     out = union_slices(a, b).orderBy("x").collect()
     assert [(r.x, r.y) for r in out] == [(1, "a"), (2, "b")]
-
-
-def test_dedup_exact(spark):
-    df = spark.createDataFrame([Row(a=1, b=2), Row(a=1, b=2), Row(a=1, b=3)])
-    assert dedup_exact(df).count() == 2
-    assert dedup_exact(df, ["a"]).count() == 1
 
 
 def test_merge_upsert_semantics(spark):
@@ -137,76 +130,6 @@ def test_merge_upsert_rejects_reserved_marker_column(spark):
         merge_upsert(df, df, ["k"])
 
 
-def test_merge_into_sql_text_matches_loader_shape():
-    """The generated MERGE must carry the loaders' exact WHEN structure
-    and null-safe key equality (the emulation's eqNullSafe twin)."""
-    from smart_fraud_detection_data_pipeline_spark.operators.merge import merge_into_sql
-
-    sql = merge_into_sql(
-        "wh.fraud_records",
-        "stage",
-        ["transaction_id", "timestamp"],
-        ["transaction_id", "timestamp", "amount", "fraud_score"],
-    )
-    assert sql == (
-        "MERGE INTO wh.fraud_records t USING stage s "
-        "ON t.transaction_id <=> s.transaction_id AND t.timestamp <=> s.timestamp "
-        "WHEN MATCHED THEN UPDATE SET t.amount = s.amount, t.fraud_score = s.fraud_score "
-        "WHEN NOT MATCHED THEN INSERT (transaction_id, timestamp, amount, fraud_score) "
-        "VALUES (s.transaction_id, s.timestamp, s.amount, s.fraud_score)"
-    )
-
-
-def test_merge_upsert_v2_parses_and_fails_cleanly_without_v2_catalog(spark):
-    """Without a row-level-operation catalog the MERGE must fail at
-    ANALYSIS time (table resolution), not corrupt anything — and the
-    temp staging view must not leak."""
-    import pyspark.errors
-    import pytest
-
-    import pyspark.sql.functions as F
-    from smart_fraud_detection_data_pipeline_spark.operators.merge import merge_upsert_v2
-
-    src = spark.range(3).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    with pytest.raises(pyspark.errors.AnalysisException):
-        merge_upsert_v2(spark, "no_such_catalog.db.t", src, ["k"])
-    assert not any(
-        t.name == "__merge_source" for t in spark.catalog.listTables()
-    )
-
-
-def test_merge_upsert_v2_executes_on_lakehouse_catalog(tmp_path):
-    """Env-gated execution of the production MERGE INTO door
-    (VERDICT r4 missing item 2): with LAKEHOUSE_JARS or
-    LAKEHOUSE_PACKAGE pointing at delta-spark (or any
-    SupportsRowLevelOperations catalog), a subprocess JVM creates a
-    real v2 table, runs merge_upsert_v2, and pins the result rows to
-    the merge_upsert emulation on the same null-key fixture. The CI
-    sandbox has no network and no lakehouse jars, so here the test
-    documents the blocker as an actionable skip."""
-    import os
-    import subprocess
-    import sys
-
-    import pytest
-
-    if not (os.environ.get("LAKEHOUSE_JARS") or os.environ.get("LAKEHOUSE_PACKAGE")):
-        pytest.skip(
-            "set LAKEHOUSE_JARS=/path/delta-spark.jar,... (or "
-            "LAKEHOUSE_PACKAGE=io.delta:delta-spark_2.13:4.0.0 with network) "
-            "to execute MERGE INTO on a real v2 catalog"
-        )
-    here = os.path.dirname(os.path.abspath(__file__))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(here, "lakehouse_merge_main.py"), str(tmp_path)],
-        capture_output=True, text=True, timeout=600,
-    )
-    assert proc.returncode == 0, f"\n--- stdout ---\n{proc.stdout}\n--- stderr ---\n{proc.stderr}"
-    assert "MERGE OK" in proc.stdout
-
-
 def test_merge_upsert_delete_tombstones(spark):
     """WHEN MATCHED AND flag THEN DELETE (round 8): a flagged source
     row deletes its matched target row; a flagged row with no match
@@ -232,20 +155,3 @@ def test_merge_upsert_delete_tombstones(spark):
     out = {r.k: r.v for r in merged.collect()}
     assert out == {1: 10.0, 3: 33.0, 5: 55.0}
 
-
-def test_merge_into_sql_delete_clause():
-    """The three-clause tombstone form: DELETE before UPDATE, and the
-    insert guarded so an unmatched tombstone inserts nothing — with
-    COALESCE fences so a NULL flag upserts (three-valued-logic rule)."""
-    from smart_fraud_detection_data_pipeline_spark.operators.merge import merge_into_sql
-
-    sql = merge_into_sql(
-        "wh.t", "stage", ["k"], ["k", "v"], delete_predicate="s.is_del"
-    )
-    assert sql == (
-        "MERGE INTO wh.t t USING stage s ON t.k <=> s.k "
-        "WHEN MATCHED AND COALESCE(s.is_del, FALSE) THEN DELETE "
-        "WHEN MATCHED THEN UPDATE SET t.v = s.v "
-        "WHEN NOT MATCHED AND NOT COALESCE(s.is_del, FALSE) THEN "
-        "INSERT (k, v) VALUES (s.k, s.v)"
-    )

@@ -69,21 +69,12 @@ def test_lint_sees_split_and_optioned_reads():
 
 
 def test_no_schema_inference_outside_read_parquet():
-    hits = []
-    for root, dirs, files in os.walk(PKG):
-        dirs[:] = [d for d in dirs if d != "_vendor"]
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            path = os.path.join(root, f)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
-            with open(path, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read())
-            hits += [
-                f"{rel}:{line} in {func}"
-                for func, line in _inferring_reads(tree)
-                if (rel, func) not in ALLOWED
-            ]
+    hits = [
+        f"{rel}:{line} in {func}"
+        for rel, tree in _package_modules()
+        for func, line in _inferring_reads(tree)
+        if (rel, func) not in ALLOWED
+    ]
     assert hits == []
 
 
@@ -142,19 +133,30 @@ def test_state_partitions_are_set_in_one_place():
     """Streams set spark.sql.shuffle.partitions only in
     start_foreach_batch (to STATE_PARTITIONS, for a stateful stream);
     the session builder sets the batch default."""
-    sites = set()
-    for root, dirs, files in os.walk(PKG):
-        dirs[:] = [d for d in dirs if d != "_vendor"]
-        for f in files:
-            if f.endswith(".py"):
-                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
-                sites |= {(rel, fn) for fn in _enclosing(_parse(rel), _sets_shuffle_partitions)}
+    sites = set(_package_sites(_sets_shuffle_partitions))
     assert sites == {("session.py", "get_spark"), ("streaming/sinks.py", "start_foreach_batch")}
 
 
 def _parse(module):
     with open(os.path.join(PKG, module), encoding="utf-8") as fh:
         return ast.parse(fh.read())
+
+
+def _package_modules():
+    """(path relative to the package, parsed tree) of every package
+    module, in a fixed walk order."""
+    for root, dirs, files in os.walk(PKG):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
+                yield rel, _parse(rel)
+
+
+def _package_sites(match):
+    """(module, enclosing function) of every package node ``match``
+    accepts."""
+    return [(rel, fn) for rel, tree in _package_modules() for fn in _enclosing(tree, match)]
 
 
 def _enclosing(tree, match):
@@ -308,14 +310,7 @@ def test_float_cosine_sql_has_one_builder():
 
 
 def test_vector_query_set_is_built_once():
-    sets = []
-    for root, dirs, files in os.walk(PKG):
-        dirs[:] = [d for d in dirs if d != "_vendor"]
-        for f in sorted(files):
-            if f.endswith(".py"):
-                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
-                sets += [(rel, fn) for fn in _enclosing(_parse(rel), _is_vec_id_query_set)]
-    assert sets == [("queries.py", "_ann_query_set")]
+    assert _package_sites(_is_vec_id_query_set) == [("queries.py", "_ann_query_set")]
 
 
 def _is_array_intersect(node):
@@ -370,14 +365,7 @@ def test_text_dedup_tiers_verify_through_one_helper():
 
 
 def test_in_row_pairs_are_emitted_by_one_helper():
-    pairs = []
-    for root, dirs, files in os.walk(PKG):
-        dirs[:] = [d for d in dirs if d != "_vendor"]
-        for f in sorted(files):
-            if f.endswith(".py"):
-                rel = os.path.relpath(os.path.join(root, f), PKG).replace(os.sep, "/")
-                pairs += [(rel, fn) for fn in _enclosing(_parse(rel), _is_pair_emission)]
-    assert pairs == [("operators/textdedup.py", "_in_row_pairs")]
+    assert _package_sites(_is_pair_emission) == [("operators/textdedup.py", "_in_row_pairs")]
 
 
 def test_gram_list_sql_has_one_builder():

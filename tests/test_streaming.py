@@ -343,85 +343,6 @@ def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 50
 
 
-def test_transform_with_state_builds_typed_streaming_plan(spark, staged_stream_dir):
-    """Construction-level pin for the Spark 4 stateful API (always runs,
-    protobuf or not): the TransformWithStateInPySpark operator lands in
-    the plan with the declared output schema, on a streaming frame."""
-    from smart_fraud_detection_data_pipeline_spark.streaming.stateful import (
-        user_running_totals_tws,
-    )
-
-    out = user_running_totals_tws(_stream(spark, staged_stream_dir))
-    assert out.isStreaming
-    assert (
-        out.schema.simpleString()
-        == "struct<user_id:bigint,total_cents:bigint,n_events:bigint>"
-    )
-    assert "TransformWithStateInPySpark" in out._jdf.queryExecution().logical().toString()
-
-
-def test_transform_with_state_matches_legacy_and_batch(
-    spark, staged_stream_dir, tmp_path
-):
-    """transformWithStateInPandas (the Spark 4 stateful API) must produce
-    the SAME final per-user totals as both the applyInPandasWithState
-    twin and a plain batch groupBy — the migration is semantics-
-    preserving."""
-    from smart_fraud_detection_data_pipeline_spark.operators.dedup import dedup_keep_last
-    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
-    from smart_fraud_detection_data_pipeline_spark.streaming.stateful import (
-        have_tws_runtime,
-        user_running_totals_tws,
-    )
-
-    if not have_tws_runtime():
-        pytest.skip("protobuf runtime absent: transformWithState cannot execute here")
-
-    out_path = str(tmp_path / "totals_tws")
-    stream = _stream(spark, staged_stream_dir)
-    # transformWithState requires a column-family-capable state store;
-    # HDFSBackedStateStoreProvider hard-rejects it, so run under RocksDB
-    # (the production backend anyway — see the provider test below).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = SK.start_foreach_batch(
-            user_running_totals_tws(stream),
-            SK.reemit_parquet_sink(out_path),
-            str(tmp_path / "ckpt_tws"),
-            output_mode="update",
-            available_now=True,
-            query_name="running_totals_tws",
-        )
-        q.awaitTermination(120)
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-
-    emissions = spark.read.parquet(out_path)
-    assert emissions.count() > 0
-    final = dedup_keep_last(emissions, ["user_id"], ["n_events"]).drop("batch_id")
-
-    batch = spark.read.parquet(staged_stream_dir)
-    want = batch.groupBy("user_id").agg(
-        F.sum(F.round(F.col("amount") * 100).cast("long")).alias("want_cents"),
-        F.count(F.lit(1)).alias("want_n"),
-    )
-    joined = final.join(want, "user_id")
-    assert joined.count() == want.count()
-    bad = joined.where(
-        (F.col("total_cents") != F.col("want_cents"))
-        | (F.col("n_events") != F.col("want_n"))
-    ).count()
-    assert bad == 0
-
-
 def test_stream_stream_join_pairs_across_batches(spark, tmp_path):
     """A join pair whose two sides arrive in DIFFERENT micro-batches must
     still match — the left row waits in watermark-bounded state."""
