@@ -1,32 +1,25 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark CLI over the registry runner (tools/runner.py).
 
-Prints the full JSON line first:
+Runs every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1) in
+registration order to the noop sink, in one shared session, after an
+untimed warm-up of the first query at sf0.001 (codegen, parquet reader
+and broadcast machinery compile there, not in the first timed query).
+Writes one runner record per query to BENCH_perquery.jsonl at the repo
+root, then prints the full JSON line
   {"metric": "total_query_time", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": X}
-then ENDS stdout with a compact summary line (no per-query map) that
-always fits the driver's 2000-char tail capture:
+   "queries": {name: build_s + exec_s, ...}, "sf": X}
+and ENDS stdout with a compact line that always fits a 2000-char
+tail capture:
   {"metric": ..., "value": N, "unit": "sec", "sf": X, "n": Q, "errors_n": E}
-Set SPARK_GRAFT_BENCH_OUT=path to also write the full artifact to a file.
 
-Each query materializes fully via the noop sink (distributed execution,
-no driver collect). A shared warm session amortizes JVM startup, mirroring
-a long-lived cluster context.
-
-Set SPARK_GRAFT_BENCH_REPEAT=N (default 1, the driver contract) to run
-every query N times and record the MEDIAN — sub-2s queries jitter by
-2-3x single-shot on a busy machine, which round 4->5 showed can read as
-phantom per-query "regressions". Optionally restrict to a comma-
-separated SPARK_GRAFT_BENCH_ONLY=name1,name2 subset when adjudicating
-a specific drift.
-
-REPEAT is for SUBSET adjudication, not full-registry artifacts: 129xN
-executions in one shared session age the JVM (GC pressure, listener
-and scratch accumulation) and inflate the tail by ~10-30% (measured:
-204 s median-of-3 vs 190 s single-shot on the same quiet host), so a
-full REPEAT run is not comparable to the driver's single-shot pass.
-
-Queries run in registry() order. Paired A/B runs of two commits belong
-to the perfbench/ benchmark (BENCHMARK.json), not to this runner.
+SPARK_GRAFT_BENCH_OUT=path also writes the full line to a file.
+SPARK_GRAFT_BENCH_REPEAT=N (default 1, the single-shot contract) runs each
+query N times and keeps the median run — for subset adjudication only:
+N full passes in one session age the JVM and inflate the tail ~10-30%.
+SPARK_GRAFT_BENCH_ONLY=a,b runs only the named queries;
+SPARK_GRAFT_BENCH_SKIP=a,b drops them (scale-curve runs skip queries
+whose OUTPUT is inherently quadratic on a skew-stress fixture;
+SCALING.md). Paired A/B runs of two commits belong to perfbench/.
 """
 
 from __future__ import annotations
@@ -34,13 +27,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
-from smart_fraud_detection_data_pipeline_spark.queries import registry  # noqa: E402
+from tools import runner  # noqa: E402
+
+
+def _names(var: str) -> set[str]:
+    return {n.strip() for n in os.environ.get(var, "").split(",") if n.strip()}
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -52,82 +49,34 @@ def main() -> None:
     except ValueError:
         sf = base
     spark = get_spark("bench")
-
-    # Warm the JVM (whole-stage codegen, parquet reader, broadcast
-    # machinery) on a real query at the smallest sf so per-query times
-    # measure query execution, not first-use compilation.
-    specs = registry()
-    specs[0].spark_fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-        "overwrite"
-    ).save()
-
+    list(runner.run(spark, "/root/testdata/sf0.001", runner.select()[:1]))
+    specs = runner.select(_names("SPARK_GRAFT_BENCH_ONLY"), _names("SPARK_GRAFT_BENCH_SKIP"))
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        wanted = {n.strip() for n in only.split(",") if n.strip()}
-        specs = [s for s in specs if s.name in wanted]
-    # SKIP: exclude named queries — used by the scale-curve runs where a
-    # query's OUTPUT is inherently quadratic on a skew-stress fixture
-    # (e.g. the stream-stream interval joins emit 1.03e9 pairs on the
-    # seed-3000 x512 fixture's 60-user key space; SCALING.md).
-    skip = os.environ.get("SPARK_GRAFT_BENCH_SKIP")
-    if skip:
-        dropped = {n.strip() for n in skip.split(",") if n.strip()}
-        specs = [s for s in specs if s.name not in dropped]
-
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for spec in specs:
-        # Per-query fault isolation: one broken query must never zero the
-        # whole bench artifact (round-2 postmortem). Errors are recorded
-        # and the run continues.
-        try:
-            if spec.prepare is not None:
-                # fixture staging is harness work, not operator work — keep
-                # it off the clock so streaming numbers measure streaming
-                spec.prepare(spark, sf_dir)
-            samples = []
-            for _ in range(repeat):
-                t0 = time.time()
-                spec.spark_fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.time() - t0)
-            samples.sort()
-            times[spec.name] = round(samples[len(samples) // 2], 3)
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            errors[spec.name] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"[bench] ERROR {spec.name}: {errors[spec.name]}", file=sys.stderr)
+    with open(os.path.join(REPO, "BENCH_perquery.jsonl"), "w") as records:
+        for spec, rec, _ in runner.run(spark, sf_dir, specs, plans=True, repeat=repeat):
+            records.write(json.dumps(rec) + "\n")
+            records.flush()
+            if rec["error"]:
+                errors[spec.name] = rec["error"]
+                print(f"[bench] ERROR {spec.name}: {rec['error']}", file=sys.stderr)
+            else:
+                times[spec.name] = round(rec["build_s"] + rec["exec_s"], 3)
+    spark.stop()
 
-    out = {
-        "metric": "total_query_time",
-        "value": round(sum(times.values()), 3),
-        "unit": "sec",
-        "queries": times,
-        "sf": sf,
-    }
+    out = {"metric": "total_query_time", "value": round(sum(times.values()), 3),
+           "unit": "sec", "queries": times, "sf": sf}
     if errors:
         out["errors"] = errors
-    # Full artifact (the per-query map) goes FIRST on stdout and, when
-    # SPARK_GRAFT_BENCH_OUT is set, to that file. The LAST stdout line
-    # is a compact summary that always fits the driver's 2000-char tail
-    # capture — round 10's 4.5 KB one-liner overflowed it and the driver
-    # recorded `parsed: null` (VERDICT r10 #2).
     print(json.dumps(out))
-    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
-    if out_path:
-        with open(out_path, "w") as fh:
+    if os.environ.get("SPARK_GRAFT_BENCH_OUT"):
+        with open(os.environ["SPARK_GRAFT_BENCH_OUT"], "w") as fh:
             json.dump(out, fh)
-    compact = {
-        "metric": "total_query_time",
-        "value": out["value"],
-        "unit": "sec",
-        "sf": sf,
-        "n": len(times),
-        "errors_n": len(errors),
-    }
-    print(json.dumps(compact))
-    spark.stop()
+    # The LAST line must fit a 2000-char tail capture: a 4.5 KB
+    # one-liner overflowed it and parsed as null (VERDICT r10 #2).
+    print(json.dumps({"metric": "total_query_time", "value": out["value"], "unit": "sec",
+                      "sf": sf, "n": len(times), "errors_n": len(errors)}))
 
 
 if __name__ == "__main__":

@@ -55,8 +55,9 @@ class QuerySpec:
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str  # DuckDB SQL twin; every query has one
     # Optional untimed fixture staging (harness code, not operator work):
-    # bench.py calls prepare before starting the clock so streaming
-    # numbers measure streaming, not tempdir writes (VERDICT r1 #3/#6).
+    # the registry runner (tools/runner.py) calls prepare before starting
+    # the clock so streaming numbers measure streaming, not tempdir
+    # writes (VERDICT r1 #3/#6).
     # The query body MUST also work without it (the driver never calls
     # prepare) — bodies route through the same memoized helpers.
     prepare: Callable[[SparkSession, str], None] | None = None
@@ -180,6 +181,12 @@ def registry() -> list[QuerySpec]:
     by_name = {s.name: s for s in _REGISTRY}
     head = [by_name[n] for n in _DRIVER_ROTATION]
     return head + [s for s in _REGISTRY if s.name not in _DRIVER_ROTATION]
+
+
+def registered() -> list[QuerySpec]:
+    """Every query in registration order: a position that does not move
+    when the rotation does (the bench and audit order)."""
+    return list(_REGISTRY)
 
 
 # ---------------------------------------------------------------------------
@@ -4453,9 +4460,10 @@ _STAGED_EVENTS: dict[tuple[str, bool], str] = {}
 def _staged_events(spark: SparkSession, sf_dir: str, *, outer: bool = False) -> str:
     """Stage the full events table as two time-ordered parquet file
     groups (so sessions/join windows straddle the micro-batch boundary),
-    once per sf_dir. Fixture harness, not operator work — bench.py runs
-    this via QuerySpec.prepare before the clock starts; standalone calls
-    (the driver) hit the same memo so repeated invocations stage once.
+    once per sf_dir. Fixture harness, not operator work — the registry
+    runner runs this via QuerySpec.prepare before the clock starts;
+    standalone calls (no prepare) hit the same memo so repeated
+    invocations stage once.
     Shared by every streaming query that needs ordered multi-batch
     arrival (session windows, stream-stream joins, the rollup).
 

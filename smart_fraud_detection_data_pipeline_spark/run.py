@@ -224,7 +224,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--since", default=None, metavar="YYYY-MM-DD",
                    help="incremental mode: only load partitions >= this date")
     p.add_argument("--master", default=None,
-                   help="Spark master (default local[$SPARK_GRAFT_CPUS])")
+                   help="Spark master (default local[$SPARK_GRAFT_CPUS or usable cores])")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     args = p.parse_args(argv)
 

@@ -152,6 +152,17 @@ def s3a_conf(
     return conf
 
 
+def local_cpus() -> int:
+    """Local cores to use: ``$SPARK_GRAFT_CPUS``, else the cores this
+    process may run on (its CPU affinity, not the host's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "smart_fraud_detection_data_pipeline_spark",
     master: str | None = None,
@@ -160,9 +171,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no active session exists; on a real cluster pass ``None`` with a
-    pre-set master or spark-submit config.
+    ``master`` defaults to ``local[local_cpus()]`` when no active
+    session exists, with one shuffle partition per core; on a real
+    cluster pass ``None`` with a pre-set master or spark-submit config.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -172,8 +183,7 @@ def get_spark(
         # JVM never touches.
         master = os.environ.get("SPARK_GRAFT_MASTER")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cpus()}]"
     builder = builder.master(master)
 
     conf = dict(DEFAULT_CONF)
@@ -181,7 +191,7 @@ def get_spark(
         # Local harness: one partition per core is the sweet spot for
         # sf<=0.1. On a cluster, AQE coalescing makes the initial number
         # mostly irrelevant as long as it is high enough.
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = local_cpus()
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
         mem = _default_driver_memory()

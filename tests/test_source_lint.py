@@ -10,8 +10,9 @@ window (similarity.py), score float cosine in SQL through one builder
 and build their Spark query set in one function (queries.py). The
 text-dedup tiers verify exact Jaccard and expand in-row pairs through
 one helper each (textdedup.py); their oracles build word-gram lists and
-MinHash probes through one builder each (queries.py). Needs no
-SparkSession."""
+MinHash probes through one builder each (queries.py). Among bench.py
+and tools/, only the registry runner (tools/runner.py) reaches the
+query registry. Needs no SparkSession."""
 
 from __future__ import annotations
 
@@ -375,3 +376,45 @@ def test_gram_list_sql_has_one_builder():
 def test_minhash_probe_sql_has_one_builder():
     probes = _holders(_parse("queries.py"), _sql_holder(_PROBE_SQL))
     assert probes == ["_minhash_probe_sql"]
+
+
+_TOOLS = os.path.join(os.path.dirname(PKG), "tools")
+_REGISTRY_CALLS = {"registry", "registered", "queries", "oracle_sql"}
+
+
+def _is_registry_door(node):
+    # registry() / registered() / __spark_entry__'s queries() and
+    # oracle_sql(), an import of one, or any use of _REGISTRY
+    if isinstance(node, ast.Call):
+        f = node.func
+        return (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) in _REGISTRY_CALLS
+    if isinstance(node, ast.ImportFrom):
+        return any(a.name in _REGISTRY_CALLS | {"_REGISTRY"} for a in node.names)
+    return (isinstance(node, ast.Name) and node.id == "_REGISTRY") or (
+        isinstance(node, ast.Attribute) and node.attr == "_REGISTRY"
+    )
+
+
+def test_registry_door_lint_sees_each_form():
+    src = (
+        "from smart_fraud_detection_data_pipeline_spark.queries import registry\n"
+        "import __spark_entry__ as e\n"
+        "def a():\n    return [s.name for s in registry()]\n"
+        "def b():\n    return e.queries(), e.oracle_sql()\n"
+        "def c(q):\n    return q._REGISTRY, q.registered()\n"
+        "def d(out):\n    return out['queries'], len(out)\n"
+    )
+    assert _enclosing(ast.parse(src), _is_registry_door) == [None, "a", "b", "b", "c", "c"]
+
+
+def test_only_the_runner_loops_over_the_registry():
+    """bench.py and the tools run catalog queries through tools/runner.py."""
+    paths = [os.path.join(os.path.dirname(PKG), "bench.py")] + sorted(
+        os.path.join(_TOOLS, f) for f in os.listdir(_TOOLS) if f.endswith(".py")
+    )
+    users = set()
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            if _enclosing(ast.parse(fh.read()), _is_registry_door):
+                users.add(os.path.relpath(path, os.path.dirname(PKG)))
+    assert users == {"tools/runner.py"}

@@ -1,18 +1,19 @@
 """Local replica of the driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same sf dir, then compares row count, schema, and
-order-insensitive values EXACTLY (the driver hashes values, so any
-floating-point drift is a failure here too).
+Runs every registered query on Spark through the registry runner
+(tools/runner.py, collecting each result with ``toPandas``) and its
+oracle SQL twin on DuckDB over the same sf dir, then compares row
+count, schema, and order-insensitive values EXACTLY (the gate hashes
+values, so any floating-point drift is a failure here too).
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
-import time
 
 import duckdb
 import pandas as pd
@@ -20,8 +21,8 @@ import pandas as pd
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-import __spark_entry__ as entrymod  # noqa: E402
 from smart_fraud_detection_data_pipeline_spark import TABLES, get_spark  # noqa: E402
+from tools import runner  # noqa: E402
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -72,51 +73,39 @@ def main() -> int:
         json_out = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
     spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    failures = 0
     results: dict[str, dict] = {}
-    for name, fn in qs.items():
-        if only and name not in only:
+    for spec, rec, sdf in runner.run(spark, sf_dir, runner.select(argv[1:]), collect=True):
+        name, err = spec.name, rec["error"]
+        if err is None:
+            try:
+                odf = con.sql(spec.oracle).df()
+                problems = compare(sdf, odf)
+            except Exception as exc:  # noqa: BLE001 — keep auditing the rest
+                err = f"oracle/compare {type(exc).__name__}: {exc}"
+        if err:
+            print(f"[FAIL] {name}: {err}"[:300])
+            results[name] = {"status": "error", "err": err[:300]}
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001 — keep auditing the rest
-            failures += 1
-            print(f"[FAIL] {name}: {type(exc).__name__}: {exc}"[:300])
-            results[name] = {"status": "error", "err": str(exc)[:300]}
-            continue
-        t1 = time.time()
-        try:
-            odf = con.sql(oracles[name]).df()
-            problems = compare(sdf, odf)
-        except Exception as exc:  # noqa: BLE001 — keep auditing the rest
-            failures += 1
-            print(f"[FAIL] {name}: oracle/compare {type(exc).__name__}: {exc}"[:300])
-            results[name] = {"status": "error", "err": str(exc)[:300]}
-            continue
+        sec = rec["build_s"] + rec["exec_s"]
         if problems:
-            failures += 1
-            print(f"[FAIL] {name} ({t1 - t0:.1f}s):")
+            print(f"[FAIL] {name} ({sec:.1f}s):")
             for p in problems:
                 print(f"       - {p}")
         else:
-            print(f"[ok]   {name}: {len(sdf)} rows ({t1 - t0:.1f}s)")
+            print(f"[ok]   {name}: {len(sdf)} rows ({sec:.1f}s)")
         results[name] = {
             "status": "fail" if problems else "ok",
             "spark_rows": len(sdf), "oracle_rows": len(odf),
-            "sec": round(t1 - t0, 2), "problems": problems,
+            "sec": round(sec, 2), "problems": problems,
         }
+    failures = sum(r["status"] != "ok" for r in results.values())
     if json_out:
-        import json
-
         with open(json_out, "w") as f:
             json.dump(
                 {"sf_dir": sf_dir, "n": len(results), "failures": failures,

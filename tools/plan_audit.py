@@ -1,18 +1,14 @@
 """Physical-plan audit across the whole query registry.
 
-"Measure, don't guess": for every batch query, capture the formatted
-physical plan and extract the scale-relevant signals —
-
-- #Exchange (shuffles) and whether any is a CartesianProduct
-- #BroadcastExchange vs SortMergeJoin (small dims should broadcast)
-- BatchEvalPython / PythonUDF in the plan (row-at-a-time Python = the
-  slow path; Arrow ops show as ArrowEvalPython / FlatMapGroupsInPandas
-  / MapInPandas and are allowed)
-- parquet scans with no PushedFilters while the query visibly filters
-- WholeStageCodegen span count (JVM codegen coverage)
-
-Streaming queries (readStream plans cannot be explained without
-starting them) and generator queries are skipped and listed as such.
+"Measure, don't guess": runs every query through tools/runner.py with
+plan counters on and tabulates each batch query's physical plan:
+shuffles (Exchange), broadcasts vs SortMergeJoin, row-at-a-time Python
+(BatchEvalPython, a red flag like CartesianProduct; the Arrow ops are
+the sanctioned slow path), BroadcastNestedLoopJoin, parquet scans with
+pushed filters and WholeStageCodegen spans. A query that started a
+streaming query gets a row in its own section instead, with its
+micro-batch cost from the record: its frame is only the read-back of
+the sink. Failed queries are listed as skipped.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 Writes PLAN_AUDIT.md at the repo root and prints a one-line summary.
@@ -21,58 +17,28 @@ Writes PLAN_AUDIT.md at the repo root and prints a one-line summary.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
-from smart_fraud_detection_data_pipeline_spark.queries import registry  # noqa: E402
-
-
-def audit_plan(plan: str) -> dict[str, object]:
-    # Formatted explain prints each node once in the tree and once in the
-    # details section headed "(<id>) <Operator> [codegen id : N]"; count
-    # the detail headers so every node counts exactly once.
-    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
-    return {
-        "exchanges": sum(n == "Exchange" for n in nodes),
-        "broadcasts": sum(n == "BroadcastExchange" for n in nodes),
-        "smj": sum(n == "SortMergeJoin" for n in nodes),
-        "cartesian": "CartesianProduct" in nodes,
-        "bnlj": "BroadcastNestedLoopJoin" in nodes,
-        "python_row": "BatchEvalPython" in nodes,
-        "arrow_python": bool(
-            {"ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas"} & set(nodes)
-        ),
-        "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
-        "scans": sum(n == "Scan" for n in nodes),
-        "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
-    }
+from tools import runner  # noqa: E402
 
 
 def main() -> None:
     argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
     spark = get_spark("plan_audit")
-    rows, skipped = [], []
-    for spec in registry():
-        if only and spec.name not in only:
-            continue
-        try:
-            df = spec.spark_fn(spark, sf_dir)
-            if df.isStreaming:
-                skipped.append((spec.name, "streaming"))
-                continue
-            plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception as exc:  # noqa: BLE001 — audit everything we can
-            skipped.append((spec.name, f"{type(exc).__name__}: {exc}"[:120]))
-            continue
-        rows.append((spec.name, audit_plan(plan)))
+    rows, streams, skipped = [], [], []
+    for spec, rec, _ in runner.run(spark, sf_dir, runner.select(argv[1:]), plans=True):
+        if rec["error"]:
+            skipped.append((spec.name, rec["error"][:120]))
+        elif rec["streams"]:
+            streams.append(rec)
+        else:
+            rows.append((spec.name, rec["plan"]))
+    spark.stop()
 
     flags: list[str] = []
     for name, a in rows:
@@ -84,7 +50,8 @@ def main() -> None:
     lines = [
         "# PLAN_AUDIT — physical-plan signals per registered batch query",
         "",
-        f"sf_dir: `{sf_dir}` · {len(rows)} audited · {len(skipped)} skipped",
+        f"sf_dir: `{sf_dir}` · {len(rows)} audited · {len(streams)} streaming "
+        f"· {len(skipped)} skipped",
         "",
         "Legend: exch = non-broadcast Exchange count (shuffles), bcast =",
         "BroadcastExchange, smj = SortMergeJoin, wsc = WholeStageCodegen",
@@ -113,13 +80,30 @@ def main() -> None:
             f"| {a['codegen_spans']} | {a['scans']} | {a['pushed']} "
             f"| {' '.join(fl)} |"
         )
+    lines += [
+        "",
+        "## Streaming queries",
+        "",
+        "Triggers, micro-batch (mb) jobs and tasks, and state commit time",
+        "summed over triggers, of every query that started a stream.",
+        "",
+        "| query | streams | triggers | mb jobs | mb tasks | state commit ms |",
+        "|---|---|---|---|---|---|",
+    ]
+    for rec in streams:
+        triggers = [t for s in rec["streams"] for t in s["triggers"]]
+        mb = rec["phases"]["stream"]
+        lines.append(
+            f"| {rec['name']} | {len(rec['streams'])} | {len(triggers)} | {mb['jobs']} "
+            f"| {mb['tasks']} | {sum(t['state_commit_ms'] for t in triggers)} |"
+        )
     lines += ["", "## Skipped", ""]
     lines += [f"- {n}: {why}" for n, why in skipped]
     out = os.path.join(_REPO, "PLAN_AUDIT.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(
-        f"audited={len(rows)} skipped={len(skipped)} "
+        f"audited={len(rows)} streaming={len(streams)} skipped={len(skipped)} "
         f"red_flags={len(flags)} -> {out}"
     )
     for f_ in flags:

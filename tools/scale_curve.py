@@ -1,61 +1,63 @@
-"""Compare two shuffle-audit artifacts into a scale-curve table.
+"""Compare two bench record files into a scale-curve table.
 
-Usage: python tools/scale_curve.py BASE.md SCALED.md [scale_factor]
+Usage: python tools/scale_curve.py BASE.jsonl SCALED.jsonl [scale_factor]
 
-Parses the markdown tables two `tools/shuffle_audit.py` runs wrote
-(e.g. sf0.1 and the x10 fixture from `tools/make_scale_fixture.py`)
-and prints, per query: wall ratio, input-record ratio, and the
-shufRec/inRec ratio at both points. The last one is the superlinearity
-detector — the record ratio is scale-free by construction for every
-healthy plan shape, so a shufRec/inRec that GROWS with scale means an
-exchange is carrying something that grows faster than the input
-(VERDICT r10 #1). Flags any query whose ratio grows by more than 20%
-or that spilled.
+Reads the BENCH_perquery.jsonl records of two `bench.py` runs (e.g.
+sf0.1 and the x10 fixture of `tools/make_scale_fixture.py`) and prints,
+per query in both: wall ratio, input-record ratio, and the
+shufRec/inRec ratio at both points. The last one is the superlinearity detector — the record ratio
+is scale-free by construction for every healthy plan shape, so a
+shufRec/inRec that GROWS with scale means an exchange is carrying
+something that grows faster than the input (VERDICT r10 #1). Flags any
+query whose ratio grows by more than 20% or that spilled at scale.
 """
 
 from __future__ import annotations
 
-import re
+import json
+import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def parse(path: str) -> dict[str, dict]:
+from tools.runner import totals  # noqa: E402
+
+
+def load(path: str) -> dict[str, dict]:
+    """name -> wall, input records, shufRec/inRec and spill bytes of
+    every query that ran without error."""
     out = {}
-    for line in open(path):
-        m = re.match(r"^\| (\w+) \| [\w-]* \| ([\d.]+) \|", line)
-        if not m:
-            continue
-        cells = [c.strip() for c in line.strip().strip("|").split("|")]
-        # name, shape, wall, input, in_rows, shufW, shufW_rows, ratio, spill, tasks
-        out[cells[0]] = {
-            "wall": float(cells[2]),
-            "in_rows": int(cells[4]),
-            "shuf_rows": int(cells[6]),
-            "ratio": float(cells[7]) if cells[7] != "—" else None,
-            "spill": cells[8],
-        }
+    with open(path) as fh:
+        for rec in map(json.loads, fh):
+            if rec["error"]:
+                continue
+            t = totals(rec)
+            rows = t["input_records"]
+            out[rec["name"]] = {
+                "wall": rec["build_s"] + rec["exec_s"],
+                "in_rows": rows,
+                "ratio": round(t["shuffle_write_records"] / rows, 3) if rows else None,
+                "spill": t["spill_memory_bytes"] + t["spill_disk_bytes"],
+            }
     return out
 
 
 def main() -> int:
-    base, scaled = parse(sys.argv[1]), parse(sys.argv[2])
+    base, scaled = load(sys.argv[1]), load(sys.argv[2])
     sf = float(sys.argv[3]) if len(sys.argv) > 3 else 10.0
     flagged = []
     print("| query | wall ×(of %g× data) | inRec × | shufRec/inRec base→scaled |" % sf)
     print("|---|---|---|---|")
-    for name in sorted(base):
-        if name not in scaled:
-            continue
+    for name in sorted(base.keys() & scaled.keys()):
         b, s = base[name], scaled[name]
         wall = s["wall"] / b["wall"] if b["wall"] else float("nan")
         rows = s["in_rows"] / b["in_rows"] if b["in_rows"] else float("nan")
         r0, r1 = b["ratio"], s["ratio"]
-        grow = (r1 or 0) / r0 if r0 else None
         mark = ""
-        if grow is not None and grow > 1.2:
+        if r0 and (r1 or 0) / r0 > 1.2:
             mark = " ⚠ratio-grew"
             flagged.append((name, r0, r1))
-        if s["spill"] not in ("0 B", ""):
+        if s["spill"]:
             mark += " ⚠spill"
             flagged.append((name, "spill", s["spill"]))
         print(

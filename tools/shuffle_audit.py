@@ -3,18 +3,15 @@
 PLAN_AUDIT.md proves the *shape* of every physical plan (broadcasts
 where expected, no cartesian products, pushed filters). This tool
 measures what those plans actually *move*: per-query aggregate task
-metrics from Spark's status REST API — input bytes, shuffle read/write
-bytes, memory/disk spill, task count — so the 100 TB story rests on
-numbers, not inference. At scale the dominant cost of a distributed
+metrics from the registry runner's records (tools/runner.py) — input
+bytes, shuffle read/write bytes, memory/disk spill, task count — so
+the 100 TB story rests on numbers, not inference. At scale the dominant cost of a distributed
 plan is bytes exchanged; a query whose shuffle volume is a small
 fraction of its input survives a 1000× scale-up, one that shuffles its
 whole input does not.
 
-Method: one shared session with the UI enabled; for each query,
-snapshot the completed-stage set, run the query to the noop sink
-(distributed materialization, no driver collect), then attribute every
-newly completed stage's metrics to that query. AQE stage reuse/skips
-are handled naturally (skipped stages report zero).
+Method: tools/runner.py runs each query to the noop sink and books
+every stage its build, exec and micro-batch jobs completed to it.
 
 Hard checks (exit non-zero on violation):
 - queries tagged ``map_only`` must report ZERO shuffle write bytes;
@@ -23,8 +20,8 @@ Hard checks (exit non-zero on violation):
   NO MORE RECORDS than they read: the spread moves each pruned input
   row exactly once and adds no keyed exchange. At production split
   counts the guard is a no-op and the plan is map_only again;
-- no query may spill to disk at the audited SF (local[32], 128 GiB —
-  a spill here means partition sizing is badly wrong);
+- no query may spill to disk at the audited SF (a spill here means
+  partition sizing is badly wrong);
 - ``warehouse_load_incremental`` must read strictly less input than
   ``warehouse_load`` (partition pruning must reach the file scan).
 
@@ -37,13 +34,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
-from smart_fraud_detection_data_pipeline_spark.queries import registry  # noqa: E402
+from tools import runner  # noqa: E402
 
 #: Audited queries → (shape tag, why this shape is the scale story).
 #: Tags: map_only = no exchange at all; broadcast_join = dims broadcast,
@@ -155,66 +151,7 @@ def _fmt(n: float) -> str:
     return f"{n:.1f} TB"
 
 
-class StageMeter:
-    """Diff-based stage metric attribution via the status REST API."""
-
-    FIELDS = (
-        "numTasks",
-        "inputBytes",
-        "inputRecords",
-        "shuffleReadBytes",
-        "shuffleWriteBytes",
-        "shuffleWriteRecords",
-        "memoryBytesSpilled",
-        "diskBytesSpilled",
-    )
-
-    def __init__(self, spark):
-        ui = spark.sparkContext.uiWebUrl
-        if ui is None:
-            # getOrCreate attached to a pre-existing session whose UI is
-            # disabled (DEFAULT_CONF turns it off); extra_conf cannot
-            # re-enable it after the fact (ADVICE r5 #3).
-            raise RuntimeError(
-                "shuffle_audit needs a fresh SparkSession with "
-                "spark.ui.enabled=true — stop the existing session (or run "
-                "this tool in its own process) and retry"
-            )
-        self._base = f"{ui}/api/v1/applications/{spark.sparkContext.applicationId}"
-        self._seen: set[tuple[int, int]] = set()
-        self.failed_stages: list[str] = []
-
-    def _stages(self) -> list[dict]:
-        with urllib.request.urlopen(f"{self._base}/stages", timeout=30) as r:
-            return json.load(r)
-
-    def snapshot(self) -> None:
-        self._seen = {(s["stageId"], s["attemptId"]) for s in self._stages()}
-
-    def delta(self) -> dict[str, int]:
-        out = dict.fromkeys(self.FIELDS, 0)
-        out["stages"] = 0
-        for s in self._stages():
-            key = (s["stageId"], s["attemptId"])
-            if key in self._seen or s.get("status") not in ("COMPLETE", "FAILED"):
-                continue
-            if s.get("status") == "FAILED":
-                # Surface rather than fold into the query's numbers
-                # (ADVICE r5 #3: a retried stage would double-count and
-                # a genuinely failed one should fail the audit).
-                self.failed_stages.append(
-                    f"stage {s['stageId']}.{s['attemptId']} ({s.get('name', '?')})"
-                )
-                continue
-            out["stages"] += 1
-            for f in self.FIELDS:
-                out[f] += int(s.get(f) or 0)
-        return out
-
-
 def main() -> int:
-    import time
-
     argv = list(sys.argv[1:])
     # --out PATH redirects the markdown artifact (scale-curve runs must
     # not clobber the default sf0.1 SHUFFLE_AUDIT.md)
@@ -224,67 +161,62 @@ def main() -> int:
         out_md = argv[i + 1]
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
-    wanted = set(argv[1:]) or set(HEADLINE)
-    spark = get_spark("shuffle_audit", extra_conf={"spark.ui.enabled": "true"})
-    meter = StageMeter(spark)
-
-    specs = [s for s in registry() if s.name in wanted]
+    spark = get_spark("shuffle_audit")
     rows: list[dict] = []
-    for spec in specs:
-        if spec.prepare is not None:
-            spec.prepare(spark, sf_dir)
-        meter.snapshot()
-        t0 = time.time()
-        spec.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = round(time.time() - t0, 2)
-        m = meter.delta()
+    violations: list[str] = []
+    for spec, rec, _ in runner.run(spark, sf_dir, runner.select(argv[1:] or HEADLINE)):
+        if rec["error"]:
+            violations.append(f"{spec.name}: {rec['error']}")
+            continue
+        violations += [f"FAILED stage during audit: {s}" for s in rec["failed_stages"]]
+        m = runner.totals(rec)
         tag, why = HEADLINE.get(spec.name, ("", ""))
+        wall = round(rec["build_s"] + rec["exec_s"], 2)
         rows.append({"name": spec.name, "tag": tag, "why": why, "wall": wall, **m})
         print(
-            f"[audit] {spec.name}: in={_fmt(m['inputBytes'])} "
-            f"shuffle_w={_fmt(m['shuffleWriteBytes'])} "
-            f"spill={_fmt(m['memoryBytesSpilled'] + m['diskBytesSpilled'])}",
+            f"[audit] {spec.name}: in={_fmt(m['input_bytes'])} "
+            f"shuffle_w={_fmt(m['shuffle_write_bytes'])} "
+            f"spill={_fmt(m['spill_memory_bytes'] + m['spill_disk_bytes'])}",
             file=sys.stderr,
         )
+    spark.stop()
 
-    violations: list[str] = [
-        f"FAILED stage during audit: {s}" for s in meter.failed_stages
-    ]
     by_name = {r["name"]: r for r in rows}
     for r in rows:
-        if r["tag"] == "map_only" and r["shuffleWriteBytes"] > 0:
+        if r["tag"] == "map_only" and r["shuffle_write_bytes"] > 0:
             violations.append(
                 f"{r['name']}: tagged map_only but wrote "
-                f"{_fmt(r['shuffleWriteBytes'])} of shuffle"
+                f"{_fmt(r['shuffle_write_bytes'])} of shuffle"
             )
         if (
             r["tag"] == "spread_map"
-            and r["shuffleWriteRecords"] > r["inputRecords"]
+            and r["shuffle_write_records"] > r["input_records"]
         ):
             violations.append(
                 f"{r['name']}: tagged spread_map but shuffled "
-                f"{r['shuffleWriteRecords']} records > "
-                f"{r['inputRecords']} read — more than the one-pass "
+                f"{r['shuffle_write_records']} records > "
+                f"{r['input_records']} read — more than the one-pass "
                 "round-robin spread can explain"
             )
-        if r["diskBytesSpilled"] > 0:
+        if r["spill_disk_bytes"] > 0:
             violations.append(
-                f"{r['name']}: spilled {_fmt(r['diskBytesSpilled'])} to disk"
+                f"{r['name']}: spilled {_fmt(r['spill_disk_bytes'])} to disk"
             )
     full, inc = by_name.get("warehouse_load"), by_name.get("warehouse_load_incremental")
-    if full and inc and not inc["inputBytes"] < full["inputBytes"]:
+    if full and inc and not inc["input_bytes"] < full["input_bytes"]:
         violations.append(
             "warehouse_load_incremental read "
-            f"{_fmt(inc['inputBytes'])} ≥ full rescan {_fmt(full['inputBytes'])} "
+            f"{_fmt(inc['input_bytes'])} ≥ full rescan {_fmt(full['input_bytes'])} "
             "— partition pruning not reaching the scan"
         )
 
     lines = [
         "# Shuffle audit — measured bytes moved per headline query",
         "",
-        f"SF dir: `{sf_dir}`. Aggregate task metrics per query (status REST",
-        "API, stage-diff attribution; AQE on). `shufRec/inRec` is shuffle",
-        "records written as a fraction of input records read — the",
+        f"SF dir: `{sf_dir}`. Aggregate task metrics per query (registry",
+        "runner records, stages booked by job group; AQE on).",
+        "`shufRec/inRec` is shuffle records written as a fraction of input",
+        "records read — the",
         "encoding-independent number that predicts 100 TB cost (exchanges,",
         "not scans, are the scale bottleneck; byte ratios mislead here",
         "because parquet input is snappy-compressed columnar while shuffle",
@@ -304,16 +236,16 @@ def main() -> int:
     ]
     for r in rows:
         ratio = (
-            f"{r['shuffleWriteRecords'] / r['inputRecords']:.3f}"
-            if r["inputRecords"]
+            f"{r['shuffle_write_records'] / r['input_records']:.3f}"
+            if r["input_records"]
             else "—"
         )
-        spill = r["memoryBytesSpilled"] + r["diskBytesSpilled"]
+        spill = r["spill_memory_bytes"] + r["spill_disk_bytes"]
         lines.append(
-            f"| {r['name']} | {r['tag']} | {r['wall']} | {_fmt(r['inputBytes'])} "
-            f"| {r['inputRecords']} "
-            f"| {_fmt(r['shuffleWriteBytes'])} | {r['shuffleWriteRecords']} "
-            f"| {ratio} | {_fmt(spill)} | {r['numTasks']} |"
+            f"| {r['name']} | {r['tag']} | {r['wall']} | {_fmt(r['input_bytes'])} "
+            f"| {r['input_records']} "
+            f"| {_fmt(r['shuffle_write_bytes'])} | {r['shuffle_write_records']} "
+            f"| {ratio} | {_fmt(spill)} | {r['tasks']} |"
         )
     lines += ["", "## Shape notes", ""]
     for r in rows:
@@ -337,12 +269,11 @@ def main() -> int:
             {
                 "queries": len(rows),
                 "violations": violations,
-                "total_input": sum(r["inputBytes"] for r in rows),
-                "total_shuffle_write": sum(r["shuffleWriteBytes"] for r in rows),
+                "total_input": sum(r["input_bytes"] for r in rows),
+                "total_shuffle_write": sum(r["shuffle_write_bytes"] for r in rows),
             }
         )
     )
-    spark.stop()
     return 1 if violations else 0
 
 
