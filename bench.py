@@ -5,14 +5,17 @@ registration order to the noop sink, in one shared session, after an
 untimed warm-up of the first query at sf0.001 (codegen, parquet reader
 and broadcast machinery compile there, not in the first timed query).
 Writes one runner record per query to BENCH_perquery.jsonl at the repo
-root, then prints the full JSON line
+root (to <OUT stem>_perquery.jsonl when SPARK_GRAFT_BENCH_OUT=<OUT> is
+set), then prints the full JSON line
   {"metric": "total_query_time", "value": N, "unit": "sec",
    "queries": {name: build_s + exec_s, ...}, "sf": X}
 and ENDS stdout with a compact line that always fits a 2000-char
 tail capture:
   {"metric": ..., "value": N, "unit": "sec", "sf": X, "n": Q, "errors_n": E}
 
-SPARK_GRAFT_BENCH_OUT=path also writes the full line to a file.
+SPARK_GRAFT_BENCH_OUT=path also writes the full line to a file; set it
+for subset, repeat and other-sf runs so they leave the committed sf0.1
+records alone.
 SPARK_GRAFT_BENCH_REPEAT=N (default 1, the single-shot contract) runs each
 query N times and keeps the median run — for subset adjudication only:
 N full passes in one session age the JVM and inflate the tail ~10-30%.
@@ -54,8 +57,11 @@ def main() -> None:
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
-    with open(os.path.join(REPO, "BENCH_perquery.jsonl"), "w") as records:
-        for spec, rec, _ in runner.run(spark, sf_dir, specs, plans=True, repeat=repeat):
+    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
+    records_path = (f"{os.path.splitext(out_path)[0]}_perquery.jsonl" if out_path
+                    else os.path.join(REPO, "BENCH_perquery.jsonl"))
+    with open(records_path, "w") as records:
+        for spec, rec, _ in runner.run(spark, sf_dir, specs, repeat=repeat):
             records.write(json.dumps(rec) + "\n")
             records.flush()
             if rec["error"]:
@@ -70,8 +76,8 @@ def main() -> None:
     if errors:
         out["errors"] = errors
     print(json.dumps(out))
-    if os.environ.get("SPARK_GRAFT_BENCH_OUT"):
-        with open(os.environ["SPARK_GRAFT_BENCH_OUT"], "w") as fh:
+    if out_path:
+        with open(out_path, "w") as fh:
             json.dump(out, fh)
     # The LAST line must fit a 2000-char tail capture: a 4.5 KB
     # one-liner overflowed it and parsed as null (VERDICT r10 #2).

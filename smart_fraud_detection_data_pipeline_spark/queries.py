@@ -57,7 +57,8 @@ class QuerySpec:
     # Optional untimed fixture staging (harness code, not operator work):
     # the registry runner (tools/runner.py) calls prepare before starting
     # the clock so streaming numbers measure streaming, not tempdir
-    # writes (VERDICT r1 #3/#6).
+    # writes (VERDICT r1 #3/#6); its oracle path skips prepare, as the
+    # driver does.
     # The query body MUST also work without it (the driver never calls
     # prepare) — bodies route through the same memoized helpers.
     prepare: Callable[[SparkSession, str], None] | None = None
@@ -181,12 +182,6 @@ def registry() -> list[QuerySpec]:
     by_name = {s.name: s for s in _REGISTRY}
     head = [by_name[n] for n in _DRIVER_ROTATION]
     return head + [s for s in _REGISTRY if s.name not in _DRIVER_ROTATION]
-
-
-def registered() -> list[QuerySpec]:
-    """Every query in registration order: a position that does not move
-    when the rotation does (the bench and audit order)."""
-    return list(_REGISTRY)
 
 
 # ---------------------------------------------------------------------------

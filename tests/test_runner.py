@@ -41,7 +41,7 @@ def test_job_and_stage_counts_do_not_depend_on_order(spark, sf_dir):
 
 
 def test_stream_record_carries_its_micro_batches(spark, sf_dir):
-    [(spec, rec, _)] = runner.run(spark, sf_dir, runner.select(["dedup_streaming"]), plans=True)
+    [(spec, rec, _)] = runner.run(spark, sf_dir, runner.select(["dedup_streaming"]))
     assert rec["error"] is None, rec["error"]
     [stream] = rec["streams"]
     assert stream["name"] == "dedup_streaming"
@@ -57,6 +57,33 @@ def test_runner_isolates_a_failing_query(spark, sf_dir):
     [spec] = runner.select(["scan_filter_project"])
     recs = [rec for _, rec, _ in runner.run(spark, "/nonexistent", [spec, spec])]
     assert len(recs) == 2 and all(r["error"] for r in recs)
+
+
+def test_runner_isolates_a_failing_explain_and_store_read(spark, sf_dir, monkeypatch):
+    """A plan explain or a status-store read that raises is its query's
+    error; the queries after it still run and are read."""
+    explains, reads = [], []
+    audit_plan, read = runner.audit_plan, runner._Store.read
+
+    def explain_fails_for_first_query(plan):
+        explains.append(plan)
+        if len(explains) == 1:
+            raise RuntimeError("explain")
+        return audit_plan(plan)
+
+    def read_fails_for_second_query(self, phase_of):
+        reads.append(phase_of)
+        if len(reads) == 3:  # the constructor's read, then one per query
+            raise RuntimeError("store")
+        return read(self, phase_of)
+
+    monkeypatch.setattr(runner, "audit_plan", explain_fails_for_first_query)
+    monkeypatch.setattr(runner._Store, "read", read_fails_for_second_query)
+    [spec] = runner.select(["scan_filter_project"])
+    recs = [rec for _, rec, _ in runner.run(spark, sf_dir, [spec] * 3)]
+    assert "explain" in recs[0]["error"] and recs[0]["phases"]["exec"]["jobs"] > 0
+    assert "store" in recs[1]["error"] and recs[1]["plan"] is not None
+    assert recs[2]["error"] is None and recs[2]["phases"]["exec"]["jobs"] > 0
 
 
 def test_local_cpus_defaults_to_usable_cores(monkeypatch):

@@ -379,11 +379,11 @@ def test_minhash_probe_sql_has_one_builder():
 
 
 _TOOLS = os.path.join(os.path.dirname(PKG), "tools")
-_REGISTRY_CALLS = {"registry", "registered", "queries", "oracle_sql"}
+_REGISTRY_CALLS = {"registry", "queries", "oracle_sql"}
 
 
 def _is_registry_door(node):
-    # registry() / registered() / __spark_entry__'s queries() and
+    # registry() / __spark_entry__'s queries() and
     # oracle_sql(), an import of one, or any use of _REGISTRY
     if isinstance(node, ast.Call):
         f = node.func
@@ -401,7 +401,7 @@ def test_registry_door_lint_sees_each_form():
         "import __spark_entry__ as e\n"
         "def a():\n    return [s.name for s in registry()]\n"
         "def b():\n    return e.queries(), e.oracle_sql()\n"
-        "def c(q):\n    return q._REGISTRY, q.registered()\n"
+        "def c(q):\n    return q._REGISTRY, q.registry()\n"
         "def d(out):\n    return out['queries'], len(out)\n"
     )
     assert _enclosing(ast.parse(src), _is_registry_door) == [None, "a", "b", "b", "c", "c"]

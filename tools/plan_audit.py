@@ -26,12 +26,21 @@ from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
 from tools import runner  # noqa: E402
 
 
+#: plan counter -> (table flag, red-flag line printed on stdout or None)
+_FLAGS = {
+    "python_row": ("PY-ROW", "row-at-a-time Python UDF (BatchEvalPython)"),
+    "cartesian": ("CARTESIAN", "CartesianProduct join"),
+    "bnlj": ("bnlj", None),
+    "arrow_python": ("arrow", None),
+}
+
+
 def main() -> None:
     argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     spark = get_spark("plan_audit")
     rows, streams, skipped = [], [], []
-    for spec, rec, _ in runner.run(spark, sf_dir, runner.select(argv[1:]), plans=True):
+    for spec, rec, _ in runner.run(spark, sf_dir, runner.select(argv[1:])):
         if rec["error"]:
             skipped.append((spec.name, rec["error"][:120]))
         elif rec["streams"]:
@@ -39,13 +48,8 @@ def main() -> None:
         else:
             rows.append((spec.name, rec["plan"]))
     spark.stop()
-
-    flags: list[str] = []
-    for name, a in rows:
-        if a["python_row"]:
-            flags.append(f"{name}: row-at-a-time Python UDF (BatchEvalPython)")
-        if a["cartesian"]:
-            flags.append(f"{name}: CartesianProduct join")
+    flags = [f"{name}: {why}" for name, a in rows
+             for k, (_, why) in _FLAGS.items() if why and a[k]]
 
     lines = [
         "# PLAN_AUDIT — physical-plan signals per registered batch query",
@@ -66,19 +70,10 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|",
     ]
     for name, a in sorted(rows, key=lambda r: (-r[1]["exchanges"], r[0])):
-        fl = []
-        if a["python_row"]:
-            fl.append("PY-ROW")
-        if a["cartesian"]:
-            fl.append("CARTESIAN")
-        if a["bnlj"]:
-            fl.append("bnlj")
-        if a["arrow_python"]:
-            fl.append("arrow")
+        fl = " ".join(tag for k, (tag, _) in _FLAGS.items() if a[k])
         lines.append(
             f"| {name} | {a['exchanges']} | {a['broadcasts']} | {a['smj']} "
-            f"| {a['codegen_spans']} | {a['scans']} | {a['pushed']} "
-            f"| {' '.join(fl)} |"
+            f"| {a['codegen_spans']} | {a['scans']} | {a['pushed']} | {fl} |"
         )
     lines += [
         "",

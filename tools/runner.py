@@ -2,27 +2,20 @@
 
 bench.py and the oracle, plan and shuffle audits run catalog queries
 only through ``run``, in registration order. Per query: ``prepare`` off
-the clock; build (``spark_fn``) and exec (noop-sink write, or
-``toPandas`` with ``collect=True``) timed under the job groups
-``<name>.build`` / ``<name>.exec``; errors isolated. Right after it,
-off the clock, the query's jobs, stages, tasks, executor time, input,
-shuffle and spill per phase come from the live status store (the UI
-can stay off). The store keeps only the last ``spark.ui.retainedJobs``
-(1000) jobs, about one catalog pass, so it is read after every query.
+the clock (not with ``collect=True``: the oracle check runs the body as
+the driver does); build (``spark_fn``) and exec (noop-sink write, or
+``toPandas``) timed under the job groups ``<name>.build`` /
+``<name>.exec``; then, off the clock, the plan counters of a batch
+query and, from the live status store (UI off is fine), the per-phase
+jobs, stages, tasks, executor time, input, shuffle and spill. The store
+keeps only the last 1000 jobs (``spark.ui.retainedJobs``), about one
+catalog pass, so it is read after every query. An error in any step is
+the query's ``error``; the run goes on. Micro-batch jobs run under
+their stream's runId job group (the ``stream`` phase); a listener maps
+the runId to the query name and keeps every trigger. A record:
 
-Micro-batch jobs run under their stream's runId job group and form the
-``stream`` phase; a StreamingQueryListener maps the runId to the query
-name and keeps every trigger's ``durationMs`` and state commit time.
-Plan counters (``plans=True``) come from the plan explained after exec;
-a query that started a stream gets none, as its frame is only the
-read-back of the sink. A record:
-
-    {"name", "error", "build_s", "exec_s", "phases": {phase: {counter: n}},
-     "failed_stages": [str], "unstable": [phase],
-     "streams": [{"name", "triggers"}], "plan"}
-
-A phase is ``unstable`` when its counters can move between runs of the
-same code (``_Store.read``); compare those only across repeats.
+    {"name", "error", "build_s", "exec_s", "plan", "streams": [{"name", "triggers"}],
+     "phases": {phase: {counter: n}}, "failed_stages": [str], "unstable": [phase]}
 """
 
 from __future__ import annotations
@@ -34,7 +27,8 @@ from collections.abc import Iterable, Iterator
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-from smart_fraud_detection_data_pipeline_spark.queries import QuerySpec, registered
+from smart_fraud_detection_data_pipeline_spark.plans.explain import formatted_plan
+from smart_fraud_detection_data_pipeline_spark.queries import _REGISTRY, QuerySpec
 
 #: Jobs of any other group (none today) are booked under phase "other".
 PHASES = ("build", "exec", "stream")
@@ -58,7 +52,7 @@ def select(only: Iterable[str] = (), skip: Iterable[str] = ()) -> list[QuerySpec
     """Registered queries in registration order: those named in
     ``only`` (all when empty), minus those named in ``skip``."""
     only, skip = set(only), set(skip)
-    return [s for s in registered() if (not only or s.name in only) and s.name not in skip]
+    return [s for s in _REGISTRY if (not only or s.name in only) and s.name not in skip]
 
 
 def totals(rec: dict) -> dict[str, int]:
@@ -131,12 +125,10 @@ class _Store:
         first job that lists it, and only if it is new since the previous
         read: a stage reused from an earlier query is that query's cost.
 
-        A phase is unstable when two of its jobs ran at the same time.
-        AQE materializes independent query stages concurrently and
-        re-plans as each finishes, so which stage finishes first can
-        change the jobs, stages, tasks and shuffle the phase runs (a
-        slow shuffle-map stage of doc_clean_corpus sometimes runs twice:
-        10 exec jobs instead of 9, 428 more shuffle records)."""
+        A phase is unstable, its counters comparable only across repeats,
+        when two of its jobs ran at the same time: AQE re-plans as each
+        concurrent query stage finishes, so the finishing order can change
+        the work (doc_clean_corpus: 9 or 10 exec jobs)."""
         self._ctx.listenerBus().waitUntilEmpty()
         store = self._ctx.statusStore()
         jobs = sorted((j for j in self._json(store.jobsList(None))
@@ -169,7 +161,7 @@ class _Store:
 
 
 def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False,
-        plans: bool = False, repeat: int = 1) -> Iterator[tuple[QuerySpec, dict, object]]:
+        repeat: int = 1) -> Iterator[tuple[QuerySpec, dict, object]]:
     """Yield ``(spec, record, rows)`` per spec, in the given order;
     ``rows`` is the ``toPandas`` frame with ``collect=True``, else None.
     With ``repeat`` > 1 each query runs that many times and the record
@@ -180,8 +172,8 @@ def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False
 
     def execute(spec: QuerySpec, prepare: bool) -> tuple[dict, object]:
         name, known = spec.name, set(streams.runs)
-        rec = {"name": name, "error": None, "build_s": None, "exec_s": None}
-        df = rows = None
+        rec = {"name": name, "error": None, "build_s": None, "exec_s": None, "plan": None}
+        rows = None
         try:
             if prepare:
                 sc.setJobGroup(f"{name}.prepare", "prepare")
@@ -196,24 +188,28 @@ def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False
             else:
                 df.write.format("noop").mode("overwrite").save()
             rec["build_s"], rec["exec_s"] = round(t1 - t0, 3), round(time.perf_counter() - t1, 3)
+            if streams.runs.keys() <= known:
+                rec["plan"] = audit_plan(formatted_plan(df))
         except Exception as exc:  # noqa: BLE001 — isolation is the point
             rec["error"] = f"{type(exc).__name__}: {exc}"[:500]
         sc._jsc.clearJobGroup()  # noqa: SLF001
         runs = [r for r in streams.runs if r not in known]
-        rec["phases"], rec["failed_stages"], rec["unstable"] = store.read({
-            f"{name}.prepare": None, f"{name}.build": "build", f"{name}.exec": "exec",
-            **dict.fromkeys(runs, "stream")})
         rec["streams"] = [streams.runs[r] for r in runs]
-        batch = plans and not runs and rec["error"] is None
-        rec["plan"] = audit_plan(sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted")) if batch else None  # noqa: SLF001
+        try:
+            rec["phases"], rec["failed_stages"], rec["unstable"] = store.read({
+                f"{name}.prepare": None, f"{name}.build": "build", f"{name}.exec": "exec",
+                **dict.fromkeys(runs, "stream")})
+        except Exception as exc:  # noqa: BLE001
+            rec["phases"] = {p: dict.fromkeys(COUNTERS, 0) for p in PHASES}
+            rec["failed_stages"], rec["unstable"] = [], []
+            rec["error"] = rec["error"] or f"status store: {type(exc).__name__}: {exc}"[:500]
         return rec, rows
 
     try:
         for spec in specs:
             samples = []
             for i in range(repeat):
-                rec, rows = execute(spec, prepare=i == 0 and spec.prepare is not None)
+                rec, rows = execute(spec, prepare=i == 0 and spec.prepare is not None and not collect)
                 if rec["error"]:
                     break
                 samples.append(rec)

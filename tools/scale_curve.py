@@ -2,8 +2,10 @@
 
 Usage: python tools/scale_curve.py BASE.jsonl SCALED.jsonl [scale_factor]
 
-Reads the BENCH_perquery.jsonl records of two `bench.py` runs (e.g.
-sf0.1 and the x10 fixture of `tools/make_scale_fixture.py`) and prints,
+Reads the records files of two `bench.py` runs (e.g. the committed
+sf0.1 BENCH_perquery.jsonl and the X_perquery.jsonl of a run with
+SPARK_GRAFT_BENCH_OUT=X.json on the x10 fixture of
+`tools/make_scale_fixture.py`) and prints,
 per query in both: wall ratio, input-record ratio, and the
 shufRec/inRec ratio at both points. The last one is the superlinearity detector — the record ratio
 is scale-free by construction for every healthy plan shape, so a

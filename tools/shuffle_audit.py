@@ -24,6 +24,7 @@ Hard checks (exit non-zero on violation):
   partition sizing is badly wrong);
 - ``warehouse_load_incremental`` must read strictly less input than
   ``warehouse_load`` (partition pruning must reach the file scan).
+- no audited query may fail, nor any of its stages.
 
 Usage: python tools/shuffle_audit.py [sf_dir] [query ...]
 Writes SHUFFLE_AUDIT.md at the repo root and prints a one-line summary.
