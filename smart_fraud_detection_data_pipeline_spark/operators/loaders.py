@@ -34,13 +34,6 @@ from smart_fraud_detection_data_pipeline_spark.sources.tables import (
 )
 
 
-def read_partitioned_prefix(spark: SparkSession, path: str) -> DataFrame:
-    """S11-S13 + A5: one scan over a Hive-partitioned prefix. Partition
-    values come back typed (the reference's path-parsing returns strings
-    — load_fraud_records...py:128-141)."""
-    return read_parquet(spark, path)
-
-
 def uppercase_columns(df: DataFrame) -> DataFrame:
     """P11: warehouse-style column-name normalization
     (load_fraud_records...py:193)."""
@@ -54,12 +47,6 @@ def pad_missing_columns(df: DataFrame, required: StructType) -> DataFrame:
         if field.name not in df.columns:
             df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
     return df
-
-
-def select_required(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P7: fixed column order / projection before the warehouse write
-    (load_fraud_records...py:160-178)."""
-    return df.select(*columns)
 
 
 def warehouse_load(
@@ -78,13 +65,15 @@ def warehouse_load(
     keep-last tiebreak (the loaders use file/load order; callers
     materialize it as a batch_id/load-time column).
     """
-    df = read_partitioned_prefix(spark, source_path)
+    # S11-S13 + A5: one scan of the prefix, partition values typed
+    df = read_parquet(spark, source_path)
     if order_by:
         df = dedup_keep_last(df, keys, order_by)
     if required is not None:
         df = pad_missing_columns(df, required)
     if columns is not None:
-        df = select_required(df, columns)
+        # P7: fixed column order before the warehouse write
+        df = df.select(*columns)
     if target is None:
         return df
     return merge_upsert(target, df, keys)
@@ -200,15 +189,12 @@ def compact_dataset(
     ``dst`` in ~``target_bytes`` files. Returns the output file budget
     n = max(1, ceil(total_bytes / target_bytes)).
 
-    Companion to ``quality.compact_parquet`` (the IN-PLACE variant with
-    the crash-recovering directory swap): that one owns the commit
-    discipline for compacting a live local dataset in place, this one
-    owns the portable rewrite — listing (``sources.tables.dataset_files``)
-    and reading work on file://, hdfs:// and s3a:// paths alike — and a
-    src→dst move the caller commits however their store allows (rename,
-    lakehouse metadata swap). They also differ in rewrite shape by
-    design: in-place uses ``repartition`` (re-balance while paying the
-    rewrite anyway), this uses ``coalesce``.
+    The engine's one compaction path. The rewrite is portable — listing
+    (``sources.tables.dataset_files``, which skips ``_temporary/`` and
+    other hidden leftovers) and reading work on file://, hdfs:// and
+    s3a:// paths alike — and the src→dst move is the caller's to commit
+    however their store allows (rename, lakehouse metadata swap, or
+    ``quality.swap_write`` with ``recover_swap`` for a local directory).
 
     The ingest side of a 100 TB pipeline accretes small files (one per
     micro-batch per partition); every later scan then pays file-open +

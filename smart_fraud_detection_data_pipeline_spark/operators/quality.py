@@ -1,4 +1,4 @@
-"""Data-quality operators: constraint checking and small-file compaction.
+"""Data-quality operators: constraint checking and the crash-safe directory swap.
 
 Production pipelines bracket every ingest with (a) constraint checks —
 the reference approximates this with required-column guards and
@@ -8,9 +8,10 @@ drown in file-open overhead.
 
 `constraint_report` evaluates declarative rules in ONE aggregation pass
 (each rule compiles to a conditional count — no per-rule scans), so a
-100-rule suite over 100 TB still costs one scan. `compact_parquet`
-rewrites a directory to size-targeted files (the ingest-side fix the
-reference never needed at 2 rows/sec but any real volume does).
+100-rule suite over 100 TB still costs one scan. `swap_write` and
+`recover_swap` commit a rewrite of a live directory in place with crash
+recovery (run.py's marts); the small-file compaction itself is
+`loaders.compact_dataset`.
 """
 
 from __future__ import annotations
@@ -19,13 +20,8 @@ import os
 import shutil
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from smart_fraud_detection_data_pipeline_spark.sources.tables import (
-    dataset_files,
-    read_parquet,
-)
 
 
 def constraint_report(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
@@ -90,31 +86,6 @@ def swap_write(df: DataFrame, path: str) -> None:
     else:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         os.rename(tmp, path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    *,
-    target_file_mb: int = 256,
-    min_files: int = 1,
-) -> int:
-    """Rewrite a parquet directory into size-targeted files; returns the
-    new file count. Sizing: total bytes of the data files Spark reads
-    (`dataset_files`, so `_temporary/` and other hidden leftovers do not
-    count) / target (floor min_files) — at scale run per partition
-    directory so rewrites stay bounded and parallel. Companion to
-    ``loaders.compact_dataset`` (the src→dst narrow-coalesce variant
-    with Hadoop-FS listing, hash-gated by the ``warehouse_compaction``
-    query); THIS variant owns in-place local compaction, committed with
-    the crash-recovering `recover_swap` / `swap_write` pair.
-    """
-    path = path.rstrip("/")
-    recover_swap(path)
-    total_bytes = sum(size for _, _, size in dataset_files(spark, path))
-    n_files = max(min_files, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    swap_write(read_parquet(spark, path).repartition(n_files), path)
-    return n_files
 
 
 def _rule_aggs(rules: Mapping[str, Column]) -> list[Column]:

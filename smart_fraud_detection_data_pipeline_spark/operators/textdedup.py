@@ -576,12 +576,13 @@ def incremental_minhash_dedup(
         )
     base_buckets, base_sets = index
     # Delta sets feed signatures AND verification (same CSE hazard as
-    # the one-shot path) — materialize once. NULL-id delta docs are
+    # the one-shot path) — materialize once, lazily: no action here, as a
+    # streaming probe runs this per micro-batch. NULL-id delta docs are
     # excluded like the index side: without a key there is nothing to
     # admit or reject deterministically.
     delta_sets = _staged_shingles(
         delta.where(F.col(id_col).isNotNull()), text_col, id_col, n
-    ).select(F.col(id_col), F.col("__sh").alias("sh")).localCheckpoint()
+    ).select(F.col(id_col), F.col("__sh").alias("sh")).localCheckpoint(eager=False)
     delta_buckets = _salted_band_buckets(delta_sets, id_col, num_perm, bands)
 
     d = delta_buckets.toDF("id_d", "band", "key")

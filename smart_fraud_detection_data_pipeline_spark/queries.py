@@ -23,6 +23,7 @@ engines.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -51,6 +52,9 @@ from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
 
 @dataclass(frozen=True)
 class QuerySpec:
+    """One catalog query: a Spark body and its DuckDB twin. registry()
+    places it by its fingerprint (tools/runner.py) in the ledger."""
+
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str  # DuckDB SQL twin; every query has one
@@ -134,54 +138,27 @@ def _drain(
     return SK.read_or_empty(spark, out, like, with_batch_id=reemit)
 
 
-#: The driver's correctness run checks registry()[:50], so this ORDERED
-#: tuple names that window explicitly (tests/test_registry.py keeps it
-#: at >= 50 registered, unique names). Refresh it every round: queries
-#: whose Spark plan or oracle changed come first, then the names whose
-#: last driver certification is oldest (from the CORRECTNESS_rNN.json
-#: artifacts).
-_DRIVER_ROTATION = (
-    # --- the stateful streams on one state partition, and the
-    # compaction stream routed on its batch id ---
-    "dedup_streaming", "user_spend_trends_streaming",
-    "user_running_totals_streaming", "session_windows_streaming",
-    "stream_stream_join", "stream_stream_join_bucketed",
-    "stream_stream_left_join", "stream_stream_left_join_bucketed",
-    "stream_windowed_rollup", "dedup_streaming_compaction",
-    # --- text-dedup tiers on the shared entry, gram list, df cut,
-    # verifier, pair expansion and signatures, their oracles on the
-    # shared toks/gram/Jaccard/probe builders, and the guarded
-    # broadcast's three users ---
-    "doc_ngram_jaccard", "doc_ngram_jaccard_capped", "doc_minhash_lsh",
-    "doc_dedup_incremental", "doc_dedup_index_compaction",
-    "dedup_incremental_streaming", "doc_simhash", "doc_simhash_pairs",
-    "doc_decontaminate", "doc_decontaminate_bloom", "doc_repeated_passages",
-    "doc_strip_boilerplate", "doc_winnow_pairs", "doc_tfidf_cosine_pairs",
-    "doc_repetition", "vocab_top_ngrams", "doc_dup_components",
-    "doc_clean_corpus", "vocab_cms_counts", "corpus_training_export",
-    # --- not yet certified: the vector-search tiers and image/video
-    # decodes, the BM25 tiers and batch twins on one body each, the
-    # streaming queries drained through _drain, and the footer-schema
-    # readers of loader or sink output ---
-    "embed_cosine_topk", "embed_srp_ann", "embed_cosine_dups", "embed_ivf_ann",
-    "embed_semantic_dedup", "embed_semantic_dedup_kmeans",
-    "embed_ivf_kmeans_ann", "embed_ann_streaming", "embed_quantized_topk",
-    "embed_pq_ann", "embed_pq_rerank", "embed_ivfpq_ann", "embed_ivfpq_rerank",
-    "multimodal_image_decode", "multimodal_video_frames",
-    "doc_bm25_topk", "doc_bm25_topk_pruned", "doc_bm25_index_incremental",
-    "asof_last_purchase", "asof_last_purchase_bucketed",
-    "error_burst_window", "error_burst_window_bucketed", "session_windows",
-    "fraud_enrich_streaming", "warehouse_load", "warehouse_compaction",
-    "time_layout_scan", "zorder_layout_scan",
-)
+#: The certification ledger: registered name -> {"fp": the query's
+#: fingerprint (tools/runner.py) in this tree, "certified": {"round", "fp"}
+#: of its last driver pass, or null}. tools/certify.py writes it.
+LEDGER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "certified.json")
 
 
 def registry() -> list[QuerySpec]:
-    """_DRIVER_ROTATION in tuple order, then every other query in
-    registration order. A rotation name that is not registered raises."""
-    by_name = {s.name: s for s in _REGISTRY}
-    head = [by_name[n] for n in _DRIVER_ROTATION]
-    return head + [s for s in _REGISTRY if s.name not in _DRIVER_ROTATION]
+    """Every query once, in the order the driver's correctness run (which
+    checks registry()[:50]) should certify them: first the names whose
+    fingerprint differs from their certified one or that have no ledger
+    entry, then the oldest certified round; ties keep registration order.
+    Reads only the ledger."""
+    with open(LEDGER, encoding="utf-8") as fh:
+        ledger = json.load(fh)
+
+    def key(spec: QuerySpec) -> tuple[bool, int]:
+        entry = ledger.get(spec.name) or {}
+        cert = entry.get("certified") or {}
+        return cert.get("fp") is not None and cert["fp"] == entry.get("fp"), cert.get("round", 0)
+
+    return sorted(_REGISTRY, key=key)
 
 
 # ---------------------------------------------------------------------------

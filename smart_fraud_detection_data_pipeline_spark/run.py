@@ -38,9 +38,8 @@ full-prefix rescan (idempotent via MERGE, just wasteful — SURVEY §3
 EP3). Exit codes: 0 success, 1 job failure, 2 usage/missing input.
 
 Mart writes are snapshot-swap: merge output lands in a temp sibling,
-then two renames swap it in (operators.quality.swap_write, the helper
-compact_parquet also commits through — a leftover ``__old`` is
-recovered by quality.recover_swap on the next run). On a lakehouse
+then two renames swap it in (operators.quality.swap_write; a leftover
+``__old`` is recovered by quality.recover_swap on the next run). On a lakehouse
 table format the swap would be the format's atomic metadata commit
 instead (operators/merge.py:147).
 """

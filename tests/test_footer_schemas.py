@@ -23,10 +23,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from smart_fraud_detection_data_pipeline_spark import run as R
-from smart_fraud_detection_data_pipeline_spark.operators.loaders import (
-    compact_dataset,
-    read_partitioned_prefix,
-)
+from smart_fraud_detection_data_pipeline_spark.operators.loaders import compact_dataset
 from smart_fraud_detection_data_pipeline_spark.queries import _table_count, registry
 from smart_fraud_detection_data_pipeline_spark.sources import tables
 from smart_fraud_detection_data_pipeline_spark.sources.tables import (
@@ -186,7 +183,7 @@ def test_file_uri_reads_footer_and_compacts(spark, tmp_path):
     ).parquet(str(src))
     uri = src.as_uri()
     assert len(dataset_files(spark, uri)) == len(dataset_files(spark, str(src))) >= 3
-    assert _jobs(spark, lambda: read_partitioned_prefix(spark, uri)) == 0
+    assert _jobs(spark, lambda: read_parquet(spark, uri)) == 0
     assert read_parquet(spark, uri).schema == spark.read.parquet(uri).schema
     assert compact_dataset(spark, uri, dst.as_uri()) == 1
     assert len(dataset_files(spark, str(dst))) == 1

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from smart_fraud_detection_data_pipeline_spark.operators import loaders as L
+from smart_fraud_detection_data_pipeline_spark.sources.tables import read_parquet
 
 
 def test_uppercase_columns(spark):
@@ -28,11 +29,6 @@ def test_pad_missing_columns_typed_nulls(spark):
     assert out.collect()[0].extra is None
 
 
-def test_select_required_reorders(spark):
-    df = spark.createDataFrame([Row(b=2, a=1)])
-    assert L.select_required(df, ["a", "b"]).columns == ["a", "b"]
-
-
 def test_partitioned_prefix_roundtrip_with_typed_discovery(spark, tmp_path):
     """S11-S13: write Hive-partitioned, read back with typed partition
     values (the reference recovers them as strings by path parsing —
@@ -42,7 +38,7 @@ def test_partitioned_prefix_roundtrip_with_typed_discovery(spark, tmp_path):
         [Row(k=1, v=1.0, year=2024), Row(k=2, v=2.0, year=2025)]
     )
     df.write.partitionBy("year").parquet(p)
-    back = L.read_partitioned_prefix(spark, p)
+    back = read_parquet(spark, p)
     assert dict(back.dtypes)["year"] == "int"
     assert {r.year for r in back.collect()} == {2024, 2025}
     # _SUCCESS marker files are ignored by the file index
@@ -58,6 +54,9 @@ def test_warehouse_load_composite(spark, tmp_path):
     first.write.mode("append").parquet(p)
     reemit.write.mode("append").parquet(p)
     target = spark.createDataFrame([Row(k=3, v=30.0, seq=0)])
+    # P7: a first load (no target) comes back in the required column order
+    assert L.warehouse_load(spark, p, None, ["k"], columns=["seq", "k", "v"]).columns == [
+        "seq", "k", "v"]
     out = L.warehouse_load(
         spark, p, target, ["k"], order_by=["seq"], columns=["k", "v", "seq"]
     )
@@ -74,7 +73,7 @@ def test_partition_pruning_reaches_scan(spark, tmp_path):
     spark.range(100).select(
         F.col("id"), (F.col("id") % 4).alias("part")
     ).write.partitionBy("part").parquet(p)
-    df = L.read_partitioned_prefix(spark, p).where(F.col("part") == 2)
+    df = read_parquet(spark, p).where(F.col("part") == 2)
     plan = formatted_plan(df)
     assert "PartitionFilters" in plan and "part" in plan.split("PartitionFilters")[1][:120]
 
@@ -231,8 +230,13 @@ def test_compact_dataset_reduces_files_preserves_rows(spark, tmp_path):
     )
     df.repartition(24).write.parquet(src)
     assert len(L.dataset_files(spark, src)) == 24
-    n = L.compact_dataset(spark, src, dst)
-    assert n == 1  # 10k tiny rows fit one 128 MB budget file
+    # a stale 3 MB part a crashed writer left under _temporary/ is not
+    # data: it must not raise a 1 MB budget above one file
+    os.makedirs(os.path.join(src, "_temporary", "0"))
+    with open(os.path.join(src, "_temporary", "0", "part-0.parquet"), "wb") as fh:
+        fh.write(b"\0" * (3 * 1024 * 1024))
+    n = L.compact_dataset(spark, src, dst, target_bytes=1024 * 1024)
+    assert n == 1  # 10k tiny rows fit one 1 MB budget file
     assert len(L.dataset_files(spark, dst)) == 1
     assert spark.read.parquet(dst).count() == 10_000
     assert (

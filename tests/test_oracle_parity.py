@@ -1,20 +1,30 @@
-"""Every registered query must match its DuckDB oracle exactly at sf0.001.
+"""Every registered query must match its DuckDB oracle exactly at sf0.001,
+and, at sf0.001, its fingerprint must be the one the certification ledger
+holds.
 
-This is a fast local version of the driver's sf0.01 correctness gate
-(tools/oracle_check.py is the standalone runner).
+One catalog pass: each query runs once, through the registry runner as
+tools/oracle_check.py (the standalone sf0.01 replica of the driver's
+correctness gate) runs it, and the runner fingerprints it off the clock.
+A fingerprint mismatch means the ledger is stale: run
+``python tools/certify.py`` and commit the ledger.
 """
 
 from __future__ import annotations
+
+import json
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
 from smart_fraud_detection_data_pipeline_spark import TABLES
+from smart_fraud_detection_data_pipeline_spark.queries import LEDGER
+from tools import certify, runner
 from tools.oracle_check import compare
 
-_QUERIES = entrymod.queries()
-_ORACLES = entrymod.oracle_sql()
+_SPECS = {s.name: s for s in runner.select()}
+with open(LEDGER, encoding="utf-8") as _fh:
+    _LEDGER = json.load(_fh)
 
 
 @pytest.fixture(scope="module")
@@ -26,12 +36,14 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(_QUERIES))
+@pytest.mark.parametrize("name", sorted(_SPECS))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
-    sdf = _QUERIES[name](spark, sf_dir).toPandas()
-    odf = duck.sql(_ORACLES[name]).df()
-    problems = compare(sdf, odf)
+    [(spec, rec, sdf)] = runner.run(spark, sf_dir, [_SPECS[name]], collect=True)
+    assert rec["error"] is None, rec["error"]
+    problems = compare(sdf, duck.sql(spec.oracle).df())
     assert not problems, problems
+    if sf_dir == certify.SF_DIR:
+        assert rec["fp"] == _LEDGER.get(name, {}).get("fp"), "stale ledger: run tools/certify.py"
 
 
 def test_entry_smoke(spark):

@@ -1,4 +1,4 @@
-"""Tests for constraint checking and parquet compaction."""
+"""Tests for constraint checking and the crash-safe directory swap."""
 
 from __future__ import annotations
 
@@ -8,7 +8,11 @@ import os
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from smart_fraud_detection_data_pipeline_spark.operators.quality import compact_parquet, constraint_report
+from smart_fraud_detection_data_pipeline_spark.operators.quality import (
+    constraint_report,
+    recover_swap,
+    swap_write,
+)
 
 
 def test_constraint_report_counts(spark):
@@ -33,38 +37,6 @@ def test_constraint_report_counts(spark):
     }
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    p = str(tmp_path / "frag")
-    # fragment: 20 tiny files
-    for i in range(20):
-        spark.range(i * 10, (i + 1) * 10).coalesce(1).write.mode("append").parquet(p)
-    before_files = len(glob.glob(os.path.join(p, "*.parquet")))
-    assert before_files >= 20
-    before = spark.read.parquet(p)
-    before_sum = before.agg(F.sum("id")).collect()[0][0]
-
-    n = compact_parquet(spark, p, target_file_mb=256)
-    after_files = len(glob.glob(os.path.join(p, "*.parquet")))
-    after = spark.read.parquet(p)
-    assert n == 1 and after_files == 1
-    assert after.count() == 200
-    assert after.agg(F.sum("id")).collect()[0][0] == before_sum
-    assert not os.path.exists(p + "__old") and not os.path.exists(p + "__staged")
-
-
-def test_compact_parquet_sizes_from_data_files_only(spark, tmp_path):
-    """The rewrite budget counts only files Spark reads: a stale 3 MB
-    `_temporary/` part left by a crashed writer must not raise a 1 MB
-    target above one file."""
-    p = str(tmp_path / "stale")
-    spark.range(100).coalesce(1).write.parquet(p)
-    os.makedirs(os.path.join(p, "_temporary", "0"))
-    with open(os.path.join(p, "_temporary", "0", "part-0.parquet"), "wb") as fh:
-        fh.write(b"\0" * (3 * 1024 * 1024))
-    assert compact_parquet(spark, p, target_file_mb=1) == 1
-    assert spark.read.parquet(p).count() == 100
-
-
 def test_schema_evolution_merge(spark, tmp_path):
     """Source-side schema evolution: later files add a column; mergeSchema
     reads both generations with typed nulls for the missing column."""
@@ -77,23 +49,25 @@ def test_schema_evolution_merge(spark, tmp_path):
     assert rows == {1: None, 2: "new"}
 
 
-def test_compact_parquet_recovers_from_crashed_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves data stranded in
-    <path>__old with <path> missing; the next run must restore and
-    complete (ADVICE r1: recover from a leftover __old on entry)."""
+def test_recover_swap_converges_after_a_crashed_swap(spark, tmp_path):
+    """A crash between swap_write's two renames leaves the data stranded
+    in <path>__old with <path> missing: recover_swap restores it. A
+    leftover __old next to a completed swap is dropped (ADVICE r1:
+    recover from a leftover __old on entry)."""
     path = str(tmp_path / "data")
     spark.range(100).repartition(4).write.parquet(path)
     os.rename(path, path + "__old")  # simulate mid-swap crash
-    assert not os.path.exists(path)
-    compact_parquet(spark, path, target_file_mb=1024, min_files=1)
+    recover_swap(path)
     assert spark.read.parquet(path).count() == 100
     assert not os.path.exists(path + "__old")
 
-    # and a leftover __old AFTER a completed swap is just cleaned up
-    spark.range(7).write.parquet(path + "__old")
-    compact_parquet(spark, path, target_file_mb=1024, min_files=1)
+    swap_write(spark.read.parquet(path).coalesce(1), path)
     assert spark.read.parquet(path).count() == 100
-    assert not os.path.exists(path + "__old")
+    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
+    spark.range(7).write.parquet(path + "__old")  # cleanup died after the swap
+    recover_swap(path)
+    assert spark.read.parquet(path).count() == 100
+    assert not os.path.exists(path + "__old") and not os.path.exists(path + "__staged")
 
 
 def test_observed_constraints_batch(spark):

@@ -1,46 +1,79 @@
-"""Registry shape: unique names, a fully named driver window, an oracle
-for every query, and registry() order. Needs no SparkSession."""
+"""Registry shape and the certification ledger: unique names, an oracle
+for every query, registry() order from the ledger, a ledger keyed by
+exactly the registered names, and every driver round absorbed into it
+(tools/certify.py). tests/test_oracle_parity.py checks the ledger's
+fingerprints against the tree. Needs no SparkSession."""
 
 from __future__ import annotations
 
-from smart_fraud_detection_data_pipeline_spark.queries import (
-    _DRIVER_ROTATION,
-    _REGISTRY,
-    registry,
-)
+import json
 
-_NAMES = [s.name for s in _REGISTRY]
+from smart_fraud_detection_data_pipeline_spark import queries as Q
+from tools import certify
+
+_NAMES = [s.name for s in Q._REGISTRY]
+
+
+def _ledger() -> dict:
+    with open(Q.LEDGER, encoding="utf-8") as fh:
+        return json.load(fh)
 
 
 def test_names_unique():
     assert len(set(_NAMES)) == len(_NAMES)
 
 
-def test_rotation_names_registered_once():
-    assert sorted(set(_DRIVER_ROTATION) - set(_NAMES)) == []
-    assert len(set(_DRIVER_ROTATION)) == len(_DRIVER_ROTATION)
-
-
-def test_rotation_covers_driver_window():
-    # the driver checks registry()[:50]; every slot must be named here
-    assert len(_DRIVER_ROTATION) >= 50
-
-
 def test_every_spec_has_oracle():
-    missing = [s.name for s in _REGISTRY if not (isinstance(s.oracle, str) and s.oracle.strip())]
+    missing = [s.name for s in Q._REGISTRY if not (isinstance(s.oracle, str) and s.oracle.strip())]
     assert missing == []
 
 
-def test_registry_order():
-    rest = [n for n in _NAMES if n not in _DRIVER_ROTATION]
-    assert [s.name for s in registry()] == list(_DRIVER_ROTATION) + rest
+def test_registry_returns_each_name_once():
+    assert sorted(s.name for s in Q.registry()) == sorted(_NAMES)
+
+
+def test_registry_order(tmp_path, monkeypatch):
+    """Changed or unknown names first, the oldest certified round first
+    among them; then the unchanged ones by certified round; ties keep
+    registration order."""
+    a, b, c, d, e, *rest = _NAMES
+    ledger = {
+        a: {"fp": "a", "certified": {"round": 3, "fp": "a"}},
+        b: {"fp": "b", "certified": {"round": 9, "fp": "old"}},
+        c: {"fp": "c", "certified": None},
+        # d has no entry
+        e: {"fp": "e", "certified": {"round": 2, "fp": "e"}},
+        **{n: {"fp": n, "certified": {"round": 5, "fp": n}} for n in rest},
+    }
+    path = tmp_path / "certified.json"
+    path.write_text(json.dumps(ledger))
+    monkeypatch.setattr(Q, "LEDGER", str(path))
+    assert [s.name for s in Q.registry()] == [c, d, b, e, a, *rest]
+
+
+def test_ledger_keys_are_the_registered_names():
+    assert sorted(_ledger()) == sorted(_NAMES)
+
+
+def test_ledger_has_absorbed_every_driver_round():
+    """A driver CORRECTNESS_r<NN>.json newer than the ledger's latest
+    certified round fails here until ``python tools/certify.py`` absorbs it."""
+    assert max(certify.driver_rounds(), default=0) <= certify.latest_round(_ledger())
+
+
+def test_only_driver_artifacts_count_as_rounds(tmp_path, monkeypatch):
+    for f in ("CORRECTNESS_r15.json", "CORRECTNESS_r7.json", "CORRECTNESS_local_r24.json",
+              "CORRECTNESS_local7_r13.json", "CORRECTNESS_r9b.json", "BENCH_r16.json"):
+        (tmp_path / f).write_text("{}")
+    monkeypatch.setattr(certify, "_REPO", str(tmp_path))
+    assert sorted(certify.driver_rounds()) == [7, 15]
 
 
 def test_twins_share_their_oracle():
     # every bucketed hot-key hatch is certified by the SAME oracle as
     # its unbucketed twin, and the streaming session windows by the
     # batch one, so the twin strings must not drift apart
-    oracle = {s.name: s.oracle for s in _REGISTRY}
+    oracle = {s.name: s.oracle for s in Q._REGISTRY}
     bucketed = [n for n in _NAMES if n.endswith("_bucketed")]
     assert len(bucketed) >= 4
     pairs = [(n, n[: -len("_bucketed")]) for n in bucketed]

@@ -53,6 +53,18 @@ def test_stream_record_carries_its_micro_batches(spark, sf_dir):
     assert rec["plan"] is None
 
 
+def test_minhash_stream_probe_runs_no_action_of_its_own(spark, sf_dir):
+    """Per trigger of the two-file minhash ingest stream: the round-robin
+    spread's map stage, the probe's AQE query stages and the sink write,
+    nine jobs. The eager delta checkpoint inside foreachBatch made a
+    tenth."""
+    [(_, rec, _)] = runner.run(spark, sf_dir, runner.select(["dedup_incremental_streaming"]))
+    assert rec["error"] is None, rec["error"]
+    [stream] = rec["streams"]
+    assert len(stream["triggers"]) == 2
+    assert rec["phases"]["stream"]["jobs"] <= 9 * len(stream["triggers"])
+
+
 def test_runner_isolates_a_failing_query(spark, sf_dir):
     [spec] = runner.select(["scan_filter_project"])
     recs = [rec for _, rec, _ in runner.run(spark, "/nonexistent", [spec, spec])]

@@ -12,7 +12,9 @@ text-dedup tiers verify exact Jaccard and expand in-row pairs through
 one helper each (textdedup.py); their oracles build word-gram lists and
 MinHash probes through one builder each (queries.py). Among bench.py
 and tools/, only the registry runner (tools/runner.py) reaches the
-query registry. Needs no SparkSession."""
+query registry. No package module keeps a hand list of query names:
+the certification ledger orders the driver's window. Needs no
+SparkSession."""
 
 from __future__ import annotations
 
@@ -418,3 +420,25 @@ def test_only_the_runner_loops_over_the_registry():
             if _enclosing(ast.parse(fh.read()), _is_registry_door):
                 users.add(os.path.relpath(path, os.path.dirname(PKG)))
     assert users == {"tools/runner.py"}
+
+
+def _name_list(names):
+    """Matches a literal tuple or list holding 5 or more of ``names``
+    (the shape of the hand-kept driver rotation the ledger replaced)."""
+    return lambda node: isinstance(node, (ast.Tuple, ast.List)) and sum(
+        isinstance(e, ast.Constant) and e.value in names for e in node.elts) >= 5
+
+
+def test_query_name_list_lint_sees_each_form():
+    names = {"a", "b", "c", "d", "e", "f"}
+    src = (
+        "_ROTATION = (\n    'a', 'b',\n    'c', 'd', 'e',\n)\n"
+        "def f():\n    return ['a', 'b', 'c', 'd', 'e', 'f'], ('a', 'b', 'c', 'd'), {'a', 'b', 'c', 'd', 'e'}\n"
+    )
+    assert _enclosing(ast.parse(src), _name_list(names)) == [None, "f"]
+
+
+def test_no_hand_list_of_query_names():
+    from smart_fraud_detection_data_pipeline_spark.queries import _REGISTRY
+
+    assert _package_sites(_name_list({s.name for s in _REGISTRY})) == []

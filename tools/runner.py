@@ -12,16 +12,24 @@ keeps only the last 1000 jobs (``spark.ui.retainedJobs``), about one
 catalog pass, so it is read after every query. An error in any step is
 the query's ``error``; the run goes on. Micro-batch jobs run under
 their stream's runId job group (the ``stream`` phase); a listener maps
-the runId to the query name and keeps every trigger. A record:
+the runId to the query name and keeps every trigger. Off the clock, each
+error-free query also gets its ``fingerprint`` (``fp``), which the
+certification ledger (tools/certify.py) stores. A record:
 
-    {"name", "error", "build_s", "exec_s", "plan", "streams": [{"name", "triggers"}],
+    {"name", "error", "build_s", "exec_s", "plan", "fp", "streams": [{"name", "triggers"}],
      "phases": {phase: {counter: n}}, "failed_stages": [str], "unstable": [phase]}
 """
 
 from __future__ import annotations
 
+import ast
+import functools
+import hashlib
+import inspect
 import json
 import re
+import sys
+import textwrap
 import time
 from collections.abc import Iterable, Iterator
 
@@ -46,6 +54,7 @@ _STAGE_FIELDS = {
     "diskBytesSpilled": "spill_disk_bytes",
 }
 COUNTERS = ("jobs", "stages", *_STAGE_FIELDS.values())
+_PKG = QuerySpec.__module__.split(".")[0]
 
 
 def select(only: Iterable[str] = (), skip: Iterable[str] = ()) -> list[QuerySpec]:
@@ -79,6 +88,75 @@ def audit_plan(plan: str) -> dict[str, object]:
         "scans": sum(n == "Scan" for n in nodes),
         "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
     }
+
+
+#: what differs between two builds of one query's plan: lambda-variable
+#: suffixes, expression ids, object hashes of folded literals, core-count
+#: sized repartitions and ranges, the dataframe id of CollectMetrics
+_PLAN_NOISE = ((r"(lambda \w+?)_\d+(?=#)", r"\1"), (r"#\d+L?", "#"), (r"(?<=\w)@[0-9a-f]+\b", "@"),
+               (r"(Repartition) \d+|splits=Some\(\d+\)", r"\1"), (r"^(.*CollectMetrics .*), \d+$", r"\1"))
+#: plan text standing for work the plan does not show: driver-built or
+#: checkpointed rows, a cache, Python code, a literal printed as an object hash
+_HIDDEN = re.compile(r"\b(LogicalRDD|LocalRelation|InMemoryRelation)\b|Python|InPandas|InArrow|\w@[0-9a-f]+\b")
+
+
+def fingerprint(spec: QuerySpec, df, sf_dir: str, *, ran_jobs: bool) -> str:
+    """sha256 of the query's normalized optimized plan, its oracle SQL
+    and, when the plan cannot show all its work, the package code its
+    body reaches (``_code``): the query ran Spark jobs while building
+    (``ran_jobs``: a stream, a persisted index, a fit, a checkpoint), or
+    its plan reads files outside ``sf_dir`` or matches ``_HIDDEN``."""
+    plan = text = df._jdf.queryExecution().optimizedPlan().toString()
+    for pattern, repl in _PLAN_NOISE:
+        text = re.sub(pattern, repl, text, flags=re.M)
+    # the distinct-aggregate rewrite numbers its groups (gid) in hash
+    # order: those lines keep their tokens, not their order
+    text = re.sub(r"^.*\bgid#.*$", lambda m: " ".join(sorted(
+        re.split(r"[\s,\[\]()]+", re.sub(r"\b\d+\b", "?", m[0])))), text, flags=re.M)
+    parts = [text, spec.oracle]
+    if ran_jobs or _HIDDEN.search(plan) or any(sf_dir not in f for f in df.inputFiles()):
+        parts += sorted(_code(spec.spark_fn))
+    return hashlib.sha256("\0".join(parts).encode()).hexdigest()
+
+
+def _code(fn) -> set[str]:
+    """The package code ``fn`` reaches: the docstring-free syntax tree of
+    each package function or class it names, transitively, and the value
+    of each package constant it names. Comments, docstrings and line
+    numbers are left out; local names are not."""
+    out, seen, todo = set(), set(), [fn]
+    while todo:
+        obj = inspect.unwrap(todo.pop())
+        if obj in seen:
+            continue
+        seen.add(obj)
+        tree, names = _parsed(obj)
+        out.add(f"{obj.__module__}.{obj.__qualname__}\0{tree}")
+        for key, val in names:
+            val = inspect.unwrap(val) if callable(val) else val
+            if (inspect.isfunction(val) or inspect.isclass(val)) and val.__module__.startswith(_PKG):
+                todo.append(val)
+            elif isinstance(val, (int, float, str, bytes)) and key.startswith(_PKG):
+                out.add(f"{key}\0{val!r}")
+    return out
+
+
+@functools.cache
+def _parsed(obj) -> tuple[str, list[tuple[str, object]]]:
+    """obj's docstring-free syntax tree, dumped, and the (qualified name,
+    value) of each global and module attribute it names, but not the
+    module state it rebinds (``global``: a scratch root is a fresh path
+    in every process)."""
+    tree, scope = ast.parse(textwrap.dedent(inspect.getsource(obj))), vars(sys.modules[obj.__module__])
+    names, state = [], {n for g in ast.walk(tree) if isinstance(g, ast.Global) for n in g.names}
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) and ast.get_docstring(node) is not None:
+            node.body = node.body[1:]
+        if isinstance(node, ast.Name) and node.id not in state:
+            names.append((f"{obj.__module__}.{node.id}", scope.get(node.id)))
+        elif isinstance(node, ast.Attribute) and inspect.ismodule(mod := scope.get(getattr(node.value, "id", None))):
+            names.append((f"{mod.__name__}.{node.attr}", getattr(mod, node.attr, None)))
+    return ast.dump(tree), names
 
 
 class _Streams(StreamingQueryListener):
@@ -172,7 +250,8 @@ def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False
 
     def execute(spec: QuerySpec, prepare: bool) -> tuple[dict, object]:
         name, known = spec.name, set(streams.runs)
-        rec = {"name": name, "error": None, "build_s": None, "exec_s": None, "plan": None}
+        rec = {"name": name, "error": None, "build_s": None, "exec_s": None, "plan": None,
+               "fp": None}
         rows = None
         try:
             if prepare:
@@ -190,6 +269,8 @@ def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False
             rec["build_s"], rec["exec_s"] = round(t1 - t0, 3), round(time.perf_counter() - t1, 3)
             if streams.runs.keys() <= known:
                 rec["plan"] = audit_plan(formatted_plan(df))
+            rec["fp"] = fingerprint(spec, df, sf_dir, ran_jobs=bool(
+                streams.runs.keys() - known or sc.statusTracker().getJobIdsForGroup(f"{name}.build")))
         except Exception as exc:  # noqa: BLE001 — isolation is the point
             rec["error"] = f"{type(exc).__name__}: {exc}"[:500]
         sc._jsc.clearJobGroup()  # noqa: SLF001
