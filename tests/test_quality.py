@@ -8,6 +8,7 @@ import os
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from smart_fraud_detection_data_pipeline_spark.operators import loaders as L
 from smart_fraud_detection_data_pipeline_spark.operators.quality import (
     constraint_report,
     recover_swap,
@@ -35,6 +36,19 @@ def test_constraint_report_counts(spark):
         "s_not_null": (4, 1),
         "always_ok": (4, 0),
     }
+
+
+def test_compact_parquet_sizes_from_data_files_only(spark, tmp_path):
+    """The compaction budget (loaders.compact_dataset) counts only files
+    Spark reads: a stale 3 MB `_temporary/` part left by a crashed writer
+    must not raise a 1 MB target above one file."""
+    src, dst = str(tmp_path / "stale"), str(tmp_path / "out")
+    spark.range(100).coalesce(1).write.parquet(src)
+    os.makedirs(os.path.join(src, "_temporary", "0"))
+    with open(os.path.join(src, "_temporary", "0", "part-0.parquet"), "wb") as fh:
+        fh.write(b"\0" * (3 * 1024 * 1024))
+    assert L.compact_dataset(spark, src, dst, target_bytes=1024 * 1024) == 1
+    assert spark.read.parquet(dst).count() == 100
 
 
 def test_schema_evolution_merge(spark, tmp_path):
