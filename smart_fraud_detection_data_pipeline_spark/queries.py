@@ -138,9 +138,10 @@ def _drain(
     return SK.read_or_empty(spark, out, like, with_batch_id=reemit)
 
 
-#: The certification ledger: registered name -> {"fp": the query's
-#: fingerprint (tools/runner.py) in this tree, "certified": {"round", "fp"}
-#: of its last driver pass, or null}. tools/certify.py writes it.
+#: The certification ledger: {"absorbed_round": the last driver round read
+#: into it, "queries": registered name -> {"fp": the query's fingerprint
+#: (tools/runner.py) in this tree, "certified": {"round", "fp"} of its last
+#: driver pass, or null}}. tools/certify.py writes it.
 LEDGER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "certified.json")
 
 
@@ -151,7 +152,7 @@ def registry() -> list[QuerySpec]:
     entry, then the oldest certified round; ties keep registration order.
     Reads only the ledger."""
     with open(LEDGER, encoding="utf-8") as fh:
-        ledger = json.load(fh)
+        ledger = json.load(fh)["queries"]
 
     def key(spec: QuerySpec) -> tuple[bool, int]:
         entry = ledger.get(spec.name) or {}

@@ -10,8 +10,9 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from smart_fraud_detection_data_pipeline_spark import get_spark  # noqa: E402
+from tools import certify  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", certify.SF_DIR)
 
 
 @pytest.fixture(scope="session")

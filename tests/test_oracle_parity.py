@@ -24,7 +24,7 @@ from tools.oracle_check import compare
 
 _SPECS = {s.name: s for s in runner.select()}
 with open(LEDGER, encoding="utf-8") as _fh:
-    _LEDGER = json.load(_fh)
+    _LEDGER = json.load(_fh)["queries"]
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +44,11 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     assert not problems, problems
     if sf_dir == certify.SF_DIR:
         assert rec["fp"] == _LEDGER.get(name, {}).get("fp"), "stale ledger: run tools/certify.py"
+
+
+def test_driver_maps_hold_every_registered_query():
+    assert entrymod.queries() == {n: s.spark_fn for n, s in _SPECS.items()}
+    assert entrymod.oracle_sql() == {n: s.oracle for n, s in _SPECS.items()}
 
 
 def test_entry_smoke(spark):

@@ -19,6 +19,10 @@ def _ledger() -> dict:
         return json.load(fh)
 
 
+def _passed(ok: bool) -> dict:
+    return {"rows_match": True, "schema_match": True, "hash_match": ok, "err": None}
+
+
 def test_names_unique():
     assert len(set(_NAMES)) == len(_NAMES)
 
@@ -37,7 +41,7 @@ def test_registry_order(tmp_path, monkeypatch):
     among them; then the unchanged ones by certified round; ties keep
     registration order."""
     a, b, c, d, e, *rest = _NAMES
-    ledger = {
+    queries = {
         a: {"fp": "a", "certified": {"round": 3, "fp": "a"}},
         b: {"fp": "b", "certified": {"round": 9, "fp": "old"}},
         c: {"fp": "c", "certified": None},
@@ -46,19 +50,34 @@ def test_registry_order(tmp_path, monkeypatch):
         **{n: {"fp": n, "certified": {"round": 5, "fp": n}} for n in rest},
     }
     path = tmp_path / "certified.json"
-    path.write_text(json.dumps(ledger))
+    path.write_text(json.dumps({"absorbed_round": 9, "queries": queries}))
     monkeypatch.setattr(Q, "LEDGER", str(path))
     assert [s.name for s in Q.registry()] == [c, d, b, e, a, *rest]
 
 
 def test_ledger_keys_are_the_registered_names():
-    assert sorted(_ledger()) == sorted(_NAMES)
+    assert sorted(_ledger()["queries"]) == sorted(_NAMES)
 
 
 def test_ledger_has_absorbed_every_driver_round():
-    """A driver CORRECTNESS_r<NN>.json newer than the ledger's latest
-    certified round fails here until ``python tools/certify.py`` absorbs it."""
-    assert max(certify.driver_rounds(), default=0) <= certify.latest_round(_ledger())
+    """A driver CORRECTNESS_r<NN>.json newer than the ledger's absorbed
+    round fails here until ``python tools/certify.py`` absorbs it."""
+    assert max(certify.driver_rounds(), default=0) <= _ledger()["absorbed_round"]
+
+
+def test_absorb_certifies_passes_and_moves_past_an_all_failing_round(tmp_path, monkeypatch):
+    a, b = _NAMES[:2]
+    (tmp_path / "CORRECTNESS_r14.json").write_text(json.dumps({a: _passed(True)}))
+    (tmp_path / "CORRECTNESS_r15.json").write_text(json.dumps({a: _passed(False), b: _passed(False)}))
+    monkeypatch.setattr(certify, "_REPO", str(tmp_path))
+    old = {"round": 12, "fp": "a0"}
+    ledger = {"absorbed_round": 14, "queries": {a: {"fp": "a1", "certified": old},
+                                                b: {"fp": "b1", "certified": None}}}
+    assert certify.absorb(ledger)["absorbed_round"] == 15  # no name passed in r15
+    assert ledger["queries"][a]["certified"] == old and ledger["queries"][b]["certified"] is None
+    (tmp_path / "CORRECTNESS_r16.json").write_text(json.dumps({b: _passed(True), "gone": _passed(True)}))
+    assert certify.absorb(ledger) == {"absorbed_round": 16, "queries": {
+        a: {"fp": "a1", "certified": old}, b: {"fp": "b1", "certified": {"round": 16, "fp": "b1"}}}}
 
 
 def test_only_driver_artifacts_count_as_rounds(tmp_path, monkeypatch):

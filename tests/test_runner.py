@@ -1,12 +1,22 @@
 """The registry runner (tools/runner.py): per-query records with phase
 counters read from the status store, stream triggers from the listener,
 job and stage counts that do not depend on the order queries run in,
-and the local core count the session builder defaults to."""
+the package code a fingerprint hashes, and the local core count the
+session builder defaults to."""
 
 from __future__ import annotations
 
+import ast
+import hashlib
+import json
 import os
+import shutil
+import subprocess
+import sys
 
+import pytest
+
+import smart_fraud_detection_data_pipeline_spark as pkg
 from smart_fraud_detection_data_pipeline_spark.session import local_cpus
 from tools import runner
 
@@ -103,3 +113,36 @@ def test_local_cpus_defaults_to_usable_cores(monkeypatch):
     assert local_cpus() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert local_cpus() == 3
+
+
+def _code_hash(spec) -> str:
+    return hashlib.sha256("\0".join(sorted(runner._code(spec.spark_fn))).encode()).hexdigest()
+
+
+def _mutated(root, module: str, fn: str) -> None:
+    """A copy of the package under ``root`` whose ``module.fn`` ends in one
+    more statement."""
+    src = os.path.dirname(pkg.__file__)
+    shutil.copytree(src, root / pkg.__name__, ignore=shutil.ignore_patterns("__pycache__"))
+    path = root / pkg.__name__ / f"{module.replace('.', '/')}.py"
+    lines = path.read_text().splitlines(keepends=True)
+    last = next(n for n in ast.parse("".join(lines)).body if getattr(n, "name", None) == fn).body[-1]
+    lines.insert(last.end_lineno, " " * last.col_offset + "pass\n")
+    path.write_text("".join(lines))
+
+
+@pytest.mark.parametrize(("module", "fn", "callers"), [
+    ("operators.loaders", "compact_dataset", {"warehouse_compaction"}),
+    ("operators.ml", "kmeans_centroids", {"embed_semantic_dedup_kmeans", "embed_ivf_kmeans_ann"}),
+])
+def test_code_hash_follows_imports_in_query_bodies(tmp_path, module, fn, callers):
+    """Editing a helper that query bodies import inside themselves
+    changes the code hash of exactly those queries."""
+    _mutated(tmp_path, module, fn)
+    script = ("import sys; sys.path[:0] = sys.argv[1:]\n"
+              "from tools import runner\nfrom tests.test_runner import _code_hash\n"
+              "print(__import__('json').dumps({s.name: _code_hash(s) for s in runner.select()}))")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    after = json.loads(subprocess.run([sys.executable, "-c", script, str(tmp_path), repo],
+                                      capture_output=True, text=True, check=True).stdout)
+    assert {s.name for s in runner.select() if _code_hash(s) != after[s.name]} == callers

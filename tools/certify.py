@@ -1,9 +1,10 @@
 """Rewrite the certification ledger (queries.LEDGER) that orders registry().
 
 First absorbs each driver correctness artifact CORRECTNESS_r<NN>.json at
-the repo root newer than the ledger's latest certified round: every name
-it passed gets certified = {"round": NN, "fp": its fp in the ledger}, the
-tree the driver ran. Then fingerprints every registered query at sf0.001
+the repo root newer than the ledger's ``absorbed_round``: every name it
+passed gets certified = {"round": NN, "fp": its fp in the ledger}, the
+tree the driver ran, and ``absorbed_round`` becomes NN, whether or not
+any name passed. Then fingerprints every registered query at sf0.001
 through the registry runner and rewrites each fp (null for a query that
 fails, which then sorts as changed).
 
@@ -32,24 +33,28 @@ def driver_rounds() -> dict[int, str]:
     return {int(m[1]): os.path.join(_REPO, m[0]) for m in found if m}
 
 
-def latest_round(ledger: dict) -> int:
-    return max((e["certified"]["round"] for e in ledger.values() if e["certified"]), default=0)
+def absorb(ledger: dict) -> dict:
+    """``ledger`` with every driver round newer than its absorbed round absorbed."""
+    for rnd, path in sorted(r for r in driver_rounds().items() if r[0] > ledger["absorbed_round"]):
+        with open(path, encoding="utf-8") as fh:
+            for name, r in json.load(fh).items():
+                entry = ledger["queries"].get(name)
+                if entry and r["rows_match"] and r["schema_match"] and r["hash_match"] and not r["err"]:
+                    entry["certified"] = {"round": rnd, "fp": entry["fp"]}
+        ledger["absorbed_round"] = rnd
+    return ledger
 
 
 def main() -> int:
     with open(LEDGER, encoding="utf-8") as fh:
-        ledger = json.load(fh)
-    for rnd, path in sorted(r for r in driver_rounds().items() if r[0] > latest_round(ledger)):
-        with open(path, encoding="utf-8") as fh:
-            for name, r in json.load(fh).items():
-                if name in ledger and r["rows_match"] and r["schema_match"] and r["hash_match"] and not r["err"]:
-                    ledger[name]["certified"] = {"round": rnd, "fp": ledger[name]["fp"]}
+        ledger = absorb(json.load(fh))
     spark = get_spark("certify")
     recs = [rec for _, rec, _ in runner.run(spark, SF_DIR, runner.select())]
     spark.stop()
+    certified = {name: e["certified"] for name, e in ledger["queries"].items()}
     with open(LEDGER, "w", encoding="utf-8") as fh:
-        json.dump({r["name"]: {"fp": r["fp"], "certified": ledger.get(r["name"], {}).get("certified")}
-                   for r in recs}, fh, indent=1)
+        json.dump({"absorbed_round": ledger["absorbed_round"], "queries": {
+            r["name"]: {"fp": r["fp"], "certified": certified.get(r["name"])} for r in recs}}, fh, indent=1)
         fh.write("\n")
     for r in recs:
         if r["error"]:

@@ -12,9 +12,9 @@ keeps only the last 1000 jobs (``spark.ui.retainedJobs``), about one
 catalog pass, so it is read after every query. An error in any step is
 the query's ``error``; the run goes on. Micro-batch jobs run under
 their stream's runId job group (the ``stream`` phase); a listener maps
-the runId to the query name and keeps every trigger. Off the clock, each
-error-free query also gets its ``fingerprint`` (``fp``), which the
-certification ledger (tools/certify.py) stores. A record:
+the runId to the query name and keeps every trigger. Off the clock, after
+the store read, each error-free query also gets its ``fingerprint``
+(``fp``), which the certification ledger (tools/certify.py) stores. A record:
 
     {"name", "error", "build_s", "exec_s", "plan", "fp", "streams": [{"name", "triggers"}],
      "phases": {phase: {counter: n}}, "failed_stages": [str], "unstable": [phase]}
@@ -25,6 +25,7 @@ from __future__ import annotations
 import ast
 import functools
 import hashlib
+import importlib
 import inspect
 import json
 import re
@@ -91,10 +92,11 @@ def audit_plan(plan: str) -> dict[str, object]:
 
 
 #: what differs between two builds of one query's plan: lambda-variable
-#: suffixes, expression ids, object hashes of folded literals, core-count
-#: sized repartitions and ranges, the dataframe id of CollectMetrics
+#: suffixes, expression ids, object hashes of folded literals, the
+#: dataframe id of CollectMetrics (repartitions and ranges sized to the
+#: session's cores are stripped in ``fingerprint``)
 _PLAN_NOISE = ((r"(lambda \w+?)_\d+(?=#)", r"\1"), (r"#\d+L?", "#"), (r"(?<=\w)@[0-9a-f]+\b", "@"),
-               (r"(Repartition) \d+|splits=Some\(\d+\)", r"\1"), (r"^(.*CollectMetrics .*), \d+$", r"\1"))
+               (r"^(.*CollectMetrics .*), \d+$", r"\1"))
 #: plan text standing for work the plan does not show: driver-built or
 #: checkpointed rows, a cache, Python code, a literal printed as an object hash
 _HIDDEN = re.compile(r"\b(LogicalRDD|LocalRelation|InMemoryRelation)\b|Python|InPandas|InArrow|\w@[0-9a-f]+\b")
@@ -103,11 +105,15 @@ _HIDDEN = re.compile(r"\b(LogicalRDD|LocalRelation|InMemoryRelation)\b|Python|In
 def fingerprint(spec: QuerySpec, df, sf_dir: str, *, ran_jobs: bool) -> str:
     """sha256 of the query's normalized optimized plan, its oracle SQL
     and, when the plan cannot show all its work, the package code its
-    body reaches (``_code``): the query ran Spark jobs while building
-    (``ran_jobs``: a stream, a persisted index, a fit, a checkpoint), or
-    its plan reads files outside ``sf_dir`` or matches ``_HIDDEN``."""
+    body reaches (``_code``): its plan reads files outside ``sf_dir``
+    (a drained stream, a persisted index), matches ``_HIDDEN``, or the
+    query ran Spark jobs while building (``ran_jobs``: a fit or a
+    driver-side collect whose result the plan holds as literals; at
+    sf0.001 doc_bpe_tokenize, doc_bpe_vocab, doc_unigram_logprob and
+    embed_srp_ann are opaque by this test alone)."""
     plan = text = df._jdf.queryExecution().optimizedPlan().toString()
-    for pattern, repl in _PLAN_NOISE:
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    for pattern, repl in (*_PLAN_NOISE, (rf"\b(Repartition |splits=Some\(){cores}\b", r"\1")):
         text = re.sub(pattern, repl, text, flags=re.M)
     # the distinct-aggregate rewrite numbers its groups (gid) in hash
     # order: those lines keep their tokens, not their order
@@ -144,18 +150,28 @@ def _code(fn) -> set[str]:
 @functools.cache
 def _parsed(obj) -> tuple[str, list[tuple[str, object]]]:
     """obj's docstring-free syntax tree, dumped, and the (qualified name,
-    value) of each global and module attribute it names, but not the
-    module state it rebinds (``global``: a scratch root is a fresh path
-    in every process)."""
-    tree, scope = ast.parse(textwrap.dedent(inspect.getsource(obj))), vars(sys.modules[obj.__module__])
-    names, state = [], {n for g in ast.walk(tree) if isinstance(g, ast.Global) for n in g.names}
+    value) of each name it uses (one an import in its body binds, else a
+    global of its module) and each attribute it reads from a module, but
+    not the module state it rebinds (``global``: a scratch root is a fresh
+    path in every process)."""
+    tree, mod = ast.parse(textwrap.dedent(inspect.getsource(obj))), sys.modules[obj.__module__]
+    scope, state = dict(vars(mod)), set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Global):
+            state.update(node.names)
+        elif isinstance(node, ast.Import):
+            scope.update((a.asname or a.name, importlib.import_module(a.name)) for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            src = importlib.import_module("." * node.level + (node.module or ""), mod.__package__)
+            scope.update((a.asname or a.name, getattr(src, a.name, None)) for a in node.names)
+    names = []
     for node in ast.walk(tree):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) and ast.get_docstring(node) is not None:
             node.body = node.body[1:]
         if isinstance(node, ast.Name) and node.id not in state:
             names.append((f"{obj.__module__}.{node.id}", scope.get(node.id)))
-        elif isinstance(node, ast.Attribute) and inspect.ismodule(mod := scope.get(getattr(node.value, "id", None))):
-            names.append((f"{mod.__name__}.{node.attr}", getattr(mod, node.attr, None)))
+        elif isinstance(node, ast.Attribute) and inspect.ismodule(m := scope.get(getattr(node.value, "id", None))):
+            names.append((f"{m.__name__}.{node.attr}", getattr(m, node.attr, None)))
     return ast.dump(tree), names
 
 
@@ -269,8 +285,6 @@ def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False
             rec["build_s"], rec["exec_s"] = round(t1 - t0, 3), round(time.perf_counter() - t1, 3)
             if streams.runs.keys() <= known:
                 rec["plan"] = audit_plan(formatted_plan(df))
-            rec["fp"] = fingerprint(spec, df, sf_dir, ran_jobs=bool(
-                streams.runs.keys() - known or sc.statusTracker().getJobIdsForGroup(f"{name}.build")))
         except Exception as exc:  # noqa: BLE001 — isolation is the point
             rec["error"] = f"{type(exc).__name__}: {exc}"[:500]
         sc._jsc.clearJobGroup()  # noqa: SLF001
@@ -284,6 +298,11 @@ def run(spark, sf_dir: str, specs: Iterable[QuerySpec], *, collect: bool = False
             rec["phases"] = {p: dict.fromkeys(COUNTERS, 0) for p in PHASES}
             rec["failed_stages"], rec["unstable"] = [], []
             rec["error"] = rec["error"] or f"status store: {type(exc).__name__}: {exc}"[:500]
+        if rec["error"] is None:
+            try:
+                rec["fp"] = fingerprint(spec, df, sf_dir, ran_jobs=rec["phases"]["build"]["jobs"] > 0)
+            except Exception as exc:  # noqa: BLE001
+                rec["error"] = f"fingerprint: {type(exc).__name__}: {exc}"[:500]
         return rec, rows
 
     try:
